@@ -9541,7 +9541,7 @@ def _sql_trained_index_probe(n_probe: int):
     """Shared sim16/sim18 oracle: replay the 10-round lloyd_train in
     SQL (_sql_lloyd_train_ctes), then the persisted-index probe — cell
     assignment over the trained quantizer, n_probe nearest probe cells
-    per query (tie -> HIGHER cell id, matching _probe_frame's
+    per query (tie -> HIGHER cell id, matching _probe_cells'
     reverse(array_sort)), candidate join, exact cosine top-5."""
     return f"""
     WITH {_sql_lloyd_train_ctes(10)},

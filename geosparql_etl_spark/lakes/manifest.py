@@ -377,26 +377,18 @@ def manifest_ivf_topk(
     to the rename lake by construction (sim39 oracle)."""
     from geosparql_etl_spark.operators.similarity import (
         _apply_ann_tombstones,
-        _ivf_centroids,
-        _probe_frame,
+        _index_centroids,
+        _probe_cells,
         _probe_topk,
-        read_index_quantizer,
+        _probed_cells,
+        _query_rows,
     )
 
-    if centroids is None:
-        q = read_index_quantizer(path)
-        if q is not None:
-            dim, n_cells = int(q["dim"]), int(q["n_cells"])
-            cents = q["centroids"]
-        else:
-            cents = _ivf_centroids(dim, n_cells)
-    else:
-        cents = centroids
-    qb = _probe_frame(queries, id_col, vec_col, dim, cents, n_probe)
-    cells = sorted(
-        r["__cell"] for r in qb.select("__cell").distinct().collect()
+    dim, cents = _index_centroids(path, centroids, dim, n_cells)
+    rows = _query_rows(
+        queries, id_col, vec_col, _probe_cells(vec_col, cents, n_probe)
     )
-    files = visible_files(path, cells=cells, as_of_seq=as_of_seq)
+    files = visible_files(path, cells=_probed_cells(rows), as_of_seq=as_of_seq)
     if not files:
         schema = (
             "query_id long, neighbor_id long, cosine_sim double, rank int"
@@ -416,7 +408,8 @@ def manifest_ivf_topk(
     tomb = _manifest_tombstones(spark, path, as_of_seq)
     if tomb is not None:
         cb = _apply_ann_tombstones(cb, tomb)
-    return _probe_topk(cb.drop("epoch"), qb, k=k, dim=dim)
+    qtype = dict(queries.dtypes)[id_col]
+    return _probe_topk(cb.drop("epoch"), rows, qtype, k, dim)
 
 
 def manifest_compact_ivf_index(spark, path: str) -> None:

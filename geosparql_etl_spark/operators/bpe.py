@@ -124,9 +124,11 @@ def learn_bpe_merges(
     ``_batch_prefix`` that preserves SEQUENTIAL PARITY — the learned
     table is identical to batch_size=1 (pinned by test on the Sennrich
     vocabulary and a 64-merge documents-corpus run); only the job
-    count changes (~num_merges/accepted-per-round jobs). The default
-    stays 1 so llm18/llm20's unrolled SQL oracles replay unchanged
-    semantics; bench_curation exercises 256 merges at batch_size=32.
+    count changes (~num_merges/accepted-per-round jobs). llm18 and
+    llm20 call batch_size=4 and still match their unrolled
+    one-merge-per-round SQL oracles, because ``_batch_prefix``'s
+    sequential parity makes the table equal the batch_size=1 table;
+    bench_curation exercises 256 merges at batch_size=32.
     """
     spark = words.sparkSession
     state = words.select(

@@ -1,23 +1,28 @@
 """Similarity search over an embedding column (array<float>).
 
-Two paths (engine charter operators; no reference counterpart):
+Engine charter operators (no reference counterpart).
 
-  - brute-force cosine top-k: the correctness baseline. Queries are tiny
-    (k ids or an explicit vector set) -> broadcast them; each corpus
-    partition scores its rows independently (zip_with dot product inside
-    codegen); per-query top-k via window. Corpus is scanned once, never
-    shuffled — only (query_id, corpus_id, score) survive the scan, and
-    AQE coalesces the tiny tail.
+  - top-k operators (cosine_topk, the IVF probes, pq_topk, the
+    composed IVF-PQ paths): ONE arm each. The query side is tiny by
+    contract and is collected once (_query_rows); one vectorized Arrow
+    scan of the corpus per block of at most _TOPK_MAX_QUERIES query
+    rows scores every (row, query) pair in numpy, keeps per (query,
+    batch) only the rows that can still reach that query's top-k, and
+    emits the EXACT value the JVM fold defines (seq_dot replays its
+    IEEE-754 operation order); a per-query window ranks the
+    survivors. ``pairwise_cosine`` + window is the brute-force
+    reference they all reproduce.
 
   - sign-LSH bucketed ANN: the 100 TB path. Deterministic random
     hyperplanes (seeded, driver-generated) hash each vector to band
     buckets via ONE vectorized matmul per Arrow batch (pandas_udf);
-    candidates = bucket-equi-join, then exact re-score on the
-    deterministic JVM fold. Recall tunes with bands x bits.
+    co-bucketed pairs are scored exactly in a grouped scan. Recall
+    tunes with bands x bits.
 """
 
 from __future__ import annotations
 
+import functools
 import hashlib
 
 import numpy as np
@@ -113,32 +118,19 @@ def cosine_topk(
     Returns (query_id, neighbor_id, cosine_sim, rank); self-matches are
     excluded; ties broken by neighbor id so output is deterministic.
 
-    Round 14 (guide §4.2 + §8): the exact interpreted dot fold used to
-    run over |corpus| x |queries| pairs (the cross join); now one
-    vectorized Arrow scan of the corpus keeps, per (query, batch), only
-    the rows a margin-safe numpy cosine cannot exclude from that
-    query's top-k (see _topk_candidates for the order-statistics
-    margin proof), and the exact fold + window rank only those
-    candidates — every true top-k row is provably retained and the
-    extra candidates rank > k and are filtered, so the output is
-    bit-identical to the fold-everything plan. Queries are tiny by
-    contract (they were already driver-broadcast); collecting them is
-    the same bound. Falls back to the cross-join plan when the query
-    side is unexpectedly large or not collectible.
+    One vectorized Arrow scan of the corpus keeps, per (query, batch),
+    only the rows a margin-safe numpy cosine cannot exclude from that
+    query's top-k and emits their exact cosine (see _topk_candidates
+    for the order-statistics margin proof); the window ranks those
+    candidates, so the output equals ``pairwise_cosine`` + window.
+    Query rows sharing an id are scored per row and share one window
+    partition, as in the cross join. ``dim`` is accepted for API
+    stability (the fold is length-generic).
     """
-    cand = _topk_candidates(corpus, queries, id_col, vec_col, k)
-    if cand is None:
-        scored = pairwise_cosine(queries, corpus, id_col, vec_col, dim=dim)
-    else:
-        # Round 15: the scan now emits the EXACT cosine itself (see
-        # _topk_candidates — the sequential-fold emulation reproduces
-        # the JVM fold's IEEE-754 operation order bit for bit), so the
-        # exact re-score join and its interpreted per-candidate fold
-        # are gone; only the legacy self-pair filter (same null
-        # semantics) and the window remain JVM-side.
-        scored = cand.where(F.col("neighbor_id") != F.col("query_id")).select(
-            "query_id", "neighbor_id", _scan_value("cosine_sim")
-        )
+    del dim
+    scored = _topk_candidates(corpus, queries, id_col, vec_col, k).where(
+        F.col("neighbor_id") != F.col("query_id")
+    ).select("query_id", "neighbor_id", _scan_value("cosine_sim"))
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cosine_sim"), F.asc("neighbor_id")
     )
@@ -148,10 +140,9 @@ def cosine_topk(
     )
 
 
-# Query sets are tiny by operator contract (probe ids / explicit
-# vectors — the old plan broadcast them); above this the candidate
-# scan falls back to the cross-join plan rather than surprise the
-# driver with a big collect.
+# Query-side block size of the top-k scans: a query side this large or
+# larger is scored in blocks of this many rows, one corpus scan per
+# block, so each task's (batch x queries) matrices stay bounded.
 _TOPK_MAX_QUERIES = 8192
 
 _TOPK_SCAN_MEMO: dict = {}
@@ -167,6 +158,150 @@ def _memo_put(memo: dict, key, value):
         memo.clear()
     memo[key] = value
     return value
+
+
+def _memo_scan(memo: dict, key, make):
+    """``memo[key]``, built by ``make()`` on a miss — repeated builds
+    reuse one scan function, so their plan trees are byte-identical."""
+    hit = memo.get(key)
+    return hit if hit is not None else _memo_put(memo, key, make())
+
+
+def _query_rows(queries: DataFrame, id_col: str, vec_col: str, cells=None):
+    """The ONE query-side collect of every top-k scan: per query ROW
+    (query_id, __qv, __qq = dot(v, v), __qn = l2_norm(v)[, __cells]),
+    with the norms from the JVM expressions the reference plans use.
+    ``cells`` is the _probe_cells column of the IVF paths; their
+    partition-prune cell list comes from these same rows.
+
+    Query sides are tiny by operator contract, so the driver holds no
+    more than a broadcast of the query side would. No exception is
+    swallowed: a query side that cannot be collected could not be
+    broadcast either. Collecting once also makes every stage of a
+    composed operator see ONE evaluation of a nondeterministic
+    ``queries`` frame."""
+    cols = [
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).alias("__qv"),
+        dot(F.col(vec_col), F.col(vec_col)).alias("__qq"),
+        l2_norm(F.col(vec_col)).alias("__qn"),
+    ]
+    if cells is not None:
+        cols.append(cells)
+    return queries.select(*cols).collect()
+
+
+def _probed_cells(rows) -> list:
+    """Sorted union of the collected rows' probed cells (the partition
+    filter of the persisted-index probes)."""
+    return sorted({c for r in rows for c in r["__cells"]})
+
+
+class _QueryBlock:
+    """numpy view of one block of collected query rows, shipped into a
+    scan. ``full`` marks the rows the vectorized arm scores: a
+    ``dim``-wide vector with a non-NULL norm. The rest (NULL,
+    wrong-width or NULL-element vectors) keep their raw list in
+    ``odd`` for the per-pair slow paths. ``row0`` is the block's offset
+    in the collected rows (the scans that re-attach query vectors emit
+    it as ``__qrow``)."""
+
+    def __init__(self, rows, dim: int, row0: int = 0):
+        nq = len(rows)
+        self.ids = [r["query_id"] for r in rows]
+        self.row0 = row0
+        self.mat = np.zeros((nq, dim), dtype=np.float64)
+        self.full = np.zeros(nq, dtype=bool)
+        self.odd: dict = {}
+        for i, r in enumerate(rows):
+            v = r["__qv"]
+            if v is not None and len(v) == dim and r["__qn"] is not None:
+                self.mat[i] = v
+                self.full[i] = True
+            else:
+                self.odd[i] = None if v is None else list(v)
+        self.qn_null = np.asarray([r["__qn"] is None for r in rows], dtype=bool)
+        self.qn = np.asarray(
+            [np.nan if r["__qn"] is None else r["__qn"] for r in rows],
+            dtype=np.float64,
+        )
+        self.qq = np.asarray(
+            [np.nan if r["__qq"] is None else r["__qq"] for r in rows],
+            dtype=np.float64,
+        )
+        self.cells = (
+            [tuple(r["__cells"]) for r in rows]
+            if rows and "__cells" in rows[0].__fields__
+            else None
+        )
+
+    def vec(self, qi: int):
+        return self.odd[qi] if qi in self.odd else self.mat[qi]
+
+    def id_series(self) -> pd.Series:
+        # a NULL id would turn an integer Series into float64
+        return pd.Series(self.ids, dtype=object if None in self.ids else None)
+
+    def norm(self, qi: int):
+        return None if self.qn_null[qi] else self.qn[qi]
+
+    def cell_queries(self) -> dict:
+        """cell -> array of the block's query columns probing it."""
+        out: dict = {}
+        for qi, cells in enumerate(self.cells):
+            for c in cells:
+                out.setdefault(c, []).append(qi)
+        return {c: np.asarray(v) for c, v in out.items()}
+
+    def key(self, *extra) -> bytes:
+        return hashlib.sha256(
+            repr(
+                (
+                    self.ids,
+                    self.row0,
+                    self.mat.tobytes(),
+                    self.full.tobytes(),
+                    self.odd,
+                    self.qn_null.tobytes(),
+                    self.qn.tobytes(),
+                    self.qq.tobytes(),
+                    self.cells,
+                    extra,
+                )
+            ).encode()
+        ).digest()
+
+
+def _scan_blocks(rows, dim: int, build) -> DataFrame:
+    """Union of ``build(block)`` over the query rows in blocks of at
+    most _TOPK_MAX_QUERIES rows. An empty query side is one empty
+    block (its scan emits nothing)."""
+    step = _TOPK_MAX_QUERIES
+    frames = [
+        build(_QueryBlock(rows[i : i + step], dim, i))
+        for i in range(0, max(len(rows), 1), step)
+    ]
+    return functools.reduce(DataFrame.union, frames)
+
+
+def _pairable(ids: np.ndarray, blk: _QueryBlock) -> np.ndarray:
+    """(rows, queries) mask of the pairs that survive the later
+    ``neighbor_id != query_id`` filter: a non-NULL corpus id other than
+    the query's own. The scans never emit the other pairs and never
+    let them take a per-batch cut slot, where they could evict a true
+    top-k row."""
+    ok = np.ones((len(ids), len(blk.ids)), dtype=bool)
+    ok[pd.isnull(ids)] = False
+    pos: dict = {}
+    for qi, q in enumerate(blk.ids):
+        if q is None:
+            ok[:, qi] = False
+        else:
+            pos.setdefault(q, []).append(qi)
+    if pos:
+        for r in np.flatnonzero(pd.Series(ids).isin(list(pos)).to_numpy()):
+            ok[r, pos[ids[r]]] = False
+    return ok
 
 
 def seq_dot(a: np.ndarray, b: np.ndarray) -> np.ndarray:
@@ -190,14 +325,45 @@ def seq_norm(a: np.ndarray) -> np.ndarray:
     return np.sqrt(seq_dot(a, a))
 
 
-def _seq_dot_1(v: list | None, w: list | None) -> float | None:
-    """Scalar seq_dot for the slow path (odd-length pairs)."""
+def _seq_dot_1(v, w) -> float | None:
+    """Scalar seq_dot for the slow path: NULL when either side is NULL,
+    the lengths differ (zip_with pads with NULL) or an element is
+    NULL."""
     if v is None or w is None or len(v) != len(w):
         return None
     acc = 0.0
     for x, y in zip(v, w):
+        if x is None or y is None:
+            return None
         acc = acc + float(x) * float(y)
     return acc
+
+
+def _pair_cosine(v, vn, q, qn) -> float | None:
+    """Slow path: one pair's reference value,
+    CASE WHEN qn*vn > 0 THEN dot(q, v)/(qn*vn) ELSE 0.0 END, where a
+    NULL norm nulls the denominator (-> 0.0) and Spark's comparison
+    treats a NaN denominator as > 0."""
+    if vn is None or qn is None:
+        return 0.0
+    den = qn * vn
+    if not (den > 0 or np.isnan(den)):
+        return 0.0
+    d = _seq_dot_1(q, v)
+    return None if d is None else d / den
+
+
+def _cosine_cut(cos, special, ok, k):
+    """(row, query) index arrays of the pairs a cosine scan emits: per
+    query column, every ``ok`` pair whose batch cosine can still reach
+    the top k (margin proof in _topk_candidates), plus ``special`` rows
+    and non-finite pairs — those are always kept and never lift the
+    cut (their cut entry is -inf)."""
+    always = special[:, None] | ~np.isfinite(cos)
+    coscut = np.where(always | ~ok, -np.inf, cos)
+    kth = min(k, len(cos) - 1)  # (k+1)-th largest, clamped to batch
+    cuts = -np.partition(-coscut, kth, axis=0)[kth, :] - 1e-6
+    return np.nonzero(ok & ((coscut >= cuts[None, :]) | always))
 
 
 # Arrow's pandas conversion writes float NaN as SQL NULL (both float64
@@ -237,10 +403,10 @@ def _scan_value(name: str):
 
 
 def _topk_candidates(corpus, queries, id_col, vec_col, k):
-    """(query_id, neighbor_id, cosine_sim) superset of every query's
-    exact top-k, with cosine_sim ALREADY the exact legacy value — one
-    vectorized Arrow pass over the corpus (guide §4.2), queries held
-    as a numpy matrix.
+    """(query_id, neighbor_id, __cs, __flag) superset of every query
+    row's exact top-k, with the value ALREADY the exact reference
+    cosine — one vectorized Arrow pass over the corpus per query block
+    (guide §4.2), queries held as a numpy matrix.
 
     Two phases per (query, Arrow batch):
 
@@ -255,170 +421,112 @@ def _topk_candidates(corpus, queries, id_col, vec_col, k):
        therefore retains r. Rows with null / wrong-length vectors and
        rows whose batch cosine is non-finite are ALWAYS kept and NEVER
        lift the cut (their cut entry is -inf): a NaN-vector row ranks
-       FIRST under Spark's descending NaN ordering and a legacy-NULL
-       row ranks last — both must reach the window, not the cut.
+       FIRST under Spark's descending NaN ordering and a NULL-valued
+       row ranks last — both must reach the window, not the cut. Rows
+       with a NULL id or the query's own id are dropped by the caller's
+       ``neighbor_id != query_id`` filter, so they take no cut slot.
 
-    2. Exact value for every kept pair, replicating the legacy
+    2. Exact value for every kept pair, replicating the reference
        expression  CASE WHEN qn*rn > 0 THEN dot/ (qn*rn) ELSE 0.0 END
        bit for bit (seq_dot / seq_norm reproduce the fold's operation
        order; Spark's comparison treats NaN as greater than any value,
        so a NaN denominator takes the THEN branch; a null vector on
        either side nulls the denominator and yields 0.0; a length
-       mismatch nulls only the dot and yields NULL). The window then
-       ranks the same values the legacy cross-join plan produced.
+       mismatch nulls only the dot and yields NULL). Odd query rows
+       (null, odd-length) score 0.0 in phase 1, so every pair of theirs
+       is kept and valued by the per-pair slow path.
 
-    A duplicate corpus row is kept/emitted independently per ROW (the
-    cut is a VALUE threshold, so exact ties all pass), matching the
-    legacy plan that scored every row once. Returns None when the query
-    side is not collectible, over the contract bound, or carries
-    duplicate query ids (each candidate would join every duplicate —
-    the legacy plan scores each query ROW once); the caller falls back
-    to the cross join.
+    Every corpus ROW and every query ROW is scored once (duplicate ids
+    included), like the cross join; the cut is a VALUE threshold, so
+    exact ties all pass.
     """
-    try:
-        qrows = queries.select(
-            F.col(id_col).alias("q"), F.col(vec_col).alias("v")
-        ).limit(_TOPK_MAX_QUERIES + 1).collect()
-    except Exception:
-        return None
-    if not qrows or len(qrows) > _TOPK_MAX_QUERIES:
-        return None
-    qids = [r["q"] for r in qrows]
-    try:
-        if len(set(qids)) != len(qids):
-            return None
-    except TypeError:
-        return None
-    qvecs = [list(r["v"]) if r["v"] is not None else None for r in qrows]
-    dims = {len(v) for v in qvecs if v is not None}
-    qdim = max(dims) if dims else 1
-    nq = len(qrows)
-    qmat = np.zeros((nq, qdim), dtype=np.float64)
-    # full-length queries take the vectorized path; null or odd-length
-    # ones go through the per-pair slow path (rare by contract)
-    qfull = np.zeros(nq, dtype=bool)
-    for i, v in enumerate(qvecs):
-        if v is not None and len(v) == qdim:
-            qmat[i] = v
-            qfull[i] = True
-    qnorm = np.sqrt(np.einsum("ij,ij->i", qmat, qmat))  # phase-1 only
-    # exact norms over each query's OWN length (legacy l2_norm(qv))
-    qn_exact = [
-        None
-        if v is None
-        else seq_norm(np.asarray([v], dtype=np.float64))[0]
-        for v in qvecs
-    ]
-
-    ctype = dict(corpus.dtypes)[id_col]
-    qtype = dict(queries.dtypes)[id_col]
+    rows = _query_rows(queries, id_col, vec_col)
+    lens = [len(r["__qv"]) for r in rows if r["__qv"] is not None]
+    qdim = max(lens) if lens else 1
     schema = (
-        f"query_id {qtype}, neighbor_id {ctype}, __cs double, __flag tinyint"
+        f"query_id {dict(queries.dtypes)[id_col]}, "
+        f"neighbor_id {dict(corpus.dtypes)[id_col]}, "
+        "__cs double, __flag tinyint"
     )
-    key = hashlib.sha256(
-        repr(
-            (
-                "topk",
-                tuple(qids),
-                qmat.tobytes(),
-                tuple(len(v) if v is not None else -1 for v in qvecs),
-                int(k),
-                schema,
-                id_col,
-                vec_col,
-            )
-        ).encode()
-    ).digest()
-    scan = _TOPK_SCAN_MEMO.get(key)
-    if scan is None:
-
-        def pair_value(v, i, qi):
-            """Slow path: one pair, the legacy CASE expression."""
-            q = qvecs[qi]
-            if v is None or q is None:
-                return 0.0  # null norm -> null denom -> ELSE 0.0
-            rn = seq_norm(np.asarray([v], dtype=np.float64))[0]
-            den = qn_exact[qi] * rn
-            if not (den > 0 or np.isnan(den)):
-                return 0.0
-            d = _seq_dot_1(q, v)
-            return None if d is None else d / den
-
-        def scan(batches):
-            q_arr = pd.Series(qids)
-            for pdf in batches:
-                n = len(pdf)
-                if n == 0:
-                    continue
-                vals = pdf["__v"].to_numpy()
-                mat = np.zeros((n, qdim), dtype=np.float64)
-                full = np.zeros(n, dtype=bool)
-                isnull = np.zeros(n, dtype=bool)
-                for i, v in enumerate(vals):
-                    if v is None:
-                        isnull[i] = True
-                    elif len(v) == qdim:
-                        mat[i] = v
-                        full[i] = True
-                denom = np.outer(
-                    np.sqrt(np.einsum("ij,ij->i", mat, mat)), qnorm
-                )
-                # Spark's `denom > 0` is TRUE for NaN (NaN compares
-                # greatest), so a NaN denominator must yield NaN here
-                # too — np.where(denom > 0, ...) would mask it to 0.0
-                # and phase 1 could silently cut a row legacy ranks
-                # FIRST
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = np.where(
-                        (denom > 0) | np.isnan(denom),
-                        (mat @ qmat.T) / denom,
-                        0.0,
-                    )
-                special = ~full  # null / wrong-length rows: always keep
-                nonfin = ~np.isfinite(cos)  # NaN pairs: always keep
-                coscut = np.where(
-                    special[:, None] | nonfin, -np.inf, cos
-                )  # kept-anyway rows must never lift the cut
-                kth = min(k, n - 1)  # (k+1)-th largest, clamped to batch
-                cuts = -np.partition(-coscut, kth, axis=0)[kth, :] - 1e-6
-                keep = (coscut >= cuts[None, :]) | special[:, None] | nonfin
-                ri, qi = np.nonzero(keep)
-                npairs = len(ri)
-                out = np.empty(npairs, dtype=object)
-                fast = full[ri] & qfull[qi]
-                if fast.any():
-                    fr, fq = ri[fast], qi[fast]
-                    d = seq_dot(mat[fr], qmat[fq])
-                    rn_e = seq_norm(mat[fr])
-                    qn_e = np.asarray(
-                        [qn_exact[j] for j in fq], dtype=np.float64
-                    )
-                    den = qn_e * rn_e
-                    with np.errstate(invalid="ignore"):
-                        val = np.where(
-                            (den > 0) | np.isnan(den), d / den, 0.0
-                        )
-                    out[fast] = val
-                slow = ~fast
-                if slow.any():
-                    out[slow] = [
-                        pair_value(vals[r], r, q)
-                        for r, q in zip(ri[slow], qi[slow])
-                    ]
-                cs, flags = _flag_encode(out)
-                yield pd.DataFrame(
-                    {
-                        "query_id": q_arr.iloc[qi].to_numpy(),
-                        "neighbor_id": pdf["__id"].to_numpy()[ri],
-                        "__cs": cs,
-                        "__flag": flags,
-                    }
-                )
-
-        _memo_put(_TOPK_SCAN_MEMO, key, scan)
-    return spread(
+    inp = spread(
         corpus.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"))
-    ).mapInPandas(scan, schema)
+    )
+
+    def block_scan(blk):
+        scan = _memo_scan(
+            _TOPK_SCAN_MEMO,
+            blk.key("topk", int(k), schema, id_col, vec_col),
+            lambda: _cosine_scan_fn(blk, k),
+        )
+        return inp.mapInPandas(scan, schema)
+
+    return _scan_blocks(rows, qdim, block_scan)
+
+
+def _cosine_scan_fn(blk: _QueryBlock, k: int):
+    """mapInPandas scorer of _topk_candidates for one query block."""
+    qmat = blk.mat
+    qdim = qmat.shape[1]
+    nq = len(blk.ids)
+    qnorm = np.sqrt(np.einsum("ij,ij->i", qmat, qmat))  # phase-1 only
+
+    def scan(batches):
+        q_arr = blk.id_series()
+        for pdf in batches:
+            n = len(pdf)
+            if n == 0 or nq == 0:
+                continue
+            vals = pdf["__v"].to_numpy()
+            ids = pdf["__id"].to_numpy()
+            mat = np.zeros((n, qdim), dtype=np.float64)
+            full = np.zeros(n, dtype=bool)
+            for i, v in enumerate(vals):
+                if v is not None and len(v) == qdim:
+                    mat[i] = v
+                    full[i] = True
+            denom = np.outer(np.sqrt(np.einsum("ij,ij->i", mat, mat)), qnorm)
+            # Spark's `denom > 0` is TRUE for NaN (NaN compares
+            # greatest), so a NaN denominator must yield NaN here
+            # too — np.where(denom > 0, ...) would mask it to 0.0
+            # and phase 1 could silently cut a row the reference
+            # ranks FIRST
+            with np.errstate(divide="ignore", invalid="ignore"):
+                cos = np.where(
+                    (denom > 0) | np.isnan(denom), (mat @ qmat.T) / denom, 0.0
+                )
+            ri, qi = _cosine_cut(cos, ~full, _pairable(ids, blk), k)
+            out = np.empty(len(ri), dtype=object)
+            fast = full[ri] & blk.full[qi]
+            if fast.any():
+                fr, fq = ri[fast], qi[fast]
+                d = seq_dot(mat[fr], qmat[fq])
+                den = blk.qn[fq] * seq_norm(mat[fr])
+                with np.errstate(invalid="ignore"):
+                    out[fast] = np.where((den > 0) | np.isnan(den), d / den, 0.0)
+            slow = ~fast
+            if slow.any():
+                out[slow] = [
+                    _pair_cosine(
+                        vals[r],
+                        None
+                        if vals[r] is None
+                        else seq_norm(np.asarray([vals[r]], dtype=np.float64))[0],
+                        blk.vec(q),
+                        blk.norm(q),
+                    )
+                    for r, q in zip(ri[slow], qi[slow])
+                ]
+            cs, flags = _flag_encode(out)
+            yield pd.DataFrame(
+                {
+                    "query_id": q_arr.iloc[qi].to_numpy(),
+                    "neighbor_id": ids[ri],
+                    "__cs": cs,
+                    "__flag": flags,
+                }
+            )
+
+    return scan
 
 
 # --- IVF ANN -----------------------------------------------------------------
@@ -502,66 +610,22 @@ def ivf_topk(
         *[F.col(c) for c in carry_cols],
     )
     cents = centroids if centroids is not None else _ivf_centroids(dim, n_cells)
-    qb = _probe_frame(queries, id_col, vec_col, dim, cents, n_probe)
-    return _probe_topk(cb, qb, k=k, dim=dim, carry_cols=carry_cols)
+    rows = _query_rows(
+        queries, id_col, vec_col, _probe_cells(vec_col, cents, n_probe)
+    )
+    return _probe_topk(cb, rows, dict(queries.dtypes)[id_col], k, dim, carry_cols)
 
 
-def _probe_frame(
-    queries: DataFrame,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    cents: list[list[float]],
-    n_probe: int,
-) -> DataFrame:
-    """Queries -> (query_id, __qv, __qn, __cell), one row per probed
-    cell (the top n_probe centroid dot products, ties to the highest
-    cell — the convention every IVF oracle replays).
+def _probe_cells(vec_col: str, cents, n_probe: int) -> Column:
+    """``__cells``: array<int> of the n_probe nearest cells of each
+    query row (the top n_probe centroid dot products, ties to the
+    highest cell — the convention every IVF oracle replays).
 
     The probe expression is a pure tree over (vec_col, cents, n_probe)
     — 16 cells x 64 literals expand to ~1100 py4j calls, 2-3 s of
     driver Python per probe (round-14 profiling). memo_tree makes the
     Nth probe with the same quantizer free (the trained quantizer is
     memoized per corpus, so serving probes always hit)."""
-    from geosparql_etl_spark.functions.geometry import memo_tree
-
-    def build() -> Column:
-        scored = F.array(
-            *[
-                F.struct(
-                    dot(
-                        F.col(vec_col), F.array(*[F.lit(v) for v in c])
-                    ).alias("score"),
-                    F.lit(i).alias("cell"),
-                )
-                for i, c in enumerate(cents)
-            ]
-        )
-        probes = F.slice(F.reverse(F.array_sort(scored)), 1, n_probe)
-        return F.explode(
-            F.transform(probes, lambda s: s["cell"])
-        ).alias("__cell")
-
-    ckey = cents.tolist() if hasattr(cents, "tolist") else cents
-    cell_col = memo_tree(
-        ("probe_frame", vec_col, n_probe, repr(ckey)), build
-    )
-    qn = memo_tree(
-        ("probe_frame_qn", vec_col),
-        lambda: l2_norm(F.col(vec_col), dim),
-    )
-    return queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        qn.alias("__qn"),
-        cell_col,
-    )
-
-
-def _probe_cells_array(vec_col: str, cents, n_probe: int):
-    """The _probe_frame probe expression WITHOUT the explode — one
-    array<int> of the n_probe nearest cells per query row (same
-    memoized subexpressions, same values; for collect-once callers)."""
     from geosparql_etl_spark.functions.geometry import memo_tree
 
     ckey = cents.tolist() if hasattr(cents, "tolist") else cents
@@ -582,100 +646,8 @@ def _probe_cells_array(vec_col: str, cents, n_probe: int):
         return F.transform(probes, lambda s: s["cell"])
 
     return memo_tree(
-        ("probe_cells_array", vec_col, n_probe, repr(ckey)), build
+        ("probe_cells", vec_col, n_probe, repr(ckey)), build
     ).alias("__cells")
-
-
-def _ivf_index_pq_topk_scan(
-    spark,
-    path: str,
-    qrows,
-    queries: DataFrame,
-    id_col: str,
-    vec_col: str,
-    kq: int,
-    shortlist: int,
-    dim: int,
-    m: int,
-    k: int,
-    books,
-    candidate_filter: Column | None,
-) -> DataFrame:
-    """ivf_index_pq_topk's scan arm: ADC over the codes-only parquet
-    projection via _adc_scan_fn (packed BIGINT codes unpacked in
-    numpy with the same shift/mask as unpack_pq_code), shortlist by
-    (round(d2,6) asc, id asc), then the wide-column fetch + exact
-    re-score exactly as the legacy plan."""
-    cells = sorted({c for r in qrows for c in r["__cells"]})
-    code_scan = spark.read.parquet(path).where(
-        F.col("ivf_cell").isin(cells)
-    )
-    if candidate_filter is not None:
-        code_scan = code_scan.where(candidate_filter)
-    keep = ["neighbor_id", "__pq"] + (
-        ["epoch"] if "epoch" in code_scan.columns else []
-    )
-    code_scan = code_scan.select(*keep, F.col("ivf_cell").alias("__cell"))
-    if "epoch" in keep:
-        code_scan = code_scan.where(
-            F.col("epoch").cast("string").isin(_committed_epochs(path))
-        )
-    tomb = read_index_tombstones(spark, path)
-    if tomb is not None:
-        code_scan = _apply_ann_tombstones(code_scan, tomb)
-    code_scan = code_scan.drop("epoch")
-    qtype = dict(queries.dtypes)[id_col]
-    ctype = "long"  # the persisted layout stores neighbor_id as written
-    for n, t in code_scan.dtypes:
-        if n == "neighbor_id":
-            ctype = t
-    codes_df = code_scan.select(
-        F.col("neighbor_id").alias("__id"), "__pq", "__cell"
-    )
-    cells_per_q = [sorted(set(r["__cells"])) for r in qrows]
-    cand = _adc_scan_build(
-        codes_df, qrows, cells_per_q, books, m, k, shortlist,
-        qtype, ctype, packed=True,
-    )
-    approx = cand.where(
-        F.col("neighbor_id") != F.col("query_id")
-    ).select(
-        "query_id",
-        "neighbor_id",
-        F.round(_scan_raw(), 6).alias("approx_d2"),
-    )
-    w1 = Window.partitionBy("query_id").orderBy(
-        F.asc("approx_d2"), F.asc("neighbor_id")
-    )
-    short = approx.withColumn("__rn1", F.row_number().over(w1)).where(
-        F.col("__rn1") <= shortlist
-    )
-    vs = spark.read.parquet(path).where(F.col("ivf_cell").isin(cells))
-    vkeep = ["neighbor_id", "__cv", "__cn"] + (
-        ["epoch"] if "epoch" in vs.columns else []
-    )
-    vec_scan = vs.select(*vkeep)
-    if "epoch" in vkeep:
-        vec_scan = vec_scan.where(
-            F.col("epoch").cast("string").isin(_committed_epochs(path))
-        )
-    tomb2 = read_index_tombstones(spark, path)
-    if tomb2 is not None:
-        vec_scan = _apply_ann_tombstones(vec_scan, tomb2)
-    vec_scan = vec_scan.drop("epoch")
-    qframe = local_frame(
-        spark,
-        [(r["query_id"], r["__qv"], r["__qn"]) for r in qrows],
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("__qv"),
-            l2_norm(F.col(vec_col), dim).alias("__qn"),
-        ).schema,
-    )
-    fetched = vec_scan.join(
-        F.broadcast(short.select("query_id", "neighbor_id")), "neighbor_id"
-    ).join(F.broadcast(qframe), "query_id")
-    return _exact_cosine_topk(fetched, kq, dim)
 
 
 _CELL_COS_MEMO: dict = {}
@@ -683,90 +655,24 @@ _CELL_COS_MEMO: dict = {}
 
 def _probe_topk(
     cb: DataFrame,
-    qb: DataFrame,
+    rows,
+    qtype: str,
     k: int,
     dim: int,
     carry_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Probe join + exact cosine re-score + per-query top-k over a
-    pre-celled corpus frame (neighbor_id, __cv, __cn, __cell, *carry).
+    """Exact cosine + per-query top-k over a pre-celled corpus frame
+    (neighbor_id, __cv, __cn, __cell, *carry) for collected query rows
+    (_query_rows with _probe_cells; ``qtype`` is their id type).
 
-    Round 15 (guide §4.2): the tiny probe frame is collected once and
-    a vectorized scan computes the exact cosine (seq_dot replicates
-    the JVM fold bit for bit; the STORED ``__cn`` is shipped into the
-    scan and used as-is, so a persisted index's norms participate
-    verbatim) and keeps only per-(query, batch) top-k-safe rows (the
-    _topk_candidates margin argument, restricted to each query's
-    probed cells). The legacy cell join stays as the fallback for odd
-    query sides."""
-    scored_pairs = _cell_cosine_scan(cb, qb, k, dim, carry_cols)
-    if scored_pairs is None:
-        cand = cb.join(F.broadcast(qb), "__cell").where(
-            F.col("neighbor_id") != F.col("query_id")
-        )
-        # norms ride the join (computed once per row, not three folds
-        # per candidate pair — same pattern as pairwise_cosine)
-        denom = F.col("__qn") * F.col("__cn")
-        scored_pairs = cand.select(
-            "query_id",
-            "neighbor_id",
-            F.when(denom > 0, dot(F.col("__qv"), F.col("__cv"), dim) / denom)
-            .otherwise(F.lit(0.0))
-            .alias("cosine_sim"),
-            *carry_cols,
-        )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_sim"), F.asc("neighbor_id")
-    )
-    return scored_pairs.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= k
-    )
-
-
-def _cell_cosine_scan(cb, qb, k, dim, carry_cols):
-    """(query_id, neighbor_id, cosine_sim, *carry) candidate superset
-    with EXACT cosine values, or None (caller falls back to the join).
-
-    The probe frame arrives exploded (one row per (query, probed
-    cell)); rows re-group by query id. Fallback when the query side is
-    not collectible, empty, over the contract bound, or two rows share
-    an id with different vectors/norms (the legacy join would score
-    against both)."""
-    try:
-        qrows = qb.select(
-            "query_id", "__qv", "__qn", "__cell"
-        ).limit(8 * _TOPK_MAX_QUERIES + 1).collect()
-    except Exception:
-        return None
-    if not qrows or len(qrows) > 8 * _TOPK_MAX_QUERIES:
-        return None
-    by_q: dict = {}
-    try:
-        for r in qrows:
-            by_q.setdefault(r["query_id"], []).append(r)
-    except TypeError:
-        return None
-    if None in by_q or len(by_q) > _TOPK_MAX_QUERIES:
-        return None
-    qids, qvecs, qns, cells_per_q = [], [], [], []
-    for qid, rs in by_q.items():
-        v0 = rs[0]["__qv"]
-        n0 = rs[0]["__qn"]
-        key0 = (None if v0 is None else tuple(v0), n0)
-        for r in rs[1:]:
-            v = r["__qv"]
-            if (None if v is None else tuple(v), r["__qn"]) != key0:
-                return None  # same id, different vector: legacy join
-        if v0 is None or len(v0) != dim or n0 is None:
-            return None  # odd vectors keep the legacy expressions
-        qids.append(qid)
-        qvecs.append(list(v0))
-        qns.append(float(n0))
-        cells_per_q.append(sorted({r["__cell"] for r in rs}))
-    qmat = np.asarray(qvecs, dtype=np.float64)
-    qn = np.asarray(qns, dtype=np.float64)
-
-    qtype = dict(qb.dtypes)["query_id"]
+    One vectorized scan per query block computes the exact cosine of
+    each corpus row against every query row probing its cell (seq_dot
+    replicates the JVM fold bit for bit; the STORED ``__cn`` is shipped
+    into the scan and used as-is, so a persisted index's norms
+    participate verbatim) and keeps only per-(query, batch) top-k-safe
+    rows (the _topk_candidates margin argument, restricted to each
+    query's probed cells). Each query ROW is scored once; rows sharing
+    an id share one window partition, like the cell join."""
     ctypes = dict(cb.dtypes)
     schema = (
         f"query_id {qtype}, neighbor_id {ctypes['neighbor_id']}, "
@@ -774,82 +680,60 @@ def _cell_cosine_scan(cb, qb, k, dim, carry_cols):
     )
     for c in carry_cols:
         schema += f", {c} {ctypes[c]}"
-    key = hashlib.sha256(
-        repr(
-            (
-                "cellcos",
-                tuple(qids),
-                qmat.tobytes(),
-                qn.tobytes(),
-                tuple(tuple(c) for c in cells_per_q),
-                int(k),
-                int(dim),
-                schema,
-            )
-        ).encode()
-    ).digest()
-    scan = _CELL_COS_MEMO.get(key)
-    if scan is None:
-        scan = _memo_put(
-            _CELL_COS_MEMO,
-            key,
-            _cell_cosine_scan_fn(
-                qids, qmat, qn, cells_per_q, k, dim, list(carry_cols)
-            ),
-        )
     inp = cb.select(
         F.col("neighbor_id").alias("__id"),
         "__cell",
         F.col("__cv").alias("__v"),
         "__cn",
         # Arrow hands pandas NaN for BOTH a SQL NULL norm and a real
-        # NaN norm, but legacy semantics differ (NULL -> denom NULL ->
+        # NaN norm, but the semantics differ (NULL -> denom NULL ->
         # 0.0; NaN -> NaN > 0 is TRUE under NaN-greatest -> NaN
         # cosine, which ranks FIRST desc) — ship the null bit JVM-side
         F.col("__cn").isNull().alias("__cnn"),
         *carry_cols,
     )
-    return inp.mapInPandas(scan, schema).where(
-        F.col("neighbor_id") != F.col("query_id")
-    ).select(
-        "query_id", "neighbor_id", _scan_value("cosine_sim"), *carry_cols
+
+    def block_scan(blk):
+        scan = _memo_scan(
+            _CELL_COS_MEMO,
+            blk.key("cellcos", int(k), int(dim), schema),
+            lambda: _cell_cosine_scan_fn(blk, k, dim, list(carry_cols)),
+        )
+        return inp.mapInPandas(scan, schema)
+
+    scored = (
+        _scan_blocks(rows, dim, block_scan)
+        .where(F.col("neighbor_id") != F.col("query_id"))
+        .select("query_id", "neighbor_id", _scan_value("cosine_sim"), *carry_cols)
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("cosine_sim"), F.asc("neighbor_id")
+    )
+    return scored.withColumn("rank", F.row_number().over(w)).where(
+        F.col("rank") <= k
     )
 
 
-def _cell_cosine_scan_fn(qids, qmat, qn, cells_per_q, k, dim, carry):
-    """mapInPandas scorer: exact cosine of each corpus row against
-    every query probing its cell, per-(query, batch) top-k cut (the
-    _topk_candidates margin proof — invalid/NaN rows always kept and
-    never lift the cut), stored __cn used verbatim as the corpus-side
-    norm. Legacy value semantics per pair:
+def _cell_cosine_scan_fn(blk: _QueryBlock, k, dim, carry):
+    """mapInPandas scorer of _probe_topk: exact cosine of each corpus
+    row against every query row probing its cell, per-(query, batch)
+    top-k cut (_cosine_cut — invalid/NaN rows always kept and never
+    lift the cut), stored __cn used verbatim as the corpus-side norm.
+    Reference value per pair:
     CASE WHEN __qn * __cn > 0 THEN dot/(.,.) ELSE 0.0 END with Spark's
     NaN-greatest comparison and the null algebra of the fold."""
-    nq = len(qids)
-    cell_to_q: dict = {}
-    for qi, cells in enumerate(cells_per_q):
-        for c in cells:
-            cell_to_q.setdefault(c, []).append(qi)
-    cell_to_q = {c: np.asarray(v) for c, v in cell_to_q.items()}
-
-    def pair_value(v, cn, qi):
-        q = qmat[qi]
-        den = None if cn is None else qn[qi] * cn
-        if den is None or not (den > 0 or np.isnan(den)):
-            return 0.0
-        if v is None or len(v) != dim:
-            return None
-        d = seq_dot(
-            np.asarray([v], dtype=np.float64), q[None, :]
-        )[0]
-        return d / den
+    nq = len(blk.ids)
+    qmat = blk.mat
 
     def scan(batches):
-        q_arr = pd.Series(list(qids))
+        q_arr = blk.id_series()
+        cell_to_q = blk.cell_queries() if nq else {}
         for pdf in batches:
             n = len(pdf)
-            if n == 0:
+            if n == 0 or nq == 0:
                 continue
             vals = pdf["__v"].to_numpy()
+            ids = pdf["__id"].to_numpy()
             cns = pdf["__cn"].to_numpy()
             mat = np.zeros((n, dim), dtype=np.float64)
             full = np.zeros(n, dtype=bool)
@@ -868,50 +752,39 @@ def _cell_cosine_scan_fn(qids, qmat, qn, cells_per_q, k, dim, carry):
                 qidx = cell_to_q.get(c)
                 if qidx is not None:
                     elig[np.ix_(cells == c, qidx)] = True
-            denom = np.outer(cn64, qn)
+            denom = np.outer(cn64, blk.qn)
             with np.errstate(divide="ignore", invalid="ignore"):
                 cos = np.where(
-                    (denom > 0) | np.isnan(denom),
-                    (mat @ qmat.T) / denom,
-                    0.0,
+                    (denom > 0) | np.isnan(denom), (mat @ qmat.T) / denom, 0.0
                 )
-            special = ~full | cn_null
-            nonfin = ~np.isfinite(cos)
-            coscut = np.where(
-                (special[:, None] | nonfin | ~elig), -np.inf, cos
+            ri, qi = _cosine_cut(
+                cos, ~full | cn_null, elig & _pairable(ids, blk), k
             )
-            kth = min(k, n - 1)
-            cuts = -np.partition(-coscut, kth, axis=0)[kth, :] - 1e-6
-            keep = elig & (
-                (coscut >= cuts[None, :]) | special[:, None] | nonfin
-            )
-            ri, qi = np.nonzero(keep)
             if len(ri) == 0:
                 continue
-            npairs = len(ri)
-            out = np.empty(npairs, dtype=object)
-            fast = full[ri] & ~cn_null[ri]
+            out = np.empty(len(ri), dtype=object)
+            fast = full[ri] & ~cn_null[ri] & blk.full[qi]
             if fast.any():
                 fr, fq = ri[fast], qi[fast]
                 d = seq_dot(mat[fr], qmat[fq])
-                den = qn[fq] * cn64[fr]
+                den = blk.qn[fq] * cn64[fr]
                 with np.errstate(divide="ignore", invalid="ignore"):
-                    val = np.where(
-                        (den > 0) | np.isnan(den), d / den, 0.0
-                    )
-                out[fast] = val
+                    out[fast] = np.where((den > 0) | np.isnan(den), d / den, 0.0)
             slow = ~fast
             if slow.any():
                 out[slow] = [
-                    pair_value(
-                        vals[r], None if cn_null[r] else cn64[r], q
+                    _pair_cosine(
+                        vals[r],
+                        None if cn_null[r] else cn64[r],
+                        blk.vec(q),
+                        blk.norm(q),
                     )
                     for r, q in zip(ri[slow], qi[slow])
                 ]
             cs, flags = _flag_encode(out)
             res = {
                 "query_id": q_arr.iloc[qi].to_numpy(),
-                "neighbor_id": pdf["__id"].to_numpy()[ri],
+                "neighbor_id": ids[ri],
                 "__cs": cs,
                 "__flag": flags,
             }
@@ -1723,12 +1596,15 @@ def ivf_index_pq_topk(
     """The composed ANN pipeline against a PERSISTED write_ivf_pq_index
     layout — sim22's three stages with the physical reads they imply:
 
-    Stage 1 (prune):   probed cells collect as |queries| x n_probe ints
-                       and push into BOTH scans as partition filters.
+    Stage 1 (prune):   the query side is collected once with its probed
+                       cells (|queries| x n_probe ints); their union
+                       pushes into BOTH scans as a partition filter.
     Stage 2 (scan):    ADC over the CODES-ONLY projection — parquet
                        reads (neighbor_id, __pq): 8-byte codes, never
-                       the float vectors; reconstruct via shift/mask +
-                       codebook literals, rank, keep ``shortlist``.
+                       the float vectors; the packed codes unpack in
+                       numpy (same shift/mask as unpack_pq_code) inside
+                       the _adc_scan_fn scan, which keeps the rows that
+                       can reach each query's ``shortlist``.
     Stage 3 (verify):  the shortlist's ids broadcast back into a
                        second probed-partition read that projects
                        (neighbor_id, __cv, __cn) — the wide column is
@@ -1750,136 +1626,59 @@ def ivf_index_pq_topk(
     ``centroids=None`` / ``codebooks=None`` resolve from the index's
     ``_quantizer.json`` sidecar (self-describing probes, see
     ivf_index_topk)."""
-    q = (
-        read_index_quantizer(path)
-        if centroids is None or codebooks is None
-        else None
-    )
-    if centroids is None and q is not None:
-        dim, n_cells = int(q["dim"]), int(q["n_cells"])
-        cents = q["centroids"]
-    else:
-        cents = (
-            centroids
-            if centroids is not None
-            else _ivf_centroids(dim, n_cells)
-        )
-    if codebooks is None and q is not None and "codebooks" in q:
+    dim, cents = _index_centroids(path, centroids, dim, n_cells)
+    q = read_index_quantizer(path) if codebooks is None else None
+    if q is not None and "codebooks" in q:
         m, k = int(q["m"]), int(q["k"])
         books = q["codebooks"]
     else:
-        books = (
-            codebooks
-            if codebooks is not None
-            else _pq_codebooks(dim, m, k)
+        books = codebooks if codebooks is not None else _pq_codebooks(dim, m, k)
+    rows = _query_rows(
+        queries, id_col, vec_col, _probe_cells(vec_col, cents, n_probe)
+    )
+    scan = spark.read.parquet(path).where(
+        F.col("ivf_cell").isin(_probed_cells(rows))
+    )
+    # committed epochs only, tombstones applied before the shortlist
+    # fills, so a torn epoch's partial codes or a deleted neighbor can
+    # never crowd out a live one
+    code_scan = _ann_scan_restrict(
+        spark,
+        scan if candidate_filter is None else scan.where(candidate_filter),
+        path,
+        None,
+        cols=("neighbor_id", "__pq"),
+    )
+    cand = _adc_scan_build(
+        code_scan.select(F.col("neighbor_id").alias("__id"), "__pq", "__cell"),
+        rows, books, m, k, shortlist,
+        dict(queries.dtypes)[id_col], dict(code_scan.dtypes)["neighbor_id"],
+        packed=True,
+    )
+    short = _adc_shortlist(cand, shortlist)
+    # stage 3: a shortlisted id fetches its LIVE vector (same restrict),
+    # never a superseded/deleted row that happens to share the id
+    fetched = (
+        _ann_scan_restrict(spark, scan, path, None)
+        .join(
+            F.broadcast(short.select("query_id", "neighbor_id", "__qrow")),
+            "neighbor_id",
         )
-    sub = dim // m
-    # Round 15: the query side is collected ONCE (probe cells as an
-    # array — same memoized probe expressions, minus the explode) and
-    # drives both the partition-pruning cell list (the legacy plan
-    # paid a separate distinct().collect() job for it) and the ADC
-    # codes scan; the legacy broadcast-join plan remains the fallback
-    # for odd query sides.
-    qrows = _adc_queries(
-        queries, id_col, vec_col, dim,
-        extra=(_probe_cells_array(vec_col, cents, n_probe),),
-    )
-    if qrows is not None:
-        return _ivf_index_pq_topk_scan(
-            spark, path, qrows, queries, id_col, vec_col, kq, shortlist,
-            dim, m, k, books, candidate_filter,
-        )
-    qb = _probe_frame(queries, id_col, vec_col, dim, cents, n_probe).select(
-        "query_id",
-        "__qv",
-        "__qn",
-        dot(F.col("__qv"), F.col("__qv"), dim).alias("__qq"),
-        "__cell",
-    )
-    cells = sorted(
-        r["__cell"] for r in qb.select("__cell").distinct().collect()
-    )
-    # stage 2: codes-only scan of the probed partitions
-    code_scan = spark.read.parquet(path).where(
-        F.col("ivf_cell").isin(cells)
-    )
-    if candidate_filter is not None:
-        code_scan = code_scan.where(candidate_filter)
-    keep = ["neighbor_id", "__pq"] + (
-        ["epoch"] if "epoch" in code_scan.columns else []
-    )
-    code_scan = code_scan.select(*keep, F.col("ivf_cell").alias("__cell"))
-    if "epoch" in keep:
-        # committed epochs only (round-13 fix, the _ann_scan_restrict
-        # rule): a torn epoch's partial codes must not enter the ADC
-        # shortlist
-        committed = _committed_epochs(path)
-        code_scan = code_scan.where(
-            F.col("epoch").cast("string").isin(committed)
-        )
-    tomb = read_index_tombstones(spark, path)
-    if tomb is not None:
-        # pending deletes: anti-join the tombstone set (broadcast —
-        # bounded by deletes-since-compaction) before the shortlist
-        # fills, so a deleted neighbor can never crowd out a live one
-        code_scan = _apply_ann_tombstones(code_scan, tomb)
-    code_scan = code_scan.drop("epoch")
-    rv = pq_reconstruct(
-        None, dim, m, k, codebooks=books,
-        code_at=lambda j: unpack_pq_code(F.col("__pq"), j, m, k),
-    )
-    cand = code_scan.join(F.broadcast(qb), "__cell").where(
-        F.col("neighbor_id") != F.col("query_id")
-    )
-    # the reconstructed vector is LAMBDA-BOUND once (sp33 rule): the
-    # codebook-literal concat tree would otherwise copy into each of
-    # the three dot-product folds
-    adc = F.element_at(
-        F.transform(
-            F.array(rv),
-            lambda r: F.round(
-                F.col("__qq")
-                - F.lit(2.0) * dot(F.col("__qv"), r, dim)
-                + dot(r, r, dim),
-                6,
-            ),
-        ),
-        1,
-    )
-    approx = cand.select(
-        "query_id",
-        "neighbor_id",
-        "__qv",
-        "__qn",
-        adc.alias("approx_d2"),
-    )
-    w1 = Window.partitionBy("query_id").orderBy(
-        F.asc("approx_d2"), F.asc("neighbor_id")
-    )
-    short = approx.withColumn("__rn1", F.row_number().over(w1)).where(
-        F.col("__rn1") <= shortlist
-    )
-    # stage 3: wide-column read only for the shortlist's rows; the
-    # tombstone filter applies here too — a shortlisted id must fetch
-    # its LIVE vector, never a superseded/deleted row that happens to
-    # share the id
-    vs = spark.read.parquet(path).where(F.col("ivf_cell").isin(cells))
-    vkeep = ["neighbor_id", "__cv", "__cn"] + (
-        ["epoch"] if "epoch" in vs.columns else []
-    )
-    vec_scan = vs.select(*vkeep)
-    if "epoch" in vkeep:
-        vec_scan = vec_scan.where(
-            F.col("epoch").cast("string").isin(_committed_epochs(path))
-        )
-    if tomb is not None:
-        vec_scan = _apply_ann_tombstones(vec_scan, tomb)
-    vec_scan = vec_scan.drop("epoch")
-    fetched = vec_scan.join(
-        F.broadcast(short.select("query_id", "neighbor_id", "__qv", "__qn")),
-        "neighbor_id",
+        .join(F.broadcast(_query_frame(spark, rows, queries, vec_col)), "__qrow")
     )
     return _exact_cosine_topk(fetched, kq, dim)
+
+
+def _index_centroids(path: str, centroids, dim: int, n_cells: int):
+    """(dim, centroids) a persisted-index probe uses: explicit
+    ``centroids`` win, else the index's ``_quantizer.json`` sidecar
+    (dim and centroids wholesale), else the seeded quantizer."""
+    if centroids is not None:
+        return dim, centroids
+    q = read_index_quantizer(path)
+    if q is None:
+        return dim, _ivf_centroids(dim, n_cells)
+    return int(q["dim"]), q["centroids"]
 
 
 def ivf_index_topk(
@@ -1897,13 +1696,13 @@ def ivf_index_topk(
 ) -> DataFrame:
     """Approximate top-k against a PERSISTED ``write_ivf_index`` index.
 
-    The query batch's probed cell set is collected first (at most
+    The query side is collected once with its probed cells (at most
     |queries| x n_probe ints — index metadata, like sim15's trained
-    centroids) and pushed into the scan as a partition filter, so the
-    read touches ONLY the probed ``ivf_cell=K/`` directories: the scan
-    cost is per-probe, not per-corpus, which is the entire point of an
-    inverted file at 100 TB. The plan shows the pruning as
-    PartitionFilters on ivf_cell (pinned by test).
+    centroids); their union is pushed into the scan as a partition
+    filter, so the read touches ONLY the probed ``ivf_cell=K/``
+    directories: the scan cost is per-probe, not per-corpus, which is
+    the entire point of an inverted file at 100 TB. The plan shows the
+    pruning as PartitionFilters on ivf_cell (pinned by test).
 
     ``as_of_seq`` pins the probe to a historical snapshot (round 12,
     the text lake's time travel brought to the vector lake): only
@@ -1917,34 +1716,21 @@ def ivf_index_topk(
     the index is self-describing, so a probe can never use a drifted
     quantizer by accident and a retrain swap re-points every
     subsequent sidecar-resolved probe automatically."""
-    if centroids is None:
-        q = read_index_quantizer(path)
-        if q is not None:
-            dim, n_cells = int(q["dim"]), int(q["n_cells"])
-            cents = q["centroids"]
-        else:
-            cents = _ivf_centroids(dim, n_cells)
-    else:
-        cents = centroids
-    qb = _probe_frame(queries, id_col, vec_col, dim, cents, n_probe)
-    cells = sorted(
-        r["__cell"] for r in qb.select("__cell").distinct().collect()
+    dim, cents = _index_centroids(path, centroids, dim, n_cells)
+    rows = _query_rows(
+        queries, id_col, vec_col, _probe_cells(vec_col, cents, n_probe)
     )
-    scan = spark.read.parquet(path).where(F.col("ivf_cell").isin(cells))
+    scan = spark.read.parquet(path).where(
+        F.col("ivf_cell").isin(_probed_cells(rows))
+    )
     cb = _ann_scan_restrict(spark, scan, path, as_of_seq)
-    tomb = read_index_tombstones(spark, path, as_of_seq=as_of_seq)
-    if tomb is not None:
-        # pending deletes/updates: anti-join the tombstone set —
-        # broadcast, bounded by deletes-since-compaction, applied
-        # before top-k so a deleted (or superseded) neighbor never
-        # displaces a live one; epoch-scoped tombstones spare the
-        # updated vector's re-insert
-        cb = _apply_ann_tombstones(cb, tomb)
-    return _probe_topk(cb.drop("epoch"), qb, k=k, dim=dim)
+    return _probe_topk(cb, rows, dict(queries.dtypes)[id_col], k, dim)
 
 
-def _ann_scan_restrict(spark, scan, path, as_of_seq, extra_cols=()):
-    """Project a probe scan to its candidate columns, restricted to
+def _ann_scan_restrict(
+    spark, scan, path, as_of_seq, cols=("neighbor_id", "__cv", "__cn")
+):
+    """Project a probe scan to ``cols`` + ``__cell``, restricted to
     COMMITTED epochs: latest reads (``as_of_seq=None``) see only
     epochs whose ``_SUCCESS`` marker exists — a concurrent writer's
     in-flight epoch, or a crashed writer's torn one, never serves
@@ -1952,25 +1738,33 @@ def _ann_scan_restrict(spark, scan, path, as_of_seq, extra_cols=()):
     read on its ledger, the ANN side only gated time travel). With
     ``as_of_seq`` the gate tightens further to epochs committed at or
     before the pin. Both are epoch-isin PARTITION filters — pruned
-    directories, not scanned-and-dropped rows."""
-    keep = ["neighbor_id", "__cv", "__cn", *extra_cols] + (
-        ["epoch"] if "epoch" in scan.columns else []
+    directories, not scanned-and-dropped rows.
+
+    Pending tombstones (issued by the pin) are then anti-joined —
+    broadcast, bounded by deletes-since-compaction — so a deleted (or
+    superseded) neighbor never displaces a live one; epoch-scoped
+    tombstones spare an updated vector's re-insert."""
+    has_epoch = "epoch" in scan.columns
+    cb = scan.select(
+        *cols, *(["epoch"] if has_epoch else []), F.col("ivf_cell").alias("__cell")
     )
-    cb = scan.select(*keep, F.col("ivf_cell").alias("__cell"))
-    if "epoch" not in scan.columns:
+    if has_epoch:
         if as_of_seq is None:
-            return cb
+            live = _committed_epochs(path)
+        else:
+            live = sorted(
+                e for e, s in _ann_epoch_seqs(path).items() if s <= as_of_seq
+            )
+        cb = cb.where(F.col("epoch").cast("string").isin(live))
+    elif as_of_seq is not None:
         raise ValueError(
             "as_of_seq requires an epoch-layout index "
             "(write_ivf_index(..., epoch='base'))"
         )
-    if as_of_seq is None:
-        live = _committed_epochs(path)
-    else:
-        live = sorted(
-            e for e, s in _ann_epoch_seqs(path).items() if s <= as_of_seq
-        )
-    return cb.where(F.col("epoch").cast("string").isin(live))
+    tomb = read_index_tombstones(spark, path, as_of_seq=as_of_seq)
+    if tomb is not None:
+        cb = _apply_ann_tombstones(cb, tomb)
+    return cb.drop("epoch")
 
 
 def knn_classify(
@@ -2866,54 +2660,7 @@ def pq_reconstruct(
 _ADC_SCAN_MEMO: dict = {}
 
 
-def _adc_queries(queries, id_col, vec_col, dim, extra=()):
-    """Collect the tiny query side once (it was already broadcast /
-    collected by the legacy plans). Returns the row list, or None when
-    the scan must fall back to the legacy join plan: not collectible,
-    empty, over the contract bound, duplicate ids (the legacy join
-    would score each candidate against every duplicate), or any query
-    vector null / not ``dim`` wide (the odd-vector semantics live in
-    the legacy expressions). Collecting once also fixes the legacy
-    plans' double evaluation of a nondeterministic ``queries`` frame —
-    the scan and the exact arm now provably see the same rows."""
-    cols = [
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        dot(F.col(vec_col), F.col(vec_col), dim).alias("__qq"),
-        l2_norm(F.col(vec_col), dim).alias("__qn"),
-        *extra,
-    ]
-    try:
-        qrows = queries.select(*cols).limit(_TOPK_MAX_QUERIES + 1).collect()
-    except Exception:
-        return None
-    if not qrows or len(qrows) > _TOPK_MAX_QUERIES:
-        return None
-    qids = [r["query_id"] for r in qrows]
-    try:
-        uniq = set(qids)
-    except TypeError:
-        return None
-    if len(uniq) != len(qids) or any(q is None for q in qids):
-        return None
-    for r in qrows:
-        if r["__qv"] is None or len(r["__qv"]) != dim:
-            return None
-    return qrows
-
-
-def _adc_scan_fn(
-    qids,
-    qmat,
-    qq,
-    cells_per_q,
-    books,
-    m,
-    k,
-    shortlist,
-    packed: bool,
-    carry_vec: bool,
-):
+def _adc_scan_fn(blk: _QueryBlock, books, m, k, shortlist, packed: bool, carry_vec: bool):
     """mapInPandas scan computing the ADC squared distance
     d2 = (qq - 2*dot(qv, rv)) + rr over PQ codes, emitting per
     (query, batch) only rows that can reach the query's global
@@ -2929,41 +2676,38 @@ def _adc_scan_fn(
     same 6-decimal value), i.e. shortlist+1 rows outrank x and x is
     not in the true top-shortlist. Non-finite phase-1 distances are
     kept unconditionally and never poison the cut (set to +inf for
-    the order statistic).
+    the order statistic); rows with a NULL id or the query's own id
+    are never emitted (_pairable).
 
     Phase 2 recomputes kept pairs bit-exactly: rv gathered from the
     same codebook doubles pq_reconstruct emits, seq_dot replicating
     the JVM fold's operation order, and ((qq - 2.0*dot) + rr) the
-    legacy expression's evaluation order — so the JVM-side
-    round(.., 6) of the emitted value equals the legacy plan's
-    approx_d2 bit for bit. Rows with null cells match no query (the
-    legacy cell equi-join); rows with null/malformed codes emit NULL
-    (legacy: reconstruct-of-null nulls the distance, which sorts
-    FIRST under asc) and are always kept."""
-    dim = books.shape[0] * books.shape[2]
+    reference expression's evaluation order — so the JVM-side
+    round(.., 6) of the emitted value equals the reference approx_d2
+    bit for bit. Rows with null cells match no query (the cell
+    equi-join); rows with null/malformed codes, and every pair of a
+    query row whose vector is NULL or not ``dim`` wide, emit NULL
+    (reconstruct-of-null and the zip_with fold null the distance,
+    which sorts FIRST under asc) and are always kept. ``__qrow`` is
+    the pair's query row in the collected query side."""
     sub = books.shape[2]
     bits = max(1, (k - 1).bit_length())
     mask = (1 << bits) - 1
-    nq = len(qids)
+    nq = len(blk.ids)
+    qmat, qq, qbad = blk.mat, blk.qq, ~blk.full
     # phase-1 tables: LUT[j][c][q] = books[j][c] . q_sub_j ; RLUT[j][c]
     qsub = qmat.reshape(nq, m, sub)
     lut = np.stack(
         [books[j] @ qsub[:, j, :].T for j in range(m)]
     )  # (m, k, nq)
     rlut = (books * books).sum(axis=2)  # (m, k)
-    cell_mode = cells_per_q is not None
-    if cell_mode:
-        cell_to_q: dict = {}
-        for qi, cells in enumerate(cells_per_q):
-            for c in cells:
-                cell_to_q.setdefault(c, []).append(qi)
-        cell_to_q = {c: np.asarray(v) for c, v in cell_to_q.items()}
 
     def scan(batches):
-        q_arr = pd.Series(list(qids))
+        q_arr = blk.id_series()
+        cell_to_q = blk.cell_queries() if blk.cells is not None else None
         for pdf in batches:
             n = len(pdf)
-            if n == 0:
+            if n == 0 or nq == 0:
                 continue
             if packed:
                 pk = pdf["__pq"].to_numpy()
@@ -2983,8 +2727,10 @@ def _adc_scan_fn(
                         bad[i] = True
                     else:
                         codes[i] = cv
-            # eligibility (n, nq)
-            if cell_mode:
+            ids = pdf["__id"].to_numpy()
+            # eligibility (n, nq): pairable, and in a probed cell
+            ok = _pairable(ids, blk)
+            if cell_to_q is not None:
                 cells = pdf["__cell"].to_numpy()
                 elig = np.zeros((n, nq), dtype=bool)
                 notnull = pd.notnull(cells)
@@ -2992,8 +2738,7 @@ def _adc_scan_fn(
                     qidx = cell_to_q.get(c)
                     if qidx is not None:
                         elig[np.ix_(cells == c, qidx)] = True
-            else:
-                elig = np.ones((n, nq), dtype=bool)
+                ok &= elig
             # phase 1: LUT distances + per-(query, batch) cut
             qdot = lut[0][codes[:, 0], :]
             rr = rlut[0][codes[:, 0]]
@@ -3001,16 +2746,11 @@ def _adc_scan_fn(
                 qdot = qdot + lut[j][codes[:, j], :]
                 rr = rr + rlut[j][codes[:, j]]
             d2p = qq[None, :] - 2.0 * qdot + rr[:, None]
-            nonfin = ~np.isfinite(d2p)
-            d2cut = np.where(
-                elig & ~nonfin & ~bad[:, None], d2p, np.inf
-            )
+            always = ~np.isfinite(d2p) | bad[:, None] | qbad[None, :]
+            d2cut = np.where(ok & ~always, d2p, np.inf)
             kth = min(shortlist, n - 1)
             cuts = np.partition(d2cut, kth, axis=0)[kth, :] + 2e-6
-            keep = elig & (
-                (d2cut <= cuts[None, :]) | nonfin | bad[:, None]
-            )
-            ri, qi = np.nonzero(keep)
+            ri, qi = np.nonzero(ok & ((d2cut <= cuts[None, :]) | always))
             if len(ri) == 0:
                 continue
             # phase 2: bit-exact values for kept pairs
@@ -3023,10 +2763,11 @@ def _adc_scan_fn(
             flags = np.where(np.isnan(d2), _SCAN_NAN, _SCAN_OK).astype(
                 np.int8
             )
-            flags[bad[ri]] = _SCAN_NULL
+            flags[bad[ri] | qbad[qi]] = _SCAN_NULL
             out = {
                 "query_id": q_arr.iloc[qi].to_numpy(),
-                "neighbor_id": pdf["__id"].to_numpy()[ri],
+                "neighbor_id": ids[ri],
+                "__qrow": (blk.row0 + qi).astype(np.int32),
                 "__cs": np.where(np.isnan(d2), 0.0, d2),
                 "__flag": flags,
             }
@@ -3039,8 +2780,7 @@ def _adc_scan_fn(
 
 def _adc_scan_build(
     codes_df,
-    qrows,
-    cells_per_q,
+    rows,
     books,
     m,
     k,
@@ -3051,56 +2791,63 @@ def _adc_scan_build(
     carry_vtype=None,
 ):
     """Wire _adc_scan_fn onto a prepared codes frame (columns __id +
-    __code|__pq [+ __cell] [+ __v]) and return the scored candidate
-    frame. The scan function is memoized on its full payload so
-    repeated builds reuse one instance (byte-identical plan trees)."""
-    qids = [r["query_id"] for r in qrows]
-    qmat = np.asarray(
-        [list(r["__qv"]) for r in qrows], dtype=np.float64
-    )
-    qq = np.asarray([r["__qq"] for r in qrows], dtype=np.float64)
+    __code|__pq [+ __cell] [+ __v]), one scan per query block, and
+    return the scored candidate frame (query_id, neighbor_id, __qrow,
+    __cs, __flag[, __v]). Rows collected with ``__cells`` are matched
+    to the corpus rows of their probed cells only."""
     books64 = np.asarray(books, dtype=np.float64)
-    schema = f"query_id {qtype}, neighbor_id {ctype}, __cs double, __flag tinyint"
+    schema = (
+        f"query_id {qtype}, neighbor_id {ctype}, __qrow int, "
+        "__cs double, __flag tinyint"
+    )
     if carry_vtype:
         schema += f", __v {carry_vtype}"
-    key = hashlib.sha256(
-        repr(
-            (
-                "adc",
-                tuple(qids),
-                qmat.tobytes(),
-                qq.tobytes(),
-                None
-                if cells_per_q is None
-                else tuple(tuple(sorted(c)) for c in cells_per_q),
-                books64.tobytes(),
-                int(m),
-                int(k),
-                int(shortlist),
-                bool(packed),
-                schema,
-            )
-        ).encode()
-    ).digest()
-    scan = _ADC_SCAN_MEMO.get(key)
-    if scan is None:
-        scan = _memo_put(
+
+    def block_scan(blk):
+        scan = _memo_scan(
             _ADC_SCAN_MEMO,
-            key,
-            _adc_scan_fn(
-                qids,
-                qmat,
-                qq,
-                cells_per_q,
-                books64,
-                m,
-                k,
-                shortlist,
-                packed,
-                carry_vtype is not None,
+            blk.key(
+                "adc", books64.tobytes(), int(m), int(k), int(shortlist),
+                bool(packed), schema,
+            ),
+            lambda: _adc_scan_fn(
+                blk, books64, m, k, shortlist, packed, carry_vtype is not None
             ),
         )
-    return codes_df.mapInPandas(scan, schema)
+        return codes_df.mapInPandas(scan, schema)
+
+    return _scan_blocks(rows, books64.shape[0] * books64.shape[2], block_scan)
+
+
+def _adc_shortlist(cand: DataFrame, shortlist: int, *extra) -> DataFrame:
+    """Per-query top-``shortlist`` of an ADC candidate frame by
+    (round(d2, 6) asc, id asc), self pairs excluded; keeps
+    (query_id, neighbor_id, __qrow, approx_d2, *extra)."""
+    approx = cand.where(F.col("neighbor_id") != F.col("query_id")).select(
+        "query_id",
+        "neighbor_id",
+        "__qrow",
+        F.round(_scan_raw(), 6).alias("approx_d2"),
+        *extra,
+    )
+    w1 = Window.partitionBy("query_id").orderBy(
+        F.asc("approx_d2"), F.asc("neighbor_id")
+    )
+    return approx.withColumn("__rn1", F.row_number().over(w1)).where(
+        F.col("__rn1") <= shortlist
+    )
+
+
+def _query_frame(spark, rows, queries: DataFrame, vec_col: str) -> DataFrame:
+    """The collected query rows as a local (__qrow, __qv, __qn) frame:
+    the shortlist re-attaches each pair's OWN query row (duplicate ids
+    included), and the scan and the exact stage provably see the same
+    query evaluation."""
+    return local_frame(
+        spark,
+        [(i, r["__qv"], r["__qn"]) for i, r in enumerate(rows)],
+        f"__qrow int, __qv {dict(queries.dtypes)[vec_col]}, __qn double",
+    )
 
 
 def pq_topk(
@@ -3116,63 +2863,31 @@ def pq_topk(
 ) -> DataFrame:
     """PQ approximate top-k: neighbors ranked by squared L2 between the
     query and the RECONSTRUCTED (decoded) corpus vector — classic
-    asymmetric distance computation, expressed as native expressions
-    over the 8-nibble codes.
+    asymmetric distance computation over the 8-nibble codes.
 
     Scale shape: the corpus is scanned as codes (32x smaller than the
-    float vectors), the query side is collected once (it was already
-    broadcast), and only (query, neighbor, distance) rows survive. No
-    shuffle of raw vectors anywhere. Round 15: the ADC distance is
-    computed bit-exactly inside the codes scan (see _adc_scan_fn) —
-    the interpreted reconstruct-and-fold expressions are gone from the
-    per-pair path; the legacy cross-join plan remains as the fallback
-    for odd query sides.
+    float vectors), the query side is collected once, and only
+    (query, neighbor, distance) rows survive. No shuffle of raw
+    vectors anywhere. The ADC distance is computed bit-exactly inside
+    the codes scan (see _adc_scan_fn): the value is the reference
+    round((qq - 2*dot(qv, rv)) + dot(rv, rv), 6) over
+    ``pq_reconstruct``'s vector.
     """
     books = codebooks if codebooks is not None else _pq_codebooks(dim, m, k)
-    qrows = _adc_queries(queries, id_col, vec_col, dim)
-    if qrows is not None:
-        cb = with_pq_code(spread(corpus), vec_col, dim, m, k, codebooks=books)
-        codes_df = cb.select(
-            F.col(id_col).alias("__id"), F.col("pq_code").alias("__code")
-        )
-        cand = _adc_scan_build(
-            codes_df, qrows, None, books, m, k, kq,
-            dict(queries.dtypes)[id_col], dict(corpus.dtypes)[id_col],
-        )
-        scored = cand.where(
-            F.col("neighbor_id") != F.col("query_id")
-        ).select(
-            "query_id",
-            "neighbor_id",
-            F.round(_scan_raw(), 6).alias("approx_d2"),
-        )
-    else:
-        cb = with_pq_code(
-            spread(corpus), vec_col, dim, m, k, codebooks=books
-        )
-        recon = pq_reconstruct(F.col("pq_code"), dim, m, k, codebooks=books)
-        cseln = cb.select(
-            F.col(id_col).alias("neighbor_id"),
-            recon.alias("__rv"),
-        ).withColumn("__rr", dot(F.col("__rv"), F.col("__rv"), dim))
-        qb = queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("__qv"),
-            dot(F.col(vec_col), F.col(vec_col), dim).alias("__qq"),
-        )
-        pairs = cseln.crossJoin(F.broadcast(qb)).where(
-            F.col("neighbor_id") != F.col("query_id")
-        )
-        scored = pairs.select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                F.col("__qq")
-                - F.lit(2.0) * dot(F.col("__qv"), F.col("__rv"), dim)
-                + F.col("__rr"),
-                6,
-            ).alias("approx_d2"),
-        )
+    rows = _query_rows(queries, id_col, vec_col)
+    cb = with_pq_code(spread(corpus), vec_col, dim, m, k, codebooks=books)
+    codes_df = cb.select(
+        F.col(id_col).alias("__id"), F.col("pq_code").alias("__code")
+    )
+    cand = _adc_scan_build(
+        codes_df, rows, books, m, k, kq,
+        dict(queries.dtypes)[id_col], dict(corpus.dtypes)[id_col],
+    )
+    scored = cand.where(F.col("neighbor_id") != F.col("query_id")).select(
+        "query_id",
+        "neighbor_id",
+        F.round(_scan_raw(), 6).alias("approx_d2"),
+    )
     w = Window.partitionBy("query_id").orderBy(
         F.asc("approx_d2"), F.asc("neighbor_id")
     )
@@ -3228,149 +2943,48 @@ def ivf_pq_topk(
                        nearest cells — at scale the corpus is laid out
                        partitioned by cell, so this is partition
                        pruning, not a filter.
-    Stage 2 (scan):    rank candidates by PQ asymmetric distance
-                       (reconstruct-and-score over 8 nibble codes, no
-                       raw vectors touched), keep ``shortlist`` per
-                       query.
+    Stage 2 (scan):    rank candidates by PQ asymmetric distance inside
+                       the codes scan (_adc_scan_fn — bit-exact
+                       seq-fold distances, LUT prefilter), keep
+                       ``shortlist`` per query.
     Stage 3 (verify):  exact deterministic cosine on the shortlist
-                       only; final top ``kq``.
+                       only (the collected query rows re-attach to the
+                       SHORTLIST only); final top ``kq``.
 
     Both rankings order on ROUNDED scores with id tie-breaks, so the
     result is deterministic and oracle-replicable end to end.
     ``centroids``/``codebooks`` swap in TRAINED quantizers (lloyd_train
     / pq_train output) — the shippable configuration (sim22 measures
     the seeded-vs-trained gap end to end).
-
-    Round 15: the ADC stage runs inside the codes scan (see
-    _adc_scan_fn — bit-exact seq-fold distances, LUT prefilter), so
-    the per-candidate interpreted reconstruct-and-fold expressions and
-    the cell broadcast join are gone; the query side (with its exact
-    JVM probe/norm expressions) is collected once and re-attached to
-    the SHORTLIST only. The legacy join plan remains as the fallback
-    for odd query sides.
     """
-    books = (
-        codebooks if codebooks is not None else _pq_codebooks(dim, m, k)
-    )
-    cents = centroids if centroids is not None else _ivf_centroids(
-        dim, n_cells
-    )
-    scored_cells = F.array(
-        *[
-            F.struct(
-                dot(F.col(vec_col), F.array(*[F.lit(v) for v in c])).alias(
-                    "score"
-                ),
-                F.lit(i).alias("cell"),
-            )
-            for i, c in enumerate(cents)
-        ]
-    )
-    probes = F.slice(F.reverse(F.array_sort(scored_cells)), 1, n_probe)
-    probe_cells = F.explode(
-        F.transform(probes, lambda s: s["cell"])
-    ).alias("__cell")
-
+    books = codebooks if codebooks is not None else _pq_codebooks(dim, m, k)
+    cents = centroids if centroids is not None else _ivf_centroids(dim, n_cells)
     cb = with_pq_code(
         with_ivf_cell(
             spread(corpus), vec_col, dim, n_cells, centroids=centroids
         ),
         vec_col, dim, m, k, codebooks=books,
     )
-
-    qrows = _adc_queries(
-        queries, id_col, vec_col, dim,
-        extra=(F.transform(probes, lambda s: s["cell"]).alias("__cells"),),
+    rows = _query_rows(
+        queries, id_col, vec_col, _probe_cells(vec_col, cents, n_probe)
     )
-    if qrows is not None:
-        qdedup = qrows
-        cells_per_q = [sorted(set(r["__cells"])) for r in qrows]
-        vtype = dict(corpus.dtypes)[vec_col]
-        qtype = dict(queries.dtypes)[id_col]
-        ctype = dict(corpus.dtypes)[id_col]
-        codes_df = cb.select(
-            F.col(id_col).alias("__id"),
-            F.col("ivf_cell").alias("__cell"),
-            F.col("pq_code").alias("__code"),
-            F.col(vec_col).alias("__v"),
-        )
-        cand = _adc_scan_build(
-            codes_df, qdedup, cells_per_q, books, m, k, shortlist,
-            qtype, ctype, carry_vtype=vtype,
-        )
-        approx = cand.where(
-            F.col("neighbor_id") != F.col("query_id")
-        ).select(
-            "query_id",
-            "neighbor_id",
-            F.col("__v").alias("__cv"),
-            F.round(_scan_raw(), 6).alias("approx_d2"),
-        )
-        w1 = Window.partitionBy("query_id").orderBy(
-            F.asc("approx_d2"), F.asc("neighbor_id")
-        )
-        short = approx.withColumn("__rn1", F.row_number().over(w1)).where(
-            F.col("__rn1") <= shortlist
-        )
-        # the tiny query side re-attaches to the SHORTLIST only, built
-        # from the rows collected above (the scan and the exact arm
-        # provably see the same query evaluation)
-        spark = corpus.sparkSession
-        qframe = local_frame(
-            spark,
-            [(r["query_id"], r["__qv"], r["__qn"]) for r in qdedup],
-            queries.select(
-                F.col(id_col).alias("query_id"),
-                F.col(vec_col).alias("__qv"),
-                l2_norm(F.col(vec_col), dim).alias("__qn"),
-            ).schema,
-        )
-        fetched = short.join(F.broadcast(qframe), "query_id").withColumn(
-            "__cn", l2_norm(F.col("__cv"), dim)
-        )
-        return _exact_cosine_topk(fetched, kq, dim)
-
-    recon = pq_reconstruct(F.col("pq_code"), dim, m, k, codebooks=books)
-    cseln = cb.select(
-        F.col(id_col).alias("neighbor_id"),
+    codes_df = cb.select(
+        F.col(id_col).alias("__id"),
         F.col("ivf_cell").alias("__cell"),
-        F.col(vec_col).alias("__cv"),
-        recon.alias("__rv"),
-    ).withColumn("__rr", dot(F.col("__rv"), F.col("__rv"), dim)).withColumn(
-        "__cn", l2_norm(F.col("__cv"), dim)
+        F.col("pq_code").alias("__code"),
+        F.col(vec_col).alias("__v"),
     )
-    qb = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        dot(F.col(vec_col), F.col(vec_col), dim).alias("__qq"),
-        l2_norm(F.col(vec_col), dim).alias("__qn"),
-        probe_cells,
+    cand = _adc_scan_build(
+        codes_df, rows, books, m, k, shortlist,
+        dict(queries.dtypes)[id_col], dict(corpus.dtypes)[id_col],
+        carry_vtype=dict(corpus.dtypes)[vec_col],
     )
-
-    cand = cseln.join(F.broadcast(qb), "__cell").where(
-        F.col("neighbor_id") != F.col("query_id")
-    )
-    approx = cand.select(
-        "query_id",
-        "neighbor_id",
-        "__qv",
-        "__qn",
-        "__cv",
-        "__cn",
-        F.round(
-            F.col("__qq")
-            - F.lit(2.0) * dot(F.col("__qv"), F.col("__rv"), dim)
-            + F.col("__rr"),
-            6,
-        ).alias("approx_d2"),
-    )
-    w1 = Window.partitionBy("query_id").orderBy(
-        F.asc("approx_d2"), F.asc("neighbor_id")
-    )
-    short = approx.withColumn("__rn1", F.row_number().over(w1)).where(
-        F.col("__rn1") <= shortlist
-    )
-    return _exact_cosine_topk(short, kq, dim)
+    short = _adc_shortlist(cand, shortlist, F.col("__v").alias("__cv"))
+    fetched = short.join(
+        F.broadcast(_query_frame(corpus.sparkSession, rows, queries, vec_col)),
+        "__qrow",
+    ).withColumn("__cn", l2_norm(F.col("__cv"), dim))
+    return _exact_cosine_topk(fetched, kq, dim)
 
 
 # --- IVF training: Lloyd refinement ------------------------------------------

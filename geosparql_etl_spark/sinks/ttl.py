@@ -53,6 +53,25 @@ def write_documents(
     writer.text(out_dir)
 
 
+def _write_document(
+    out_dir: str, rel: str, text: str, compress: bool, gzip_level: int
+) -> int:
+    """Write one document to ``out_dir/rel``, gzipped when ``compress``
+    is set or the name ends in .gz; returns the uncompressed byte
+    count. The one write loop body of both exact-filename sinks."""
+    path = os.path.join(out_dir, rel)
+    os.makedirs(os.path.dirname(path) or out_dir, exist_ok=True)
+    data = text.encode("utf-8")
+    if compress or rel.endswith(".gz"):
+        # gzip level 6 parity: mongo-etl/mongodb_to_rdf.py:37
+        with gzip.open(path, "wb", compresslevel=gzip_level) as f:
+            f.write(data)
+    else:
+        with open(path, "wb") as f:
+            f.write(data)
+    return len(data)
+
+
 def write_documents_exact(
     docs: DataFrame,
     out_dir: str,
@@ -69,17 +88,9 @@ def write_documents_exact(
 
     def write_partition(rows):
         for row in rows:
-            rel = row[name_col]
-            path = os.path.join(out_dir, rel)
-            os.makedirs(os.path.dirname(path), exist_ok=True)
-            data = row[text_col].encode("utf-8")
-            if compress or rel.endswith(".gz"):
-                # gzip level 6 parity: mongo-etl/mongodb_to_rdf.py:37
-                with gzip.open(path, "wb", compresslevel=gzip_level) as f:
-                    f.write(data)
-            else:
-                with open(path, "wb") as f:
-                    f.write(data)
+            _write_document(
+                out_dir, row[name_col], row[text_col], compress, gzip_level
+            )
 
     os.makedirs(out_dir, exist_ok=True)
     docs.select(name_col, text_col).foreachPartition(write_partition)
@@ -110,17 +121,10 @@ def write_documents_exact_df(
         for pdf in batches:
             names, sizes = [], []
             for rel, text in zip(pdf[name_col], pdf[text_col]):
-                path = os.path.join(out_dir, rel)
-                os.makedirs(os.path.dirname(path) or out_dir, exist_ok=True)
-                data = text.encode("utf-8")
-                if compress or rel.endswith(".gz"):
-                    with gzip.open(path, "wb", compresslevel=gzip_level) as f:
-                        f.write(data)
-                else:
-                    with open(path, "wb") as f:
-                        f.write(data)
                 names.append(rel)
-                sizes.append(len(data))
+                sizes.append(
+                    _write_document(out_dir, rel, text, compress, gzip_level)
+                )
             yield pd.DataFrame({"file_name": names, "n_bytes": sizes})
 
     return docs.select(name_col, text_col).mapInPandas(

@@ -18,8 +18,12 @@ def local_frame(spark, rows, schema) -> DataFrame:
     second on worker handoff to deserialize at most one row — a fixed
     tax on EVERY action of every query whose plan embeds a small
     local frame (measured: collect of a 4-row frame 644 ms -> 259 ms).
-    Same row conversion/verification semantics, only the slice count
-    changes: 1 slice per 20k rows, capped at defaultParallelism.
+    Same row conversion, but not the same verification timing: the
+    stock list path checks every row against ``schema`` on the driver
+    while the DataFrame is built, whereas this RDD path converts and
+    verifies rows in the tasks, so a malformed row fails the first
+    action (as a task failure), not the build. The slice count is 1
+    per 20k rows, capped at defaultParallelism.
     """
     rows = rows if isinstance(rows, list) else list(rows)
     sc = spark.sparkContext

@@ -13,13 +13,15 @@ the two properties the optimizations rely on:
      different DataFrames computes exactly what a fresh build would.
 """
 
+import math
+
 import numpy as np
 from pyspark.sql import functions as F
 
 from geosparql_etl_spark.functions.geometry import _TREE_MEMO, memo_tree
 from geosparql_etl_spark.operators.partitioning import spread
 from geosparql_etl_spark.operators.similarity import (
-    _probe_frame,
+    _probe_cells,
     pq_reconstruct,
 )
 
@@ -74,20 +76,18 @@ def test_spread_noop_on_wide_input(spark, tmp_path):
 
 def test_probe_frame_memo_distinguishes_quantizers(spark):
     """Two different centroid sets must probe different cells — the
-    memo key is built from the full tolist() of the centroids, so
-    near-identical quantizers never collide."""
+    _probe_cells memo key is built from the full tolist() of the
+    centroids, so near-identical quantizers never collide."""
     q = spark.createDataFrame([("q1", [1.0, 0.0])], "vec_id string, embedding array<double>")
     cents_a = np.array([[1.0, 0.0], [0.0, 1.0]])
     cents_b = np.array([[0.0, 1.0], [1.0, 0.0]])  # swapped order
-    fa = _probe_frame(q, "vec_id", "embedding", 2, cents_a, 1)
-    fb = _probe_frame(q, "vec_id", "embedding", 2, cents_b, 1)
-    cell_a = fa.collect()[0]["__cell"]
-    cell_b = fb.collect()[0]["__cell"]
-    assert cell_a == 0 and cell_b == 1
+    cell_a = q.select(_probe_cells("embedding", cents_a, 1)).collect()[0]["__cells"]
+    cell_b = q.select(_probe_cells("embedding", cents_b, 1)).collect()[0]["__cells"]
+    assert cell_a == [0] and cell_b == [1]
 
     # repeated build with the SAME quantizer is a memo hit (same plan)
-    fa2 = _probe_frame(q, "vec_id", "embedding", 2, cents_a, 1)
-    assert fa2.collect()[0]["__cell"] == 0
+    again = q.select(_probe_cells("embedding", cents_a, 1)).collect()[0]["__cells"]
+    assert again == [0]
 
 
 def test_pq_reconstruct_memo_distinguishes_codebooks(spark):
@@ -113,11 +113,11 @@ def test_pq_reconstruct_memo_distinguishes_codebooks(spark):
 
 def test_cosine_topk_candidate_scan_matches_legacy_plan(spark):
     """The round-14 cosine_topk candidate scan (numpy per-batch top-k
-    prefilter + exact fold on survivors) must reproduce the legacy
-    cross-join plan exactly — including duplicate corpus ids (each ROW
-    scored once), a null corpus vector (legacy scores it 0.0), exact
-    score ties (value-threshold cut keeps all), and multi-batch cuts
-    (tiny Arrow batches force per-batch thresholds)."""
+    prefilter + exact fold on survivors) must reproduce the
+    pairwise_cosine cross join + window exactly — including duplicate
+    corpus ids (each ROW scored once), a null corpus vector (scored
+    0.0), exact score ties (value-threshold cut keeps all), and
+    multi-batch cuts (tiny Arrow batches force per-batch thresholds)."""
     from pyspark.sql import Window
 
     from geosparql_etl_spark.operators.similarity import (
@@ -129,7 +129,7 @@ def test_cosine_topk_candidate_scan_matches_legacy_plan(spark):
     for i in range(40):
         rows.append((i, [float((i % 7) - 3), float(i % 5), 1.0]))
     rows.append((7, [4.0, 0.0, 1.0]))      # duplicate id, different vector
-    rows.append((41, None))                 # null vector -> legacy 0.0
+    rows.append((41, None))                 # null vector -> 0.0
     rows.append((42, [1.0, 1.0, 1.0]))      # exact tie pair...
     rows.append((43, [1.0, 1.0, 1.0]))      # ...same vector, both rank
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
@@ -203,62 +203,270 @@ def test_cosine_topk_scan_nan_and_invalid_rows(spark):
         return (r.query_id, r.rank, r.neighbor_id, v)
 
     assert sorted(map(canon, got)) == sorted(map(canon, want))
-    # the NaN row must be rank 1 (legacy semantics)
+    # the NaN row must be rank 1 (reference semantics)
     assert [r.neighbor_id for r in want if r.rank == 1] == [1]
     assert any(r.neighbor_id == 1 and r.rank == 1 for r in got)
 
 
-def test_cosine_topk_duplicate_query_ids_fall_back(spark):
-    """Two query ROWS sharing an id must take the legacy cross-join
-    plan (the scan would mix their candidate sets per window
-    partition) — pinned by plan shape AND by values."""
-    from geosparql_etl_spark.operators.similarity import cosine_topk
+def _window_topk(scored, k, col="cosine_sim"):
+    """Reference ranking: per query id, ``col`` desc then id asc."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc(col), F.asc("neighbor_id")
+    )
+    return scored.withColumn("rank", F.row_number().over(w)).where(
+        F.col("rank") <= k
+    )
+
+
+def _canon_rows(rows):
+    """Order-insensitive, NaN-comparable view of result rows."""
+    import math
+
+    def norm(v):
+        return "NaN" if isinstance(v, float) and math.isnan(v) else v
+
+    return sorted(tuple(norm(v) for v in r) for r in rows)
+
+
+def test_cosine_topk_duplicate_query_ids_share_window(spark):
+    """Query ROWS sharing an id are each scored against the corpus and
+    share one window partition, exactly like pairwise_cosine + window:
+    equal duplicates double every pair, different-vector duplicates
+    compete in one top-k. NULL and wrong-length query vectors take the
+    per-pair slow path (NULL -> 0.0 for every pair, wrong length ->
+    NULL unless the corpus row has the same length)."""
+    from geosparql_etl_spark.operators.similarity import (
+        cosine_topk,
+        pairwise_cosine,
+    )
 
     df = spark.createDataFrame(
-        [(i, [float(i), 1.0]) for i in range(10)],
+        [(i, [float(i), 1.0]) for i in range(10)]
+        + [(20, [1.0, 2.0, 3.0]), (21, None)],
         "vec_id long, embedding array<float>",
     )
     q = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (1, [0.0, 1.0])],
+        [
+            (1, [1.0, 0.0]),
+            (1, [0.0, 1.0]),  # same id, different vector
+            (2, [1.0, 1.0]),
+            (2, [1.0, 1.0]),  # same id, same vector
+            (3, None),  # NULL vector
+            (4, [2.0, 1.0, 0.5]),  # wrong length (matches row 20)
+        ],
         "vec_id long, embedding array<float>",
     )
-    plan = cosine_topk(df, q, k=3, dim=2)
-    assert "mapInPandas" not in plan._jdf.queryExecution().analyzed().toString()
-    # legacy cross-join semantics: both query rows share one window
-    # partition (same id), so exactly k rows come back for id 1
-    assert plan.count() == 3
+    got = cosine_topk(df, q, k=3, dim=2).collect()
+    want = _window_topk(pairwise_cosine(q, df, dim=2), 3).collect()
+    assert _canon_rows(got) == _canon_rows(want)
+    assert len(got) == 12
+    # equal duplicates: the top pair comes back twice (ranks 1 and 2)
+    assert sorted(r.rank for r in got if r.query_id == 2)[:2] == [1, 2]
 
 
-def test_pq_and_ivfpq_scan_match_legacy_plan(spark, sf_dir):
-    """The round-15 ADC codes scan (LUT prefilter + bit-exact seq-fold
-    distances) must reproduce the legacy reconstruct-and-fold plans
-    exactly, including the rounded approx_d2 OUTPUT values (pq_topk)
-    and the composed shortlist -> exact re-score (ivf_pq_topk)."""
+def test_topk_scans_skip_null_and_self_ids_in_cut(spark):
+    """More than k corpus rows that the final ``neighbor_id !=
+    query_id`` filter drops (NULL ids, the query's own id) carry the
+    query's own vector, so they outscore every real neighbor. They
+    must not take the per-batch cut slots: the scans still return the
+    k rows pairwise_cosine + window ranks."""
+    from geosparql_etl_spark.operators import similarity as sim
+
+    rows = [(None, [1.0, 1.0]) for _ in range(6)]
+    rows += [(100, [1.0, 1.0]) for _ in range(3)]
+    rows += [(i, [1.0, float(i) / 4.0]) for i in range(1, 9)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    q = spark.createDataFrame(
+        [(100, [1.0, 1.0])], "vec_id long, embedding array<float>"
+    )
+    want = _canon_rows(
+        _window_topk(sim.pairwise_cosine(q, df, dim=2), 3).collect()
+    )
+    assert [r[1] for r in want] == [3, 4, 5]
+    prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
+    try:
+        got = sim.cosine_topk(df.coalesce(1), q, k=3, dim=2).collect()
+        probe = sim.ivf_topk(
+            df.coalesce(1), q, k=3, dim=2, n_cells=1, n_probe=1
+        ).collect()
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
+    assert _canon_rows(got) == want
+    assert _canon_rows(probe) == want
+
+
+def _seq(a, b):
+    """The JVM dot fold in plain Python: sequential double adds, NULL
+    when a side is NULL or the lengths differ."""
+    if a is None or b is None or len(a) != len(b):
+        return None
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc = acc + float(x) * float(y)
+    return acc
+
+
+def _round6(x):
+    """Spark's round(x, 6) on a double (HALF_UP over its decimal
+    string)."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    if x is None:
+        return None
+    return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+
+
+def _exact_cos(q, v):
+    qq, vv = _seq(q, q), _seq(v, v)
+    if qq is None or vv is None:
+        return 0.0
+    den = math.sqrt(qq) * math.sqrt(vv)
+    if not den > 0:
+        return 0.0
+    d = _seq(q, v)
+    return None if d is None else d / den
+
+
+def _adc_d2(q, code, books):
+    rv = [float(x) for j, c in enumerate(code) for x in books[j][c]]
+    qq, d, rr = _seq(q, q), _seq(q, rv), _seq(rv, rv)
+    return None if qq is None or d is None else (qq - 2.0 * d) + rr
+
+
+def _take(pairs, n, key):
+    """Per query id, the first ``n`` pairs by ``key`` with 1-based
+    rank appended (the reference window)."""
+    by_q = {}
+    for p in pairs:
+        by_q.setdefault(p[0], []).append(p)
+    out = []
+    for ps in by_q.values():
+        ps.sort(key=key)
+        out += [p + (i + 1,) for i, p in enumerate(ps[:n])]
+    return out
+
+
+def _asc_null_first(p):
+    return (p[2] is not None, p[2] if p[2] is not None else 0.0, p[1])
+
+
+def _desc_null_last(p):
+    return (p[2] is None, -p[2] if p[2] is not None else 0.0, p[1])
+
+
+def _pq_brute(corpus, qrows, books, kq):
+    pairs = [
+        (qid, nid, _round6(_adc_d2(qv, code, books)))
+        for qid, qv in qrows
+        for nid, _, code, _ in corpus
+        if nid != qid
+    ]
+    return _take(pairs, kq, _asc_null_first)
+
+
+def _ivfpq_brute(corpus, qrows, books, cents, n_probe, shortlist, kq):
+    short = []
+    for qid, qv in qrows:
+        scores = [_seq(qv, c) for c in cents]
+        probes = sorted(
+            range(len(cents)),
+            key=lambda i: (scores[i] is not None, scores[i] or 0.0, i),
+            reverse=True,
+        )[:n_probe]
+        short += [
+            (qid, nid, _round6(_adc_d2(qv, code, books)), qv, v)
+            for nid, v, code, cell in corpus
+            if cell in probes and nid != qid
+        ]
+    short = _take(short, shortlist, _asc_null_first)
+    exact = [
+        (qid, nid, _round6(_exact_cos(qv, v))) for qid, nid, _, qv, v, _ in short
+    ]
+    return _take(exact, kq, _desc_null_last)
+
+
+def test_pq_and_ivfpq_scan_match_brute_force(spark, sf_dir):
+    """The ADC codes scans (LUT prefilter + bit-exact seq-fold
+    distances) must reproduce a plain-Python brute force exactly: the
+    rounded approx_d2 OUTPUT values (pq_topk) and the composed
+    shortlist -> exact re-score (ivf_pq_topk), with duplicate query
+    ids (equal and different vectors; duplicates share one window and
+    the exact stage re-scores each pair with its own row's vector) and
+    NULL / wrong-width query vectors (NULL distance for every pair)."""
     import geosparql_etl_spark.operators.similarity as sim
 
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    q = e.where(F.col("vec_id") < 6)
-    new_pq = sorted(tuple(r) for r in sim.pq_topk(e, q, kq=5).collect())
-    new_ivf = sorted(
+    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+        "vec_id", "embedding"
+    )
+    base = e.where(F.col("vec_id") < 6)
+    odd = spark.createDataFrame(
+        [(9001, None), (9002, [1.0, 2.0])], e.schema
+    )
+    q = (
+        base.union(base.where(F.col("vec_id") == 1))
+        .union(
+            base.where(F.col("vec_id") == 2).withColumn(
+                "embedding", F.reverse("embedding")
+            )
+        )
+        .union(odd)
+    )
+    qrows = [(r.vec_id, r.embedding) for r in q.collect()]
+
+    books = sim._pq_codebooks(64, 8, 16)
+    corpus = [
+        (r.vec_id, list(r.embedding), list(r.pq_code), None)
+        for r in sim.with_pq_code(e, "embedding", 64, 8, 16).collect()
+    ]
+    got_pq = [tuple(r) for r in sim.pq_topk(e, q, kq=5).collect()]
+    assert _canon_rows(got_pq) == _canon_rows(_pq_brute(corpus, qrows, books, 5))
+    assert len(got_pq) == 8 * 5  # duplicates share their id's window
+
+    cents = sim._ivf_centroids(64, 16)
+    celled = sim.with_pq_code(
+        sim.with_ivf_cell(e, "embedding", 64, 16), "embedding", 64, 8, 16
+    )
+    corpus = [
+        (r.vec_id, list(r.embedding), list(r.pq_code), r.ivf_cell)
+        for r in celled.collect()
+    ]
+    got_ivf = [
         tuple(r)
         for r in sim.ivf_pq_topk(
             e, q, kq=4, shortlist=15, n_probe=3, m=8, k=16
         ).collect()
+    ]
+    want_ivf = _ivfpq_brute(corpus, qrows, books, cents, 3, 15, 4)
+    assert _canon_rows(got_ivf) == _canon_rows(want_ivf) and len(got_ivf) > 0
+
+
+def test_topk_scans_block_large_query_sides(spark, sf_dir, monkeypatch):
+    """A query side larger than _TOPK_MAX_QUERIES is scored in blocks
+    (one scan each, unioned before the window): same rows as the
+    one-block scan, which the tests above pin to the references."""
+    import geosparql_etl_spark.operators.similarity as sim
+
+    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+        "vec_id", "embedding"
     )
-    orig = sim._adc_queries
-    sim._adc_queries = lambda *a, **kw: None
-    try:
-        old_pq = sorted(tuple(r) for r in sim.pq_topk(e, q, kq=5).collect())
-        old_ivf = sorted(
-            tuple(r)
-            for r in sim.ivf_pq_topk(
-                e, q, kq=4, shortlist=15, n_probe=3, m=8, k=16
-            ).collect()
-        )
-    finally:
-        sim._adc_queries = orig
-    assert new_pq == old_pq and len(new_pq) > 0
-    assert new_ivf == old_ivf and len(new_ivf) > 0
+    q = e.where(F.col("vec_id") < 8)
+    q = q.union(q.where(F.col("vec_id") == 3))  # a duplicate straddles
+    runs = {
+        "cos": lambda: sim.cosine_topk(e, q, k=5, dim=64),
+        "ivf": lambda: sim.ivf_topk(e, q, k=5, dim=64, n_probe=2),
+        "pq": lambda: sim.pq_topk(e, q, kq=5),
+        "ivfpq": lambda: sim.ivf_pq_topk(e, q, kq=4, shortlist=15),
+    }
+    one = {n: _canon_rows(f().collect()) for n, f in runs.items()}
+    monkeypatch.setattr(sim, "_TOPK_MAX_QUERIES", 4)
+    for n, f in runs.items():
+        df = f()
+        plan = df._jdf.queryExecution().analyzed().toString()
+        assert plan.count("MapInPandas") == 3, n  # 9 rows / 4 per block
+        assert _canon_rows(df.collect()) == one[n] and one[n], n
 
 
 def test_lsh_scorer_nan_pair_kept(spark):
@@ -373,75 +581,89 @@ def test_cell_max_lower_cosine_matches_legacy_join(spark, sf_dir):
     assert multi == want
 
 
-def _nan_safe(rows):
-    import math
+def _probe_reference(corpus, queries, cents, n_probe, k, carry=()):
+    """Brute-force IVF probe: every (query row, corpus row) pair whose
+    corpus cell is one of the query row's probed cells, scored with the
+    public cosine() expression, ranked by the reference window."""
+    import geosparql_etl_spark.operators.similarity as sim
 
-    def norm(v):
-        return "NaN" if isinstance(v, float) and math.isnan(v) else v
+    cb = sim.with_ivf_cell(
+        corpus, "embedding", len(cents[0]), len(cents), centroids=cents
+    ).select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("__cv"),
+        "ivf_cell",
+        *carry,
+    )
+    qb = queries.select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("__qv"),
+        _probe_cells("embedding", cents, n_probe),
+    )
+    pairs = cb.crossJoin(qb).where(
+        F.array_contains("__cells", F.col("ivf_cell"))
+        & (F.col("neighbor_id") != F.col("query_id"))
+    )
+    return _window_topk(
+        pairs.select(
+            "query_id",
+            "neighbor_id",
+            sim.cosine(F.col("__qv"), F.col("__cv")).alias("cosine_sim"),
+            *carry,
+        ),
+        k,
+    )
 
-    return sorted(tuple(norm(v) for v in r) for r in rows)
 
-
-def test_probe_topk_scan_matches_legacy_join(spark, sf_dir, tmp_path):
-    """The round-15 probe cell-cosine scan (exact seq-order cosine
-    emitted inside a MapInPandas pass over the celled corpus) must
-    reproduce the legacy broadcast cell-join plan exactly: carry_cols,
-    persisted STORED norms used verbatim, NaN-component corpus vectors
-    (Spark NaN-greatest: denom NaN > 0 is true, cosine NaN ranks
-    first), and duplicate query ids falling back to the legacy join."""
-    import pytest as _pytest
-
+def test_probe_topk_scan_matches_reference(spark, sf_dir, tmp_path):
+    """The probe cell-cosine scan (exact seq-order cosine emitted inside
+    a MapInPandas pass over the celled corpus) must reproduce the
+    brute-force probe exactly: carry_cols, persisted STORED norms used
+    verbatim, NaN-component corpus vectors (Spark NaN-greatest: denom
+    NaN > 0 is true, cosine NaN ranks first), and duplicate query ids
+    (equal and different vectors) scored per row in one window."""
     import geosparql_etl_spark.operators.similarity as sim
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     el = e.withColumn("label", (F.col("vec_id") % 3).cast("string"))
     q = e.where(F.col("vec_id") < 8)
+    cents = sim._ivf_centroids(64, 16)
 
-    def ab(fn):
-        new = _nan_safe(fn().collect())
-        mp = _pytest.MonkeyPatch()
-        try:
-            mp.setattr(sim, "_cell_cosine_scan", lambda *a, **kw: None)
-            old = _nan_safe(fn().collect())
-        finally:
-            mp.undo()
-        return new, old
-
-    n1, o1 = ab(
-        lambda: sim.ivf_topk(
-            el, q, k=6, dim=64, n_cells=16, n_probe=2, carry_cols=("label",)
-        )
-    )
-    assert n1 == o1 and len(n1) > 0
+    got = sim.ivf_topk(
+        el, q, k=6, dim=64, n_cells=16, n_probe=2, carry_cols=("label",)
+    ).collect()
+    want = _probe_reference(el, q, cents, 2, 6, carry=("label",)).collect()
+    assert _canon_rows(got) == _canon_rows(want) and len(got) > 0
 
     idx = str(tmp_path / "probe_scan_idx")
     sim.write_ivf_index(e, idx, dim=64, n_cells=16)
-    n2, o2 = ab(
-        lambda: sim.ivf_index_topk(
-            spark, idx, q, k=7, dim=64, n_cells=16, n_probe=3
-        )
-    )
-    assert n2 == o2 and len(n2) > 0
+    got = sim.ivf_index_topk(
+        spark, idx, q, k=7, dim=64, n_cells=16, n_probe=3
+    ).collect()
+    want = _probe_reference(e, q, cents, 3, 7).collect()
+    assert _canon_rows(got) == _canon_rows(want) and len(got) > 0
 
-    # NaN corpus vector: scan must carry the NaN pair exactly like the
-    # legacy join (NaN cosine sorts FIRST under desc — dropping it
+    # NaN corpus vector: the scan must carry the NaN pair exactly like
+    # the reference (NaN cosine sorts FIRST under desc — dropping it
     # would promote a different neighbor)
     rows = [(i, [float(i % 7 + 1)] * 64) for i in range(1, 30)]
     rows.append((30, [float("nan")] + [1.0] * 63))
     nf = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    n3, o3 = ab(
-        lambda: sim.ivf_topk(
-            nf, nf.where(F.col("vec_id") <= 3), k=5, dim=64, n_cells=4,
-            n_probe=4,
-        )
+    nq = nf.where(F.col("vec_id") <= 3)
+    got = _canon_rows(
+        sim.ivf_topk(nf, nq, k=5, dim=64, n_cells=4, n_probe=4).collect()
     )
-    assert n3 == o3 and len(n3) > 0
-    assert any("NaN" in r for r in n3), "NaN pair must survive the scan"
+    want = _canon_rows(
+        _probe_reference(nf, nq, sim._ivf_centroids(64, 4), 4, 5).collect()
+    )
+    assert got == want and len(got) > 0
+    assert any("NaN" in r for r in got), "NaN pair must survive the scan"
 
-    # duplicate query ids with different vectors: the scan must refuse
-    # (legacy join scores against BOTH rows; the scan cannot)
-    dq = q.union(q.withColumn("embedding", F.reverse(F.col("embedding"))))
-    n4, o4 = ab(
-        lambda: sim.ivf_topk(e, dq, k=4, dim=64, n_cells=16, n_probe=2)
+    # duplicate query ids, equal and different vectors: each row is
+    # scored against its own probed cells, one window per id
+    dq = q.union(q.where(F.col("vec_id") < 4)).union(
+        q.withColumn("embedding", F.reverse(F.col("embedding")))
     )
-    assert n4 == o4 and len(n4) > 0
+    got = sim.ivf_topk(e, dq, k=4, dim=64, n_cells=16, n_probe=2).collect()
+    want = _probe_reference(e, dq, cents, 2, 4).collect()
+    assert _canon_rows(got) == _canon_rows(want) and len(got) == 8 * 4

@@ -98,11 +98,11 @@ VECTORIZED_PYTHON_OK = {
     "llm25_semantic_training_funnel",  # with_ivf_cell semantic stage
     "d19_incremental_semantic_dedup",  # same clustering, batch vs index
     "warc02_html_extraction",  # WARC archive-bytes record parse batches
-    # round 15: _probe_topk's exact arm now plans a vectorized
-    # MapInPandas cell-cosine scan (exact seq-order cosine emitted in
-    # the scan; per-(query, batch) top-k-safe cut — see
-    # operators/similarity.py:_cell_cosine_scan); these probe queries
-    # cross into Python only through it
+    # _probe_topk plans a vectorized MapInPandas cell-cosine scan
+    # (exact seq-order cosine emitted in the scan; per-(query, batch)
+    # top-k-safe cut — see operators/similarity.py:_probe_topk and
+    # _cell_cosine_scan_fn); these probe queries cross into Python
+    # only through it
     "sim16_ivf_index_probe",
     "sim18_trained_index_probe",
     "sim21_incremental_index_probe",
