@@ -4,14 +4,15 @@ Reference: json-etl/geojson_to_geosparql_etl.py (entire file). The
 imperative per-file loop becomes one DataFrame chain:
 
     read.json -> posexplode(features) -> A1 argmax (map fold) ->
-    J2 broadcast SNOMED join -> G1 WKT expression ->
+    J2 SNOMED map lookup -> G1 WKT expression ->
     A6 groupBy(file) ordered render -> K1 text sink
 
-Two stages: scan+map side (explode, argmax, join against broadcast,
-feature-block render — all inside one whole-stage-codegen span), then a
-single shuffle on source_file for document assembly. At 100 TB the
-shuffle carries only rendered feature blocks (strings), never raw
-geometry; the SNOMED dim is broadcast, so no shuffle on the big side.
+Two stages: scan+map side (explode, argmax, SNOMED lookup in a map
+literal, feature-block render — all inside one whole-stage-codegen
+span), then a single shuffle on source_file for document assembly. At
+100 TB the shuffle carries only rendered feature blocks (strings),
+never raw geometry; the 10-entry SNOMED dim is a literal, so it costs
+neither a shuffle nor a broadcast job.
 
 Output parity: byte-identical to the reference renderer given the same
 timestamp (injected parameter; the reference stamps now() at
@@ -28,7 +29,6 @@ from geosparql_etl_spark.functions.hashing import sha256_id
 from geosparql_etl_spark.functions.text import extract_image_id
 from geosparql_etl_spark.operators.argmax import dominant_entry
 from geosparql_etl_spark.operators.render import ordered_concat
-from geosparql_etl_spark.util import local_frame
 
 # SNOMED tissue-class registry (json-etl:13-24) as engine data:
 # class name -> SNOMED concept id (the URI tail; URI = sno: prefix + id).
@@ -60,22 +60,14 @@ _PREFIX_HEADER = (
 
 
 def _snomed_map_lit() -> Column:
-    """Literal map class_name -> snomed id, for the per-row measurement
-    sub-render (map-entry iteration can't join; the dim is 10 entries)."""
+    """Literal map class_name -> snomed id: the J2 dimension lookup and
+    the per-row measurement sub-render (map-entry iteration can't join;
+    the dim is 10 entries)."""
     kv: list[Column] = []
     for cls, sid in SNOMED_CLASSES.items():
         kv.append(F.lit(cls))
         kv.append(F.lit(sid))
     return F.create_map(*kv)
-
-
-def snomed_df(spark) -> DataFrame:
-    """The same registry as a broadcastable dimension (J2)."""
-    return local_frame(
-        spark,
-        [(k, v) for k, v in SNOMED_CLASSES.items()],
-        "class_name string, snomed_id string",
-    )
 
 
 def _measurement_blocks(measurements: Column) -> Column:
@@ -134,14 +126,13 @@ def render_ttl_documents(features: DataFrame, timestamp: str) -> DataFrame:
     ``timestamp`` is the injected ISO-8601 'Z' string (determinism policy,
     SURVEY.md §7).
     """
-    spark = features.sparkSession
-
     dom = dominant_entry(F.col("measurements")).alias("dom")
     qualified = (
         features.select("source_file", "feature_idx", "coordinates", "measurements", dom)
-        .withColumn("class_name", F.col("dom.class"))
-        .where(F.col("class_name").isNotNull())
-        .join(F.broadcast(snomed_df(spark)), "class_name", "inner")  # J2 / P6
+        # J2: inner-join semantics — a feature whose dominant class is
+        # absent (or outside the registry) yields no member block
+        .withColumn("snomed_id", F.element_at(_snomed_map_lit(), F.col("dom.class")))
+        .where(F.col("snomed_id").isNotNull())
         .withColumn("wkt", polygon_wkt(F.col("coordinates")))  # G1
         .where(F.col("wkt").isNotNull())
         .withColumn(

@@ -11,6 +11,15 @@ compiles onto it as Catalyst-planned self-joins.
 Design follows the published SPARQL-on-Spark literature (S2RDF,
 SPARQLGX, Sempala — vertical partitioning by predicate + BGP-to-join
 compilation), not the reference's row loops.
+
+Each store caches its compiled plans (``sparql_select``): a bounded LRU
+living on the store object, keyed on the query text and the session
+confs analysis bakes into a plan. A hit skips parse, compile and
+analysis only; every call still re-optimizes, re-plans and re-executes.
+Live stores (``NTriplesLakeStore``), SERVICE queries, queries calling
+BNODE/NOW/UUID/STRUUID, and ``sparql_update`` compile on every call.
+``tpch_store`` is memoized per ``sf_dir``, so repeated runs of one query
+over it hit after the first.
 """
 
 from geosparql_etl_spark.sparql.compiler import (

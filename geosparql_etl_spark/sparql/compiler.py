@@ -123,6 +123,7 @@ matches nothing.
 from __future__ import annotations
 
 import re
+from collections import OrderedDict
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame
@@ -2960,6 +2961,13 @@ def _operand_col(node, numeric: bool) -> Column:
     raise ValueError(f"bad operand {node!r}")
 
 
+# Builtins that mint a fresh value per evaluation. Neither the
+# process-wide Column memo (_compile_call) nor the per-store plan cache
+# (sparql_select) may reuse a compiled form of them: Spark fixes the
+# uuid() seed when it analyzes the plan.
+_VOLATILE_CALLS = ("bnode", "now", "struuid", "uuid")
+
+
 def _compile_call(node) -> Column:
     """Compile one function-call AST node. ``_compile_call_impl`` is a
     pure function of the node (operands resolve to F.col(name) /
@@ -2982,7 +2990,7 @@ def _compile_call(node) -> Column:
     # F.expr("uuid()"), which today happens to reseed per plan
     # position, and the memo guard must not depend on that internal
     # (round-14 judge note).
-    if "bnode" in r or "now" in r or "struuid" in r or "uuid" in r:
+    if any(name in r for name in _VOLATILE_CALLS):
         return _compile_call_impl(node)
     return memo_tree(("sparql_call", r), lambda: _compile_call_impl(node))
 
@@ -3958,6 +3966,34 @@ def construct_triples(bindings: DataFrame, template: list) -> DataFrame:
     return out.dropDuplicates()
 
 
+# Per-store compiled-plan cache bound (LRU entries per store).
+_PLAN_CACHE_SIZE = 64
+# Session confs the analyzer bakes into a resolved plan (cast and
+# arithmetic semantics, timestamp zone, identifier resolution): part of
+# the cache key, so toggling one compiles afresh.
+_PLAN_CONFS = (
+    "spark.sql.ansi.enabled",
+    "spark.sql.session.timeZone",
+    "spark.sql.caseSensitive",
+)
+
+
+def _plan_volatile(node) -> bool:
+    """Does this query AST hold a SERVICE clause (compile reads the
+    mutable ``_SERVICES`` registry) or a nondeterministic builtin
+    (``_VOLATILE_CALLS``)? Either makes a compiled plan unfit to
+    reuse. Walks subqueries too."""
+    if isinstance(node, (Query, Group)):
+        return any(_plan_volatile(v) for v in vars(node).values())
+    if isinstance(node, (list, tuple)):
+        if node and node[0] == "service":
+            return True
+        if len(node) == 3 and node[0] == "call" and node[1] in _VOLATILE_CALLS:
+            return True
+        return any(_plan_volatile(child) for child in node)
+    return False
+
+
 def sparql_select(store: TripleStore, query_text: str) -> DataFrame:
     """Parse + compile + return the (lazy) result DataFrame.
 
@@ -3970,10 +4006,43 @@ def sparql_select(store: TripleStore, query_text: str) -> DataFrame:
     string HERE — at final projection only, after every join /
     HAVING / ORDER BY has run on the numeric column (see _agg_col).
     Subqueries compile through _compile_query directly and so keep
-    DECIMAL for the outer join."""
+    DECIMAL for the outer join.
+
+    Compiled plans are cached PER STORE (an LRU of
+    ``_PLAN_CACHE_SIZE`` entries living on the store object), keyed on
+    the raw query text plus the ``_PLAN_CONFS`` session confs. A hit
+    skips parse, compile and analysis only: every call — hit or miss —
+    returns a fresh ``select("*")`` over the cached frame, so Catalyst
+    re-optimizes and re-plans it (current shuffle partitions, split
+    sizes, AQE) and every shuffle and broadcast runs again; no result
+    or execution is reused. Compile-time jobs (shape statistics,
+    property-path closure rounds) are part of the cached plan. The
+    cache is bypassed — compiled on every call — for stores whose
+    backing data is live (``memoizable`` False: NTriplesLakeStore),
+    for queries holding a SERVICE clause or a BNODE/NOW/UUID/STRUUID
+    call (``_plan_volatile``), and for ``sparql_update`` always.
+    ``tpch_store`` is memoized per ``sf_dir``, so repeated runs of one
+    sp query hit after the first."""
+    if not store.memoizable:
+        return _compile_select(store, parse_query(query_text))
+    conf = store.triples.sparkSession.conf
+    key = (query_text, *(conf.get(k) for k in _PLAN_CONFS))
+    cache = store.__dict__.setdefault("_plan_cache", OrderedDict())
+    plan = cache.pop(key, None)
+    if plan is None:
+        q = parse_query(query_text)
+        plan = _compile_select(store, q)
+        if _plan_volatile(q):
+            return plan
+    cache[key] = plan
+    if len(cache) > _PLAN_CACHE_SIZE:
+        cache.popitem(last=False)
+    return _propagate_mn(plan.select("*"), plan)
+
+
+def _compile_select(store: TripleStore, q: Query) -> DataFrame:
     from pyspark.sql.types import DecimalType
 
-    q = parse_query(query_text)
     store._meta_need = _collect_meta_need(q)
     try:
         df = _compile_query(store, q)

@@ -406,6 +406,13 @@ class TripleStore:
     #: memoize process-wide instead of per store instance
     stats_key: str | None = None
 
+    #: False when the backing data is LIVE (files land between
+    #: queries). The one marker both per-store memos consult: predicate
+    #: shape statistics (``predicate_object_shape``) and compiled
+    #: SPARQL plans (``compiler.sparql_select``) — either could go
+    #: stale against live data
+    memoizable: bool = True
+
     def __init__(self, triples: DataFrame, vertical: dict[str, DataFrame] | None = None):
         self.triples = triples
         self.vertical = vertical
@@ -422,7 +429,7 @@ class TripleStore:
         grid rewrite actually fires) and memoized — process-wide when
         ``stats_key`` marks the backing data immutable, per-instance
         otherwise."""
-        if not getattr(self, "shape_stats_enabled", True):
+        if not self.memoizable:
             # mutable backing data (live lake stores): a memoized
             # shape could go stale after appends and silently prune a
             # now-reachable arm — unknown domain keeps every arm,
@@ -616,8 +623,10 @@ class NTriplesLakeStore(TripleStore):
     and a constant GRAPH scope prunes whole graph directories."""
 
     # the lake is LIVE (appends land between queries): memoized shape
-    # statistics could go stale and silently prune a reachable arm
-    shape_stats_enabled = False
+    # statistics could go stale and silently prune a reachable arm, and
+    # a cached compiled plan would reuse the relations compile opened
+    # instead of the fresh load per query this class exists for
+    memoizable = False
 
     def __init__(
         self,

@@ -303,6 +303,44 @@ def test_json_etl_observe_metrics(spark, tmp_path):
     assert metrics["total_bytes"] > 3 * len(json_etl._PREFIX_HEADER)
 
 
+def test_json_etl_unregistered_dominant_class_yields_no_member(spark, tmp_path):
+    """SNOMED lookup keeps inner-join meaning: a feature whose dominant
+    class is outside the registry (even when a registered class scores
+    lower) or that has no measurements renders no rdfs:member block,
+    and its file still gets a document."""
+
+    def feature(measurements):
+        return {
+            "type": "Feature",
+            "geometry": {
+                "type": "Polygon",
+                "coordinates": [[[1.0, 2.0], [3.0, 2.0], [3.0, 4.0]]],
+            },
+            "properties": {"measurements": measurements},
+        }
+
+    (tmp_path / "in").mkdir()
+    (tmp_path / "in" / "none.geojson").write_text(json.dumps({
+        "type": "FeatureCollection",
+        "features": [
+            feature({"prob_other": 0.9, "prob_400p-Tumor": 0.1}),
+            feature({"prob_400p-Unknown": 0.5}),
+            feature({}),
+        ],
+    }))
+    (tmp_path / "in" / "one.geojson").write_text(json.dumps({
+        "type": "FeatureCollection",
+        "features": [feature({}), feature({"prob_400p-Stroma": 0.6})],
+    }))
+    json_etl.run(spark, str(tmp_path / "in"), str(tmp_path / "out"), TS_Z)
+    none = (tmp_path / "out" / "none.ttl").read_text()
+    assert none.startswith("@prefix") and "geo:FeatureCollection" in none
+    assert "rdfs:member" not in none
+    one = (tmp_path / "out" / "one.ttl").read_text()
+    assert one.count("rdfs:member") == 1
+    assert "hal:classification  sno:128752000;" in one
+
+
 def test_segmentation_path_regex_dotted_tcga_ids(spark, tmp_path):
     """S3 trip wire (SURVEY §7): TCGA image names contain dots and the
     archive dir embeds .svs.tar.gz — the path regex must keep the full

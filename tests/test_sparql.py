@@ -18,29 +18,36 @@ from geosparql_etl_spark.sparql import (
 PFX = "PREFIX ex: <urn:ex:> PREFIX geo: <geo:> PREFIX geof: <geof:> "
 
 
+TOY_ROWS = [
+    ("urn:p:1", "rdf:type", "urn:ex:Person"),
+    ("urn:p:1", "urn:ex:name", "ada"),
+    ("urn:p:1", "urn:ex:age", "36"),
+    ("urn:p:1", "urn:ex:city", "urn:c:1"),
+    ("urn:p:2", "rdf:type", "urn:ex:Person"),
+    ("urn:p:2", "urn:ex:name", "grace"),
+    ("urn:p:2", "urn:ex:age", "47"),
+    ("urn:p:2", "urn:ex:city", "urn:c:2"),
+    ("urn:p:3", "rdf:type", "urn:ex:Person"),
+    ("urn:p:3", "urn:ex:name", "alan"),
+    # p:3 has no age, no city (sparse predicates)
+    ("urn:c:1", "rdf:type", "urn:ex:City"),
+    ("urn:c:1", "urn:ex:name", "london"),
+    ("urn:c:1", "geo:asWKT", "POINT(10 20)"),
+    ("urn:c:2", "rdf:type", "urn:ex:City"),
+    ("urn:c:2", "urn:ex:name", "york"),
+    ("urn:c:2", "geo:asWKT", "POINT(90 90)"),
+]
+
+
+def _toy(spark):
+    return TripleStore(
+        spark.createDataFrame(TOY_ROWS, "s string, p string, o string")
+    )
+
+
 @pytest.fixture(scope="module")
 def toy_store(spark):
-    rows = [
-        ("urn:p:1", "rdf:type", "urn:ex:Person"),
-        ("urn:p:1", "urn:ex:name", "ada"),
-        ("urn:p:1", "urn:ex:age", "36"),
-        ("urn:p:1", "urn:ex:city", "urn:c:1"),
-        ("urn:p:2", "rdf:type", "urn:ex:Person"),
-        ("urn:p:2", "urn:ex:name", "grace"),
-        ("urn:p:2", "urn:ex:age", "47"),
-        ("urn:p:2", "urn:ex:city", "urn:c:2"),
-        ("urn:p:3", "rdf:type", "urn:ex:Person"),
-        ("urn:p:3", "urn:ex:name", "alan"),
-        # p:3 has no age, no city (sparse predicates)
-        ("urn:c:1", "rdf:type", "urn:ex:City"),
-        ("urn:c:1", "urn:ex:name", "london"),
-        ("urn:c:1", "geo:asWKT", "POINT(10 20)"),
-        ("urn:c:2", "rdf:type", "urn:ex:City"),
-        ("urn:c:2", "urn:ex:name", "york"),
-        ("urn:c:2", "geo:asWKT", "POINT(90 90)"),
-    ]
-    df = spark.createDataFrame(rows, "s string, p string, o string")
-    return TripleStore(df)
+    return _toy(spark)
 
 
 def run(store, q):
@@ -3575,7 +3582,7 @@ def test_lake_store_shape_stats_disabled(spark, tmp_path):
         "overwrite"
     ).save(path)
     store = NTriplesLakeStore(spark, path)
-    assert store.shape_stats_enabled is False
+    assert store.memoizable is False
     assert store.predicate_object_shape("urn:ex:zone") is None
 
 
@@ -4021,3 +4028,214 @@ class TestMultiPolygonGeo:
         assert r.env == (
             "POLYGON((0.0 0.0, 40.0 0.0, 40.0 20.0, 0.0 20.0, 0.0 0.0))"
         )
+
+
+class TestPlanCache:
+    """sparql_select keeps a bounded per-store cache of compiled plans.
+    A hit skips parse, compile and analysis only: every call returns a
+    fresh frame that is re-optimized, re-planned and re-executed. Live
+    stores, SERVICE queries and nondeterministic builtins compile on
+    every call; a conf the analyzer bakes in is part of the key."""
+
+    AGG = (
+        "SELECT ?c (COUNT(?p) AS ?n) WHERE { ?p ex:city ?c . ?p ex:name ?x }"
+        " GROUP BY ?c ORDER BY ?c"
+    )
+
+    @pytest.fixture()
+    def compiles(self, monkeypatch):
+        from geosparql_etl_spark.sparql import compiler
+
+        calls = []
+        real = compiler._compile_select
+
+        def counting(store, q):
+            calls.append(q)
+            return real(store, q)
+
+        monkeypatch.setattr(compiler, "_compile_select", counting)
+        return calls
+
+    def test_hit_matches_fresh_store(self, spark, compiles):
+        store = _toy(spark)
+        first = run(store, self.AGG).collect()
+        hit = run(store, self.AGG)
+        assert len(compiles) == 1 and len(store._plan_cache) == 1
+        fresh = run(_toy(spark), self.AGG).collect()
+        assert hit.collect() == first == fresh
+        assert [tuple(r) for r in fresh] == [("urn:c:1", 1), ("urn:c:2", 1)]
+
+    def test_hit_reexecutes_every_stage(self, spark, compiles):
+        """Each call is its own QueryExecution: the hit's collect runs
+        (not skips) as many stages as the miss's — returning one shared
+        frame would reuse its shuffle output and skip the map stage."""
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+        store = _toy(spark)
+
+        def ran_stages(group):
+            sc.setJobGroup(group, group)
+            try:
+                run(store, self.AGG).collect()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            n = 0
+            for job in tracker.getJobIdsForGroup(group):
+                for sid in tracker.getJobInfo(job).stageIds:
+                    info = tracker.getStageInfo(sid)
+                    n += info is not None and info.numCompletedTasks > 0
+            return n
+
+        miss, hit = ran_stages("plan-cache-miss"), ran_stages("plan-cache-hit")
+        assert len(compiles) == 1
+        assert miss >= 2 and hit == miss
+
+    def test_hit_replans_under_current_confs(self, spark, compiles):
+        store = _toy(spark)
+        run(store, self.AGG).collect()
+        old = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", "7")
+        try:
+            hit = run(store, self.AGG)
+            plan = hit._jdf.queryExecution().executedPlan().toString()
+            rows = hit.collect()
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", old)
+        assert len(compiles) == 1
+        assert "hashpartitioning(c#" in plan and ", 7)" in plan, plan
+        assert [tuple(r) for r in rows] == [("urn:c:1", 1), ("urn:c:2", 1)]
+
+    def test_optional_unbound_survives_hit(self, spark, compiles):
+        from geosparql_etl_spark.sparql.compiler import _maybe_null_vars
+
+        store = _toy(spark)
+        q = (
+            "SELECT ?n ?a WHERE { ?p ex:name ?n . ?p a ex:Person "
+            "OPTIONAL { ?p ex:age ?a } } ORDER BY ?n"
+        )
+        miss = run(store, q)
+        hit = run(store, q)
+        assert len(compiles) == 1 and hit is not miss
+        want = [("ada", "36"), ("alan", None), ("grace", "47")]
+        assert [tuple(r) for r in hit.collect()] == want
+        assert [tuple(r) for r in miss.collect()] == want
+        assert "a" in _maybe_null_vars(hit)
+        assert _maybe_null_vars(hit) == _maybe_null_vars(miss)
+
+    @pytest.mark.parametrize(
+        "bind",
+        ["UUID()", "STRUUID()", "BNODE()", "NOW()", 'CONCAT("x", STRUUID())'],
+    )
+    def test_nondeterministic_builtins_recompile(self, spark, compiles, bind):
+        store = _toy(spark)
+        q = f"SELECT ?n ?v WHERE {{ ?p ex:name ?n . BIND({bind} AS ?v) }}"
+        a = {tuple(r) for r in run(store, q).collect()}
+        b = {tuple(r) for r in run(store, q).collect()}
+        assert len(compiles) == 2 and not getattr(store, "_plan_cache", None)
+        if "UUID" in bind or "BNODE" in bind:
+            assert a.isdisjoint(b)  # fresh values per call
+
+    def test_nondeterministic_builtin_in_subquery_recompiles(
+        self, spark, compiles
+    ):
+        store = _toy(spark)
+        q = (
+            "SELECT ?n ?v WHERE { ?p ex:name ?n . "
+            "{ SELECT ?p (STRUUID() AS ?v) WHERE { ?p a ex:Person } } }"
+        )
+        a = {r.v for r in run(store, q).collect()}
+        b = {r.v for r in run(store, q).collect()}
+        assert len(compiles) == 2 and len(a) == 3 and a.isdisjoint(b)
+
+    def test_service_recompiles(self, spark, compiles):
+        from geosparql_etl_spark.sparql import (
+            register_service,
+            unregister_service,
+        )
+
+        def remote(country):
+            return TripleStore(
+                spark.createDataFrame(
+                    [("urn:c:1", "urn:ex:country", country)],
+                    "s string, p string, o string",
+                )
+            )
+
+        store = _toy(spark)
+        q = (
+            "SELECT ?n ?k WHERE { ?p ex:name ?n . ?p ex:city ?c . "
+            "SERVICE <urn:svc:cache> { ?c ex:country ?k } }"
+        )
+        try:
+            register_service("urn:svc:cache", remote("uk"))
+            a = [tuple(r) for r in run(store, q).collect()]
+            register_service("urn:svc:cache", remote("fr"))
+            b = [tuple(r) for r in run(store, q).collect()]
+        finally:
+            unregister_service("urn:svc:cache")
+        assert len(compiles) == 2
+        assert a == [("ada", "uk")] and b == [("ada", "fr")]
+
+    def test_lake_store_recompiles(self, spark, tmp_path, compiles):
+        from geosparql_etl_spark.sources.ntriples import register
+        from geosparql_etl_spark.sparql.triples import (
+            NTriplesLakeStore,
+            to_ntriples_rows,
+        )
+
+        register(spark)
+        path = str(tmp_path / "lake")
+
+        def append(rows):
+            to_ntriples_rows(
+                spark.createDataFrame(rows, "s string, p string, o string")
+            ).write.format("ntriples").mode("append").save(path)
+
+        append([("urn:p:1", "urn:ex:name", "ada")])
+        store = NTriplesLakeStore(spark, path)
+        q = "SELECT ?n WHERE { ?p ex:name ?n } ORDER BY ?n"
+        assert [r.n for r in run(store, q).collect()] == ["ada"]
+        append([("urn:p:2", "urn:ex:name", "grace")])
+        assert [r.n for r in run(store, q).collect()] == ["ada", "grace"]
+        assert len(compiles) == 2 and not getattr(store, "_plan_cache", None)
+
+    def test_ansi_toggle_misses(self, spark, compiles):
+        store = _toy(spark)
+        old = spark.conf.get("spark.sql.ansi.enabled")
+        flip = "false" if old == "true" else "true"
+        run(store, self.AGG).collect()
+        spark.conf.set("spark.sql.ansi.enabled", flip)
+        try:
+            run(store, self.AGG).collect()
+        finally:
+            spark.conf.set("spark.sql.ansi.enabled", old)
+        assert len(compiles) == 2
+        run(store, self.AGG).collect()  # back on the first key: a hit
+        assert len(compiles) == 2 and len(store._plan_cache) == 2
+
+    def test_cache_is_bounded_lru(self, spark, compiles, monkeypatch):
+        from geosparql_etl_spark.sparql import compiler
+
+        monkeypatch.setattr(compiler, "_PLAN_CACHE_SIZE", 2)
+        store = _toy(spark)
+        qa, qb, qc = (
+            f"SELECT ?p WHERE {{ ?p ex:{p} ?o }}" for p in ("name", "age", "city")
+        )
+        run(store, qa)
+        run(store, qb)
+        run(store, qa)  # hit: qa becomes most recent
+        run(store, qc)  # evicts qb
+        assert len(compiles) == 3 and len(store._plan_cache) == 2
+        run(store, qa)
+        assert len(compiles) == 3
+        run(store, qb)
+        assert len(compiles) == 4 and len(store._plan_cache) == 2
+
+    def test_update_never_cached(self, spark, compiles):
+        from geosparql_etl_spark.sparql import sparql_update
+
+        store = _toy(spark)
+        u = PFX + 'INSERT { ?p ex:tag "t" } WHERE { ?p a ex:Person }'
+        assert sparql_update(store, u).count() == len(TOY_ROWS) + 3
+        sparql_update(store, u)
+        assert not getattr(store, "_plan_cache", None)
