@@ -17,7 +17,9 @@ living on the store object, keyed on the query text and the session
 confs analysis bakes into a plan. A hit skips parse, compile and
 analysis only; every call still re-optimizes, re-plans and re-executes.
 Live stores (``NTriplesLakeStore``), SERVICE queries, queries calling
-BNODE/NOW/UUID/STRUUID, and ``sparql_update`` compile on every call.
+BNODE/NOW/UUID/STRUUID, ``+``/``*``/``{n,m}`` property paths while no
+checkpoint dir is set (their closure is a ``localCheckpoint``), and
+``sparql_update`` compile on every call.
 ``tpch_store`` is memoized per ``sf_dir``, so repeated runs of one query
 over it hit after the first.
 """

@@ -3978,19 +3978,35 @@ _PLAN_CONFS = (
 )
 
 
-def _plan_volatile(node) -> bool:
+# Property-path forms whose compile materializes frames through
+# util.cut_lineage (_path_df: the p+ closure rounds, p* through p+,
+# the p{n,m} hop base).
+_LINEAGE_CUT_PATHS = ("plus", "star", "repeat")
+
+
+def _plan_volatile(node, local_cut: bool, in_path: bool = False) -> bool:
     """Does this query AST hold a SERVICE clause (compile reads the
     mutable ``_SERVICES`` registry) or a nondeterministic builtin
     (``_VOLATILE_CALLS``)? Either makes a compiled plan unfit to
-    reuse. Walks subqueries too."""
+    reuse. With ``local_cut`` (no checkpoint dir, so ``cut_lineage``
+    falls back to ``localCheckpoint``) so does a ``+``/``*``/``{n,m}``
+    property path: its materialized blocks live in executor storage,
+    and a cached plan would pin them for the store's life and fail on
+    every later call once an executor holding them is lost. Walks
+    subqueries too."""
     if isinstance(node, (Query, Group)):
-        return any(_plan_volatile(v) for v in vars(node).values())
+        return any(
+            _plan_volatile(v, local_cut) for v in vars(node).values()
+        )
     if isinstance(node, (list, tuple)):
         if node and node[0] == "service":
             return True
         if len(node) == 3 and node[0] == "call" and node[1] in _VOLATILE_CALLS:
             return True
-        return any(_plan_volatile(child) for child in node)
+        if local_cut and in_path and node and node[0] in _LINEAGE_CUT_PATHS:
+            return True
+        in_path = in_path or (bool(node) and node[0] == "path")
+        return any(_plan_volatile(c, local_cut, in_path) for c in node)
     return False
 
 
@@ -4015,12 +4031,15 @@ def sparql_select(store: TripleStore, query_text: str) -> DataFrame:
     returns a fresh ``select("*")`` over the cached frame, so Catalyst
     re-optimizes and re-plans it (current shuffle partitions, split
     sizes, AQE) and every shuffle and broadcast runs again; no result
-    or execution is reused. Compile-time jobs (shape statistics,
-    property-path closure rounds) are part of the cached plan. The
-    cache is bypassed — compiled on every call — for stores whose
-    backing data is live (``memoizable`` False: NTriplesLakeStore),
-    for queries holding a SERVICE clause or a BNODE/NOW/UUID/STRUUID
-    call (``_plan_volatile``), and for ``sparql_update`` always.
+    or execution is reused. Compile-time jobs (shape statistics;
+    path closure rounds under a reliable checkpoint dir) are part of
+    the cached plan. The cache is bypassed — compiled on every call —
+    for stores whose backing data is live (``memoizable`` False:
+    NTriplesLakeStore), for queries holding a SERVICE clause or a
+    BNODE/NOW/UUID/STRUUID call, for ``+``/``*``/``{n,m}`` property
+    paths while no checkpoint dir is set (their closure is a
+    ``localCheckpoint`` that executor loss would break;
+    ``_plan_volatile``), and for ``sparql_update`` always.
     ``tpch_store`` is memoized per ``sf_dir``, so repeated runs of one
     sp query hit after the first."""
     if not store.memoizable:
@@ -4032,7 +4051,8 @@ def sparql_select(store: TripleStore, query_text: str) -> DataFrame:
     if plan is None:
         q = parse_query(query_text)
         plan = _compile_select(store, q)
-        if _plan_volatile(q):
+        sc = store.triples.sparkSession.sparkContext
+        if _plan_volatile(q, local_cut=sc.getCheckpointDir() is None):
             return plan
     cache[key] = plan
     if len(cache) > _PLAN_CACHE_SIZE:

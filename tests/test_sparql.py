@@ -4176,6 +4176,38 @@ class TestPlanCache:
         assert len(compiles) == 2
         assert a == [("ada", "uk")] and b == [("ada", "fr")]
 
+    @pytest.mark.parametrize(
+        "path, cut",
+        [
+            ("ex:next+", True),
+            ("ex:next*", True),
+            ("ex:next{1,2}", True),
+            ("(ex:next/ex:next)+", True),
+            ("ex:next/ex:next", False),
+            ("ex:next?", False),
+        ],
+    )
+    def test_local_checkpoint_paths_recompile(
+        self, spark, compiles, path, cut
+    ):
+        """With no checkpoint dir, a +/*/{n,m} closure compiles into
+        localCheckpoint blocks; a cached plan would pin them and break
+        for good once an executor holding them is lost. Paths that
+        materialize nothing still hit."""
+        assert spark.sparkContext.getCheckpointDir() is None
+        store = TripleStore(
+            spark.createDataFrame(
+                [(f"urn:n:{i}", "urn:ex:next", f"urn:n:{i + 1}") for i in range(3)],
+                "s string, p string, o string",
+            )
+        )
+        q = f"SELECT ?x ?y WHERE {{ ?x {path} ?y }}"
+        a = sorted(tuple(r) for r in run(store, q).collect())
+        b = sorted(tuple(r) for r in run(store, q).collect())
+        assert a == b and a
+        assert len(compiles) == (2 if cut else 1)
+        assert len(getattr(store, "_plan_cache", {})) == (0 if cut else 1)
+
     def test_lake_store_recompiles(self, spark, tmp_path, compiles):
         from geosparql_etl_spark.sources.ntriples import register
         from geosparql_etl_spark.sparql.triples import (
