@@ -6,10 +6,17 @@ expression over the canonical GeoJSON representation:
 
     coordinates: array<array<array<double>>>   (rings -> points -> [x, y])
 
-All functions return Columns and run JVM-side inside whole-stage codegen
-(higher-order functions: transform / aggregate / filter), so they
-vectorize and scale with no Python boundary. Reference parity notes cite
-file:line into /root/reference/src/geosparql-etl/.
+All functions run JVM-side with no Python boundary. Most are built
+from higher-order functions (transform / aggregate / filter / exists),
+which Spark evaluates interpreted: a projection that holds one runs
+outside whole-stage codegen (its ``explain()`` shows ``Project``
+without ``*``). The WKT renderers the ETL pipelines call (polygon_wkt,
+parse_polygon_string_wkt, denormalized_polygon_wkt, image_bbox_wkt,
+and the multi-ring polygon_wkt_rings / multipolygon_wkt) are defined
+once as SQL text (``functions.sql.sql_function``): ``f.sql("col")``
+inlines that text into a pipeline's SQL statement, and ``f(col)`` is
+the same text bound to Column arguments. Reference parity notes cite
+file:line into the reference's src/geosparql-etl/.
 
 Float-to-string caveat: Spark renders doubles with Java shortest-repr
 (e.g. 1.0E-4) while CPython renders 0.0001; for coordinates in the
@@ -21,6 +28,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from geosparql_etl_spark.functions.sql import sql_function, sql_literal
 
 # Process-wide memo of PURE, CONTEXT-FREE Column trees (round 14).
 # The composite geometry predicates below expand to tens of thousands
@@ -59,100 +68,92 @@ def outer_ring(coordinates: Column) -> Column:
     return F.get(coordinates, 0)
 
 
-def _fmt_point_raw(pt: Column) -> Column:
-    """Render one [x, y] point as 'x y' with raw double rendering.
+def _fmt_point_raw(pt: str) -> str:
+    """SQL text: one [x, y] point as 'x y' with raw double rendering.
 
     Parity with the reference's f"{x} {y}" (json-etl:39).
     """
-    return F.concat_ws(" ", F.element_at(pt, 1).cast("string"), F.element_at(pt, 2).cast("string"))
+    return (
+        f"concat_ws(' ', CAST(element_at({pt}, 1) AS STRING), "
+        f"CAST(element_at({pt}, 2) AS STRING))"
+    )
 
 
-def _close_ring(pts: Column) -> Column:
-    """Append the first point when the ring isn't closed (ANSI-safe)."""
-    first = F.get(pts, 0)
-    last = F.get(pts, F.size(pts) - 1)
-    return F.when(
-        (F.size(pts) > 0) & ~first.eqNullSafe(last), F.concat(pts, F.array(first))
-    ).otherwise(pts)
-
-
-def _closed_ring_body(
-    pts: Column, prefix: str = "", suffix: str = ""
-) -> Column:
-    """The comma-joined body of one auto-closed ring ('x y, ..., x1 y1')
-    wrapped in ``prefix``/``suffix``, NULL for an empty point list —
-    the per-ring core `_closed_ring_wkt` (single ring, full 'POLYGON
-    ((...))' wrap) and `polygon_wkt_rings` / `multipolygon_wkt`
+def _closed_ring_body(pts: str, prefix: str = "", suffix: str = "") -> str:
+    """SQL text: the comma-joined body of one auto-closed ring ('x y,
+    ..., x1 y1') wrapped in ``prefix``/``suffix``, NULL for an empty
+    point list — the per-ring core `_closed_ring_wkt` (single ring, full
+    'POLYGON ((...))' wrap) and `polygon_wkt_rings` / `multipolygon_wkt`
     ('(...)' per ring) build on. The wrap happens INSIDE the fold's
     finish lambda so the whole render stays ONE fold per ring — a
-    separate isNotNull-guarded concat would reference (and re-evaluate)
-    the aggregate twice per row; see _closed_ring_wkt for why that
-    matters."""
-    zero = F.struct(
-        F.lit("").alias("s"),
-        F.lit("").alias("first"),
-        F.lit("").alias("last"),
+    separate IS NOT NULL-guarded concat would reference (and
+    re-evaluate) the aggregate twice per row; see _closed_ring_wkt for
+    why that matters."""
+    step = (
+        "named_struct("
+        "'s', CASE WHEN __acc.s = '' THEN __p ELSE concat(__acc.s, ', ', __p) END, "
+        "'first', CASE WHEN __acc.`first` = '' THEN __p ELSE __acc.`first` END, "
+        "'last', __p)"
     )
-    return F.aggregate(
-        pts,
-        zero,
-        lambda acc, p: F.struct(
-            F.when(acc["s"] == "", p)
-            .otherwise(F.concat(acc["s"], F.lit(", "), p))
-            .alias("s"),
-            F.when(acc["first"] == "", p).otherwise(acc["first"]).alias("first"),
-            p.alias("last"),
-        ),
-        lambda acc: F.when(
-            acc["first"] != "",
-            F.concat(
-                F.lit(prefix),
-                acc["s"],
-                F.when(
-                    acc["first"] != acc["last"],
-                    F.concat(F.lit(", "), acc["first"]),
-                ).otherwise(F.lit("")),
-                F.lit(suffix),
-            ),
-        ),
+    finish = (
+        f"CASE WHEN __acc.`first` != '' THEN concat({sql_literal(prefix)}, __acc.s, "
+        "CASE WHEN __acc.`first` != __acc.`last` THEN concat(', ', __acc.`first`) "
+        f"ELSE '' END, {sql_literal(suffix)}) END"
+    )
+    return (
+        f"aggregate({pts}, named_struct('s', '', 'first', '', 'last', ''), "
+        f"(__acc, __p) -> {step}, __acc -> {finish})"
     )
 
 
-def _closed_ring_wkt(pts: Column) -> Column:
-    """'POLYGON ((...))' with auto-close, built in ONE fold over the
-    formatted point strings.
+def _closed_ring_wkt(pts: str) -> str:
+    """SQL text: 'POLYGON ((...))' with auto-close, built in ONE fold
+    over the formatted point strings.
 
     Performance note: higher-order-function lambdas are interpreted (not
     whole-stage-codegen'd), and every *reference* to an expression
-    re-evaluates it — a close check written as when(size(pts)>0 &
-    first!=last, concat(pts,...)) evaluates the whole transform 4x per
-    row. The single aggregate fold evaluates each point exactly once
-    (measured ~5x on the sf0.1 bench for G3).
+    re-evaluates it — a close check written as CASE WHEN size(pts) > 0
+    AND first != last THEN concat(pts, ...) evaluates the whole
+    transform 4x per row. The single aggregate fold evaluates each point
+    exactly once (measured ~5x on the sf0.1 bench for G3).
 
-    Codegen note: the zero struct uses ''-sentinels, NOT null literals —
-    a null field in an aggregate() zero struct combined with a nested
-    higher-order input trips a Janino "isNull is not an rvalue" compile
-    error (Spark 4.1.2) that silently drops the whole projection to
-    interpreter mode. '' is unambiguous: every formatted point contains
-    a space.
+    The zero struct uses ''-sentinels, NOT null literals: '' is
+    unambiguous (every formatted point contains a space) and keeps the
+    fold's state type free of NULL literals.
     """
     return _closed_ring_body(pts, "POLYGON ((", "))")
 
 
-def polygon_wkt(coordinates: Column) -> Column:
+def _no_outer_ring(coordinates: str) -> str:
+    """SQL text: the coordinates or their outer ring are NULL or empty."""
+    return (
+        f"{coordinates} IS NULL OR size({coordinates}) = 0 "
+        f"OR get({coordinates}, 0) IS NULL OR size(get({coordinates}, 0)) = 0"
+    )
+
+
+def _ring_body(ring: str) -> str:
+    """SQL text: one ring's '(x y, ...)' with auto-close and raw double
+    rendering (NULL for an empty ring)."""
+    return _closed_ring_body(f"transform({ring}, __pt -> {_fmt_point_raw('__pt')})", "(", ")")
+
+
+@sql_function
+def polygon_wkt(coordinates: str) -> str:
     """G1: GeoJSON polygon coordinates -> WKT, outer ring only, NO ring
     closing, raw float rendering. Null when coords/ring empty.
 
     Ref: json-etl/geojson_to_geosparql_etl.py:27-42.
     """
-    ring = outer_ring(coordinates)
-    body = F.array_join(F.transform(ring, _fmt_point_raw), ", ")
-    wkt = F.concat(F.lit("POLYGON (("), body, F.lit("))"))
-    empty = coordinates.isNull() | (F.size(coordinates) == 0) | ring.isNull() | (F.size(ring) == 0)
-    return F.when(~empty, wkt)
+    body = f"array_join(transform(get({coordinates}, 0), __pt -> {_fmt_point_raw('__pt')}), ', ')"
+    return (
+        f"CASE WHEN NOT ({_no_outer_ring(coordinates)}) "
+        f"THEN concat('POLYGON ((', {body}, '))') END"
+    )
 
 
-def parse_polygon_string_wkt(polygon_string: Column) -> Column:
+@sql_function
+def parse_polygon_string_wkt(polygon_string: str) -> str:
     """G2: '[x1:y1:x2:y2:...]' string -> WKT with ring auto-close.
 
     Coordinate text is preserved verbatim (the reference never parses the
@@ -161,52 +162,39 @@ def parse_polygon_string_wkt(polygon_string: Column) -> Column:
 
     Ref: segmentation-etl/nuclear_segmentation_etl.py:47-76.
     """
-    toks = F.split(F.regexp_replace(F.trim(polygon_string), r"^\[|\]$", ""), ":")
-    n_pairs = F.floor(F.size(toks) / 2).cast("int")
-    pts = F.when(
-        n_pairs > 0,
-        F.transform(
-            F.sequence(F.lit(0), n_pairs - 1),
-            lambda i: F.concat_ws(
-                " ", F.element_at(toks, i * 2 + 1), F.element_at(toks, i * 2 + 2)
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    wkt = F.coalesce(_closed_ring_wkt(pts), F.lit("POLYGON (())"))
-    bad = polygon_string.isNull() | (F.length(F.trim(polygon_string)) == 0)
-    return F.when(~bad, wkt)
+    brackets = sql_literal(r"^\[|\]$")
+    toks = f"split(regexp_replace(trim({polygon_string}), {brackets}, ''), ':')"
+    n_pairs = f"CAST(floor(size({toks}) / 2) AS INT)"
+    pts = (
+        f"CASE WHEN {n_pairs} > 0 THEN transform(sequence(0, {n_pairs} - 1), "
+        f"__i -> concat_ws(' ', element_at({toks}, __i * 2 + 1), element_at({toks}, __i * 2 + 2))) "
+        "ELSE CAST(array() AS ARRAY<STRING>) END"
+    )
+    wkt = f"coalesce({_closed_ring_wkt(pts)}, 'POLYGON (())')"
+    return (
+        f"CASE WHEN NOT ({polygon_string} IS NULL OR length(trim({polygon_string})) = 0) "
+        f"THEN {wkt} END"
+    )
 
 
+@sql_function
 def denormalized_polygon_wkt(
-    geometry_type: Column,
-    coordinates: Column,
-    image_width: Column,
-    image_height: Column,
-) -> Column:
+    geometry_type: str, coordinates: str, image_width: str, image_height: str
+) -> str:
     """G3: normalized (0-1) polygon -> pixel-space WKT, '%.2f %.2f' per
     point, ring auto-closed; requires type == 'Polygon'; null otherwise.
 
     Ref: mongo-etl/mongodb_to_rdf.py:238-261.
     """
-    ring = outer_ring(coordinates)
-    pts = F.transform(
-        ring,
-        lambda p: F.format_string(
-            "%.2f %.2f",
-            F.element_at(p, 1) * image_width,
-            F.element_at(p, 2) * image_height,
-        ),
+    pts = (
+        f"transform(get({coordinates}, 0), __q -> format_string('%.2f %.2f', "
+        f"element_at(__q, 1) * {image_width}, element_at(__q, 2) * {image_height}))"
     )
-    wkt = _closed_ring_wkt(pts)
     bad = (
-        geometry_type.isNull()
-        | (geometry_type != F.lit("Polygon"))
-        | coordinates.isNull()
-        | (F.size(coordinates) == 0)
-        | ring.isNull()
-        | (F.size(ring) == 0)
+        f"{geometry_type} IS NULL OR {geometry_type} != 'Polygon' OR "
+        + _no_outer_ring(coordinates)
     )
-    return F.when(~bad, wkt)
+    return f"CASE WHEN NOT ({bad}) THEN {_closed_ring_wkt(pts)} END"
 
 
 # --- measurements (G6-G8): shoelace & friends, all native ----------------
@@ -616,16 +604,16 @@ def safe_polygon_wkt(coordinates: Column, default: str = "POINT EMPTY") -> Colum
     return F.coalesce(polygon_wkt(coordinates), F.lit(default))
 
 
-def image_bbox_wkt(image_width: Column, image_height: Column) -> Column:
+@sql_function
+def image_bbox_wkt(image_width: str, image_height: str) -> str:
     """G13: whole-image bounding box 'POLYGON ((0 0, w 0, w h, 0 h, 0 0))'.
 
     Width/height are integers in the reference (mongo-etl:350).
     """
-    w = image_width.cast("long").cast("string")
-    h = image_height.cast("long").cast("string")
-    return F.format_string(
-        "POLYGON ((0 0, %s 0, %s %s, 0 %s, 0 0))", w, w, h, h
-    )
+    w = f"CAST(CAST({image_width} AS BIGINT) AS STRING)"
+    h = f"CAST(CAST({image_height} AS BIGINT) AS STRING)"
+    fmt = sql_literal("POLYGON ((0 0, %s 0, %s %s, 0 %s, 0 0))")
+    return f"format_string({fmt}, {w}, {w}, {h}, {h})"
 
 
 def zorder_key(x: Column, y: Column, bits: int = 16) -> Column:
@@ -751,31 +739,18 @@ def polygon_perimeter_holes(coordinates: Column) -> Column:
     )
 
 
-def polygon_wkt_rings(coordinates: Column) -> Column:
+@sql_function
+def polygon_wkt_rings(coordinates: str) -> str:
     """Multi-ring ``POLYGON ((outer), (hole1), ...)`` WKT with per-ring
     auto-close and raw double rendering — the all-rings form of
     polygon_wkt/G1 (which renders coordinates[0] only, matching the
     reference). NULL when the coordinates or the outer ring are
     empty; an empty INTERIOR ring is skipped (array_join drops the
     null body)."""
-    bodies = F.transform(
-        coordinates,
-        lambda ring: _closed_ring_body(
-            F.transform(ring, _fmt_point_raw), "(", ")"
-        ),
-    )
-    ring0 = outer_ring(coordinates)
-    empty = (
-        coordinates.isNull()
-        | (F.size(coordinates) == 0)
-        | ring0.isNull()
-        | (F.size(ring0) == 0)
-    )
-    return F.when(
-        ~empty,
-        F.concat(
-            F.lit("POLYGON ("), F.array_join(bodies, ", "), F.lit(")")
-        ),
+    bodies = f"transform({coordinates}, __ring -> {_ring_body('__ring')})"
+    return (
+        f"CASE WHEN NOT ({_no_outer_ring(coordinates)}) "
+        f"THEN concat('POLYGON (', array_join({bodies}, ', '), ')') END"
     )
 
 
@@ -916,38 +891,23 @@ def multipolygon_perimeter(coordinates: Column) -> Column:
     )
 
 
-def multipolygon_wkt(coordinates: Column) -> Column:
+@sql_function
+def multipolygon_wkt(coordinates: str) -> str:
     """``MULTIPOLYGON (((...)), ((...), (...)))`` WKT with per-ring
     auto-close and raw double rendering. NULL when the member list is
     empty or the first member has no outer ring."""
-    polys = F.transform(
-        coordinates,
-        lambda poly: F.concat(
-            F.lit("("),
-            F.array_join(
-                F.transform(
-                    poly,
-                    lambda ring: _closed_ring_body(
-                        F.transform(ring, _fmt_point_raw), "(", ")"
-                    ),
-                ),
-                ", ",
-            ),
-            F.lit(")"),
-        ),
+    polys = (
+        f"transform({coordinates}, __poly -> concat('(', "
+        f"array_join(transform(__poly, __ring -> {_ring_body('__ring')}), ', '), ')'))"
     )
-    first_outer = F.get(F.get(coordinates, 0), 0)
+    first_outer = f"get(get({coordinates}, 0), 0)"
     empty = (
-        coordinates.isNull()
-        | (F.size(coordinates) == 0)
-        | first_outer.isNull()
-        | (F.size(first_outer) == 0)
+        f"{coordinates} IS NULL OR size({coordinates}) = 0 "
+        f"OR {first_outer} IS NULL OR size({first_outer}) = 0"
     )
-    return F.when(
-        ~empty,
-        F.concat(
-            F.lit("MULTIPOLYGON ("), F.array_join(polys, ", "), F.lit(")")
-        ),
+    return (
+        f"CASE WHEN NOT ({empty}) "
+        f"THEN concat('MULTIPOLYGON (', array_join({polys}, ', '), ')') END"
     )
 
 

@@ -11,15 +11,19 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from geosparql_etl_spark.functions.sql import sql_function
+
 # --- reference parity ------------------------------------------------------
 
 
-def sha256_id(col: Column) -> Column:
-    """H1: SHA-256 hex of a string id.
+@sql_function
+def sha256_id(col: str) -> str:
+    """H1: SHA-256 hex of a string id (a SQL-text helper, see
+    functions.sql).
 
     Ref: json-etl:72-74, segmentation-etl:148-149, mongo-etl:200-202.
     """
-    return F.sha2(col.cast("string"), 256)
+    return f"sha2(CAST({col} AS STRING), 256)"
 
 
 def urn_sha256(col: Column) -> Column:

@@ -1,7 +1,9 @@
 """String / regex / formatting expressions (T1-T10, SURVEY.md §2.7).
 
 Each mirrors a scalar the reference implements imperatively; all are
-native Column expressions.
+native Spark expressions. The ones the ETL pipelines call (T1, T2,
+T4-T6) are defined once as SQL text (``functions.sql.sql_function``):
+``f.sql("col")`` for SQL statements, ``f(col)`` for Column code.
 """
 
 from __future__ import annotations
@@ -9,50 +11,61 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from geosparql_etl_spark.functions.sql import sql_function, sql_literal
+
 # T1: filename -> image id ---------------------------------------------------
 
+_GEOJSON_EXT_RE = r"\.geojson$"
+_DOT_RE = r"\."
+_CSV_EXT_RE = r"\.csv$"
 
-def extract_image_id(filename: Column) -> Column:
+
+@sql_function
+def extract_image_id(filename: str) -> str:
     """Text before the first '.' once a trailing '.geojson' is stripped;
     if there is no dot at all, the stripped name itself.
 
     Ref: json-etl/geojson_to_geosparql_etl.py:63-69.
     """
-    stripped = F.regexp_replace(filename, r"\.geojson$", "")
-    return F.split(stripped, r"\.")[0]
+    stripped = f"regexp_replace({filename}, {sql_literal(_GEOJSON_EXT_RE)}, '')"
+    return f"split({stripped}, {sql_literal(_DOT_RE)})[0]"
 
 
 # T2: patch filename -> {x, y, width, height, base_name} with fallback ------
 
 
-def patch_metadata(filename: Column) -> Column:
+@sql_function
+def patch_metadata(filename: str) -> str:
     """Parse 'X_Y_W_H_..." -features.csv' names; non-numeric or short names
     fall back to x=y=0, w=h=40000 (the reference's default assumption).
 
+    The split name and its four parsed fields are each bound once as a
+    lambda variable: the Column form evaluates its body interpreted,
+    where a repeated subexpression is evaluated at every reference. A
+    part with no ASCII digit cannot cast to INT, and the guard keeps it
+    away from try_cast, which interpreted throws and catches (~12 us)
+    per failing value.
+
     Ref: segmentation-etl/nuclear_segmentation_etl.py:79-114.
     """
-    name = F.regexp_replace(filename, r"\.csv$", "")
-    parts = F.split(name, "_")
-    # get() not try_element_at(): TryElementAt breaks codegen under
-    # expression splitting (see functions/geometry.py outer_ring note).
-    x = F.get(parts, 0).try_cast("int")
-    y = F.get(parts, 1).try_cast("int")
-    w = F.get(parts, 2).try_cast("int")
-    h = F.get(parts, 3).try_cast("int")
-    ok = (
-        (F.size(parts) >= 4)
-        & x.isNotNull()
-        & y.isNotNull()
-        & w.isNotNull()
-        & h.isNotNull()
+    name = f"regexp_replace({filename}, {sql_literal(_CSV_EXT_RE)}, '')"
+    split_name = f"named_struct('name', {name}, 'parts', split({name}, '_'))"
+    fields = ", ".join(
+        f"'{k}', CASE WHEN get(__pm.parts, {i}) RLIKE '[0-9]' "
+        f"THEN try_cast(get(__pm.parts, {i}) AS INT) END"
+        for i, k in enumerate("xywh")
     )
-    return F.struct(
-        F.when(ok, x).otherwise(F.lit(0)).alias("x"),
-        F.when(ok, y).otherwise(F.lit(0)).alias("y"),
-        F.when(ok, w).otherwise(F.lit(40000)).alias("width"),
-        F.when(ok, h).otherwise(F.lit(40000)).alias("height"),
-        name.alias("base_name"),
+    parsed = f"named_struct('name', __pm.name, 'n', size(__pm.parts), {fields})"
+    ok = "__pv.n >= 4 AND " + " AND ".join(f"__pv.{k} IS NOT NULL" for k in "xywh")
+    result = (
+        f"named_struct('x', CASE WHEN {ok} THEN __pv.x ELSE 0 END, "
+        f"'y', CASE WHEN {ok} THEN __pv.y ELSE 0 END, "
+        f"'width', CASE WHEN {ok} THEN __pv.w ELSE 40000 END, "
+        f"'height', CASE WHEN {ok} THEN __pv.h ELSE 40000 END, "
+        "'base_name', __pv.name)"
     )
+    bound = f"get(transform(array({split_name}), __pm -> {parsed}), 0)"
+    return f"get(transform(array({bound}), __pv -> {result}), 0)"
 
 
 # T3: prefix strip / add -----------------------------------------------------
@@ -76,42 +89,41 @@ SLIDE_ID_RE = r'hal:slideId\s+"(\d+)"'
 URN_HASH_RE = r"<urn:(?:sha256|md5):([0-9a-fA-F]+)>"
 
 
-def extract_slide_id(ttl_text: Column) -> Column:
+@sql_function
+def extract_slide_id(ttl_text: str) -> str:
     """T4. Ref: sha256-hash/update_hashes.py:49-58."""
-    return F.nullif(F.regexp_extract(ttl_text, SLIDE_ID_RE, 1), F.lit(""))
+    return f"nullif(regexp_extract({ttl_text}, {sql_literal(SLIDE_ID_RE)}, 1), '')"
 
 
-def extract_urn_hash(ttl_text: Column) -> Column:
+@sql_function
+def extract_urn_hash(ttl_text: str) -> str:
     """T4. Ref: sha256-hash/update_hashes.py:60-68."""
-    return F.nullif(F.regexp_extract(ttl_text, URN_HASH_RE, 1), F.lit(""))
+    return f"nullif(regexp_extract({ttl_text}, {sql_literal(URN_HASH_RE)}, 1), '')"
 
 
-def replace_urn_hash(ttl_text: Column, new_hash: Column) -> Column:
+@sql_function
+def replace_urn_hash(ttl_text: str, new_hash: str) -> str:
     """T5: substitute every sha256/md5 URN with the new sha256 URN
     (also migrates legacy md5 URNs).
 
     Ref: update_ttl_gz_from_json.py:61-74, sha256-json-paad.py:54-62.
     """
-    return F.regexp_replace(
-        ttl_text,
-        r"<urn:(?:sha256|md5):[0-9a-fA-F]+>",
-        F.concat(F.lit("<urn:sha256:"), new_hash, F.lit(">")),
-    )
+    urn = sql_literal(r"<urn:(?:sha256|md5):[0-9a-fA-F]+>")
+    return f"regexp_replace({ttl_text}, {urn}, concat('<urn:sha256:', {new_hash}, '>'))"
 
 
-def mark_missing_hash(ttl_text: Column, hash_col: Column) -> Column:
+@sql_function
+def mark_missing_hash(ttl_text: str, hash_col: str) -> str:
     """T6: when no hash is available, tag the image object with
     'hal:missing true' instead of rewriting the URN.
 
     Ref: sha256-json-paad.py:64-71.
     """
-    tagged = F.regexp_replace(
-        ttl_text,
-        r"a\s+so:ImageObject\s*;",
-        'a so:ImageObject ;\\n    hal:missing "true"^^xsd:boolean ;',
-    )
-    return F.when(hash_col.isNull(), tagged).otherwise(
-        replace_urn_hash(ttl_text, hash_col)
+    image_object = sql_literal(r"a\s+so:ImageObject\s*;")
+    tag = sql_literal('a so:ImageObject ;\\n    hal:missing "true"^^xsd:boolean ;')
+    return (
+        f"CASE WHEN {hash_col} IS NULL THEN regexp_replace({ttl_text}, {image_object}, {tag}) "
+        f"ELSE {replace_urn_hash.sql(ttl_text, hash_col)} END"
     )
 
 

@@ -9,37 +9,27 @@ greater probability (json-etl/geojson_to_geosparql_etl.py:45-60), i.e.:
 
 Implemented as a single ``aggregate`` fold over ``map_entries`` — map
 iteration order is the stored entry order, matching dict insertion order
-semantics. Pure column expression: codegen'd, no shuffle, no UDF.
+semantics. Pure SQL expression, no shuffle, no UDF; like every
+higher-order function the fold runs interpreted, outside whole-stage
+codegen. Defined once as SQL text (``functions.sql.sql_function``):
+``dominant_entry.sql("measurements")`` for SQL statements,
+``dominant_entry(col)`` for Column code.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from geosparql_etl_spark.functions.sql import sql_function, sql_literal
 
 
-def dominant_entry(
-    measurements: Column, prefix: str = "prob_", strip: bool = True
-) -> Column:
+@sql_function
+def dominant_entry(measurements: str, prefix: str = "prob_", strip: bool = True) -> str:
     """struct(class: string, prob: double) of the first-max prefixed entry."""
-    entries = F.map_entries(measurements)
-    zero = F.struct(
-        F.lit(None).cast("string").alias("class"),
-        F.lit(0.0).alias("prob"),
+    zero = f"named_struct('class', CAST(NULL AS STRING), 'prob', {sql_literal(0.0)})"
+    pre = sql_literal(prefix)
+    cls = f"replace(__e.key, {pre}, '')" if strip else "__e.key"
+    folded = (
+        f"aggregate(map_entries({measurements}), {zero}, (__acc, __e) -> "
+        f"CASE WHEN startswith(__e.key, {pre}) AND __e.value > __acc.prob "
+        f"THEN named_struct('class', {cls}, 'prob', __e.value) ELSE __acc END)"
     )
-    folded = F.aggregate(
-        entries,
-        zero,
-        lambda acc, e: F.when(
-            e["key"].startswith(prefix) & (e["value"] > acc["prob"]),
-            F.struct(
-                (
-                    F.replace(e["key"], F.lit(prefix), F.lit(""))
-                    if strip
-                    else e["key"]
-                ).alias("class"),
-                e["value"].alias("prob"),
-            ),
-        ).otherwise(acc),
-    )
-    return F.when(measurements.isNotNull(), folded).otherwise(zero)
+    return f"CASE WHEN {measurements} IS NOT NULL THEN {folded} ELSE {zero} END"

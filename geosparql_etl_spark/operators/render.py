@@ -24,14 +24,14 @@ from pyspark.sql import functions as F
 
 
 def ordered_concat(seq_col: Column, block_col: Column, sep: str = "") -> Column:
-    """Aggregate expression: blocks concatenated in seq order."""
-    return F.array_join(
-        F.transform(
-            F.sort_array(F.collect_list(F.struct(seq_col.alias("seq"), block_col.alias("block")))),
-            lambda x: x["block"],
-        ),
-        sep,
+    """Aggregate expression: blocks concatenated in seq order; NULL
+    blocks are skipped (array_join drops NULL elements), so a document
+    whose blocks are all NULL assembles to ''. The lambda is SQL text:
+    a Python lambda costs a dozen py4j round trips per call."""
+    pairs = F.sort_array(
+        F.collect_list(F.struct(seq_col.alias("seq"), block_col.alias("block")))
     )
+    return F.array_join(F.call_function("transform", pairs, F.expr("__x -> __x.block")), sep)
 
 
 def assemble_documents(

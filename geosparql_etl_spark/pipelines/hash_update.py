@@ -16,7 +16,7 @@ hash to itself), which is the reference's convergence property
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from geosparql_etl_spark.functions.text import (
@@ -33,24 +33,30 @@ def update_hashes_by_slide_id(
 ) -> DataFrame:
     """update_hashes.py variant: the join key is the hal:slideId literal
     extracted from the document text (T4); docs with no slideId or no
-    matching hash pass through unchanged with a status column."""
-    docs = ttl_docs.withColumn("slide", extract_slide_id(F.col("text"))).withColumn(
-        "old_hash", extract_urn_hash(F.col("text"))
+    matching hash pass through unchanged with a status column.
+
+    Two SQL projections (keys, then rewrite + status) around the
+    broadcast enrichment join."""
+    docs = ttl_docs.selectExpr(
+        "path",
+        "text",
+        f"{extract_slide_id.sql('text')} AS slide",
+        f"{extract_urn_hash.sql('text')} AS old_hash",
     )
     enriched = enrich_with_table(docs, slide_hashes, "slide", "hash", "hash_missing")
-    new_text = F.when(
-        F.col("hash").isNotNull() & F.col("old_hash").isNotNull(),
-        replace_urn_hash(F.col("text"), F.col("hash")),
-    ).otherwise(F.col("text"))
-    status = (
-        F.when(F.col("slide").isNull(), F.lit("no_slide_id"))
-        .when(F.col("old_hash").isNull(), F.lit("no_urn"))
-        .when(F.col("hash").isNull(), F.lit("hash_missing"))
-        .when(F.col("old_hash") == F.col("hash"), F.lit("already_correct"))
-        .otherwise(F.lit("updated"))
+    new_text = (
+        "CASE WHEN hash IS NOT NULL AND old_hash IS NOT NULL "
+        f"THEN {replace_urn_hash.sql('text', 'hash')} ELSE text END"
     )
-    return enriched.select(
-        "path", new_text.alias("text"), "slide", "old_hash", "hash", status.alias("status")
+    status = (
+        "CASE WHEN slide IS NULL THEN 'no_slide_id' "
+        "WHEN old_hash IS NULL THEN 'no_urn' "
+        "WHEN hash IS NULL THEN 'hash_missing' "
+        "WHEN old_hash = hash THEN 'already_correct' "
+        "ELSE 'updated' END"
+    )
+    return enriched.selectExpr(
+        "path", f"{new_text} AS text", "slide", "old_hash", "hash", f"{status} AS status"
     )
 
 

@@ -1,18 +1,27 @@
 """json-etl pipeline: GeoJSON tissue-classification output -> GeoSPARQL TTL.
 
 Reference: json-etl/geojson_to_geosparql_etl.py (entire file). The
-imperative per-file loop becomes one DataFrame chain:
+imperative per-file loop becomes one plan:
 
     read.json -> posexplode(features) -> A1 argmax (map fold) ->
     J2 SNOMED map lookup -> G1 WKT expression ->
     A6 groupBy(file) ordered render -> K1 text sink
 
+The plan is handed to Spark as SQL text (functions.sql): the source is
+the read plus one ``selectExpr``, the render one ``selectExpr`` for the
+feature blocks, one aggregation and one ``selectExpr`` for the
+documents — a few analyses per run instead of a Column-API call (a
+py4j round trip) per expression node and an analysis per
+``withColumn``. The helpers (argmax,
+WKT, image id, hash) are inlined by their SQL form.
+
 Two stages: scan+map side (explode, argmax, SNOMED lookup in a map
-literal, feature-block render — all inside one whole-stage-codegen
-span), then a single shuffle on source_file for document assembly. At
-100 TB the shuffle carries only rendered feature blocks (strings),
-never raw geometry; the 10-entry SNOMED dim is a literal, so it costs
-neither a shuffle nor a broadcast job.
+literal, feature-block render; the higher-order functions run
+interpreted, outside whole-stage codegen), then a single shuffle on
+source_file for document assembly. At 100 TB the shuffle carries only
+rendered feature blocks (strings), never raw geometry; the 10-entry
+SNOMED dim is a literal, so it costs neither a shuffle nor a broadcast
+job.
 
 Output parity: byte-identical to the reference renderer given the same
 timestamp (injected parameter; the reference stamps now() at
@@ -21,11 +30,12 @@ json-etl:83, which is the one nondeterministic field).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from geosparql_etl_spark.functions.geometry import polygon_wkt
 from geosparql_etl_spark.functions.hashing import sha256_id
+from geosparql_etl_spark.functions.sql import sql_literal
 from geosparql_etl_spark.functions.text import extract_image_id
 from geosparql_etl_spark.operators.argmax import dominant_entry
 from geosparql_etl_spark.operators.render import ordered_concat
@@ -59,63 +69,100 @@ _PREFIX_HEADER = (
 )
 
 
-def _snomed_map_lit() -> Column:
-    """Literal map class_name -> snomed id: the J2 dimension lookup and
-    the per-row measurement sub-render (map-entry iteration can't join;
-    the dim is 10 entries)."""
-    kv: list[Column] = []
-    for cls, sid in SNOMED_CLASSES.items():
-        kv.append(F.lit(cls))
-        kv.append(F.lit(sid))
-    return F.create_map(*kv)
-
-
-def _measurement_blocks(measurements: Column) -> Column:
-    """Nested measurement render (json-etl:158-174): every prob_* entry
-    whose class is in the SNOMED registry, in map-entry order, ','-joined."""
-    m = _snomed_map_lit()
-    entries = F.filter(
-        F.map_entries(measurements),
-        lambda e: e["key"].startswith("prob_")
-        & F.element_at(m, F.replace(e["key"], F.lit("prob_"), F.lit(""))).isNotNull(),
+def _measurement_blocks(measurements: str) -> str:
+    """SQL text: nested measurement render (json-etl:158-174) — every
+    prob_* entry whose class is in the SNOMED registry, in map-entry
+    order, ','-joined."""
+    snomed, prob_ = sql_literal(SNOMED_CLASSES), sql_literal("prob_")
+    sid = f"element_at({snomed}, replace(__m.key, {prob_}, ''))"
+    entries = (
+        f"filter(map_entries({measurements}), "
+        f"__m -> startswith(__m.key, {prob_}) AND {sid} IS NOT NULL)"
     )
-    blocks = F.transform(
-        entries,
-        lambda e: F.concat(
-            F.lit(
-                "\n                                             [ hal:classification  sno:"
-            ),
-            F.element_at(m, F.replace(e["key"], F.lit("prob_"), F.lit(""))),
-            F.lit(
-                ";\n                                               hal:hasProbability  \""
-            ),
-            F.format_string("%.6f", e["value"]),
-            F.lit(
-                "\"^^xsd:float\n                                             ]"
-            ),
-        ),
+    open_ = sql_literal(
+        "\n                                             [ hal:classification  sno:"
     )
-    return F.array_join(blocks, ",")
+    prob = sql_literal(";\n                                               hal:hasProbability  \"")
+    close = sql_literal("\"^^xsd:float\n                                             ]")
+    block = f"concat({open_}, {sid}, {prob}, format_string('%.6f', __m.value), {close})"
+    return f"array_join(transform({entries}, __m -> {block}), ',')"
 
 
-def _feature_block(wkt: Column, snomed_id: Column, measurements: Column) -> Column:
-    """One rdfs:member block (json-etl:153-176)."""
-    return F.concat(
-        F.lit(
-            "        rdfs:member          [ a                   geo:Feature;\n"
-            "                               geo:hasGeometry     [ geo:asWKT  \""
+def _feature_block(wkt: str, snomed_id: str, measurements: str) -> str:
+    """SQL text: one rdfs:member block (json-etl:153-176)."""
+    head = sql_literal(
+        "        rdfs:member          [ a                   geo:Feature;\n"
+        "                               geo:hasGeometry     [ geo:asWKT  \""
+    )
+    cls = sql_literal(
+        "\"^^geo:wktLiteral ];\n"
+        "                               hal:classification  sno:"
+    )
+    meas = sql_literal(";\n                               hal:measurement     ")
+    tail = sql_literal("\n                             ]")
+    return (
+        f"concat({head}, {wkt}, {cls}, {snomed_id}, {meas}, "
+        f"{_measurement_blocks(measurements)}, {tail})"
+    )
+
+
+def _blocks(features: DataFrame) -> DataFrame:
+    """Per feature: its member block, NULL when the feature does not
+    qualify. J2 keeps inner-join meaning — a feature whose dominant class
+    is absent (or outside the registry) has no snomed_id and renders no
+    block; G1 renders only for features that have one."""
+    snomed_id = (
+        f"element_at({sql_literal(SNOMED_CLASSES)}, "
+        f"{dominant_entry.sql('measurements')}.`class`)"
+    )
+    wkt = f"CASE WHEN snomed_id IS NOT NULL THEN {polygon_wkt.sql('coordinates')} END"
+    block = _feature_block("wkt", "snomed_id", "measurements")
+    return features.selectExpr(
+        "source_file",
+        "feature_idx",
+        f"{snomed_id} AS snomed_id",
+        f"{wkt} AS wkt",
+        f"CASE WHEN wkt IS NOT NULL THEN {block} END AS block",
+    )
+
+
+def _documents(bodies: DataFrame, timestamp: str) -> DataFrame:
+    """One TTL document per source file from its assembled members."""
+    body = ", ".join([
+        sql_literal(_PREFIX_HEADER + "<urn:sha256:"),
+        "image_hash",
+        sql_literal(">\n        a            so:ImageObject;\n        dc:identifier \""),
+        "image_id",
+        sql_literal(
+            "\" ;\n        exif:height  \"40000\"^^xsd:int;\n"
+            "        exif:width   \"40000\"^^xsd:int .\n\n"
+            "<>      a                    geo:FeatureCollection;\n"
+            "        dc:creator           \"http://orcid.org/0000-0003-4165-4062\";\n"
+            "        dc:date              \""
+            + timestamp
+            + "\"^^xsd:dateTime;\n"
+            "        dc:description       \"Raj's 10-class classification results "
+            "produced via wsinfer and Tammy's PyTorch model for "
         ),
-        wkt,
-        F.lit(
-            "\"^^geo:wktLiteral ];\n"
-            "                               hal:classification  sno:"
+        "image_id",
+        sql_literal(
+            "\";\n"
+            "        dc:title             \"tissue-classification-predictions\";\n"
+            "        prov:wasGeneratedBy  [ a                       prov:Activity;\n"
+            "                               prov:used               <urn:sha256:"
         ),
-        snomed_id,
-        F.lit(
-            ";\n                               hal:measurement     "
-        ),
-        _measurement_blocks(measurements),
-        F.lit("\n                             ]"),
+        "image_hash",
+        sql_literal(">;\n                             ];\n"),
+        "members",
+        sql_literal(" .\n"),
+    ])
+    geojson_ext = sql_literal(r"\.geojson$")
+    return bodies.selectExpr(
+        "source_file",
+        f"regexp_replace(source_file, {geojson_ext}, '.ttl') AS file_name",
+        f"{extract_image_id.sql('source_file')} AS image_id",
+        f"{sha256_id.sql('image_id')} AS image_hash",
+        f"concat({body}) AS body",
     )
 
 
@@ -123,81 +170,20 @@ def render_ttl_documents(features: DataFrame, timestamp: str) -> DataFrame:
     """features (GEOJSON_FEATURES_ROWS shape) -> (source_file, file_name,
     image_id, image_hash, body) — one TTL document per source file.
 
+    Three analyzed steps: the per-feature blocks (one ``selectExpr``),
+    the ordered assembly (one aggregation, one shuffle on source_file)
+    and the document text (one ``selectExpr``). Every input file yields
+    a document, even with zero qualifying features (json-etl writes the
+    header + empty collection either way): its rows carry NULL blocks,
+    which the assembly's array_join skips.
+
     ``timestamp`` is the injected ISO-8601 'Z' string (determinism policy,
     SURVEY.md §7).
     """
-    dom = dominant_entry(F.col("measurements")).alias("dom")
-    qualified = (
-        features.select("source_file", "feature_idx", "coordinates", "measurements", dom)
-        # J2: inner-join semantics — a feature whose dominant class is
-        # absent (or outside the registry) yields no member block
-        .withColumn("snomed_id", F.element_at(_snomed_map_lit(), F.col("dom.class")))
-        .where(F.col("snomed_id").isNotNull())
-        .withColumn("wkt", polygon_wkt(F.col("coordinates")))  # G1
-        .where(F.col("wkt").isNotNull())
-        .withColumn(
-            "block",
-            _feature_block(F.col("wkt"), F.col("snomed_id"), F.col("measurements")),
-        )
-    )
-
-    bodies = qualified.groupBy("source_file").agg(
+    bodies = _blocks(features).groupBy("source_file").agg(
         ordered_concat(F.col("feature_idx"), F.col("block"), ";\n").alias("members")
     )
-
-    # every input file yields a document, even with zero qualifying
-    # features (json-etl writes the header + empty collection either way)
-    files = features.select("source_file").dropDuplicates()
-    docs = files.join(bodies, "source_file", "left").withColumn(
-        "members", F.coalesce(F.col("members"), F.lit(""))
-    )
-
-    image_id = extract_image_id(F.col("source_file"))
-    image_hash = sha256_id(image_id)
-
-    body = F.concat(
-        F.lit(_PREFIX_HEADER),
-        F.lit("<urn:sha256:"),
-        image_hash,
-        F.lit(
-            ">\n        a            so:ImageObject;\n        dc:identifier \""
-        ),
-        image_id,
-        F.lit(
-            "\" ;\n        exif:height  \"40000\"^^xsd:int;\n"
-            "        exif:width   \"40000\"^^xsd:int .\n\n"
-        ),
-        F.lit(
-            "<>      a                    geo:FeatureCollection;\n"
-            "        dc:creator           \"http://orcid.org/0000-0003-4165-4062\";\n"
-            "        dc:date              \""
-        ),
-        F.lit(timestamp),
-        F.lit(
-            "\"^^xsd:dateTime;\n"
-            "        dc:description       \"Raj's 10-class classification results "
-            "produced via wsinfer and Tammy's PyTorch model for "
-        ),
-        image_id,
-        F.lit(
-            "\";\n"
-            "        dc:title             \"tissue-classification-predictions\";\n"
-            "        prov:wasGeneratedBy  [ a                       prov:Activity;\n"
-            "                               prov:used               <urn:sha256:"
-        ),
-        image_hash,
-        F.lit(">;\n                             ];\n"),
-        F.col("members"),
-        F.lit(" .\n"),
-    )
-
-    return docs.select(
-        "source_file",
-        F.regexp_replace(F.col("source_file"), r"\.geojson$", ".ttl").alias("file_name"),
-        image_id.alias("image_id"),
-        image_hash.alias("image_hash"),
-        body.alias("body"),
-    )
+    return _documents(bodies, timestamp)
 
 
 def run(

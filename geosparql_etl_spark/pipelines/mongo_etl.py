@@ -26,11 +26,12 @@ pipelines), so rendered bytes are fully deterministic given inputs.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from geosparql_etl_spark.functions.geometry import denormalized_polygon_wkt, image_bbox_wkt
 from geosparql_etl_spark.functions.hashing import sha256_id
+from geosparql_etl_spark.functions.sql import sql_literal, sql_over
 from geosparql_etl_spark.operators.batching import with_batch_id
 from geosparql_etl_spark.operators.enrich import enrich_with_table
 from geosparql_etl_spark.operators.ledger import filter_pending
@@ -50,174 +51,171 @@ _PREFIXES = (
 )
 
 
-def _nonempty(c: Column) -> Column:
-    return c.isNotNull() & (c != "")
+def _nonempty(c: str) -> str:
+    return f"{c} IS NOT NULL AND {c} != ''"
 
 
-def project_analyses(analyses: DataFrame) -> DataFrame:
+def _project_analyses(analyses: DataFrame, enrich: bool) -> DataFrame:
     """P2: deep nested projection with the reference's fallback defaults
     (mongodb_to_rdf.py:268-301). Missing/invalid dims -> 40000; empty
-    case_id -> imageid."""
-    params = F.col("analysis.algorithm_params")
-    return analyses.select(
-        F.col("_id").alias("analysis_id"),
-        F.coalesce(F.col("analysis.execution_id"), F.lit("unknown")).alias("exec_id"),
-        F.col("image.imageid").alias("image_id"),
-        F.coalesce(F.col("image.subject"), F.lit("")).alias("subject_id"),
-        F.coalesce(F.col("image.study"), F.lit("")).alias("study"),
-        F.coalesce(F.col("image.slide"), F.lit("")).alias("slide"),
-        F.coalesce(params["image_width"].try_cast("int"), F.lit(40000)).alias(
-            "image_width"
-        ),
-        F.coalesce(params["image_height"].try_cast("int"), F.lit(40000)).alias(
-            "image_height"
-        ),
-        F.coalesce(F.nullif(params["case_id"], F.lit("")), F.col("image.imageid")).alias(
-            "case_id"
-        ),
+    case_id -> imageid. With ``enrich`` each row carries the J4 lookup
+    key (slide_key, NULL for no slide); without, the lookup's outputs
+    (no hash, not missing)."""
+    params = "analysis.algorithm_params"
+    lookup = (
+        ["nullif(slide, '') AS slide_key"]
+        if enrich
+        else ["CAST(NULL AS STRING) AS hash", "FALSE AS hash_missing"]
+    )
+    return analyses.selectExpr(
+        "_id AS analysis_id",
+        "coalesce(analysis.execution_id, 'unknown') AS exec_id",
+        "image.imageid AS image_id",
+        "coalesce(image.subject, '') AS subject_id",
+        "coalesce(image.study, '') AS study",
+        "coalesce(image.slide, '') AS slide",
+        f"coalesce(try_cast({params}.image_width AS INT), 40000) AS image_width",
+        f"coalesce(try_cast({params}.image_height AS INT), 40000) AS image_height",
+        f"coalesce(nullif({params}.case_id, ''), image.imageid) AS case_id",
+        *lookup,
     )
 
 
-def _mark_block(
-    mark_id: Column,
-    exec_id: Column,
-    nucleustype: Column,
-    is_nuclear: Column,
-    annotation: Column,
-    footprint: Column,
-    wkt: Column,
-) -> Column:
-    """One geo:hasMember block (mongodb_to_rdf.py:415-455); conditional
-    lines render only when their source field is present/valid."""
-    return F.concat(
-        F.lit(
-            " ;\n        geo:hasMember [\n            a geo:Feature ;\n"
-            "            hal:markId \""
-        ),
-        mark_id,
-        F.lit("\" ;\n            hal:executionId \""),
-        exec_id,
-        F.lit("\" ;"),
-        F.when(
-            _nonempty(nucleustype),
-            F.concat(
-                F.lit("\n            hal:nucleusType \""), nucleustype, F.lit("\" ;")
-            ),
-        ).otherwise(F.lit("")),
-        F.when(
-            is_nuclear,
-            F.lit(
-                "\n            hal:hasMaterialType snomed:68841002 ;  # Nuclear material"
-            ),
-        ).otherwise(F.lit("")),
-        F.when(
-            annotation.isNotNull(),
-            F.concat(
-                F.lit("\n            hal:hasAnnotation <"),
-                annotation,
-                F.lit("> ;  # Human-verified SNOMED code"),
-            ),
-        ).otherwise(F.lit("")),
-        F.lit("\n            hal:footprint "),
-        F.when(footprint.isNull(), F.lit("0")).otherwise(footprint.cast("string")),
-        F.lit(
-            " ;\n            geo:hasGeometry [\n                geo:asWKT \""
-        ),
+# mark-block text pieces (mongodb_to_rdf.py:415-455)
+_MARK_OPEN = ' ;\n        geo:hasMember [\n            a geo:Feature ;\n            hal:markId "'
+_NUCLEUS_OPEN = '\n            hal:nucleusType "'
+_NUCLEUS_CLOSE = '" ;'
+_NUCLEAR = "\n            hal:hasMaterialType snomed:68841002 ;  # Nuclear material"
+_ANNOTATION_OPEN = "\n            hal:hasAnnotation <"
+_ANNOTATION_CLOSE = "> ;  # Human-verified SNOMED code"
+_WKT_OPEN = ' ;\n            geo:hasGeometry [\n                geo:asWKT "'
+_WKT_CLOSE = '"^^geo:wktLiteral\n            ]\n        ]'
+
+
+def _mark_block(wkt: str) -> str:
+    """SQL text: one geo:hasMember block over a mark row (its _id,
+    geometries, userUpdate and provenance columns); conditional lines
+    render only when their source field is present/valid. P8: a
+    nucleustype of >= 3 dot-separated parts is nuclear material; P7: the
+    first annotation must be a SNOMED URI."""
+    feature = "get(geometries.features, 0)"
+    nucleustype = f"coalesce({feature}.properties.nucleustype, '')"
+    dot = sql_literal(r"\.")
+    is_nuclear = f"{_nonempty(nucleustype)} AND size(split({nucleustype}, {dot})) >= 3"
+    ann0 = "get(userUpdate.mark.annotation, 0).annotationID"
+    snomed_uri = sql_literal("http://snomed.info/id/")
+    footprint = f"{feature}.properties.footprint"
+    parts = [
+        sql_literal(_MARK_OPEN),
+        "_id",
+        sql_literal('" ;\n            hal:executionId "'),
+        "coalesce(provenance.analysis.execution_id, 'unknown')",
+        sql_literal('" ;'),
+        f"CASE WHEN {_nonempty(nucleustype)} THEN concat({sql_literal(_NUCLEUS_OPEN)}, "
+        f"{nucleustype}, {sql_literal(_NUCLEUS_CLOSE)}) ELSE '' END",
+        f"CASE WHEN {is_nuclear} THEN {sql_literal(_NUCLEAR)} ELSE '' END",
+        f"CASE WHEN {ann0} IS NOT NULL AND startswith({ann0}, {snomed_uri}) "
+        f"THEN concat({sql_literal(_ANNOTATION_OPEN)}, {ann0}, "
+        f"{sql_literal(_ANNOTATION_CLOSE)}) ELSE '' END",
+        sql_literal("\n            hal:footprint "),
+        f"CASE WHEN {footprint} IS NULL THEN '0' ELSE CAST({footprint} AS STRING) END",
+        sql_literal(_WKT_OPEN),
         wkt,
-        F.lit(
-            "\"^^geo:wktLiteral\n            ]\n        ]"
-        ),
-    )
+        sql_literal(_WKT_CLOSE),
+    ]
+    return f"concat({', '.join(parts)})"
 
 
-def render_marks(marks_joined: DataFrame) -> DataFrame:
-    """marks already joined to their analysis (needs image_width/height):
-    project P3 first-feature, apply P7/P8 predicates, G3 WKT, render.
-    Rows whose geometry is empty/invalid are dropped (the reference's
-    '(\"\", False)' skip channel)."""
-    feature = F.get(F.col("geometries.features"), 0)
-    nucleustype = F.coalesce(feature["properties"]["nucleustype"], F.lit(""))
-    # P8: >= 3 dot-separated parts -> nuclear material
-    is_nuclear = _nonempty(nucleustype) & (
-        F.size(F.split(nucleustype, r"\.")) >= 3
-    )
-    # P7: first annotation must be a SNOMED URI
-    ann0 = F.get(F.col("userUpdate.mark.annotation"), 0)["annotationID"]
-    annotation = F.when(
-        ann0.isNotNull() & ann0.startswith("http://snomed.info/id/"), ann0
-    )
-    wkt = denormalized_polygon_wkt(
-        feature["geometry"]["type"],
-        feature["geometry"]["coordinates"],
-        F.col("image_width").cast("double"),
-        F.col("image_height").cast("double"),
-    )
-    return (
-        marks_joined.withColumn("wkt", wkt)
-        .where(F.col("wkt").isNotNull())
-        .withColumn(
-            "block",
-            _mark_block(
-                F.col("_id"),
-                F.coalesce(F.col("provenance.analysis.execution_id"), F.lit("unknown")),
-                nucleustype,
-                is_nuclear,
-                annotation,
-                feature["properties"]["footprint"],
-                F.col("wkt"),
-            ),
-        )
-    )
+_DOC_KEYS = (
+    "analysis_id", "exec_id", "image_id", "subject_id", "study", "slide",
+    "case_id", "image_width", "image_height", "image_hash", "hash_missing",
+)
 
 
-def _header(batch_num: Column) -> Column:
-    """TTL header + image object + collection opener
+def _render_marks(marks: DataFrame, analyses: DataFrame) -> DataFrame:
+    """One SQL statement: J1, the flagship multi-key equi-join — slide
+    participates only when the analysis has one (mongodb_to_rdf.py:
+    503-509) — then P3 first feature, G3 WKT and the mark render. Marks
+    whose geometry is empty/invalid are dropped (the reference's
+    '("", False)' skip channel)."""
+    geometry = "get(m.geometries.features, 0).geometry"
+    wkt = denormalized_polygon_wkt.sql(
+        f"{geometry}.type",
+        f"{geometry}.coordinates",
+        "CAST(a.image_width AS DOUBLE)",
+        "CAST(a.image_height AS DOUBLE)",
+    )
+    keys = ", ".join(f"a.{k}" for k in _DOC_KEYS if k != "image_hash")
+    image_hash = f"coalesce(a.hash, {sha256_id.sql('a.image_id')})"
+    return sql_over(lambda m, a: f"""
+SELECT {", ".join(_DOC_KEYS)}, _id, {_mark_block("wkt")} AS block
+FROM (SELECT {keys}, {image_hash} AS image_hash,
+             m._id, m.geometries, m.userUpdate, m.provenance, {wkt} AS wkt
+      FROM {m} m JOIN {a} a
+        ON m.provenance.analysis.execution_id = a.exec_id
+       AND m.provenance.image.imageid = a.image_id
+       AND (a.slide = '' OR coalesce(m.provenance.image.slide, '') = a.slide))
+WHERE wkt IS NOT NULL""", marks, analyses)
+
+
+_HASH_MISSING = '    hal:hashMissing "true"^^xsd:boolean ;\n'
+
+
+def _header(batch_num: str) -> str:
+    """SQL text: TTL header + image object + collection opener
     (mongodb_to_rdf.py:304-357)."""
-    w = F.col("image_width").cast("string")
-    h = F.col("image_height").cast("string")
 
-    def opt(label: str, col: Column) -> Column:
-        return F.when(
-            _nonempty(col),
-            F.concat(F.lit(f"    {label} \""), col, F.lit("\" ;\n")),
-        ).otherwise(F.lit(""))
+    def opt(label: str, col: str) -> str:
+        head, tail = sql_literal(f'    {label} "'), sql_literal('" ;\n')
+        return f"CASE WHEN {_nonempty(col)} THEN concat({head}, {col}, {tail}) ELSE '' END"
 
-    return F.concat(
-        F.lit("# GeoSPARQL representation of pathology image analysis\n# Analysis ID: "),
-        F.col("analysis_id"),
-        F.lit("\n# Execution: "),
-        F.col("exec_id"),
-        F.lit("\n# Image: "),
-        F.col("image_id"),
-        F.lit("\n# Batch: "),
-        F.format_string("%06d", batch_num.cast("int")),
-        F.lit("\n\n" + _PREFIXES + "\n<urn:sha256:"),
-        F.col("image_hash"),
-        F.lit(">\n    a so:ImageObject ;\n    hal:imageId \""),
-        F.col("image_id"),
-        F.lit("\" ;\n"),
-        opt("hal:caseId", F.col("case_id")),
-        opt("hal:subjectId", F.col("subject_id")),
-        opt("hal:studyId", F.col("study")),
-        opt("hal:slideId", F.col("slide")),
-        F.when(
-            F.col("hash_missing"),
-            F.lit("    hal:hashMissing \"true\"^^xsd:boolean ;\n"),
-        ).otherwise(F.lit("")),
-        F.lit("    hal:imageWidth "),
-        w,
-        F.lit(" ;\n    hal:imageHeight "),
-        h,
-        F.lit(" ;\n    hal:analysisId \""),
-        F.col("analysis_id"),
-        F.lit(
-            "\" ;\n    geo:hasGeometry [\n        geo:asWKT \""
-        ),
-        image_bbox_wkt(F.col("image_width"), F.col("image_height")),
-        F.lit(
-            "\"^^geo:wktLiteral\n    ] ;\n"
+    parts = [
+        sql_literal("# GeoSPARQL representation of pathology image analysis\n# Analysis ID: "),
+        "analysis_id",
+        sql_literal("\n# Execution: "),
+        "exec_id",
+        sql_literal("\n# Image: "),
+        "image_id",
+        sql_literal("\n# Batch: "),
+        f"format_string('%06d', CAST({batch_num} AS INT))",
+        sql_literal("\n\n" + _PREFIXES + "\n<urn:sha256:"),
+        "image_hash",
+        sql_literal('>\n    a so:ImageObject ;\n    hal:imageId "'),
+        "image_id",
+        sql_literal('" ;\n'),
+        opt("hal:caseId", "case_id"),
+        opt("hal:subjectId", "subject_id"),
+        opt("hal:studyId", "study"),
+        opt("hal:slideId", "slide"),
+        f"CASE WHEN hash_missing THEN {sql_literal(_HASH_MISSING)} ELSE '' END",
+        sql_literal("    hal:imageWidth "),
+        "CAST(image_width AS STRING)",
+        sql_literal(" ;\n    hal:imageHeight "),
+        "CAST(image_height AS STRING)",
+        sql_literal(' ;\n    hal:analysisId "'),
+        "analysis_id",
+        sql_literal('" ;\n    geo:hasGeometry [\n        geo:asWKT "'),
+        image_bbox_wkt.sql("image_width", "image_height"),
+        sql_literal(
+            '"^^geo:wktLiteral\n    ] ;\n'
             "    hal:hasFeatureCollection [\n        a geo:FeatureCollection"
         ),
+    ]
+    return f"concat({', '.join(parts)})"
+
+
+def _documents(bodies: DataFrame) -> DataFrame:
+    """One batch file per (analysis, batch): header + members + close."""
+    batch_file = "format_string('batch_%06d.ttl.gz', CAST(batch_num AS INT))"
+    close = sql_literal("\n    ] .\n")
+    return bodies.selectExpr(
+        "analysis_id",
+        "exec_id",
+        "image_id",
+        "CAST(batch_id + 1 AS INT) AS batch_num",
+        "mark_count",
+        f"concat(exec_id, '/', image_id, '/', {batch_file}) AS file_name",
+        f"concat({_header('batch_num')}, members, {close}) AS body",
     )
 
 
@@ -229,89 +227,41 @@ def render_ttl_documents(
     batch_size: int = BATCH_SIZE,
 ) -> DataFrame:
     """Full mongo-etl plan -> one row per output batch file:
-    (exec_id, image_id, batch_num, mark_count, file_name, body).
+    (analysis_id, exec_id, image_id, batch_num, mark_count, file_name,
+    body).
 
     ``slide_hashes``: optional (slide, hash) lookup (J4 enrichment);
     missing entries set hal:hashMissing and fall back to sha256(image_id).
     ``ledger``: optional processed-ids table (P9 anti-join on analysis _id).
+
+    Three analyzed steps — the analyses projection (``selectExpr``),
+    the J1 join + mark render (one SQL statement), the documents
+    (``selectExpr``) — with the J4 enrichment, W1 batching and A6
+    assembly as DataFrame calls between them.
     """
     if ledger is not None:
         analyses = filter_pending(analyses, ledger, "_id")
 
-    a = project_analyses(analyses)
-
-    # J4: enrichment with negative-cache semantics
-    if slide_hashes is not None:
+    enrich = slide_hashes is not None
+    a = _project_analyses(analyses, enrich)
+    if enrich:
+        # J4: enrichment with negative-cache semantics
         a = enrich_with_table(
-            a.withColumn("slide_key", F.nullif(F.col("slide"), F.lit(""))),
-            slide_hashes.withColumnRenamed("slide", "slide_key"),
+            a,
+            slide_hashes.selectExpr("slide AS slide_key", "hash"),
             "slide_key",
             value_col="hash",
             missing_flag_col="hash_missing",
-        ).drop("slide_key")
-    else:
-        a = a.withColumn("hash", F.lit(None).cast("string")).withColumn(
-            "hash_missing", F.lit(False)
         )
-    a = a.withColumn(
-        "image_hash", F.coalesce(F.col("hash"), sha256_id(F.col("image_id")))
-    ).drop("hash")
-
-    # J1: the flagship multi-key equi-join. Slide participates only when
-    # the analysis has one (mongodb_to_rdf.py:503-509).
-    joined = marks.alias("m").join(
-        a.alias("a"),
-        (F.col("m.provenance.analysis.execution_id") == F.col("a.exec_id"))
-        & (F.col("m.provenance.image.imageid") == F.col("a.image_id"))
-        & (
-            (F.col("a.slide") == "")
-            | (F.coalesce(F.col("m.provenance.image.slide"), F.lit("")) == F.col("a.slide"))
-        ),
-        "inner",
-    )
-
-    rendered = render_marks(joined)
+    rendered = _render_marks(marks, a)
 
     # W1: fixed-size batching over successful marks, ordered by mark _id
-    batched = with_batch_id(
-        rendered, ["analysis_id"], "_id", batch_size=batch_size
-    ).withColumn("batch_num", F.col("batch_id") + 1)
-
-    bodies = batched.groupBy(
-        "analysis_id",
-        "exec_id",
-        "image_id",
-        "subject_id",
-        "study",
-        "slide",
-        "case_id",
-        "image_width",
-        "image_height",
-        "image_hash",
-        "hash_missing",
-        "batch_num",
-    ).agg(
+    batched = with_batch_id(rendered, ["analysis_id"], "_id", batch_size=batch_size)
+    bodies = batched.groupBy(*_DOC_KEYS, "batch_id").agg(
         ordered_concat(F.col("seq_in_group"), F.col("block"), "").alias("members"),
         F.count("*").alias("mark_count"),
     )
-
-    body = F.concat(_header(F.col("batch_num")), F.col("members"), F.lit("\n    ] .\n"))
-    file_name = F.concat(
-        F.col("exec_id"),
-        F.lit("/"),
-        F.col("image_id"),
-        F.lit("/"),
-        F.format_string("batch_%06d.ttl.gz", F.col("batch_num").cast("int")),
-    )
-    return bodies.select(
-        "analysis_id",
-        "exec_id",
-        "image_id",
-        F.col("batch_num").cast("int").alias("batch_num"),
-        "mark_count",
-        file_name.alias("file_name"),
-        body.alias("body"),
-    )
+    return _documents(bodies)
 
 
 def run(

@@ -8,6 +8,11 @@ is a groupBy over (cancer_type, image_name, csv_name):
     read.csv(glob) + input_file_name regexes -> G2 WKT parse ->
     conditional property render -> A6 ordered group render -> K2 sink
 
+The plan is handed to Spark as SQL text (functions.sql): one
+``selectExpr`` for the source projection, one for the member blocks,
+one aggregation and one ``selectExpr`` for the documents, with the
+helpers (G2 WKT, patch metadata, hash) inlined by their SQL form.
+
 Scale: a million patch CSVs become one job; no driver traversal, no
 per-image Pool. The doc-assembly shuffle carries rendered strings only.
 
@@ -18,15 +23,18 @@ normalization — segmentation-etl:178 differs from json-etl:83).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from geosparql_etl_spark.functions.geometry import parse_polygon_string_wkt
 from geosparql_etl_spark.functions.hashing import sha256_id
+from geosparql_etl_spark.functions.sql import sql_literal
 from geosparql_etl_spark.operators.render import ordered_concat
 
 # SNOMED nucleoplasm concept id (segmentation-etl:44)
 NUCLEAR_MATERIAL_SNOMED_ID = "68841002"
+
+_CSV_EXT_RE = r"\.csv$"
 
 _PREFIX_HEADER = (
     "@prefix dc:   <http://purl.org/dc/terms/> .\n"
@@ -42,155 +50,143 @@ _PREFIX_HEADER = (
 )
 
 
-def _feature_block(wkt: Column, area: Column, physical: Column) -> Column:
-    """One rdfs:member block (segmentation-etl:253-271): fixed 1.0
-    probability, optional area/physicalSize when the CSV strings are
+def _nonempty(c: str) -> str:
+    return f"{c} IS NOT NULL AND {c} != ''"
+
+
+def _feature_block(wkt: str, area: str, physical: str) -> str:
+    """SQL text: one rdfs:member block (segmentation-etl:253-271): fixed
+    1.0 probability, optional area/physicalSize when the CSV strings are
     non-empty."""
-    base = F.concat(
-        F.lit(
-            "        rdfs:member          [ a                   geo:Feature;\n"
-            "                               geo:hasGeometry     [ geo:asWKT  \""
-        ),
-        wkt,
-        F.lit(
-            "\"^^geo:wktLiteral ];\n"
-            "                               hal:classification  sno:"
-            + NUCLEAR_MATERIAL_SNOMED_ID
-            + ";\n"
-            "                               hal:measurement     "
-            "[ hal:hasProbability  \"1.0\"^^xsd:float ]"
-        ),
+    head = sql_literal(
+        "        rdfs:member          [ a                   geo:Feature;\n"
+        "                               geo:hasGeometry     [ geo:asWKT  \""
     )
-    with_area = F.when(
-        area.isNotNull() & (area != ""),
-        F.concat(
-            F.lit(
-                ";\n                               hal:areaInPixels    \""
-            ),
-            area,
-            F.lit("\"^^xsd:int"),
-        ),
-    ).otherwise(F.lit(""))
-    with_phys = F.when(
-        physical.isNotNull() & (physical != ""),
-        F.concat(
-            F.lit(
-                ";\n                               hal:physicalSize    \""
-            ),
-            physical,
-            F.lit("\"^^xsd:float"),
-        ),
-    ).otherwise(F.lit(""))
-    return F.concat(base, with_area, with_phys, F.lit("\n                             ]"))
-
-
-def render_ttl_documents(patches: DataFrame, timestamp: str) -> DataFrame:
-    """patches (sources.segmentation.read_patch_csvs shape) ->
-    (image_name, file_name, body): one TTL document per patch CSV.
-
-    ``timestamp`` must be the '+00:00'-suffixed ISO string (the
-    reference's isoformat here has no 'Z' normalization).
-    """
-    qualified = (
-        patches.withColumn("wkt", parse_polygon_string_wkt(F.col("Polygon")))
-        .where(F.col("wkt").isNotNull())
-        .withColumn(
-            "block",
-            _feature_block(F.col("wkt"), F.col("AreaInPixels"), F.col("PhysicalSize")),
-        )
+    fixed = sql_literal(
+        "\"^^geo:wktLiteral ];\n"
+        "                               hal:classification  sno:"
+        + NUCLEAR_MATERIAL_SNOMED_ID
+        + ";\n"
+        "                               hal:measurement     "
+        "[ hal:hasProbability  \"1.0\"^^xsd:float ]"
     )
-    bodies = qualified.groupBy("cancer_type", "image_name", "csv_name").agg(
-        ordered_concat(F.col("row_seq"), F.col("block"), ";\n").alias("members")
+    area_open = sql_literal(";\n                               hal:areaInPixels    \"")
+    phys_open = sql_literal(";\n                               hal:physicalSize    \"")
+    int_close, float_close = sql_literal('"^^xsd:int'), sql_literal('"^^xsd:float')
+    with_area = (
+        f"CASE WHEN {_nonempty(area)} THEN concat({area_open}, {area}, {int_close}) ELSE '' END"
+    )
+    with_phys = (
+        f"CASE WHEN {_nonempty(physical)} "
+        f"THEN concat({phys_open}, {physical}, {float_close}) ELSE '' END"
+    )
+    tail = sql_literal("\n                             ]")
+    return f"concat({head}, {wkt}, {fixed}, {with_area}, {with_phys}, {tail})"
+
+
+def _blocks(patches: DataFrame) -> DataFrame:
+    """Per patch row: its member block, NULL when the polygon is
+    missing or empty."""
+    block = _feature_block("wkt", "AreaInPixels", "PhysicalSize")
+    return patches.selectExpr(
+        "cancer_type",
+        "image_name",
+        "csv_name",
+        "patch",
+        "row_seq",
+        f"{parse_polygon_string_wkt.sql('Polygon')} AS wkt",
+        f"CASE WHEN wkt IS NOT NULL THEN {block} END AS block",
     )
 
-    files = patches.select(
-        "cancer_type", "image_name", "csv_name", "patch"
-    ).dropDuplicates(["cancer_type", "image_name", "csv_name"])
-    docs = files.join(bodies, ["cancer_type", "image_name", "csv_name"], "left").withColumn(
-        "members", F.coalesce(F.col("members"), F.lit(""))
-    )
 
-    image_hash = sha256_id(F.col("image_name"))
-    p = F.col("patch")
-    body = F.concat(
-        F.lit(_PREFIX_HEADER),
-        F.lit("<urn:sha256:"),
+def _documents(bodies: DataFrame, timestamp: str) -> DataFrame:
+    """One TTL document per patch CSV from its assembled members;
+    output layout <image_name>/<cancer>_<csv stem>.ttl.gz
+    (segmentation-etl:299-307)."""
+    image_hash = sha256_id.sql("image_name")
+    x, y = "CAST(patch.x AS STRING)", "CAST(patch.y AS STRING)"
+    w, h = "CAST(patch.width AS STRING)", "CAST(patch.height AS STRING)"
+    cancer_open, cancer_close = sql_literal('\n        hal:cancerType       "'), sql_literal('";')
+    cancer = (
+        f"CASE WHEN {_nonempty('cancer_type')} "
+        f"THEN concat({cancer_open}, cancer_type, {cancer_close}) ELSE '' END"
+    )
+    body = ", ".join([
+        sql_literal(_PREFIX_HEADER + "<urn:sha256:"),
         image_hash,
-        F.lit(
-            ">\n        a            so:ImageObject;\n        dc:identifier \""
-        ),
-        F.col("image_name"),
-        F.lit("\" .\n\n"),
-        F.lit(
+        sql_literal(">\n        a            so:ImageObject;\n        dc:identifier \""),
+        "image_name",
+        sql_literal(
+            "\" .\n\n"
             "<>      a                    geo:FeatureCollection;\n"
             "        dc:creator           \"http://orcid.org/0000-0003-4165-4062\";\n"
             "        dc:date              \""
-        ),
-        F.lit(timestamp),
-        F.lit(
-            "\"^^xsd:dateTime;\n"
+            + timestamp
+            + "\"^^xsd:dateTime;\n"
             "        dc:description       \"Nuclear segmentation predictions for "
         ),
-        F.col("image_name"),
-        F.lit(" - patch "),
-        p["x"].cast("string"),
-        F.lit("_"),
-        p["y"].cast("string"),
-        F.lit(" ("),
-        p["width"].cast("string"),
-        F.lit("x"),
-        p["height"].cast("string"),
-        F.lit(
+        "image_name",
+        sql_literal(" - patch "),
+        x,
+        "'_'",
+        y,
+        "' ('",
+        w,
+        "'x'",
+        h,
+        sql_literal(
             ")\";\n"
             "        dc:publisher         <https://ror.org/01882y777> , <https://ror.org/05qghxh33>;\n"
             "        dc:references        \"https://doi.org/10.1038/s41597-020-0528-1\";\n"
             "        dc:title             \"nuclear-segmentation-predictions\";"
         ),
-        F.when(
-            F.col("cancer_type").isNotNull() & (F.col("cancer_type") != ""),
-            F.concat(
-                F.lit("\n        hal:cancerType       \""),
-                F.col("cancer_type"),
-                F.lit("\";"),
-            ),
-        ).otherwise(F.lit("")),
-        F.lit("\n        hal:patchX           \""),
-        p["x"].cast("string"),
-        F.lit("\"^^xsd:int;\n        hal:patchY           \""),
-        p["y"].cast("string"),
-        F.lit("\"^^xsd:int;\n        hal:patchWidth       \""),
-        p["width"].cast("string"),
-        F.lit("\"^^xsd:int;\n        hal:patchHeight      \""),
-        p["height"].cast("string"),
-        F.lit(
+        cancer,
+        sql_literal("\n        hal:patchX           \""),
+        x,
+        sql_literal("\"^^xsd:int;\n        hal:patchY           \""),
+        y,
+        sql_literal("\"^^xsd:int;\n        hal:patchWidth       \""),
+        w,
+        sql_literal("\"^^xsd:int;\n        hal:patchHeight      \""),
+        h,
+        sql_literal(
             "\"^^xsd:int;\n"
             "        prov:wasGeneratedBy  [ a                       prov:Activity;\n"
             "                               prov:used               <urn:sha256:"
         ),
         image_hash,
-        F.lit(">;\n                             ];\n"),
-        F.col("members"),
-        F.lit(" .\n"),
-    )
-
-    # output layout: <image_name>/<cancer>_<csv stem>.ttl.gz
-    # (segmentation-etl:299-307)
-    stem = F.regexp_replace(F.col("csv_name"), r"\.csv$", "")
-    file_name = F.concat(
-        F.col("image_name"),
-        F.lit("/"),
-        F.col("cancer_type"),
-        F.lit("_"),
-        stem,
-        F.lit(".ttl.gz"),
-    )
-    return docs.select(
+        sql_literal(">;\n                             ];\n"),
+        "members",
+        sql_literal(" .\n"),
+    ])
+    stem = f"regexp_replace(csv_name, {sql_literal(_CSV_EXT_RE)}, '')"
+    return bodies.selectExpr(
         "cancer_type",
         "image_name",
         "csv_name",
-        file_name.alias("file_name"),
-        body.alias("body"),
+        f"concat(image_name, '/', cancer_type, '_', {stem}, '.ttl.gz') AS file_name",
+        f"concat({body}) AS body",
     )
+
+
+def render_ttl_documents(patches: DataFrame, timestamp: str) -> DataFrame:
+    """patches (sources.segmentation.read_patch_csvs shape) ->
+    (cancer_type, image_name, csv_name, file_name, body): one TTL
+    document per patch CSV.
+
+    Three analyzed steps: the per-row blocks (one ``selectExpr``), the
+    ordered assembly (one aggregation, one shuffle) and the document
+    text (one ``selectExpr``). A CSV whose polygons are all missing or
+    invalid still yields its header-only document: its rows carry NULL
+    blocks, which the assembly's array_join skips.
+
+    ``timestamp`` must be the '+00:00'-suffixed ISO string (the
+    reference's isoformat here has no 'Z' normalization).
+    """
+    bodies = _blocks(patches).groupBy("cancer_type", "image_name", "csv_name", "patch").agg(
+        ordered_concat(F.col("row_seq"), F.col("block"), ";\n").alias("members")
+    )
+    return _documents(bodies, timestamp)
 
 
 def run(

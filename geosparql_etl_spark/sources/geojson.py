@@ -3,7 +3,8 @@
 Replaces the reference's glob + json.load + Pool(20) per-file loop
 (json-etl/geojson_to_geosparql_etl.py:185-236) with a schema'd multiline
 JSON scan; per-file identity comes from input_file_name(), feature order
-from posexplode — both are what the renderer keys on.
+from the feature's array index — both are what the renderer keys on.
+The projection is one ``selectExpr``, analyzed once.
 
 Scale: spark.read.json splits across files (one task per file for
 multiline documents); thousands of GeoJSON files parallelize to cluster
@@ -19,16 +20,22 @@ from pyspark.sql.types import StringType, StructField, StructType
 from geosparql_etl_spark.schemas import GEOJSON_FEATURE_COLLECTION
 
 
-def _features(raw: DataFrame) -> DataFrame:
-    return raw.select(
-        "source_file",
-        F.posexplode_outer("features").alias("feature_idx", "feature"),
-    ).select(
-        "source_file",
-        "feature_idx",
-        F.col("feature.geometry.type").alias("geometry_type"),
-        F.col("feature.geometry.coordinates").alias("coordinates"),
-        F.col("feature.properties.measurements").alias("measurements"),
+# the file name (last path segment) of the row's input file
+_SOURCE_FILE = "element_at(split(input_file_name(), '/'), -1)"
+
+
+def _features(raw: DataFrame, source_file: str = "source_file") -> DataFrame:
+    """One ``selectExpr`` over ``raw``, ``source_file`` being its SQL
+    text: inline_outer over the index-numbered features keeps a row per
+    file (all NULL) even when the file has no features."""
+    feature = (
+        "named_struct('feature_idx', __i, 'geometry_type', __f.geometry.type, "
+        "'coordinates', __f.geometry.coordinates, "
+        "'measurements', __f.properties.measurements)"
+    )
+    return raw.selectExpr(
+        f"{source_file} AS source_file",
+        f"inline_outer(transform(features, (__f, __i) -> {feature}))",
     )
 
 
@@ -39,11 +46,8 @@ def read_geojson_features(spark: SparkSession, path: str) -> DataFrame:
         spark.read.schema(GEOJSON_FEATURE_COLLECTION)
         .option("multiLine", "true")
         .json(path)
-        .withColumn(
-            "source_file", F.element_at(F.split(F.input_file_name(), "/"), -1)
-        )
     )
-    return _features(raw)
+    return _features(raw, _SOURCE_FILE)
 
 
 def read_geojson_features_with_errors(
@@ -78,9 +82,7 @@ def read_geojson_features_with_errors(
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .json(path)
-        .withColumn(
-            "source_file", F.element_at(F.split(F.input_file_name(), "/"), -1)
-        )
+        .withColumn("source_file", F.expr(_SOURCE_FILE))
         .cache()
     )
     errors = raw.where(

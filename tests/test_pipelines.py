@@ -474,3 +474,204 @@ def test_json_etl_corrupt_file_error_channel(spark, tmp_path):
     docs2 = json_etl.run(spark, str(in_dir), out, TS_Z, ledger_path=ledger_path)
     assert docs2.count() == 0
     assert read_ledger(spark, ledger_path).count() == 3
+
+
+# --- golden bytes ---------------------------------------------------------------
+# Exact documents of json, segmentation and mongo run() and of the hash
+# rewrite on small fixtures, pinned as SHA-256 digests. Data values and
+# both timestamps carry an apostrophe, a backslash, a double quote, a
+# newline, a '%' and braces, so every Python value the renderers embed
+# in a plan must round-trip verbatim.
+
+TS_GOLDEN_Z = "2026-01-01T00:00:00Z it's \\ \"q\" 100% {x}\nend"
+TS_GOLDEN_OFFSET = "2026-01-01T00:00:00+00:00 o'clock \\ 5%"
+
+
+def _tree(root) -> dict[str, str]:
+    """rel path -> document text (gunzipped) of every output file."""
+    out = {}
+    for p in Path(root).rglob("*"):
+        if p.is_file() and not p.name.startswith((".", "_")):
+            raw = p.read_bytes()
+            out[str(p.relative_to(root))] = (
+                gzip.decompress(raw) if p.name.endswith(".gz") else raw
+            ).decode("utf-8")
+    return out
+
+
+def _digests(docs: dict[str, str]) -> dict[str, str]:
+    import hashlib
+
+    return {k: hashlib.sha256(v.encode("utf-8")).hexdigest() for k, v in docs.items()}
+
+
+def _golden_feature(coords, measurements):
+    return {
+        "type": "Feature",
+        "geometry": {"type": "Polygon", "coordinates": coords},
+        "properties": {"measurements": measurements},
+    }
+
+
+def test_json_etl_golden_bytes(spark, tmp_path):
+    tri = [[[10.0, 20.0], [30.5, 20.0], [30.5, 45.25]]]
+    f = _golden_feature
+    files = {
+        "TCGA-AA-0001-01Z.it's-100%.geojson": [
+            f(tri, {"prob_400p-Tumor": 0.75, "prob_400p-Stroma": 0.2,
+                    "prob_other": 0.05, "nr_of_cells": 17.0}),
+            f([[[1.5, 2.25], [3.0, 4.0], [5.0, 6.0], [1.5, 2.25]]],
+              {"prob_400p-Necrosis": 0.5, "prob_400p-Nerves": 0.5}),
+            f([], {"prob_400p-Tumor": 0.9}),  # no ring -> no member
+            f(tri, {"prob_other": 0.9, "prob_400p-Fibrosis": 0.1}),
+            f(tri, {}),
+            f([[[0.0001, 12345678.0], [2.0, 3.0]]], {"prob_400p-Reactive": 0.333333333}),
+        ],
+        "TCGA-BB-0002-01Z.empty.geojson": [],  # header-only document
+        "plain.geojson": [f(tri, {"prob_400p-Acinar tissue": 1.0})],
+    }
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    for name, feats in files.items():
+        (in_dir / name).write_text(json.dumps({"type": "FeatureCollection", "features": feats}))
+    (in_dir / "broken.geojson").write_text("{not valid json")
+
+    json_etl.run(spark, str(in_dir), str(tmp_path / "out"), TS_GOLDEN_Z)
+    docs = _tree(tmp_path / "out")
+    assert _digests(docs) == {
+        "TCGA-AA-0001-01Z.it's-100%25.ttl": "f4aa96774568ae768925742f460395e7acfa93ad1d67e9e00aebe307c15d69b4",
+        "TCGA-BB-0002-01Z.empty.ttl": "284a3c2ec09c9a4ef21401c6f34dbed2aa116d4be1c1c373498e0a1e56a44b11",
+        "broken.ttl": "6e7ba797fe811779924d1e30c649aa46f096181b937e9d0dae84b0acb0947a56",
+        "plain.ttl": "58b7011114b6aba99a42584b842c2c29c7dcb4ec9fd31cbd5908208012de8048",
+    }
+    assert f'dc:date              "{TS_GOLDEN_Z}"^^xsd:dateTime;' in docs["plain.ttl"]
+    assert docs["TCGA-AA-0001-01Z.it's-100%25.ttl"].count("rdfs:member") == 3
+    assert "rdfs:member" not in docs["TCGA-BB-0002-01Z.empty.ttl"]
+
+
+def test_segmentation_etl_golden_bytes(spark, tmp_path):
+    base = tmp_path / "base"
+
+    def write(cancer, slide, csv_name, text):
+        d = base / f"{cancer}_polygon" / f"{slide}.svs.tar.gz" / f"{cancer}_polygon" / f"{slide}.svs"
+        d.mkdir(parents=True, exist_ok=True)
+        (d / csv_name).write_text(text)
+
+    write("blca", "TCGA-XX-it's.1", "24001_72001_4000_4000_0.2325_1-features.csv",
+          "AreaInPixels,PhysicalSize,Polygon\n"
+          "250,60.5,[2080:1342:2085:1340:2090:1345]\n"
+          ",,[1:2:3:4]\n"
+          "99,1.5,\n"
+          "it's,\"say \"\"hi\"\" 5%\",[1.5:2':3\\x:4%:1.5:2']\n"
+          "7,8,[5:6:7:8:9]\n")
+    # every polygon invalid -> header-only document; unparsable patch name
+    write("blca", "TCGA-XX-it's.1", "odd_name-features.csv",
+          "AreaInPixels,PhysicalSize,Polygon\n1,2,\n3,4,  \n")
+    write("paad", "TCGA-YY-2", "100_200_300_400_0.25_1-features.csv",
+          "AreaInPixels,PhysicalSize,Polygon\n10,1.0,[1:2:3:4:1:2]\n")
+
+    segmentation_etl.run(spark, str(base), str(tmp_path / "out"), TS_GOLDEN_OFFSET)
+    docs = _tree(tmp_path / "out")
+    odd = "TCGA-XX-it's.1.svs/blca_odd_name-features.ttl.gz"
+    assert _digests(docs) == {
+        "TCGA-XX-it's.1.svs/blca_24001_72001_4000_4000_0.2325_1-features.ttl.gz": "25b3a24970d97ea622056f0bc40849153cd5f95ff3bfd4eb48a1369adffabc8a",
+        odd: "4c6cd089056777d8f763cf74068a6af5281d39b711291deac836a6397f73e1dd",
+        "TCGA-YY-2.svs/paad_100_200_300_400_0.25_1-features.ttl.gz": "6da2ea90f47f97af61cff2223a9147416d3320c2eb89892b3b1ba3a2a884ded6",
+    }
+    assert "rdfs:member" not in docs[odd] and f'"{TS_GOLDEN_OFFSET}"' in docs[odd]
+
+
+def test_mongo_etl_golden_bytes(spark, tmp_path):
+    from geosparql_etl_spark.config import EngineConfig
+
+    exec_id = "exec-7's 5%"
+    analysis = json.loads(json.dumps(ANALYSIS))
+    analysis["analysis"]["execution_id"] = exec_id
+    analysis["analysis"]["algorithm_params"]["case_id"] = 'CASE "1"'
+    analysis["image"].update(subject="SUBJ\\1", study="STUDY\n1")
+    a2 = {
+        "_id": "ffffffffffffffffffffffff",
+        "analysis": {"execution_id": None,
+                     "algorithm_params": {"image_width": "x", "image_height": None,
+                                          "case_id": ""}},
+        "image": {"imageid": "IMG-2", "subject": None, "study": "", "slide": None},
+    }
+
+    def mark(i, exec_=exec_id, image=None, gtype="Polygon", footprint=512.0, **kw):
+        m = _mark(i, **kw)
+        m["provenance"] = {"analysis": {"execution_id": exec_},
+                           "image": image or {"imageid": "IMG-1", "slide": "12345"}}
+        feat = m["geometries"]["features"][0]
+        feat["geometry"]["type"] = gtype
+        feat["properties"]["footprint"] = footprint
+        return m
+
+    img2 = {"imageid": "IMG-2", "slide": None}
+    marks = [
+        mark(1),
+        mark(2, nucleustype="it's \\ \"x\"\n5%.a.b",
+             ann=[{"annotationID": "http://snomed.info/id/99'9"}]),
+        mark(3, nucleustype="", ann=[{"annotationID": "http://example.org/nope"}]),
+        mark(4, coords=[]),  # invalid geometry -> skipped
+        mark(5, footprint=None, coords=[[[0.5, 0.5], [0.6, 0.5], [0.6, 0.6], [0.5, 0.5]]]),
+        mark(6, gtype="Point"),  # not a polygon -> skipped
+        mark(7, image={"imageid": "IMG-1", "slide": "other"}),  # slide mismatch
+        mark(8, exec_="unknown", image=img2, nucleustype=None),
+        mark(9, exec_="unknown", image=img2),
+    ]
+    analyses_df = spark.createDataFrame([analysis, a2], ANALYSIS_DOC)
+    marks_df = spark.createDataFrame(marks, MARK_DOC)
+
+    mongo_etl.run(spark, analyses_df, marks_df, str(tmp_path / "out"),
+                  config=EngineConfig(batch_size=2))
+    assert _digests(_tree(tmp_path / "out")) == {
+        "exec-7's 5%/IMG-1/batch_000001.ttl.gz": "616c93d8708c075e66ad4cd8829f83d785bcca6887c7c27c4e3b4cc3db9f46b3",
+        "exec-7's 5%/IMG-1/batch_000002.ttl.gz": "7d2e36e1cfdde17b166fa65af9ab5237e9107846296b2fbe250de1a24ee68fa2",
+        "unknown/IMG-2/batch_000001.ttl.gz": "89209db7055b8eebc7d4a6f2058bbb7c8cec2f036d1a689ec3e0a25030c15071",
+    }
+
+    hashes = spark.createDataFrame([("12345", "9" * 64)], SLIDE_HASHES)
+    mongo_etl.run(spark, analyses_df, marks_df, str(tmp_path / "hashed"), slide_hashes=hashes)
+    docs = _tree(tmp_path / "hashed")
+    assert _digests(docs) == {
+        "exec-7's 5%/IMG-1/batch_000001.ttl.gz": "cb2aac6001b22b7eb0281bb8714ba3d235eeec733beb1e4844bdab6808c480cc",
+        "unknown/IMG-2/batch_000001.ttl.gz": "41827cd79deae07d5c23929e264b4a610f76de762c47fd4f2f46fbefd121a072",
+    }
+    first = docs["exec-7's 5%/IMG-1/batch_000001.ttl.gz"]
+    assert 'hal:nucleusType "it\'s \\ "x"\n5%.a.b" ;' in first
+    assert f"<urn:sha256:{'9' * 64}>" in first
+
+
+def test_hash_rewrite_golden_bytes(spark, tmp_path):
+    from geosparql_etl_spark.sinks.ttl import rewrite_documents
+
+    docs = spark.createDataFrame(
+        [
+            ("in/1.ttl.gz", f'<urn:sha256:{"a" * 64}>\n    a so:ImageObject ;\n'
+                            '    hal:slideId "100" ;\n    rdfs:comment "it\'s \\\\ \\"q\\" 5%\n" .\n'),
+            ("in/2.ttl.gz", f'<urn:md5:{"b" * 32}> a so:ImageObject ;\n    hal:slideId "200" .\n'),
+            ("in/3.ttl.gz", "no ids here 'quoted' 100%\n"),
+            ("in/4.ttl.gz", f'<urn:sha256:{"c" * 64}> hal:slideId "300" ; <urn:md5:{"d" * 32}> .\n'),
+        ],
+        TTL_DOCUMENTS,
+    )
+    hashes = spark.createDataFrame([("100", "e" * 64), ("300", "f" * 64)], SLIDE_HASHES)
+    rewritten = hash_update.update_hashes_by_slide_id(docs, hashes)
+    assert sorted(
+        (r["path"], r["slide"], r["old_hash"], r["hash"], r["status"]) for r in rewritten.collect()
+    ) == [
+        ("in/1.ttl.gz", "100", "a" * 64, "e" * 64, "updated"),
+        ("in/2.ttl.gz", "200", "b" * 32, None, "hash_missing"),
+        ("in/3.ttl.gz", None, None, None, "no_slide_id"),
+        ("in/4.ttl.gz", "300", "c" * 64, "f" * 64, "updated"),
+    ]
+    rewrite_documents(
+        rewritten.withColumn("file_name", F.regexp_extract("path", r"([^/]+)$", 1)),
+        str(tmp_path / "out"),
+    )
+    assert _digests(_tree(tmp_path / "out")) == {
+        "1.ttl.gz": "e8f5c039120dfcbd7967b8b9766484f551dcc2d14578948b418a2ac2a54ff7a8",
+        "2.ttl.gz": "bee182c237986158aba9f381eb83a13a08c6d52bf3d9080777813d0f19899597",
+        "3.ttl.gz": "4ac080cdbab0c0daca40f510e86b051cf742e2ed715fe2d0b8e113052d58e5e0",
+        "4.ttl.gz": "f4e0c85d7c24aa41ac3eb6227489c72c39f91a4b53758fe6c994b073b3595f8d",
+    }
