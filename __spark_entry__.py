@@ -46,6 +46,7 @@ from geosparql_etl_spark.functions.geometry import (
     polygon_perimeter,
 )
 from geosparql_etl_spark.functions.hashing import md5_long, sha256_id
+from geosparql_etl_spark.functions.sql import sql_literal
 from geosparql_etl_spark.functions.text import (
     batch_file_name,
     iso_utc,
@@ -1675,8 +1676,10 @@ def a02_map_argmax(spark, sf_dir):
         F.lit("prob_tax"), F.col("l_tax"),
         F.lit("nr_cells"), F.col("l_quantity"),
     )
-    dom = dominant_entry(m)
-    return li.select(
+    # the helpers' Column form over a column name is their SQL text
+    # (codegen where it allows); over an expression it binds a lambda
+    dom = dominant_entry("m")
+    return li.select("l_orderkey", "l_linenumber", m.alias("m")).select(
         "l_orderkey",
         "l_linenumber",
         dom["class"].alias("dominant_class"),
@@ -1845,8 +1848,8 @@ def g02_parse_polygon(spark, sf_dir):
         (F.col("p_size") * 2).cast("string"),
         F.lit("]"),
     )
-    return p.select(
-        "p_partkey", parse_polygon_string_wkt(poly).alias("wkt")
+    return p.select("p_partkey", poly.alias("poly")).select(
+        "p_partkey", parse_polygon_string_wkt("poly").alias("wkt")
     )
 
 
@@ -1866,20 +1869,14 @@ def g03_denormalized_wkt(spark, sf_dir):
     li = spread(
         _t(spark, sf_dir, "lineitem").where(F.col("l_discount") != F.col("l_tax"))
     )
-    coords = F.array(
-        F.array(
-            F.array(F.col("l_discount"), F.col("l_tax")),
-            F.array(F.col("l_tax"), F.col("l_discount")),
-            F.array(F.col("l_discount"), F.col("l_discount")),
-        )
+    coords = (
+        "array(array(array(l_discount, l_tax), array(l_tax, l_discount), "
+        "array(l_discount, l_discount)))"
     )
-    return li.select(
-        "l_orderkey",
-        "l_linenumber",
-        denormalized_polygon_wkt(
-            F.lit("Polygon"), coords, F.lit(1000.0), F.lit(2000.0)
-        ).alias("wkt"),
+    wkt = denormalized_polygon_wkt.sql(
+        "'Polygon'", coords, sql_literal(1000.0), sql_literal(2000.0)
     )
+    return li.selectExpr("l_orderkey", "l_linenumber", f"{wkt} AS wkt")
 
 
 def _sql_g03():
@@ -1962,8 +1959,8 @@ def t02_patch_metadata(spark, sf_dir):
             F.col("l_linenumber"),
         )
     )
-    meta = patch_metadata(fname)
-    return li.select(
+    meta = patch_metadata("fname")
+    return li.select("l_orderkey", "l_linenumber", fname.alias("fname")).select(
         "l_orderkey",
         "l_linenumber",
         meta["x"].alias("px"),
@@ -1990,9 +1987,9 @@ def t05_urn_rewrite(spark, sf_dir):
     text = F.concat(
         F.lit("<urn:md5:"), F.md5(F.col("c_name")), F.lit("> a so:ImageObject ;")
     )
-    return c.select(
-        "c_custkey",
-        replace_urn_hash(text, sha256_id(F.col("c_name"))).alias("rewritten"),
+    rewritten = replace_urn_hash.sql("text", sha256_id.sql("c_name"))
+    return c.select("c_custkey", "c_name", text.alias("text")).selectExpr(
+        "c_custkey", f"{rewritten} AS rewritten"
     )
 
 
@@ -4583,10 +4580,10 @@ def g01_polygon_wkt(spark, sf_dir):
             F.array(F.col("l_extendedprice") + 1.0, F.col("l_quantity") + 1.0),
         )
     )
-    return li.select(
+    return li.select("l_orderkey", "l_linenumber", coords.alias("coords")).select(
         "l_orderkey",
         "l_linenumber",
-        polygon_wkt(coords).alias("wkt"),
+        polygon_wkt("coords").alias("wkt"),
     )
 
 
@@ -4683,7 +4680,9 @@ def g12_safe_wkt(spark, sf_dir):
             )
         ),
     )
-    return p.select("p_partkey", safe_polygon_wkt(coords).alias("wkt"))
+    return p.select("p_partkey", coords.alias("coords")).select(
+        "p_partkey", safe_polygon_wkt(F.col("coords")).alias("wkt")
+    )
 
 
 def _sql_g12():
@@ -4702,12 +4701,8 @@ def g13_image_bbox(spark, sf_dir):
     from geosparql_etl_spark.functions.geometry import image_bbox_wkt
 
     p = _t(spark, sf_dir, "part")
-    return p.select(
-        "p_partkey",
-        image_bbox_wkt(
-            F.col("p_size") * 1000, F.col("p_size") * 500
-        ).alias("bbox_wkt"),
-    )
+    bbox = image_bbox_wkt.sql("p_size * 1000", "p_size * 500")
+    return p.selectExpr("p_partkey", f"{bbox} AS bbox_wkt")
 
 
 def _sql_g13():
@@ -4732,7 +4727,9 @@ def t01_image_id(spark, sf_dir):
     fname = F.concat(
         F.regexp_replace("c_name", "#", "."), F.lit(".svs.geojson")
     )
-    return c.select("c_custkey", extract_image_id(fname).alias("image_id"))
+    return c.select("c_custkey", fname.alias("fname")).select(
+        "c_custkey", extract_image_id("fname").alias("image_id")
+    )
 
 
 def _sql_t01():

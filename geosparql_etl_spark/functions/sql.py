@@ -13,17 +13,24 @@ filter) where one ``selectExpr`` cannot.
 
   - ``sql_literal`` is the only way a Python value (a prefix, a regex,
     a registry entry, a timestamp) enters SQL text.
+  - ``sql_nonempty`` is the "neither NULL nor ''" test the renderers
+    guard their optional properties with.
   - ``sql_function`` turns a Python function from argument SQL texts to
     a SQL expression text into a helper with two forms built from that
     one text: ``helper.sql("a", "b")`` for SQL statements, and
-    ``helper(col_a, col_b)`` for Column code. The Column form binds its
-    arguments as the variable of a one-element ``transform`` lambda, so
-    an argument can be ANY Column (a nested field, a literal, a name
-    that needs backquotes); its SQL text is never derived from
-    ``Column.toString``, which does not re-parse to the same
-    expression. Higher-order functions run interpreted (outside
-    whole-stage codegen), which is where the geometry and argmax
-    expressions ran already.
+    ``helper(col_a, col_b)`` for Column code. When every argument is a
+    column name (a string or a plain ``F.col``), the Column form is the
+    SQL form over the backquoted names, so it plans exactly like the
+    text inlined in a ``selectExpr`` (whole-stage codegen and common
+    subexpression elimination where the text allows them). Any other
+    argument (a nested field, a literal, an expression) is bound as the
+    variable of a one-element ``transform`` lambda: that form is exact
+    for any Column, but a higher-order function evaluates interpreted,
+    outside whole-stage codegen, so the whole helper does, repeating
+    every repeated subexpression. Callers that care project the
+    argument first or use the SQL form. An argument's SQL text is never
+    derived from ``Column.toString``, which does not re-parse to the
+    same expression.
 """
 
 from __future__ import annotations
@@ -69,13 +76,35 @@ def sql_literal(value: str | float | dict) -> str:
     raise TypeError(f"no SQL literal for {type(value).__name__}: {value!r}")
 
 
+def sql_nonempty(expr: str) -> str:
+    """SQL text: ``expr`` is neither NULL nor the empty string."""
+    return f"{expr} IS NOT NULL AND {expr} != ''"
+
+
+def _column_name(col: Column) -> str | None:
+    """The backquoted SQL name of a plain column reference (``F.col``
+    with no plan id: ``df["x"]`` binds to its DataFrame), else None.
+    Read from the reference's name parts, which are exact."""
+    node = col._jc.node()
+    if (
+        node.getClass().getSimpleName() != "UnresolvedAttribute"
+        or node.planId().isDefined()
+        or node.isMetadataColumn()
+    ):
+        return None
+    names = node.nameParts()
+    parts = (names.apply(i) for i in range(names.length()))
+    return ".".join("`" + p.replace("`", "``") + "`" for p in parts)
+
+
 # the Column form's lambda variable; SQL texts must not name a lambda
 # variable or a column this way
 _ARG = "__arg"
 
 
-class SqlFunction:
-    """A helper defined once, as SQL text (see the module docstring).
+class sql_function:
+    """Decorator: a helper defined once, as SQL text (see the module
+    docstring).
 
     Parameters of the defining function without a default are
     expression arguments (SQL texts); parameters with a default are
@@ -103,9 +132,12 @@ class SqlFunction:
         return "(" + self._text(*(f"({e})" for e in exprs), **opts) + ")"
 
     def __call__(self, *args, **kwargs) -> Column:
-        """The expression as a Column over argument Columns (or names)."""
+        """The expression as a Column over argument Columns or names."""
         exprs, opts = self._split(args, kwargs)
         cols = [F.col(c) if isinstance(c, str) else c for c in exprs]
+        names = [_column_name(c) for c in cols]
+        if all(n is not None for n in names):
+            return F.expr(self.sql(*names, **opts))
         if len(cols) == 1:
             bound, names = F.array(cols[0]), [_ARG]
         else:
@@ -113,11 +145,6 @@ class SqlFunction:
             names = [f"{_ARG}.p{i}" for i in range(len(cols))]
         body = self._text(*names, **opts)
         return F.get(F.call_function("transform", bound, F.expr(f"{_ARG} -> {body}")), 0)
-
-
-def sql_function(text: Callable[..., str]) -> SqlFunction:
-    """Decorator: define a helper by its SQL text (see SqlFunction)."""
-    return SqlFunction(text)
 
 
 def sql_over(query: Callable[..., str], *frames: DataFrame) -> DataFrame:

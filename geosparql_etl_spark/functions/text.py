@@ -39,33 +39,26 @@ def patch_metadata(filename: str) -> str:
     """Parse 'X_Y_W_H_..." -features.csv' names; non-numeric or short names
     fall back to x=y=0, w=h=40000 (the reference's default assumption).
 
-    The split name and its four parsed fields are each bound once as a
-    lambda variable: the Column form evaluates its body interpreted,
-    where a repeated subexpression is evaluated at every reference. A
-    part with no ASCII digit cannot cast to INT, and the guard keeps it
-    away from try_cast, which interpreted throws and catches (~12 us)
-    per failing value.
+    Plain scalar text with no lambda, so it runs in whole-stage codegen,
+    where the repeated split and casts are evaluated once per row
+    (common subexpression elimination) and try_cast fails without an
+    exception.
 
     Ref: segmentation-etl/nuclear_segmentation_etl.py:79-114.
     """
     name = f"regexp_replace({filename}, {sql_literal(_CSV_EXT_RE)}, '')"
-    split_name = f"named_struct('name', {name}, 'parts', split({name}, '_'))"
-    fields = ", ".join(
-        f"'{k}', CASE WHEN get(__pm.parts, {i}) RLIKE '[0-9]' "
-        f"THEN try_cast(get(__pm.parts, {i}) AS INT) END"
-        for i, k in enumerate("xywh")
+    parts = f"split({name}, '_')"
+    # get() not try_element_at(): TryElementAt breaks codegen under
+    # expression splitting (see functions/geometry.py outer_ring note).
+    x, y, w, h = (f"try_cast(get({parts}, {i}) AS INT)" for i in range(4))
+    ok = f"size({parts}) >= 4 AND " + " AND ".join(f"{v} IS NOT NULL" for v in (x, y, w, h))
+    return (
+        f"named_struct('x', CASE WHEN {ok} THEN {x} ELSE 0 END, "
+        f"'y', CASE WHEN {ok} THEN {y} ELSE 0 END, "
+        f"'width', CASE WHEN {ok} THEN {w} ELSE 40000 END, "
+        f"'height', CASE WHEN {ok} THEN {h} ELSE 40000 END, "
+        f"'base_name', {name})"
     )
-    parsed = f"named_struct('name', __pm.name, 'n', size(__pm.parts), {fields})"
-    ok = "__pv.n >= 4 AND " + " AND ".join(f"__pv.{k} IS NOT NULL" for k in "xywh")
-    result = (
-        f"named_struct('x', CASE WHEN {ok} THEN __pv.x ELSE 0 END, "
-        f"'y', CASE WHEN {ok} THEN __pv.y ELSE 0 END, "
-        f"'width', CASE WHEN {ok} THEN __pv.w ELSE 40000 END, "
-        f"'height', CASE WHEN {ok} THEN __pv.h ELSE 40000 END, "
-        "'base_name', __pv.name)"
-    )
-    bound = f"get(transform(array({split_name}), __pm -> {parsed}), 0)"
-    return f"get(transform(array({bound}), __pv -> {result}), 0)"
 
 
 # T3: prefix strip / add -----------------------------------------------------

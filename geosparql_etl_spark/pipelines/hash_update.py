@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from geosparql_etl_spark.functions.sql import sql_literal
 from geosparql_etl_spark.functions.text import (
     extract_slide_id,
     extract_urn_hash,
@@ -67,23 +68,20 @@ def update_hashes_by_folder(
     key is the parent folder (slide) name derived from the path; docs
     whose folder has no hash either skip (default) or get the
     `hal:missing true` tag (sha256-json-paad.py:64-71)."""
-    folder = F.element_at(F.split(F.col("path"), "/"), -2)
-    docs = ttl_docs.withColumn("slide", folder)
+    docs = ttl_docs.withColumn("slide", F.expr("element_at(split(path, '/'), -2)"))
     enriched = enrich_with_table(docs, folder_hashes, "slide", "hash", "hash_missing")
     if mark_missing:
-        new_text = mark_missing_hash(F.col("text"), F.col("hash"))
+        new_text = mark_missing_hash.sql("text", "hash")
     else:
-        new_text = F.when(
-            F.col("hash").isNotNull(), replace_urn_hash(F.col("text"), F.col("hash"))
-        ).otherwise(F.col("text"))
+        new_text = (
+            f"CASE WHEN hash IS NOT NULL THEN {replace_urn_hash.sql('text', 'hash')} ELSE text END"
+        )
+    urn = sql_literal("urn:(sha256|md5):[0-9a-fA-F]+")
     status = (
-        F.when(F.col("hash").isNull(), F.lit("hash_missing"))
-        .when(~F.col("text").rlike("urn:(sha256|md5):[0-9a-fA-F]+"), F.lit("no_urn"))
-        .otherwise(F.lit("updated"))
+        "CASE WHEN hash IS NULL THEN 'hash_missing' "
+        f"WHEN NOT text RLIKE {urn} THEN 'no_urn' ELSE 'updated' END"
     )
-    return enriched.select(
-        "path", new_text.alias("text"), "slide", "hash", status.alias("status")
-    )
+    return enriched.selectExpr("path", f"{new_text} AS text", "slide", "hash", f"{status} AS status")
 
 
 def remove_prefix_lines(

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from geosparql_etl_spark.functions.geometry import denormalized_polygon_wkt, image_bbox_wkt
 from geosparql_etl_spark.functions.hashing import sha256_id
-from geosparql_etl_spark.functions.sql import sql_literal, sql_over
+from geosparql_etl_spark.functions.sql import sql_literal, sql_nonempty, sql_over
 from geosparql_etl_spark.operators.batching import with_batch_id
 from geosparql_etl_spark.operators.enrich import enrich_with_table
 from geosparql_etl_spark.operators.ledger import filter_pending
@@ -49,10 +49,6 @@ _PREFIXES = (
     "@prefix loinc: <http://loinc.org/rdf/> .\n"
     "@prefix hal: <https://halcyon.is/ns/> .\n"
 )
-
-
-def _nonempty(c: str) -> str:
-    return f"{c} IS NOT NULL AND {c} != ''"
 
 
 def _project_analyses(analyses: DataFrame, enrich: bool) -> DataFrame:
@@ -101,7 +97,7 @@ def _mark_block(wkt: str) -> str:
     feature = "get(geometries.features, 0)"
     nucleustype = f"coalesce({feature}.properties.nucleustype, '')"
     dot = sql_literal(r"\.")
-    is_nuclear = f"{_nonempty(nucleustype)} AND size(split({nucleustype}, {dot})) >= 3"
+    is_nuclear = f"{sql_nonempty(nucleustype)} AND size(split({nucleustype}, {dot})) >= 3"
     ann0 = "get(userUpdate.mark.annotation, 0).annotationID"
     snomed_uri = sql_literal("http://snomed.info/id/")
     footprint = f"{feature}.properties.footprint"
@@ -111,7 +107,7 @@ def _mark_block(wkt: str) -> str:
         sql_literal('" ;\n            hal:executionId "'),
         "coalesce(provenance.analysis.execution_id, 'unknown')",
         sql_literal('" ;'),
-        f"CASE WHEN {_nonempty(nucleustype)} THEN concat({sql_literal(_NUCLEUS_OPEN)}, "
+        f"CASE WHEN {sql_nonempty(nucleustype)} THEN concat({sql_literal(_NUCLEUS_OPEN)}, "
         f"{nucleustype}, {sql_literal(_NUCLEUS_CLOSE)}) ELSE '' END",
         f"CASE WHEN {is_nuclear} THEN {sql_literal(_NUCLEAR)} ELSE '' END",
         f"CASE WHEN {ann0} IS NOT NULL AND startswith({ann0}, {snomed_uri}) "
@@ -167,7 +163,7 @@ def _header(batch_num: str) -> str:
 
     def opt(label: str, col: str) -> str:
         head, tail = sql_literal(f'    {label} "'), sql_literal('" ;\n')
-        return f"CASE WHEN {_nonempty(col)} THEN concat({head}, {col}, {tail}) ELSE '' END"
+        return f"CASE WHEN {sql_nonempty(col)} THEN concat({head}, {col}, {tail}) ELSE '' END"
 
     parts = [
         sql_literal("# GeoSPARQL representation of pathology image analysis\n# Analysis ID: "),

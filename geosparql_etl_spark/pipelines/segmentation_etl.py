@@ -28,7 +28,8 @@ from pyspark.sql import functions as F
 
 from geosparql_etl_spark.functions.geometry import parse_polygon_string_wkt
 from geosparql_etl_spark.functions.hashing import sha256_id
-from geosparql_etl_spark.functions.sql import sql_literal
+from geosparql_etl_spark.functions.sql import sql_literal, sql_nonempty
+from geosparql_etl_spark.functions.text import patch_metadata
 from geosparql_etl_spark.operators.render import ordered_concat
 
 # SNOMED nucleoplasm concept id (segmentation-etl:44)
@@ -48,10 +49,6 @@ _PREFIX_HEADER = (
     "@prefix xsd:  <http://www.w3.org/2001/XMLSchema#> .\n"
     "\n"
 )
-
-
-def _nonempty(c: str) -> str:
-    return f"{c} IS NOT NULL AND {c} != ''"
 
 
 def _feature_block(wkt: str, area: str, physical: str) -> str:
@@ -74,10 +71,10 @@ def _feature_block(wkt: str, area: str, physical: str) -> str:
     phys_open = sql_literal(";\n                               hal:physicalSize    \"")
     int_close, float_close = sql_literal('"^^xsd:int'), sql_literal('"^^xsd:float')
     with_area = (
-        f"CASE WHEN {_nonempty(area)} THEN concat({area_open}, {area}, {int_close}) ELSE '' END"
+        f"CASE WHEN {sql_nonempty(area)} THEN concat({area_open}, {area}, {int_close}) ELSE '' END"
     )
     with_phys = (
-        f"CASE WHEN {_nonempty(physical)} "
+        f"CASE WHEN {sql_nonempty(physical)} "
         f"THEN concat({phys_open}, {physical}, {float_close}) ELSE '' END"
     )
     tail = sql_literal("\n                             ]")
@@ -92,7 +89,6 @@ def _blocks(patches: DataFrame) -> DataFrame:
         "cancer_type",
         "image_name",
         "csv_name",
-        "patch",
         "row_seq",
         f"{parse_polygon_string_wkt.sql('Polygon')} AS wkt",
         f"CASE WHEN wkt IS NOT NULL THEN {block} END AS block",
@@ -104,11 +100,13 @@ def _documents(bodies: DataFrame, timestamp: str) -> DataFrame:
     output layout <image_name>/<cancer>_<csv stem>.ttl.gz
     (segmentation-etl:299-307)."""
     image_hash = sha256_id.sql("image_name")
-    x, y = "CAST(patch.x AS STRING)", "CAST(patch.y AS STRING)"
-    w, h = "CAST(patch.width AS STRING)", "CAST(patch.height AS STRING)"
+    # parsed once per document, from its file name
+    patch = patch_metadata.sql("csv_name")
+    x, y = f"CAST({patch}.x AS STRING)", f"CAST({patch}.y AS STRING)"
+    w, h = f"CAST({patch}.width AS STRING)", f"CAST({patch}.height AS STRING)"
     cancer_open, cancer_close = sql_literal('\n        hal:cancerType       "'), sql_literal('";')
     cancer = (
-        f"CASE WHEN {_nonempty('cancer_type')} "
+        f"CASE WHEN {sql_nonempty('cancer_type')} "
         f"THEN concat({cancer_open}, cancer_type, {cancer_close}) ELSE '' END"
     )
     body = ", ".join([
@@ -183,7 +181,7 @@ def render_ttl_documents(patches: DataFrame, timestamp: str) -> DataFrame:
     ``timestamp`` must be the '+00:00'-suffixed ISO string (the
     reference's isoformat here has no 'Z' normalization).
     """
-    bodies = _blocks(patches).groupBy("cancer_type", "image_name", "csv_name", "patch").agg(
+    bodies = _blocks(patches).groupBy("cancer_type", "image_name", "csv_name").agg(
         ordered_concat(F.col("row_seq"), F.col("block"), ";\n").alias("members")
     )
     return _documents(bodies, timestamp)

@@ -3,8 +3,8 @@
 Replaces the reference's glob + json.load + Pool(20) per-file loop
 (json-etl/geojson_to_geosparql_etl.py:185-236) with a schema'd multiline
 JSON scan; per-file identity comes from input_file_name(), feature order
-from the feature's array index — both are what the renderer keys on.
-The projection is one ``selectExpr``, analyzed once.
+from the feature's array index (posexplode) — both are what the
+renderer keys on. The projection is two ``selectExpr`` steps.
 
 Scale: spark.read.json splits across files (one task per file for
 multiline documents); thousands of GeoJSON files parallelize to cluster
@@ -25,17 +25,18 @@ _SOURCE_FILE = "element_at(split(input_file_name(), '/'), -1)"
 
 
 def _features(raw: DataFrame, source_file: str = "source_file") -> DataFrame:
-    """One ``selectExpr`` over ``raw``, ``source_file`` being its SQL
-    text: inline_outer over the index-numbered features keeps a row per
-    file (all NULL) even when the file has no features."""
-    feature = (
-        "named_struct('feature_idx', __i, 'geometry_type', __f.geometry.type, "
-        "'coordinates', __f.geometry.coordinates, "
-        "'measurements', __f.properties.measurements)"
-    )
+    """Two ``selectExpr`` over ``raw``, ``source_file`` being its SQL
+    text: posexplode_outer keeps a row per file (all NULL) even when the
+    file has no features, then the feature's fields are pulled out."""
     return raw.selectExpr(
         f"{source_file} AS source_file",
-        f"inline_outer(transform(features, (__f, __i) -> {feature}))",
+        "posexplode_outer(features) AS (feature_idx, feature)",
+    ).selectExpr(
+        "source_file",
+        "feature_idx",
+        "feature.geometry.type AS geometry_type",
+        "feature.geometry.coordinates AS coordinates",
+        "feature.properties.measurements AS measurements",
     )
 
 

@@ -113,10 +113,10 @@ EXPECTED = {
     "extract_slide_id": ["42", None, None],
     "extract_urn_hash": ["abc123", None, None],
     "replace_urn_hash": ['x <urn:sha256:ffffffff> hal:slideId "42" a so:ImageObject ;', "nothing", None],
-    "mark_missing_hash": [
-        'x <urn:md5:abc123> hal:slideId "42" a so:ImageObject ;n    hal:missing "true"^^xsd:boolean ;',
-        "nothing", None],
 }
+# mark_missing_hash's first row is not pinned: it carries a known
+# divergence from the reference (test_mark_missing_hash_tag_starts_a_new_line)
+MARK_MISSING_ROWS_2_3 = ["nothing", None]
 
 
 def _values(rows, name):
@@ -148,7 +148,9 @@ def test_helpers_column_form_matches_replaced_definitions(spark):
         ),
     }
     rows = df.select(*[c.alias(k) for k, c in cols.items()]).collect()
-    assert {k: _values(rows, k) for k in cols} == EXPECTED
+    got = {k: _values(rows, k) for k in cols}
+    assert got.pop("mark_missing_hash")[1:] == MARK_MISSING_ROWS_2_3
+    assert got == EXPECTED
 
 
 def test_helpers_sql_form_matches_column_form(spark):
@@ -181,3 +183,71 @@ def test_dominant_entry_options_in_both_forms(spark):
     col = df.select(dominant_entry(F.col("m"), "p_", strip=False).alias("d")).first()["d"]
     txt = df.selectExpr(f"{dominant_entry.sql('m', prefix='p_', strip=False)} AS d").first()["d"]
     assert tuple(col) == tuple(txt) == ("p_y", 0.7)
+
+
+def test_helpers_sql_form_matches_column_form_for_mark_missing_hash(spark):
+    df = spark.createDataFrame(ROWS, SCHEMA).selectExpr(
+        "`t x`", "CASE WHEN `a b` = 'no_dot' THEN 'eeee' END AS h"
+    )
+    col = df.select(TX.mark_missing_hash(F.col("t x"), F.concat(F.col("h"), F.lit(""))).alias("r"))
+    txt = df.selectExpr(f"{TX.mark_missing_hash.sql('`t x`', 'h')} AS r")
+    assert col.collect() == txt.collect()
+    assert [r["r"] for r in txt.collect()][1:] == MARK_MISSING_ROWS_2_3
+
+
+@pytest.mark.xfail(
+    strict=True,
+    reason="known divergence: the tag's replacement text goes to Java regex "
+    "replacement, which reads its backslash-n as a literal 'n'; the "
+    "reference's re.sub writes a newline",
+)
+def test_mark_missing_hash_tag_starts_a_new_line(spark):
+    df = spark.createDataFrame([("x a so:ImageObject ;",)], "t string")
+    out = df.select(TX.mark_missing_hash(F.col("t"), F.lit(None)).alias("r")).first()["r"]
+    assert out == 'x a so:ImageObject ;\n    hal:missing "true"^^xsd:boolean ;'
+
+
+def _codegen_projects(df) -> tuple[int, int]:
+    """(projects inside whole-stage codegen, projects outside it) in the
+    executed plan."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    lines = [ln.strip(" +-:") for ln in plan.splitlines()]
+    inside = sum(1 for ln in lines if ln.startswith("*(") and " Project " in f" {ln} ")
+    outside = sum(1 for ln in lines if ln.startswith("Project "))
+    return inside, outside
+
+
+def test_column_form_over_a_name_is_the_sql_form(spark):
+    """Over column names (strings, or F.col with odd characters) the
+    Column form is the SQL text itself: a lambda-free helper such as
+    patch_metadata plans inside whole-stage codegen, like the same text
+    in a selectExpr. Over an expression it binds a lambda, which runs
+    outside it; both return the same rows."""
+    df = spark.createDataFrame(
+        [("12_34_56_78_x.csv",), ("bad-name.csv",), (None,)], "`a b` string"
+    )
+    by_name = df.select(TX.patch_metadata("a b").alias("p"))
+    by_col = df.select(TX.patch_metadata(F.col("a b")).alias("p"))
+    by_sql = df.selectExpr(f"{TX.patch_metadata.sql('`a b`')} AS p")
+    by_expr = df.select(TX.patch_metadata(F.concat(F.col("a b"), F.lit(""))).alias("p"))
+    for frame in (by_name, by_col, by_sql):
+        assert _codegen_projects(frame) == (1, 0)
+    assert _codegen_projects(by_expr) == (0, 1)
+    rows = by_sql.collect()
+    assert rows == by_name.collect() == by_col.collect() == by_expr.collect()
+    assert [tuple(r["p"]) for r in rows] == [
+        (12, 34, 56, 78, "12_34_56_78_x"),
+        (0, 0, 40000, 40000, "bad-name"),
+        (0, 0, 40000, 40000, None),
+    ]
+
+
+def test_column_form_keeps_struct_field_references(spark):
+    """F.col("a.b") is the field b of struct a, as in SQL; a name with a
+    dot inside backquotes is one column."""
+    df = spark.sql("SELECT named_struct('b', 'x.y.geojson') AS a, 'p.q' AS `a.b`")
+    row = df.select(
+        TX.extract_image_id(F.col("a.b")).alias("field"),
+        TX.extract_image_id(F.col("`a.b`")).alias("column"),
+    ).first()
+    assert (row["field"], row["column"]) == ("x", "p")
