@@ -12198,15 +12198,16 @@ def sp33_spatial_containment(spark, sf_dir):
     arguments bound from data (supplier POINTs x region POLYGON
     zones), the query shape the constant-region sp04 cannot express.
     The supplier star and the region star share no variable, so the
-    naive plan is CartesianProduct + ray cast; the compiler's
-    grid-cover rewrite (compiler.py _grid_sfwithin_rewrite) instead
+    naive plan is CartesianProduct + ray cast; the compiler's one
+    var-var relate cover join (compiler.py _grid_sfintersects_rewrite,
+    which serves sfWithin/sfContains for every subject shape) instead
     explodes each polygon into its covered grid cells, lands each
     point in its one cell, hash-joins on the cell, and re-applies the
-    exact even-odd test — g15's spatial-join strategy reached from
-    SPARQL text. Polygons parse per row with wkt_polygon_ring (pure
-    Catalyst — regexp/split/transform, no UDF), i.e. the engine can
-    query the ^^geo:wktLiteral polygons the reference's json-etl
-    writes. Oracle: the zone bands are x in [20K, 20K+20), so
+    exact hole-aware even-odd test — g15's spatial-join strategy
+    reached from SPARQL text. Polygons parse per row with
+    wkt_polygon_rings (pure Catalyst — regexp/split/transform, no
+    UDF), i.e. the engine can query the ^^geo:wktLiteral polygons the
+    reference's json-etl writes. Oracle: the zone bands are x in [20K, 20K+20), so
     containment is integer division on the supplier lattice."""
     return _sparql(
         spark,

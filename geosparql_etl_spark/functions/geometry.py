@@ -26,6 +26,8 @@ denormalized values) the renderings agree.
 
 from __future__ import annotations
 
+from collections import OrderedDict
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -40,8 +42,14 @@ from geosparql_etl_spark.functions.sql import sql_function, sql_literal
 # those names; memoizing construction changes nothing about what a
 # query computes (no data, no results, not even a session is cached —
 # analysis resolves a fresh copy per plan). Callers must only memo
-# trees whose free column names are fixed for the key.
-_TREE_MEMO: dict[tuple, Column] = {}
+# trees whose free column names are fixed for the key. Keys can carry
+# query constants (the SPARQL compiler memoizes calls by their AST),
+# so the memo is a fixed-size LRU: traffic without repeats keeps at
+# most _TREE_MEMO_SIZE trees alive in the process. 192 holds, without
+# an eviction, what the query registry (about 80 trees over all
+# queries) and tests/test_sparql.py (about 100) build together.
+_TREE_MEMO_SIZE = 192
+_TREE_MEMO: OrderedDict[tuple, Column] = OrderedDict()
 
 
 def memo_tree(key: tuple, build) -> Column:
@@ -49,9 +57,12 @@ def memo_tree(key: tuple, build) -> Column:
     ``build()`` on first use. ``key`` must uniquely determine the
     tree's structure INCLUDING the names of the free columns it
     references."""
-    hit = _TREE_MEMO.get(key)
+    hit = _TREE_MEMO.pop(key, None)
     if hit is None:
-        hit = _TREE_MEMO[key] = build()
+        hit = build()
+    _TREE_MEMO[key] = hit
+    if len(_TREE_MEMO) > _TREE_MEMO_SIZE:
+        _TREE_MEMO.popitem(last=False)
     return hit
 
 

@@ -113,7 +113,10 @@ def mark_missing_hash(ttl_text: str, hash_col: str) -> str:
     Ref: sha256-json-paad.py:64-71.
     """
     image_object = sql_literal(r"a\s+so:ImageObject\s*;")
-    tag = sql_literal('a so:ImageObject ;\\n    hal:missing "true"^^xsd:boolean ;')
+    # a real newline: Java's regex replacement (regexp_replace) reads
+    # a backslash-n as a literal "n", where the reference's re.sub
+    # writes a line break
+    tag = sql_literal('a so:ImageObject ;\n    hal:missing "true"^^xsd:boolean ;')
     return (
         f"CASE WHEN {hash_col} IS NULL THEN regexp_replace({ttl_text}, {image_object}, {tag}) "
         f"ELSE {replace_urn_hash.sql(ttl_text, hash_col)} END"

@@ -2309,28 +2309,11 @@ def _match_var_var_distance(expr):
     return a[1], b[1], float(d)
 
 
-# Grid side for the point-in-polygon cover join. Any value is correct
+# Grid side for the var-var relate cover join. Any value is correct
 # (the exact predicate re-applies after the candidate join); it only
 # tunes candidate counts — polygons explode into (w/CELL+1)*(h/CELL+1)
 # cover cells, points into exactly one.
-_SFWITHIN_CELL = 25.0
-
-
-def _match_var_var_sfwithin(expr):
-    """``FILTER(geof:sfWithin(?pt, ?poly))`` (or mirrored sfContains)
-    with both arguments variables. Returns (point_var, polygon_var)
-    or None."""
-    if expr[0] != "call":
-        return None
-    if expr[1] == "geof:sfwithin":
-        pt, poly = expr[2]
-    elif expr[1] == "geof:sfcontains":
-        poly, pt = expr[2]
-    else:
-        return None
-    if pt[0] != "var" or poly[0] != "var":
-        return None
-    return pt[1], poly[1]
+_GRID_CELL = 25.0
 
 
 def _shape_domain(
@@ -2359,22 +2342,20 @@ _GRID_RELATES = (
 
 
 def _match_var_var_sfintersects(expr):
-    """Var-var spatial-relate FILTERs the grid-cover join can express
-    (round 14 widened beyond sfIntersects): any pair satisfying
-    touches/overlaps/equals/intersects shares at least one covered
-    cell, so the same cell hash-join + canonical-cell dedup + exact
-    re-check works for all four — only sfDisjoint is inexpressible
-    (its pairs share NO cell). Returns (fname, u, v)."""
+    """Var-var spatial-relate FILTERs the grid-cover join can express:
+    any pair satisfying intersects/touches/overlaps/equals/within/
+    contains shares at least one covered cell, so one cell hash-join
+    + canonical-cell survival + exact re-check serves all of them —
+    only sfDisjoint is inexpressible (its pairs share NO cell).
+    Returns (fname, u, v)."""
     if expr[0] != "call":
         return None
     if expr[1] in _GRID_RELATES:
         a, b = expr[2]
         fname = expr[1]
     elif expr[1] in ("geof:sfwithin", "geof:sfcontains"):
-        # containment normalizes to within(subject, container); the
-        # DISPATCH in _grid_spatial_rewrite routes it here only when
-        # the subject's shape domain can contain polygons (otherwise
-        # the point-specialized rewrite keeps its plan)
+        # containment normalizes to within(subject, container), for
+        # every subject shape domain (points, polygons, or both)
         a, b = expr[2] if expr[1] == "geof:sfwithin" else expr[2][::-1]
         fname = "geof:sfwithin"
     else:
@@ -2409,25 +2390,25 @@ def _grid_sfintersects_rewrite(
     var_preds: dict | None = None,
     store=None,
 ) -> bool:
-    """Var-var sfIntersects FILTER between two DISCONNECTED frames,
-    for ANY POINT/POLYGON mix: each side explodes into the grid cells
-    its bbox covers (a POINT's bbox is degenerate — its single cell,
-    exactly like the sfWithin rewrite's point side) and hash-joins on
-    (cx, cy); a candidate pair survives on exactly ONE canonical cell
-    — the lower-left cell of the bbox overlap (per axis, the max of
-    the two cover minima), which shared coverage guarantees both
-    sides emit — so no dedup pass and no duplicate solutions. The
-    FULL mixed exact predicate then decides (point-point coordinate
-    equality, point-polygon even-odd cast, polygon-polygon
-    rings_intersect — the same case split the connected-frame FILTER
-    compiles), built over the already-materialized ring columns so
-    wkt_polygon_rings is parsed once per side (sp33 plan-size lesson).
-    Round 9: the previous version handled polygons only and silently
-    DROPPED point rows (NULL rings), so the same FILTER gave
-    different results on connected vs disconnected plans — the
-    round-8 ADVICE divergence. Rows whose lexical is neither form
-    drop here; on the connected path the predicate is NULL for them —
-    identical no-match outcomes."""
+    """Var-var relate FILTER (``_match_var_var_sfintersects``) between
+    two DISCONNECTED frames, for ANY POINT/POLYGON mix (sfWithin also
+    MULTIPOLYGON containers): each side explodes into the grid cells
+    its bbox covers (a POINT's bbox is degenerate — its single cell)
+    and hash-joins on (cx, cy); a candidate pair survives on exactly
+    ONE canonical cell — the lower-left cell of the bbox overlap (per
+    axis, the max of the two cover minima), which shared coverage
+    guarantees both sides emit — so no dedup pass and no duplicate
+    solutions. The FULL mixed exact predicate then decides
+    (point-point coordinate equality, point-polygon even-odd cast,
+    polygon-polygon rings_intersect — the same case split the
+    connected-frame FILTER compiles), built over the
+    already-materialized ring columns so wkt_polygon_rings is parsed
+    once per side (sp33 plan-size lesson). Round 9: the previous
+    version handled polygons only and silently DROPPED point rows
+    (NULL rings), so the same FILTER gave different results on
+    connected vs disconnected plans — the round-8 ADVICE divergence.
+    Rows whose lexical is neither form drop here; on the connected
+    path the predicate is NULL for them — identical no-match outcomes."""
     m = _match_var_var_sfintersects(expr)
     if not m:
         return False
@@ -2436,11 +2417,11 @@ def _grid_sfintersects_rewrite(
     bi = next((i for i, f in enumerate(frames) if v in f.columns), None)
     if ai is None or bi is None or ai == bi:
         return False
-    cell = _SFWITHIN_CELL
+    cell = _GRID_CELL
 
-    with_mp = fname == "geof:sfwithin"
-
-    def prep(f: DataFrame, var: str, ring_col: str, pre: str):
+    def prep(
+        f: DataFrame, var: str, ring_col: str, pre: str, with_mp: bool
+    ):
         # every derived quantity (ring, point flag, point coords, bbox
         # bounds) materializes as a COLUMN before use: inlining the
         # parse trees into the exact predicate's when-chain multiplied
@@ -2467,9 +2448,10 @@ def _grid_sfintersects_rewrite(
         # containers: a members column parses only when the POLYGON
         # parse came up NULL, its outer rings extend the bbox cover,
         # and the point-in-container arm coalesces over both forms.
-        # The other relates never build this column (their plans are
-        # unchanged); polygon-subject rows against an MP container
-        # drop on both the connected and this path (documented).
+        # Only the container side builds this column: no arm accepts
+        # a MULTIPOLYGON subject (it drops on both the connected and
+        # this path), so a subject-side parse would be per-row waste;
+        # the other relates never build it.
         mp = f"__{pre}mp"
         if with_mp:
             f = f.withColumn(
@@ -2541,8 +2523,8 @@ def _grid_sfintersects_rewrite(
             )
         )
 
-    a = prep(frames[ai], u, "__ring_a", "a")
-    b = prep(frames[bi], v, "__ring_b", "b")
+    a = prep(frames[ai], u, "__ring_a", "a", False)
+    b = prep(frames[bi], v, "__ring_b", "b", fname == "geof:sfwithin")
     canonical = (
         F.col("__cx")
         == F.greatest(
@@ -2674,98 +2656,13 @@ def _grid_sfintersects_rewrite(
     joined = (
         joined
         .drop(
-            "__cx", "__cy", "__ring_a", "__ring_b", "__amp", "__bmp",
+            "__cx", "__cy", "__ring_a", "__ring_b", "__bmp",
             "__apt", "__apx", "__apy", "__bpt", "__bpx", "__bpy",
             "__ax0", "__ay0", "__ax1", "__ay1",
             "__bx0", "__by0", "__bx1", "__by1",
         )
     )
     for idx in sorted((ai, bi), reverse=True):
-        frames.pop(idx)
-    frames.append(joined)
-    return True
-
-
-def _grid_sfwithin_rewrite(frames: list, expr) -> bool:
-    """Var-var point-in-polygon FILTER between two DISCONNECTED
-    frames: the polygon side explodes into the grid cells its bbox
-    covers, the point side lands in its one cell, and a hash join on
-    (cx, cy) produces candidates — then the exact even-odd ray cast
-    re-applies. Same result as crossJoin + filter; the plan is the
-    g15 spatial-join strategy reached from SPARQL text. A point lies
-    in exactly one cell and a polygon emits each cover cell once, so
-    the join introduces no duplicates. Mutates ``frames``/returns
-    True on success."""
-    m = _match_var_var_sfwithin(expr)
-    if not m:
-        return False
-    u, v = m
-    pi = next((i for i, f in enumerate(frames) if u in f.columns), None)
-    gi = next((i for i, f in enumerate(frames) if v in f.columns), None)
-    if pi is None or gi is None or pi == gi:
-        return False
-    cell = _SFWITHIN_CELL
-    px, py = _point_xy(F.col(u))
-    pts = (
-        frames[pi]
-        .withColumn("__cx", F.floor(px / cell))
-        .withColumn("__cy", F.floor(py / cell))
-    )
-    # materialize the parsed ring ONCE as a column: every later use is
-    # an attribute reference. Inlining wkt_polygon_ring's parse tree
-    # into the 4 bbox bounds + the 6 references inside point_in_ring
-    # multiplies a large expression ~10x — measured 4.5s of pure
-    # driver-side analysis per query before this, ~1s after.
-    # ALL rings + MULTIPOLYGON (round 13): the polygon side
-    # normalizes to the MultiPolygon member form (a POLYGON is a
-    # 1-member MultiPolygon), the bbox cover comes from the members'
-    # OUTER rings (holes cannot extend it), and the exact predicate
-    # is hole-aware — keeping this rewrite's answers identical to the
-    # connected-frame FILTER compile (the round-8 divergence lesson)
-    rings = F.col("__rings")
-    outers = F.flatten(F.transform(rings, lambda p: F.get(p, 0)))
-    xs = F.transform(outers, lambda p: p[0])
-    ys = F.transform(outers, lambda p: p[1])
-    as_mp = F.coalesce(
-        F.get(
-            F.transform(
-                F.array(wkt_polygon_rings(F.col(v))),
-                lambda r: F.when(r.isNotNull(), F.array(r)),
-            ),
-            0,
-        ),
-        wkt_multipolygon(F.col(v)),
-    )
-    polys = (
-        frames[gi]
-        .withColumn("__rings", as_mp)
-        .withColumn(
-            "__cx",
-            F.explode(
-                F.sequence(
-                    F.floor(F.array_min(xs) / cell),
-                    F.floor(F.array_max(xs) / cell),
-                )
-            ),
-        )
-        .withColumn(
-            "__cy",
-            F.explode(
-                F.sequence(
-                    F.floor(F.array_min(ys) / cell),
-                    F.floor(F.array_max(ys) / cell),
-                )
-            ),
-        )
-    )
-    # only the positive forms reach here (_match_var_var_sfwithin):
-    # sfDisjoint pairs share no cell, so a cell join cannot express it
-    joined = (
-        pts.join(polys, on=["__cx", "__cy"])
-        .where(point_in_multipolygon(rings, px, py))
-        .drop("__cx", "__cy", "__rings")
-    )
-    for idx in sorted((pi, gi), reverse=True):
         frames.pop(idx)
     frames.append(joined)
     return True
@@ -2785,30 +2682,12 @@ def _grid_spatial_rewrite(
     exact predicate. Same result as crossJoin + filter, but the plan
     is a hash join on (cx, cy): candidates ~ density x 9 cells instead
     of |L| x |R| (the g17/g18 strategy, reached from SPARQL text).
-    Mutates ``frames`` and returns True on success."""
+    Every other var-var topological FILTER (within and contains
+    included) takes the one relate cover join,
+    ``_grid_sfintersects_rewrite``. Mutates ``frames`` and returns
+    True on success."""
     m = _match_var_var_distance(expr)
     if not m:
-        mw = _match_var_var_sfwithin(expr)
-        if mw is not None:
-            # round 14: a within-SUBJECT that can be a POLYGON routes
-            # through the relate rewrite (canonical-cell dedup +
-            # polygon_within_polygon arm) so connected and
-            # disconnected plans agree on polygon-polygon
-            # containment; point-only subjects keep the
-            # point-specialized rewrite (and its MULTIPOLYGON
-            # container support) with an unchanged plan. Residual,
-            # documented: a mixed point/polygon subject against a
-            # MULTIPOLYGON container var serves the point rows only
-            # on the old path — the relate path's container parse is
-            # POLYGON-only, matching the connected-frame compile.
-            _, can_poly = _shape_domain(
-                mw[0], static_shapes, var_preds, store
-            )
-            if can_poly:
-                return _grid_sfintersects_rewrite(
-                    frames, expr, static_shapes, var_preds, store
-                )
-            return _grid_sfwithin_rewrite(frames, expr)
         return _grid_sfintersects_rewrite(
             frames, expr, static_shapes, var_preds, store
         )
@@ -2864,6 +2743,29 @@ def _is_numeric(node) -> bool:
     return (
         node[0] in ("num", "arith")
         or (node[0] == "call" and node[1] in _NUMERIC_CALLS)
+    )
+
+
+def _bound(col: Column, fn) -> Column:
+    """``fn`` applied to ``col`` bound ONCE as a lambda variable (a
+    one-element ``transform``): every reference to it inside ``fn`` is
+    the variable, not a copy of ``col``'s parse tree — inlining a WKT
+    parse into each reference multiplies plan analysis time (the sp33
+    plan-size lesson, SCALE.md round 8)."""
+    return F.get(F.transform(F.array(col), fn), 0)
+
+
+def _bound_rings(ra: Column, rb: Column, pred) -> Column:
+    """``pred(r1, r2)`` over two bound ring arrays, NULL when either
+    side did not parse as a POLYGON."""
+    return _bound(
+        ra,
+        lambda r1: _bound(
+            rb,
+            lambda r2: F.when(
+                r1.isNotNull() & r2.isNotNull(), pred(r1, r2)
+            ),
+        ),
     )
 
 
@@ -3203,30 +3105,13 @@ def _compile_call_impl(node) -> Column:
 
         def _pp_arm() -> Column:
             ra_, rb_ = wkt_polygon_rings(a_lex), wkt_polygon_rings(b_lex)
-
-            def bound2(pred) -> Column:
-                return F.get(
-                    F.transform(
-                        F.array(ra_),
-                        lambda r1: F.get(
-                            F.transform(
-                                F.array(rb_),
-                                lambda r2: F.when(
-                                    r1.isNotNull() & r2.isNotNull(),
-                                    pred(r1, r2),
-                                ),
-                            ),
-                            0,
-                        ),
-                    ),
-                    0,
-                )
-
             if fname == "geof:sfdisjoint":
-                return bound2(lambda r1, r2: ~polygons_intersect_sf(r1, r2))
+                return _bound_rings(
+                    ra_, rb_, lambda r1, r2: ~polygons_intersect_sf(r1, r2)
+                )
             # sfWithin(A, B) = A ⊆ B; sfContains mirrored above via
             # the pt/poly swap, so r1 ⊆ r2 is correct for both.
-            return bound2(polygon_within_polygon)
+            return _bound_rings(ra_, rb_, polygon_within_polygon)
 
         px, py = _point_xy(a_lex)
 
@@ -3255,45 +3140,39 @@ def _compile_call_impl(node) -> Column:
                         for rings in _parse_wkt_multipolygon(poly[1])
                     ]
                 )
-                inside = F.get(
-                    F.transform(
-                        F.array(mp),
-                        lambda m: point_in_multipolygon(m, px, py),
-                    ),
-                    0,
+                inside = _bound(
+                    mp, lambda m: point_in_multipolygon(m, px, py)
                 )
                 return ~inside if fname == "geof:sfdisjoint" else inside
             rings = _rings_lit(_parse_wkt_rings(poly[1]))
-            inside = F.get(
-                F.transform(
-                    F.array(rings),
-                    lambda c: point_in_polygon_holes(c, px, py),
-                ),
-                0,
+            inside = _bound(
+                rings, lambda c: point_in_polygon_holes(c, px, py)
             )
             return F.when(both_poly, _pp_arm()).otherwise(
                 ~inside if fname == "geof:sfdisjoint" else inside
             )
         g = _operand_col(poly, False)
+        gx, gy = _point_xy(g)
+        # a POINT container (simple features): equal points are within
+        # and contain each other and are not disjoint — the answer the
+        # var-var cover join's point-point arm gives, so connected and
+        # disconnected plans agree, and sfDisjoint stays NOT
+        # sfIntersects for points. The coalesce reaches this arm only
+        # when neither container parse applies.
         inside = F.coalesce(
-            F.get(
-                F.transform(
-                    F.array(wkt_polygon_rings(g)),
-                    lambda c: F.when(
-                        c.isNotNull(), point_in_polygon_holes(c, px, py)
-                    ),
+            _bound(
+                wkt_polygon_rings(g),
+                lambda c: F.when(
+                    c.isNotNull(), point_in_polygon_holes(c, px, py)
                 ),
-                0,
             ),
-            F.get(
-                F.transform(
-                    F.array(wkt_multipolygon(g)),
-                    lambda m: F.when(
-                        m.isNotNull(), point_in_multipolygon(m, px, py)
-                    ),
+            _bound(
+                wkt_multipolygon(g),
+                lambda m: F.when(
+                    m.isNotNull(), point_in_multipolygon(m, px, py)
                 ),
-                0,
             ),
+            (px == gx) & (py == gy),
         )
         return F.when(both_poly, _pp_arm()).otherwise(
             ~inside if fname == "geof:sfdisjoint" else inside
@@ -3320,10 +3199,6 @@ def _compile_call_impl(node) -> Column:
         # simple-features test when either side carries interior
         # rings (round 14 — closes the donut-in-hole residual)
         ra, rb = wkt_polygon_rings(a), wkt_polygon_rings(b)
-
-        def _bound(col: Column, fn) -> Column:
-            return F.get(F.transform(F.array(col), fn), 0)
-
         return (
             F.when(pa & pb, (pax == pbx) & (pay == pby))
             .when(
@@ -3347,20 +3222,13 @@ def _compile_call_impl(node) -> Column:
                 ),
             )
             .otherwise(
-                _bound(
+                _bound_rings(
                     ra,
-                    lambda r1: _bound(
-                        rb,
-                        lambda r2: F.when(
-                            r1.isNotNull() & r2.isNotNull(),
-                            F.when(
-                                (F.size(r1) == 1) & (F.size(r2) == 1),
-                                rings_intersect(
-                                    F.get(r1, 0), F.get(r2, 0)
-                                ),
-                            ).otherwise(polygons_intersect_sf(r1, r2)),
-                        ),
-                    ),
+                    rb,
+                    lambda r1, r2: F.when(
+                        (F.size(r1) == 1) & (F.size(r2) == 1),
+                        rings_intersect(F.get(r1, 0), F.get(r2, 0)),
+                    ).otherwise(polygons_intersect_sf(r1, r2)),
                 )
             )
         )
@@ -3399,20 +3267,6 @@ def _compile_call_impl(node) -> Column:
         pbx, pby = _point_xy(b)
         ra, rb = wkt_polygon_rings(a), wkt_polygon_rings(b)
 
-        def _bound(col: Column, fn) -> Column:
-            return F.get(F.transform(F.array(col), fn), 0)
-
-        def poly_poly(pred) -> Column:
-            return _bound(
-                ra,
-                lambda r1: _bound(
-                    rb,
-                    lambda r2: F.when(
-                        r1.isNotNull() & r2.isNotNull(), pred(r1, r2)
-                    ),
-                ),
-            )
-
         null_bool = F.lit(None).cast("boolean")
         if fname == "geof:sftouches":
             return (
@@ -3438,20 +3292,20 @@ def _compile_call_impl(node) -> Column:
                         ),
                     ),
                 )
-                .otherwise(poly_poly(polygons_touch))
+                .otherwise(_bound_rings(ra, rb, polygons_touch))
             )
         if fname == "geof:sfoverlaps":
             return (
                 F.when(a_ln | b_ln, null_bool)
                 .when(a_pt | b_pt, F.lit(False))
-                .otherwise(poly_poly(polygons_overlap_sf))
+                .otherwise(_bound_rings(ra, rb, polygons_overlap_sf))
             )
         if fname == "geof:sfequals":
             return (
                 F.when(a_ln | b_ln, null_bool)
                 .when(a_pt & b_pt, (pax == pbx) & (pay == pby))
                 .when(a_pt | b_pt, F.lit(False))
-                .otherwise(poly_poly(polygons_equal_sf))
+                .otherwise(_bound_rings(ra, rb, polygons_equal_sf))
             )
         # geof:sfcrosses
         la, lb = wkt_linestring_points(a), wkt_linestring_points(b)
@@ -3520,9 +3374,6 @@ def _compile_call_impl(node) -> Column:
         rings = wkt_polygon_rings(g)
         line = wkt_linestring_points(g)
         mp = wkt_multipolygon(g)
-
-        def _bound(col: Column, fn) -> Column:
-            return F.get(F.transform(F.array(col), fn), 0)
 
         def _per_kind(
             poly_fn, line_fn, point_val: Column, mp_fn=None

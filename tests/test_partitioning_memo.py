@@ -45,6 +45,40 @@ def test_memo_tree_hit_and_miss(spark):
     assert len(calls) == 1
 
 
+def test_memo_tree_is_bounded_under_distinct_windows(monkeypatch):
+    """The SPARQL compiler memoizes each call by its AST, constants
+    included, so a stream of distinct window queries brings a new key
+    per query; the memo keeps only its cap of the most recently used."""
+    from collections import OrderedDict
+
+    from geosparql_etl_spark.functions import geometry
+    from geosparql_etl_spark.sparql import compiler
+
+    monkeypatch.setattr(geometry, "_TREE_MEMO", OrderedDict())
+    # the keys are under test, not the (seconds-long) tree builds
+    monkeypatch.setattr(compiler, "_compile_call_impl", lambda node: node)
+    windows = [
+        ("call", "geof:sfwithin", [
+            ("var", "w"),
+            ("str", f"POLYGON(({i} 0, {i + 4} 0, {i + 4} 3, {i} 3, {i} 0))"),
+        ])
+        for i in range(200)
+    ]
+    for node in windows:
+        assert compiler._compile_call(node) is node
+    memo = geometry._TREE_MEMO
+    assert len(memo) == geometry._TREE_MEMO_SIZE < len(windows)
+    assert ("sparql_call", repr(windows[-1])) in memo
+    assert ("sparql_call", repr(windows[0])) not in memo
+    # a hit refreshes its key: it survives the next insertions
+    kept = windows[-geometry._TREE_MEMO_SIZE]
+    compiler._compile_call(kept)
+    compiler._compile_call(
+        ("call", "geof:sfwithin", [("var", "w"), ("str", "new")])
+    )
+    assert ("sparql_call", repr(kept)) in memo
+
+
 def test_memo_tree_is_context_free(spark):
     """One memoized tree evaluates correctly in two different frames."""
     key = ("test_memo_tree_ctx_free", "v")

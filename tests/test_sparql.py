@@ -4030,6 +4030,99 @@ class TestMultiPolygonGeo:
         )
 
 
+class TestVarVarContainmentPlans:
+    """A var-var sfWithin/sfContains gives the same rows whether the
+    subject and the container are linked by a triple (one frame: the
+    FILTER compiles per row) or not (two frames: the grid cover
+    join), for a point-only subject predicate and a mixed one, against
+    POLYGON, MULTIPOLYGON and POINT containers. Equal points are
+    within and contain each other (simple features)."""
+
+    POINTS = {
+        "urn:s:1": "POINT(10 10)",  # inside the POLYGON zone
+        "urn:s:2": "POINT(35 5)",   # inside a MULTIPOLYGON member
+        "urn:s:3": "POINT(70 70)",  # equal to the POINT zone
+        "urn:s:4": "POINT(90 90)",  # outside everything
+    }
+    ZONES = {
+        "urn:z:1": "POLYGON((0 0, 20 0, 20 20, 0 20, 0 0))",
+        "urn:z:2": (
+            "MULTIPOLYGON(((30 0, 40 0, 40 10, 30 10, 30 0)), "
+            "((50 50, 60 50, 60 60, 50 60, 50 50)))"
+        ),
+        "urn:z:3": "POINT(70 70)",
+    }
+    POINT_PAIRS = {
+        ("urn:s:1", "urn:z:1"), ("urn:s:2", "urn:z:2"),
+        ("urn:s:3", "urn:z:3"),
+    }
+
+    @pytest.fixture(scope="class")
+    def store(self, spark):
+        # ex:pt holds POINTs only; ex:geom the same POINTs plus one
+        # POLYGON subject (inside the POLYGON zone)
+        rows = [(s, "urn:ex:pt", w) for s, w in self.POINTS.items()]
+        rows += [(s, "urn:ex:geom", w) for s, w in self.POINTS.items()]
+        rows.append(
+            ("urn:s:5", "urn:ex:geom", "POLYGON((2 2, 5 2, 5 5, 2 5, 2 2))")
+        )
+        rows += [(z, "urn:ex:zone", g) for z, g in self.ZONES.items()]
+        subjects = [*self.POINTS, "urn:s:5"]
+        rows += [(s, "urn:ex:near", z) for s in subjects for z in self.ZONES]
+        df = spark.createDataFrame(rows, "s string, p string, o string")
+        return TripleStore(df)
+
+    @pytest.mark.parametrize(
+        "pred, expected",
+        [
+            ("pt", POINT_PAIRS),
+            ("geom", POINT_PAIRS | {("urn:s:5", "urn:z:1")}),
+        ],
+    )
+    def test_within_and_contains_agree_across_plans(
+        self, store, pred, expected
+    ):
+        # one UNION branch per (relation, plan); branch k binds its own
+        # variables ?s{k} ?z{k}, so a row tells which branch produced it
+        calls = ("geof:sfWithin(?w{k}, ?g{k})", "geof:sfContains(?g{k}, ?w{k})")
+        links = ("?s{k} ex:near ?z{k} .", "")  # connected, disconnected
+        branches = [
+            f"{{ ?s{k} ex:{pred} ?w{k} . {link.format(k=k)} "
+            f"?z{k} ex:zone ?g{k} FILTER({call.format(k=k)}) }}"
+            for k, (call, link) in enumerate(
+                (c, lk) for c in calls for lk in links
+            )
+        ]
+        got = run(
+            store,
+            "SELECT ?s0 ?z0 ?s1 ?z1 ?s2 ?z2 ?s3 ?z3 WHERE { "
+            + " UNION ".join(branches) + " }",
+        ).collect()
+        per_branch = [
+            {(r[f"s{k}"], r[f"z{k}"]) for r in got if r[f"s{k}"] is not None}
+            for k in range(4)
+        ]
+        # connected within, disconnected within, connected contains,
+        # disconnected contains
+        assert per_branch == [expected] * 4
+
+    def test_point_pairs_disjoint_is_not_intersects(self, store):
+        rows = run(
+            store,
+            "SELECT ?s ?z ?dj ?it WHERE { ?s ex:pt ?w . ?s ex:near ?z . "
+            "?z ex:zone ?g FILTER(STRSTARTS(?g, \"POINT\")) "
+            "BIND(geof:sfDisjoint(?w, ?g) AS ?dj) "
+            "BIND(geof:sfIntersects(?w, ?g) AS ?it) }",
+        ).collect()
+        assert len(rows) == len(self.POINTS)
+        assert {(r.s, r.z) for r in rows if r.it in (True, "true")} == {
+            ("urn:s:3", "urn:z:3")
+        }
+        for r in rows:
+            assert r.dj is not None and r.it is not None
+            assert (r.dj in (True, "true")) == (r.it not in (True, "true"))
+
+
 class TestPlanCache:
     """sparql_select keeps a bounded per-store cache of compiled plans.
     A hit skips parse, compile and analysis only: every call returns a

@@ -113,10 +113,10 @@ EXPECTED = {
     "extract_slide_id": ["42", None, None],
     "extract_urn_hash": ["abc123", None, None],
     "replace_urn_hash": ['x <urn:sha256:ffffffff> hal:slideId "42" a so:ImageObject ;', "nothing", None],
+    "mark_missing_hash": [
+        'x <urn:md5:abc123> hal:slideId "42" a so:ImageObject ;\n    hal:missing "true"^^xsd:boolean ;',
+        "nothing", None],
 }
-# mark_missing_hash's first row is not pinned: it carries a known
-# divergence from the reference (test_mark_missing_hash_tag_starts_a_new_line)
-MARK_MISSING_ROWS_2_3 = ["nothing", None]
 
 
 def _values(rows, name):
@@ -148,9 +148,7 @@ def test_helpers_column_form_matches_replaced_definitions(spark):
         ),
     }
     rows = df.select(*[c.alias(k) for k, c in cols.items()]).collect()
-    got = {k: _values(rows, k) for k in cols}
-    assert got.pop("mark_missing_hash")[1:] == MARK_MISSING_ROWS_2_3
-    assert got == EXPECTED
+    assert {k: _values(rows, k) for k in cols} == EXPECTED
 
 
 def test_helpers_sql_form_matches_column_form(spark):
@@ -192,15 +190,9 @@ def test_helpers_sql_form_matches_column_form_for_mark_missing_hash(spark):
     col = df.select(TX.mark_missing_hash(F.col("t x"), F.concat(F.col("h"), F.lit(""))).alias("r"))
     txt = df.selectExpr(f"{TX.mark_missing_hash.sql('`t x`', 'h')} AS r")
     assert col.collect() == txt.collect()
-    assert [r["r"] for r in txt.collect()][1:] == MARK_MISSING_ROWS_2_3
+    assert [r["r"] for r in txt.collect()] == EXPECTED["mark_missing_hash"]
 
 
-@pytest.mark.xfail(
-    strict=True,
-    reason="known divergence: the tag's replacement text goes to Java regex "
-    "replacement, which reads its backslash-n as a literal 'n'; the "
-    "reference's re.sub writes a newline",
-)
 def test_mark_missing_hash_tag_starts_a_new_line(spark):
     df = spark.createDataFrame([("x a so:ImageObject ;",)], "t string")
     out = df.select(TX.mark_missing_hash(F.col("t"), F.lit(None)).alias("r")).first()["r"]

@@ -1,10 +1,14 @@
-"""Dump formatted physical plans for representative queries -> PLANS.md.
+"""Dump formatted physical plans of registered queries.
 
 Evidence for the plan properties claimed in SCALE.md: column pruning
 (ReadSchema), predicate pushdown (PushedFilters), broadcast joins, and
 exchange reuse. Run after any plan-shape change:
 
-    python tools/dump_plans.py
+    python tools/dump_plans.py                       # SHOWCASE -> PLANS.md
+    python tools/dump_plans.py <out_dir> <query ...> # <out_dir>/<query>.txt
+
+The second form snapshots the named queries one file each, e.g. a
+before set at one commit and an after set at the next, to diff.
 """
 
 from __future__ import annotations
@@ -141,10 +145,46 @@ QUERY_CONFS = {
 }
 
 
+def _plan(spark, qs, name: str, sf_dir: str) -> str:
+    """``explain("formatted")`` text of one query, under its
+    QUERY_CONFS overrides (restored after)."""
+    confs = QUERY_CONFS.get(name, {})
+    saved = {}
+    for k in confs:
+        try:
+            saved[k] = spark.conf.get(k)
+        except Exception:
+            saved[k] = None
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        df = qs[name](spark, sf_dir)
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            df.explain("formatted")
+        return buf.getvalue()
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 def main() -> None:
+    if len(sys.argv) == 2:
+        sys.exit("usage: dump_plans.py [<out_dir> <query ...>]")
     sf_dir = "/root/testdata/sf0.01"
     spark = get_spark("plan-dump", master="local[4]", shuffle_partitions=4)
     qs = entrymod.queries()
+    if len(sys.argv) > 2:
+        out_dir = Path(sys.argv[1])
+        out_dir.mkdir(parents=True, exist_ok=True)
+        for name in sys.argv[2:]:
+            plan = _plan(spark, qs, name, sf_dir)
+            (out_dir / f"{name}.txt").write_text(plan)
+            print(f"wrote {out_dir / name}.txt ({len(plan)} chars)")
+        return
     out = [
         "# PLANS — formatted physical plans (generated by tools/dump_plans.py)",
         "",
@@ -152,27 +192,7 @@ def main() -> None:
         "",
     ]
     for name, why in SHOWCASE:
-        confs = QUERY_CONFS.get(name, {})
-        saved = {}
-        for k in confs:
-            try:
-                saved[k] = spark.conf.get(k)
-            except Exception:
-                saved[k] = None
-        for k, v in confs.items():
-            spark.conf.set(k, v)
-        try:
-            df = qs[name](spark, sf_dir)
-            buf = io.StringIO()
-            with redirect_stdout(buf):
-                df.explain("formatted")
-            plan = buf.getvalue()
-        finally:
-            for k, v in saved.items():
-                if v is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, v)
+        plan = _plan(spark, qs, name, sf_dir)
         # keep the operator tree + scan details, drop codegen ids noise
         out += [f"## {name} — {why}", "", "```", plan.rstrip(), "```", ""]
     (REPO / "PLANS.md").write_text("\n".join(out))
