@@ -30,6 +30,7 @@ TZ=America/New_York + a non-UTC session: all queries match.)
 from __future__ import annotations
 
 import os
+import shutil
 import sys
 from collections.abc import Callable
 
@@ -73,7 +74,12 @@ from geosparql_etl_spark.operators.dedup import (
 )
 from geosparql_etl_spark.operators.ledger import filter_pending
 from geosparql_etl_spark.operators.partitioning import spread
-from geosparql_etl_spark.util import local_frame
+from geosparql_etl_spark.util import (
+    gsel_name,
+    gsel_path,
+    local_frame,
+    remove_at_exit,
+)
 from geosparql_etl_spark.operators.render import ordered_concat
 from geosparql_etl_spark.operators.similarity import (
     ann_topk,
@@ -1198,7 +1204,8 @@ def q21_waiting_suppliers(spark, sf_dir):
     # the "another supplier was ALSO late" probe is l1 itself under
     # different names (one definition, no drift); Catalyst commutes
     # the semi/anti probes below the orders join where legal and
-    # broadcasts the selective orders side into both — see PLANS.md
+    # broadcasts the selective orders side into both — see its plan
+    # (python tools/dump_plans.py <out_dir> q21_waiting_suppliers)
     late_others = l1.select(
         F.col("l_orderkey").alias("o3_orderkey"),
         F.col("l_suppkey").alias("o3_suppkey"),
@@ -2411,7 +2418,6 @@ def d19_incremental_semantic_dedup(spark, sf_dir):
     training, both memberships, and the same-cell pair scan."""
     import os
     import shutil
-    import tempfile
 
     from geosparql_etl_spark.operators.similarity import (
         dot,
@@ -2425,8 +2431,7 @@ def d19_incremental_semantic_dedup(spark, sf_dir):
     trained = lloyd_train(
         e, "embedding", dim=64, n_cells=16, rounds=10, memo_key=sf_dir
     )
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    idx = os.path.join(tempfile.gettempdir(), "gsel_semdedup_" + tag)
+    idx = gsel_path("semdedup", sf_dir)
     shutil.rmtree(idx, ignore_errors=True)
     write_ivf_index(
         e.where(F.col("vec_id") < 250), idx, dim=64, n_cells=16,
@@ -7764,18 +7769,19 @@ def _bucketed_tables(spark, sf_dir):
     memo = _BUCKETED_MEMO.get(tag)
     if memo and memo[0] == key:
         return memo[1]
-    ot, lt = f"gsel_orders_bkt_{tag}", f"gsel_lineitem_bkt_{tag}"
+    ot = gsel_name("orders_bkt", sf_dir)
+    lt = gsel_name("lineitem_bkt", sf_dir)
     # the catalog is in-memory but the warehouse directory persists
     # across processes: a stale location from an earlier run fails
     # saveAsTable with LOCATION_ALREADY_EXISTS — drop both first
-    import shutil
-
     warehouse = spark.conf.get(
         "spark.sql.warehouse.dir", "spark-warehouse"
     ).replace("file:", "")
     for t in (ot, lt):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(os.path.join(warehouse, t), ignore_errors=True)
+        shutil.rmtree(
+            remove_at_exit(os.path.join(warehouse, t)), ignore_errors=True
+        )
     _t(spark, sf_dir, "orders").write.bucketBy(8, "o_orderkey").sortBy(
         "o_orderkey"
     ).mode("overwrite").saveAsTable(ot)
@@ -8679,7 +8685,6 @@ def sim26_persisted_bm25(spark, sf_dir):
     serving compose to exactly full-corpus scoring."""
     import os
     import shutil
-    import tempfile
 
     from geosparql_etl_spark.operators.retrieval import (
         append_to_text_index,
@@ -8688,8 +8693,7 @@ def sim26_persisted_bm25(spark, sf_dir):
     )
 
     d = _t(spark, sf_dir, "documents")
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    idx = os.path.join(tempfile.gettempdir(), "gsel_bm25_" + tag)
+    idx = gsel_path("bm25", sf_dir)
     shutil.rmtree(idx, ignore_errors=True)
     write_text_index(d.where(F.col("doc_id") < 250), idx)
     append_to_text_index(d.where(F.col("doc_id") >= 250), idx, epoch="a1")
@@ -8715,7 +8719,6 @@ def s17_streaming_text_index(spark, sf_dir):
     maintenance composes to exactly from-scratch scoring."""
     import os
     import shutil
-    import tempfile
 
     from geosparql_etl_spark.operators.retrieval import (
         run_text_index_maintenance,
@@ -8724,8 +8727,7 @@ def s17_streaming_text_index(spark, sf_dir):
     )
 
     d = _t(spark, sf_dir, "documents")
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    root = os.path.join(tempfile.gettempdir(), "gsel_bm25_stream_" + tag)
+    root = gsel_path("bm25_stream", sf_dir)
     shutil.rmtree(root, ignore_errors=True)
     idx = os.path.join(root, "index")
     landing = os.path.join(root, "landing")
@@ -8771,7 +8773,6 @@ def sim27_hybrid_persisted_serving(spark, sf_dir):
     and the same integer-rank fusion."""
     import os
     import shutil
-    import tempfile
 
     from geosparql_etl_spark.operators.retrieval import (
         rrf_fuse,
@@ -8786,9 +8787,8 @@ def sim27_hybrid_persisted_serving(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents")
     e = _t(spark, sf_dir, "embeddings")
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    tidx = os.path.join(tempfile.gettempdir(), "gsel_hybrid_bm25_" + tag)
-    vidx = os.path.join(tempfile.gettempdir(), "gsel_hybrid_ivf_" + tag)
+    tidx = gsel_path("hybrid_bm25", sf_dir)
+    vidx = gsel_path("hybrid_ivf", sf_dir)
     shutil.rmtree(tidx, ignore_errors=True)
     shutil.rmtree(vidx, ignore_errors=True)
     write_text_index(d, tidx)
@@ -8937,7 +8937,6 @@ def sim28_bm25_deletes(spark, sf_dir):
     (delete_from_text_index / compact_text_index)."""
     import os
     import shutil
-    import tempfile
 
     from geosparql_etl_spark.operators.retrieval import (
         append_to_text_index,
@@ -8948,8 +8947,7 @@ def sim28_bm25_deletes(spark, sf_dir):
     )
 
     d = _t(spark, sf_dir, "documents")
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    idx = os.path.join(tempfile.gettempdir(), "gsel_bm25_del_" + tag)
+    idx = gsel_path("bm25_del", sf_dir)
     shutil.rmtree(idx, ignore_errors=True)
     write_text_index(d.where(F.col("doc_id") < 250), idx)
     append_to_text_index(d.where(F.col("doc_id") >= 250), idx, epoch="a1")
@@ -9395,7 +9393,6 @@ def sim16_ivf_index_probe(spark, sf_dir):
     'the shipped index family still runs on the 0.34-recall seeded
     quantizer' finding. The oracle replays training and probe in SQL."""
     import os
-    import tempfile
 
     from geosparql_etl_spark.operators.similarity import (
         ivf_index_topk,
@@ -9407,10 +9404,7 @@ def sim16_ivf_index_probe(spark, sf_dir):
     trained = lloyd_train(
         e, "embedding", dim=64, n_cells=16, rounds=10, memo_key=sf_dir
     )
-    path = os.path.join(
-        tempfile.gettempdir(),
-        "gsel_ivf_index_" + os.path.basename(os.path.normpath(sf_dir)),
-    )
+    path = gsel_path("ivf_index", sf_dir)
     write_ivf_index(e, path, dim=64, n_cells=16, centroids=trained)
     q = e.where(F.col("vec_id") < 5)
     return ivf_index_topk(
@@ -9505,7 +9499,6 @@ def sim18_trained_index_probe(spark, sf_dir):
     probe entirely in SQL — the driver verifies the deployed
     artifact's answers, not a summary statistic."""
     import os
-    import tempfile
 
     from geosparql_etl_spark.operators.similarity import (
         ivf_index_topk,
@@ -9517,10 +9510,7 @@ def sim18_trained_index_probe(spark, sf_dir):
     trained = lloyd_train(
         e, "embedding", dim=64, n_cells=16, rounds=10, memo_key=sf_dir
     )
-    path = os.path.join(
-        tempfile.gettempdir(),
-        "gsel_ivf_trained_" + os.path.basename(os.path.normpath(sf_dir)),
-    )
+    path = gsel_path("ivf_trained", sf_dir)
     write_ivf_index(e, path, dim=64, n_cells=16, centroids=trained)
     q = e.where(F.col("vec_id") < 5)
     return ivf_index_topk(
@@ -10049,7 +10039,6 @@ def sim23_persisted_ivfpq_probe(spark, sf_dir):
     full composed path for the 5-query probe."""
     import os
     import shutil
-    import tempfile
 
     from geosparql_etl_spark.operators.similarity import (
         ivf_index_pq_topk,
@@ -10065,8 +10054,7 @@ def sim23_persisted_ivfpq_probe(spark, sf_dir):
     books = pq_train(
         e, "embedding", dim=64, m=16, k=16, rounds=10, memo_key=sf_dir
     )
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    idx = os.path.join(tempfile.gettempdir(), "gsel_ivfpq_" + tag)
+    idx = gsel_path("ivfpq", sf_dir)
     shutil.rmtree(idx, ignore_errors=True)
     write_ivf_pq_index(
         e, idx, dim=64, n_cells=16, m=16, k=16,
@@ -10196,7 +10184,6 @@ def sim36_pq_updates(spark, sf_dir):
     corpus."""
     import os
     import shutil
-    import tempfile
 
     from geosparql_etl_spark.operators.similarity import (
         delete_from_ivf_index,
@@ -10215,8 +10202,7 @@ def sim36_pq_updates(spark, sf_dir):
     books = pq_train(
         e, "embedding", dim=64, m=16, k=16, rounds=10, memo_key=sf_dir
     )
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    idx = os.path.join(tempfile.gettempdir(), "gsel_ivfpq_upd_" + tag)
+    idx = gsel_path("ivfpq_upd", sf_dir)
     shutil.rmtree(idx, ignore_errors=True)
     write_ivf_pq_index(
         e.where(F.col("vec_id") < 250), idx, dim=64, n_cells=16,
@@ -10299,7 +10285,6 @@ def sim24_filtered_persisted_ann(spark, sf_dir):
     candidates."""
     import os
     import shutil
-    import tempfile
 
     from geosparql_etl_spark.operators.similarity import (
         ivf_index_pq_topk,
@@ -10315,8 +10300,7 @@ def sim24_filtered_persisted_ann(spark, sf_dir):
     books = pq_train(
         e, "embedding", dim=64, m=16, k=16, rounds=10, memo_key=sf_dir
     )
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    idx = os.path.join(tempfile.gettempdir(), "gsel_ivfpq_lbl_" + tag)
+    idx = gsel_path("ivfpq_lbl", sf_dir)
     shutil.rmtree(idx, ignore_errors=True)
     write_ivf_pq_index(
         e, idx, dim=64, n_cells=16, m=16, k=16,
@@ -10349,7 +10333,6 @@ def sim21_incremental_index_probe(spark, sf_dir):
     query idempotent under re-execution."""
     import os
     import shutil
-    import tempfile
 
     from geosparql_etl_spark.operators.similarity import (
         ivf_index_topk,
@@ -10362,8 +10345,7 @@ def sim21_incremental_index_probe(spark, sf_dir):
     trained = lloyd_train(
         e, "embedding", dim=64, n_cells=16, rounds=10, memo_key=sf_dir
     )
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    root = os.path.join(tempfile.gettempdir(), "gsel_ivf_incr_" + tag)
+    root = gsel_path("ivf_incr", sf_dir)
     landing = os.path.join(root, "landing")
     index = os.path.join(root, "index")
     ck = os.path.join(root, "ck")
@@ -10412,7 +10394,6 @@ def sim25_ann_deletes(spark, sf_dir):
     deletes trustworthy."""
     import os
     import shutil
-    import tempfile
 
     from geosparql_etl_spark.operators.similarity import (
         delete_from_ivf_index,
@@ -10426,8 +10407,7 @@ def sim25_ann_deletes(spark, sf_dir):
     trained = lloyd_train(
         e, "embedding", dim=64, n_cells=16, rounds=10, memo_key=sf_dir
     )
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    index = os.path.join(tempfile.gettempdir(), "gsel_ivf_del_" + tag)
+    index = gsel_path("ivf_del", sf_dir)
     shutil.rmtree(index, ignore_errors=True)
     write_ivf_index(e, index, dim=64, n_cells=16, centroids=trained)
     delete_from_ivf_index(
@@ -10520,7 +10500,6 @@ def sim30_ann_updates(spark, sf_dir):
     (update_ivf_index / _apply_ann_tombstones)."""
     import os
     import shutil
-    import tempfile
 
     from geosparql_etl_spark.operators.similarity import (
         delete_from_ivf_index,
@@ -10535,8 +10514,7 @@ def sim30_ann_updates(spark, sf_dir):
     trained = lloyd_train(
         e, "embedding", dim=64, n_cells=16, rounds=10, memo_key=sf_dir
     )
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    index = os.path.join(tempfile.gettempdir(), "gsel_ivf_upd_" + tag)
+    index = gsel_path("ivf_upd", sf_dir)
     shutil.rmtree(index, ignore_errors=True)
     write_ivf_index(
         e, index, dim=64, n_cells=16, centroids=trained, epoch="base"
@@ -10646,7 +10624,6 @@ def s19_streaming_ann_upserts(spark, sf_dir):
     from-scratch assignment + scoring."""
     import os
     import shutil
-    import tempfile
 
     from geosparql_etl_spark.operators.similarity import (
         ivf_index_topk,
@@ -10659,8 +10636,7 @@ def s19_streaming_ann_upserts(spark, sf_dir):
     trained = lloyd_train(
         e, "embedding", dim=64, n_cells=16, rounds=10, memo_key=sf_dir
     )
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    root = os.path.join(tempfile.gettempdir(), "gsel_ann_cdc_" + tag)
+    root = gsel_path("ann_cdc", sf_dir)
     shutil.rmtree(root, ignore_errors=True)
     index = os.path.join(root, "index")
     landing = os.path.join(root, "landing")
@@ -13308,7 +13284,6 @@ def er04_incremental_resolution(spark, sf_dir):
     AND the deterministic best-match rule."""
     import os
     import shutil
-    import tempfile
 
     from geosparql_etl_spark.functions.hashing import md5_long
     from geosparql_etl_spark.operators.dedup import connected_components
@@ -13352,8 +13327,7 @@ def er04_incremental_resolution(spark, sf_dir):
     )
     canon = clustered.groupBy("cid").agg(F.min("n").alias("canonical"))
     store_df = clustered.join(canon, "cid").select("n", "canonical")
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    store_path = os.path.join(tempfile.gettempdir(), "gsel_er_store_" + tag)
+    store_path = gsel_path("er_store", sf_dir)
     shutil.rmtree(store_path, ignore_errors=True)
     store_df.write.mode("overwrite").parquet(store_path)
 
@@ -14124,7 +14098,6 @@ def sp41_quad_lake_rollup(spark, sf_dir):
     append -> compact -> pruned scan -> parse -> aggregate."""
     import os
     import shutil
-    import tempfile
 
     from geosparql_etl_spark.sources.ntriples import (
         compact_quad_lake,
@@ -14134,10 +14107,7 @@ def sp41_quad_lake_rollup(spark, sf_dir):
     from geosparql_etl_spark.sparql.triples import NTriplesLakeStore
 
     register(spark)
-    path = os.path.join(
-        tempfile.gettempdir(),
-        "gsel_quad_lake_" + os.path.basename(os.path.normpath(sf_dir)),
-    )
+    path = gsel_path("quad_lake", sf_dir)
     shutil.rmtree(path, ignore_errors=True)
     quads = _priority_quads(spark, sf_dir)
     rows = quads.select(
@@ -14376,7 +14346,6 @@ def sim39_manifest_lake_probe(spark, sf_dir):
     replays each corpus state's trained-IVF probe independently."""
     import os
     import shutil
-    import tempfile
 
     from geosparql_etl_spark.lakes import manifest as M
     from geosparql_etl_spark.operators.similarity import lloyd_train
@@ -14385,8 +14354,7 @@ def sim39_manifest_lake_probe(spark, sf_dir):
     trained = lloyd_train(
         e, "embedding", dim=64, n_cells=16, rounds=10, memo_key=sf_dir
     )
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    idx = os.path.join(tempfile.gettempdir(), "gsel_manifest_" + tag)
+    idx = gsel_path("manifest", sf_dir)
     shutil.rmtree(idx, ignore_errors=True)
     M.manifest_write_ivf_index(
         e.where(F.col("vec_id") < 250), idx, dim=64,
@@ -14521,13 +14489,11 @@ def sim40_manifest_text_probe(spark, sf_dir):
     construction)."""
     import os
     import shutil
-    import tempfile
 
     from geosparql_etl_spark.lakes import manifest as M
 
     d = _t(spark, sf_dir, "documents")
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    idx = os.path.join(tempfile.gettempdir(), "gsel_mtext_" + tag)
+    idx = gsel_path("mtext", sf_dir)
     shutil.rmtree(idx, ignore_errors=True)
     M.manifest_write_text_index(
         d.where(F.col("doc_id") < 250), idx, epoch="base"
@@ -15042,7 +15008,7 @@ def s16_crawl_ingest(spark, sf_dir):
         records_to_docs,
     )
 
-    path = _write_docs_warc(spark, sf_dir, name="gsel_crawl_")
+    path = _write_docs_warc(spark, sf_dir, kind="crawl")
     raw = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.warc*")
@@ -15131,7 +15097,6 @@ def warc02_html_extraction(spark, sf_dir):
     from geosparql_etl_spark.streaming.crawl import parse_warc_bytes
 
     import os
-    import tempfile
 
     warcmod.register(spark)
     d = _t(spark, sf_dir, "documents")
@@ -15151,10 +15116,7 @@ def warc02_html_extraction(spark, sf_dir):
         esc,
         F.lit("</p></body></html>"),
     )
-    path = os.path.join(
-        tempfile.gettempdir(),
-        "gsel_html_" + os.path.basename(os.path.normpath(sf_dir)),
-    )
+    path = gsel_path("html", sf_dir)
     d.select(
         F.lit("response").alias("warc_type"),
         F.concat(F.lit("urn:gsel:page:"), F.col("doc_id")).alias(
@@ -15233,7 +15195,6 @@ def warc03_crawl_encodings(spark, sf_dir):
     from geosparql_etl_spark.sources import warc as warcmod
 
     import os
-    import tempfile
 
     warcmod.register(spark)
     # spread: see llm24 — parallel warc files, parallel decode re-scan
@@ -15258,10 +15219,7 @@ def warc03_crawl_encodings(spark, sf_dir):
         arm == 1, F.lit("text/html; charset=iso-8859-1")
     ).otherwise(F.lit("text/html; charset=utf-8"))
     cenc = F.when(arm == 2, F.lit("gzip"))
-    path = os.path.join(
-        tempfile.gettempdir(),
-        "gsel_mixenc_" + os.path.basename(os.path.normpath(sf_dir)),
-    )
+    path = gsel_path("mixenc", sf_dir)
     d.select(
         F.lit("response").alias("warc_type"),
         F.concat(F.lit("urn:gsel:page:"), F.col("doc_id")).alias(
@@ -15358,7 +15316,6 @@ def llm24_crawl_training_pipeline(spark, sf_dir):
     from geosparql_etl_spark.sources import warc as warcmod
 
     import os
-    import tempfile
 
     warcmod.register(spark)
     d = _t(spark, sf_dir, "documents")
@@ -15372,10 +15329,7 @@ def llm24_crawl_training_pipeline(spark, sf_dir):
         esc,
         F.lit("</p></body></html>"),
     )
-    path = os.path.join(
-        tempfile.gettempdir(),
-        "gsel_e2e_" + os.path.basename(os.path.normpath(sf_dir)),
-    )
+    path = gsel_path("e2e", sf_dir)
     # every doc crawls once; every 7th RE-CRAWLS under a later page id
     # (same content, different URL visit — the duplicate class a real
     # crawl produces and the dedup stage exists to kill; the corpus
@@ -15818,7 +15772,6 @@ def sim29_bm25_updates(spark, sf_dir):
     (update_text_index / _anti_join_tombstones)."""
     import os
     import shutil
-    import tempfile
 
     from geosparql_etl_spark.operators.retrieval import (
         append_to_text_index,
@@ -15830,8 +15783,7 @@ def sim29_bm25_updates(spark, sf_dir):
     )
 
     d = _t(spark, sf_dir, "documents")
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    idx = os.path.join(tempfile.gettempdir(), "gsel_bm25_upd_" + tag)
+    idx = gsel_path("bm25_upd", sf_dir)
     shutil.rmtree(idx, ignore_errors=True)
     write_text_index(d.where(F.col("doc_id") < 250), idx)
     append_to_text_index(d.where(F.col("doc_id") >= 250), idx, epoch="a1")
@@ -15931,7 +15883,6 @@ def s18_streaming_text_upserts(spark, sf_dir):
     upserts compose to exactly from-scratch scoring."""
     import os
     import shutil
-    import tempfile
 
     from geosparql_etl_spark.operators.retrieval import (
         run_text_index_upserts,
@@ -15940,8 +15891,7 @@ def s18_streaming_text_upserts(spark, sf_dir):
     )
 
     d = _t(spark, sf_dir, "documents")
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    root = os.path.join(tempfile.gettempdir(), "gsel_bm25_cdc_" + tag)
+    root = gsel_path("bm25_cdc", sf_dir)
     shutil.rmtree(root, ignore_errors=True)
     idx = os.path.join(root, "index")
     landing = os.path.join(root, "landing")
@@ -15992,7 +15942,6 @@ def s20_concurrent_upsert_streams(spark, sf_dir):
     (stream-setup dominated, like s17-s19)."""
     import os
     import shutil
-    import tempfile
 
     from geosparql_etl_spark.operators.retrieval import (
         run_text_index_upserts,
@@ -16001,8 +15950,7 @@ def s20_concurrent_upsert_streams(spark, sf_dir):
     )
 
     d = _t(spark, sf_dir, "documents")
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    root = os.path.join(tempfile.gettempdir(), "gsel_bm25_mw_" + tag)
+    root = gsel_path("bm25_mw", sf_dir)
     shutil.rmtree(root, ignore_errors=True)
     idx = os.path.join(root, "index")
     write_text_index(d, idx)
@@ -16074,7 +16022,6 @@ def sim31_bm25_time_travel(spark, sf_dir):
     oracle replays each state's full-corpus BM25 independently."""
     import os
     import shutil
-    import tempfile
 
     from geosparql_etl_spark.operators.retrieval import (
         append_to_text_index,
@@ -16085,8 +16032,7 @@ def sim31_bm25_time_travel(spark, sf_dir):
     )
 
     d = _t(spark, sf_dir, "documents")
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    idx = os.path.join(tempfile.gettempdir(), "gsel_bm25_tt_" + tag)
+    idx = gsel_path("bm25_tt", sf_dir)
     shutil.rmtree(idx, ignore_errors=True)
     write_text_index(d.where(F.col("doc_id") < 250), idx)
     append_to_text_index(d.where(F.col("doc_id") >= 250), idx, epoch="a1")
@@ -16196,7 +16142,6 @@ def sim32_phrase_search(spark, sf_dir):
     See operators/retrieval.py:phrase_topk."""
     import os
     import shutil
-    import tempfile
 
     from geosparql_etl_spark.operators.retrieval import (
         append_to_text_index,
@@ -16205,8 +16150,7 @@ def sim32_phrase_search(spark, sf_dir):
     )
 
     d = _t(spark, sf_dir, "documents")
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    idx = os.path.join(tempfile.gettempdir(), "gsel_bm25_pos_" + tag)
+    idx = gsel_path("bm25_pos", sf_dir)
     shutil.rmtree(idx, ignore_errors=True)
     write_text_index(d.where(F.col("doc_id") < 250), idx)
     append_to_text_index(d.where(F.col("doc_id") >= 250), idx, epoch="a1")
@@ -16253,7 +16197,6 @@ def sim33_proximity_search(spark, sf_dir):
     operators/retrieval.py:proximity_topk."""
     import os
     import shutil
-    import tempfile
 
     from geosparql_etl_spark.operators.retrieval import (
         append_to_text_index,
@@ -16262,8 +16205,7 @@ def sim33_proximity_search(spark, sf_dir):
     )
 
     d = _t(spark, sf_dir, "documents")
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    idx = os.path.join(tempfile.gettempdir(), "gsel_bm25_prox_" + tag)
+    idx = gsel_path("bm25_prox", sf_dir)
     shutil.rmtree(idx, ignore_errors=True)
     write_text_index(d.where(F.col("doc_id") < 250), idx)
     append_to_text_index(d.where(F.col("doc_id") >= 250), idx, epoch="a1")
@@ -16322,7 +16264,6 @@ def sim34_autosized_retrain(spark, sf_dir):
     make the trigger fire only on ~2x growth, not corpus jitter."""
     import os
     import shutil
-    import tempfile
 
     from geosparql_etl_spark.operators.similarity import (
         auto_n_cells,
@@ -16337,10 +16278,7 @@ def sim34_autosized_retrain(spark, sf_dir):
     cells_era1 = auto_n_cells(n_full // 4)
     cells_era2 = auto_n_cells(n_full)
 
-    path = os.path.join(
-        tempfile.gettempdir(),
-        "gsel_ivf_auto_" + os.path.basename(os.path.normpath(sf_dir)),
-    )
+    path = gsel_path("ivf_auto", sf_dir)
     # era 1: quarter corpus at its auto size (n_cells=None resolves
     # via auto_n_cells inside lloyd_train)
     t1 = lloyd_train(
@@ -16440,7 +16378,6 @@ def sim35_ann_time_travel(spark, sf_dir):
     trained-centroid CTEs."""
     import os
     import shutil
-    import tempfile
 
     from geosparql_etl_spark.operators.similarity import (
         delete_from_ivf_index,
@@ -16454,8 +16391,7 @@ def sim35_ann_time_travel(spark, sf_dir):
     trained = lloyd_train(
         e, "embedding", dim=64, n_cells=16, rounds=10, memo_key=sf_dir
     )
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    idx = os.path.join(tempfile.gettempdir(), "gsel_ivf_tt_" + tag)
+    idx = gsel_path("ivf_tt", sf_dir)
     shutil.rmtree(idx, ignore_errors=True)
     write_ivf_index(
         e.where(F.col("vec_id") < 250), idx, dim=64, n_cells=16,
@@ -16581,7 +16517,6 @@ def sim37_compacted_time_travel(spark, sf_dir):
     index-free with the trained-centroid CTEs."""
     import os
     import shutil
-    import tempfile
 
     from geosparql_etl_spark.operators.similarity import (
         delete_from_ivf_index,
@@ -16595,8 +16530,7 @@ def sim37_compacted_time_travel(spark, sf_dir):
     trained = lloyd_train(
         e, "embedding", dim=64, n_cells=16, rounds=10, memo_key=sf_dir
     )
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    idx = os.path.join(tempfile.gettempdir(), "gsel_ivf_ctt_" + tag)
+    idx = gsel_path("ivf_ctt", sf_dir)
     shutil.rmtree(idx, ignore_errors=True)
     write_ivf_index(
         e.where(F.col("vec_id") < 250), idx, dim=64, n_cells=16,
@@ -16709,7 +16643,6 @@ def sim38_torn_epoch_probe(spark, sf_dir):
     base.)"""
     import os
     import shutil
-    import tempfile
 
     from geosparql_etl_spark.operators.similarity import (
         ivf_index_topk,
@@ -16721,8 +16654,7 @@ def sim38_torn_epoch_probe(spark, sf_dir):
     trained = lloyd_train(
         e, "embedding", dim=64, n_cells=16, rounds=10, memo_key=sf_dir
     )
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    idx = os.path.join(tempfile.gettempdir(), "gsel_ivf_torn_" + tag)
+    idx = gsel_path("ivf_torn", sf_dir)
     shutil.rmtree(idx, ignore_errors=True)
     write_ivf_index(
         e.where(F.col("vec_id") < 250), idx, dim=64, n_cells=16,
@@ -16810,12 +16742,11 @@ def _sql_llm26():
     """
 
 
-def _write_docs_warc(spark, sf_dir, name="gsel_warc_"):
+def _write_docs_warc(spark, sf_dir, kind="warc"):
     """Render the documents table as a WARC archive directory (shared
     by warc01 and s16; the warc01 docstring explains the record
     vocabulary)."""
     import os
-    import tempfile
 
     from geosparql_etl_spark.sources import warc as warcmod
 
@@ -16823,10 +16754,7 @@ def _write_docs_warc(spark, sf_dir, name="gsel_warc_"):
     # spread: one input file would mean one warc file and a
     # single-task re-scan for every consumer (see llm24; guide §2.5)
     d = spread(_t(spark, sf_dir, "documents"))
-    path = os.path.join(
-        tempfile.gettempdir(),
-        name + os.path.basename(os.path.normpath(sf_dir)),
-    )
+    path = gsel_path(kind, sf_dir)
     d.select(
         F.lit("response").alias("warc_type"),
         F.concat(F.lit("urn:gsel:doc:"), F.col("doc_id")).alias("record_id"),

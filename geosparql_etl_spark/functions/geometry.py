@@ -415,13 +415,14 @@ def _orient(ax, ay, bx, by, cx, cy) -> Column:
 
 def rings_intersect(ra: Column, rb: Column) -> Column:
     """G16: do two simple rings (open point lists, wkt_polygon_ring
-    shape) intersect as filled polygons? True iff any A vertex lies in
+    shape) overlap as filled polygons? True iff any A vertex lies in
     B, any B vertex lies in A, or any edge pair PROPERLY crosses —
     which together cover every simple-polygon intersection except pure
     boundary contact (shared edges / vertex-on-edge touching), the
     same boundary-degenerate class point_in_ring's even-odd cast
-    already excludes; data with margins (half-unit-offset zones vs
-    integer lattices) never produces it.
+    already excludes. Hole validity (``_valid_holes_core``) relies on
+    exactly this proper-crossing-only meaning; OGC sfIntersects, which
+    counts boundary contact, is ``rings_meet``.
 
     Pass MATERIALIZED columns (or lambda-bound vars) for ra/rb: both
     rings are referenced O(|A|x|B|) times by the edge fold, so an
@@ -1203,22 +1204,22 @@ def _on_segment(ax, ay, bx, by, cx, cy, d) -> Column:
 def _seg_touch(px1, py1, px2, py2, qx1, qy1, qx2, qy2) -> Column:
     """Do CLOSED segments p and q share at least one point? Proper
     crossing, endpoint contact, T-contact and collinear overlap all
-    count (collinear overlap always puts one segment's endpoint on
-    the other)."""
+    count. Each segment's endpoints lie on both sides of (or on) the
+    other's line, and the segments' bounding boxes overlap: the box
+    test only decides the collinear case (all four orientations zero),
+    and any shared point satisfies it. One reference per orientation
+    keeps the folds that call this per edge pair small."""
     d1 = _orient(qx1, qy1, qx2, qy2, px1, py1)
     d2 = _orient(qx1, qy1, qx2, qy2, px2, py2)
     d3 = _orient(px1, py1, px2, py2, qx1, qy1)
     d4 = _orient(px1, py1, px2, py2, qx2, qy2)
-    proper = (
-        ((d1 > 0) & (d2 < 0) | (d1 < 0) & (d2 > 0))
-        & ((d3 > 0) & (d4 < 0) | (d3 < 0) & (d4 > 0))
-    )
     return (
-        proper
-        | _on_segment(qx1, qy1, qx2, qy2, px1, py1, d1)
-        | _on_segment(qx1, qy1, qx2, qy2, px2, py2, d2)
-        | _on_segment(px1, py1, px2, py2, qx1, qy1, d3)
-        | _on_segment(px1, py1, px2, py2, qx2, qy2, d4)
+        (F.signum(d1) * F.signum(d2) <= 0)
+        & (F.signum(d3) * F.signum(d4) <= 0)
+        & (F.least(px1, px2) <= F.greatest(qx1, qx2))
+        & (F.least(qx1, qx2) <= F.greatest(px1, px2))
+        & (F.least(py1, py2) <= F.greatest(qy1, qy2))
+        & (F.least(qy1, qy2) <= F.greatest(py1, py2))
     )
 
 
@@ -1247,6 +1248,16 @@ def rings_edges_touch(ra: Column, rb: Column) -> Column:
         F.sequence(F.lit(1), na),
         lambda i: F.exists(F.sequence(F.lit(1), nb), lambda j: touch(i, j)),
     )
+
+
+def rings_meet(ra: Column, rb: Column) -> Column:
+    """OGC sfIntersects for two simple rings as filled polygons,
+    boundary contact included: a vertex of one inside the other, or
+    any closed-edge pair sharing a point. Same materialized-input
+    caveat."""
+    a_in_b = F.exists(ra, lambda p: point_in_ring(rb, p[0], p[1]))
+    b_in_a = F.exists(rb, lambda p: point_in_ring(ra, p[0], p[1]))
+    return a_in_b | b_in_a | rings_edges_touch(ra, rb)
 
 
 def point_on_rings_boundary(rings: Column, px: Column, py: Column) -> Column:

@@ -47,11 +47,12 @@ declaratively.
 FILTER expressions: comparisons (= != < <= > >=) with && || ! and
 parens; REGEX / STRSTARTS / CONTAINS / BOUND / isIRI / isLiteral /
 isBlank (per the lexical-scheme convention to_ntriples_rows
-serializes by); GeoSPARQL filter
-functions geof:sfWithin / sfContains / sfDisjoint and geof:distance
-over WKT literals (the literals the reference mints at
-``mongo-etl/utils/rdf_utils.py:134-153``) — the polygon/point sides
-may be constants OR data-bound variables; var-var forms between
+serializes by); the GeoSPARQL topological functions (sfIntersects /
+sfDisjoint / sfWithin / sfContains / sfTouches / sfOverlaps / sfEquals /
+sfCrosses, one relate table ``_RELATE``) and geof:distance over WKT
+literals (the literals the reference mints at
+``mongo-etl/utils/rdf_utils.py:134-153``) — either side may be a
+constant OR a data-bound variable; var-var forms between
 disconnected components compile to grid-bucketed joins, never
 CartesianProduct. GeoSPARQL 1.1 non-topological functions
 geof:area / geof:centroid / geof:envelope (shoelace math over the
@@ -122,9 +123,11 @@ matches nothing.
 
 from __future__ import annotations
 
+import operator
 import re
 from collections import OrderedDict
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -151,7 +154,7 @@ from geosparql_etl_spark.functions.geometry import (
     polygons_intersect_sf,
     polygons_overlap_sf,
     polygons_touch,
-    rings_intersect,
+    rings_meet,
     wkt_linestring_points,
     wkt_multipolygon,
     wkt_polygon_rings,
@@ -2309,6 +2312,161 @@ def _match_var_var_distance(expr):
     return a[1], b[1], float(d)
 
 
+# -- GeoSPARQL topological relations: one table -----------------------------
+#
+# _RELATE[fname][(shape of A, shape of B)] is the exact predicate over the
+# two PARSED operands (_SHAPE_PARSE), or False where the dimension rules
+# decide without coordinates. A pair with no entry is a SPARQL type error:
+# NULL, so a FILTER drops the binding and a BIND leaves it unbound. The
+# other two relations follow by their OGC definitions in every reader:
+# sfContains(a, b) is sfWithin(b, a) and sfDisjoint(a, b) is NOT
+# sfIntersects(a, b). Two readers: _relate (one CASE per call, for
+# variables and constants alike) and _grid_sfintersects_rewrite (one
+# cover-join arm per non-False entry). Every predicate is hole-aware;
+# polygon pairs lead because the CASE tests entries in table order.
+
+_SHAPES = ("POLYGON", "POINT", "MULTIPOLYGON", "LINESTRING")
+
+# parsed forms: POINT -> its (x, y) Columns; POLYGON -> all rings, outer
+# first; MULTIPOLYGON -> member ring arrays; LINESTRING -> point list
+_SHAPE_PARSE = {
+    "POLYGON": wkt_polygon_rings,
+    "MULTIPOLYGON": wkt_multipolygon,
+    "LINESTRING": wkt_linestring_points,
+}
+
+
+def _is_shape(lex: Column, shape: str) -> Column:
+    return lex.rlike(rf"^\s*{shape}\s*\(")
+
+
+def _mirror(pred):
+    return lambda a, b: pred(b, a)
+
+
+def _points_equal(p, q) -> Column:
+    return (p[0] == q[0]) & (p[1] == q[1])
+
+
+def _point_meets_polygon(p, rings) -> Column:
+    # closed: the boundary intersects too (where the even-odd cast is
+    # parity-undefined), so sfTouches implies sfIntersects
+    return point_in_polygon_holes(rings, *p) | point_on_rings_boundary(
+        rings, *p
+    )
+
+
+def _point_meets_multipolygon(p, members) -> Column:
+    return F.exists(members, lambda poly: _point_meets_polygon(p, poly))
+
+
+def _polygons_meet(ra: Column, rb: Column) -> Column:
+    # single-ring pairs: vertex containment or closed-edge contact; any
+    # pair with interior rings: the hole-aware simple-features test
+    return F.when(
+        (F.size(ra) == 1) & (F.size(rb) == 1),
+        rings_meet(F.get(ra, 0), F.get(rb, 0)),
+    ).otherwise(polygons_intersect_sf(ra, rb))
+
+
+def _false(*pairs) -> dict:
+    return dict.fromkeys(pairs, False)
+
+
+_POINT_AREAL = (
+    ("POINT", "POLYGON"), ("POLYGON", "POINT"),
+    ("POINT", "MULTIPOLYGON"), ("MULTIPOLYGON", "POINT"),
+)
+
+_RELATE = {
+    "geof:sfintersects": {
+        ("POLYGON", "POLYGON"): _polygons_meet,
+        ("POINT", "POLYGON"): _point_meets_polygon,
+        ("POLYGON", "POINT"): _mirror(_point_meets_polygon),
+        ("POINT", "MULTIPOLYGON"): _point_meets_multipolygon,
+        ("MULTIPOLYGON", "POINT"): _mirror(_point_meets_multipolygon),
+        ("POINT", "POINT"): _points_equal,
+    },
+    "geof:sfwithin": {
+        ("POLYGON", "POLYGON"): polygon_within_polygon,
+        ("POINT", "POLYGON"): lambda p, r: point_in_polygon_holes(r, *p),
+        ("POINT", "MULTIPOLYGON"): lambda p, m: point_in_multipolygon(m, *p),
+        ("POINT", "POINT"): _points_equal,
+    },
+    # boundaries share a point, interiors do not; a point has no
+    # boundary, so two points never touch
+    "geof:sftouches": {
+        ("POLYGON", "POLYGON"): polygons_touch,
+        ("POINT", "POLYGON"): lambda p, r: point_on_rings_boundary(r, *p),
+        ("POLYGON", "POINT"): lambda r, p: point_on_rings_boundary(r, *p),
+        **_false(("POINT", "POINT")),
+    },
+    # interiors intersect, neither within the other: never across
+    # dimensions
+    "geof:sfoverlaps": {
+        ("POLYGON", "POLYGON"): polygons_overlap_sf,
+        **_false(("POINT", "POINT"), *_POINT_AREAL),
+    },
+    # topological equality: within both ways
+    "geof:sfequals": {
+        ("POLYGON", "POLYGON"): polygons_equal_sf,
+        ("POINT", "POINT"): _points_equal,
+        **_false(*_POINT_AREAL),
+    },
+    # only a line crosses: its interior meets the other's interior and
+    # (against an area) its exterior
+    "geof:sfcrosses": {
+        ("LINESTRING", "POLYGON"): line_crosses_polygon,
+        ("POLYGON", "LINESTRING"): _mirror(line_crosses_polygon),
+        ("LINESTRING", "LINESTRING"): lines_cross,
+        **_false(
+            *[("POINT", s) for s in _SHAPES],
+            *[(s, "POINT") for s in _SHAPES if s != "POINT"],
+            ("POLYGON", "POLYGON"), ("POLYGON", "MULTIPOLYGON"),
+            ("MULTIPOLYGON", "POLYGON"), ("MULTIPOLYGON", "MULTIPOLYGON"),
+        ),
+    },
+}
+
+
+def _parsed(lex: Column, shape: str, fn) -> Column:
+    """``fn`` over ``lex`` parsed as ``shape``: a POINT is its two
+    coordinate Columns, any other parse is bound ONCE as a lambda
+    variable (the sp33 rule)."""
+    if shape == "POINT":
+        return fn(_point_xy(lex))
+    return _bound(_SHAPE_PARSE[shape](lex), fn)
+
+
+def _relate(fname: str, a: Column, b: Column) -> Column:
+    """The ``fname`` row of ``_RELATE`` over two WKT lexical Columns: one
+    CASE arm per entry, chosen by lexical prefix, each parse bound once;
+    no arm, or a failed parse -> NULL. A constant operand is a literal
+    here, so Catalyst folds its prefix tests (pruning the arms its shape
+    cannot take) and what it can of its parse, and a malformed constant
+    is a type error exactly like a malformed variable."""
+
+    def arm(sa, sb, pred) -> Column:
+        if pred is False:
+            return F.lit(False)
+
+        def body(pa, pb) -> Column:
+            guard = [
+                p.isNotNull() for p, s in ((pa, sa), (pb, sb)) if s != "POINT"
+            ]
+            out = pred(pa, pb)
+            return F.when(reduce(operator.and_, guard), out) if guard else out
+
+        return _parsed(a, sa, lambda pa: _parsed(b, sb, lambda pb: body(pa, pb)))
+
+    chain = None
+    for (sa, sb), pred in _RELATE[fname].items():
+        cond = _is_shape(a, sa) & _is_shape(b, sb)
+        val = arm(sa, sb, pred)
+        chain = F.when(cond, val) if chain is None else chain.when(cond, val)
+    return chain
+
+
 # Grid side for the var-var relate cover join. Any value is correct
 # (the exact predicate re-applies after the candidate join); it only
 # tunes candidate counts — polygons explode into (w/CELL+1)*(h/CELL+1)
@@ -2316,48 +2474,33 @@ def _match_var_var_distance(expr):
 _GRID_CELL = 25.0
 
 
-def _shape_domain(
-    var: str, static_shapes, var_preds, store
-) -> tuple[bool, bool]:
-    """(can_be_point, can_be_polygon) for a geometry variable: BIND
-    constant analysis first (``static_shapes``), then the store
-    predicate's shape statistics (memoized one-pass aggregate);
-    unknown stays (True, True) — sound for mixed data."""
+def _shape_domain(var: str, static_shapes, var_preds, store) -> frozenset:
+    """The WKT shapes a geometry variable can take: BIND constant
+    analysis first (``static_shapes``), then the store predicate's
+    shape statistics (memoized one-pass aggregate); unknown is every
+    shape — sound for mixed data."""
     s = (static_shapes or {}).get(var)
     if s is None and var_preds and store is not None:
         pred = var_preds.get(var)
         if pred is not None and hasattr(store, "predicate_object_shape"):
             s = store.predicate_object_shape(pred)
-    if s == "POLYGON":
-        return False, True
-    if s == "POINT":
-        return True, False
-    return True, True
-
-
-_GRID_RELATES = (
-    "geof:sfintersects", "geof:sftouches", "geof:sfoverlaps",
-    "geof:sfequals",
-)
+    return frozenset((s,)) if s in _SHAPES else frozenset(_SHAPES)
 
 
 def _match_var_var_sfintersects(expr):
-    """Var-var spatial-relate FILTERs the grid-cover join can express:
-    any pair satisfying intersects/touches/overlaps/equals/within/
-    contains shares at least one covered cell, so one cell hash-join
-    + canonical-cell survival + exact re-check serves all of them —
-    only sfDisjoint is inexpressible (its pairs share NO cell).
-    Returns (fname, u, v)."""
+    """Var-var topological FILTERs the grid-cover join can express:
+    any pair satisfying a ``_RELATE`` relation shares a point, hence at
+    least one covered cell, so one cell hash-join + canonical-cell
+    survival + exact re-check serves all of them. sfContains
+    normalizes to sfWithin(subject, container); only sfDisjoint is
+    inexpressible (its pairs share NO cell). Returns (fname, u, v)."""
     if expr[0] != "call":
         return None
-    if expr[1] in _GRID_RELATES:
+    fname = expr[1]
+    if fname == "geof:sfcontains":
+        fname, (b, a) = "geof:sfwithin", expr[2]
+    elif fname in _RELATE:
         a, b = expr[2]
-        fname = expr[1]
-    elif expr[1] in ("geof:sfwithin", "geof:sfcontains"):
-        # containment normalizes to within(subject, container), for
-        # every subject shape domain (points, polygons, or both)
-        a, b = expr[2] if expr[1] == "geof:sfwithin" else expr[2][::-1]
-        fname = "geof:sfwithin"
     else:
         return None
     if a[0] != "var" or b[0] != "var":
@@ -2370,17 +2513,112 @@ def _static_wkt_shape(expr) -> str | None:
     string constant, or a CONCAT whose FIRST argument is a string
     constant, decides by prefix — CONCAT("POLYGON((", ...) can only
     ever produce POLYGON lexicals regardless of the remaining
-    arguments. Returns "POLYGON", "POINT", or None (unknown)."""
+    arguments. Returns one of ``_SHAPES``, or None (unknown)."""
     node = expr
     if node[0] == "call" and node[1] == "concat" and node[2]:
         node = node[2][0]
     if node[0] == "str":
         s = node[1].lstrip().upper()
-        if s.startswith("POLYGON"):
-            return "POLYGON"
-        if s.startswith("POINT"):
-            return "POINT"
+        return next((shape for shape in _SHAPES if s.startswith(shape)), None)
     return None
+
+
+_GRID_OPERAND = {
+    "POLYGON": "__ring_{}", "MULTIPOLYGON": "__{}mp", "LINESTRING": "__{}line",
+}
+
+
+def _grid_operand(pre: str, shape: str):
+    """The cover join's materialized parsed operand of side ``pre``."""
+    if shape == "POINT":
+        return F.col(f"__{pre}px"), F.col(f"__{pre}py")
+    return F.col(_GRID_OPERAND[shape].format(pre))
+
+
+def _grid_cover(f: DataFrame, var: str, pre: str, shapes: set):
+    """``f`` with ``var`` parsed as each of ``shapes`` (columns
+    ``_grid_operand`` names), its bbox, and one row per grid cell the
+    bbox covers (``__cx``, ``__cy``). Returns the frame, the names of
+    the columns it added, and the names of the bbox's min corner.
+
+    Every derived quantity materializes as a COLUMN before use:
+    inlining the parse trees into the exact predicate multiplied the
+    serialized plan to a ~3 MiB task binary and tripled the query's
+    wall time (the sp33 plan-size lesson, re-measured on sp39). A
+    point-only side parses no rings: its bbox is the point, its one
+    cell needs no explode."""
+    cell = _GRID_CELL
+    px, py = f"__{pre}px", f"__{pre}py"
+    parsed = {}
+    if "POINT" in shapes:
+        parsed[px], parsed[py] = _point_xy(F.col(var))
+    for shape in _SHAPE_PARSE:
+        if shape in shapes:
+            parsed[_GRID_OPERAND[shape].format(pre)] = memo_tree(
+                ("grid_parse", shape, var),
+                lambda shape=shape: _SHAPE_PARSE[shape](F.col(var)),
+            )
+    f = f.withColumns(parsed)
+    if shapes == {"POINT"}:
+        return (
+            f.withColumns({
+                "__cx": F.floor(F.col(px) / cell),
+                "__cy": F.floor(F.col(py) / cell),
+            }),
+            list(parsed),
+            (px, py),
+        )
+    # the bbox of whichever parse applies: a polygon's outer ring (holes
+    # cannot extend it), every member's outer ring, a line's points
+    outlines = {
+        "POLYGON": lambda c: F.get(c, 0),
+        "MULTIPOLYGON": lambda c: F.flatten(
+            F.transform(c, lambda m: F.get(m, 0))
+        ),
+        "LINESTRING": lambda c: c,
+    }
+    lo_x, lo_y, hi_x, hi_y = [], [], [], []
+    for shape, outline in outlines.items():
+        if shape in shapes:
+            pts = outline(_grid_operand(pre, shape))
+            xs = F.transform(pts, lambda p: p[0])
+            ys = F.transform(pts, lambda p: p[1])
+            lo_x.append(F.array_min(xs))
+            lo_y.append(F.array_min(ys))
+            hi_x.append(F.array_max(xs))
+            hi_y.append(F.array_max(ys))
+    if "POINT" in shapes:
+        lo_x.append(F.col(px))
+        hi_x.append(F.col(px))
+        lo_y.append(F.col(py))
+        hi_y.append(F.col(py))
+    bounds = {
+        f"__{pre}{k}": F.coalesce(*cs) if len(cs) > 1 else cs[0]
+        for k, cs in zip(("x0", "y0", "x1", "y1"), (lo_x, lo_y, hi_x, hi_y))
+    }
+    x0, y0, x1, y1 = bounds
+    # no explicit null-drop filter: a lexical that parses as none of the
+    # shapes leaves the bbox NULL, sequence(NULL, ...) is NULL, and
+    # explode() of NULL emits no rows — the same drop for free. (An
+    # explicit .where(x0.isNotNull()) was measured to DOUBLE sp33's wall
+    # time: pushdown inlines the parse trees into a below-projection
+    # filter — the plan-size lesson in filter form.)
+    f = (
+        f.withColumns(bounds)
+        .withColumn(
+            "__cx",
+            F.explode(
+                F.sequence(F.floor(F.col(x0) / cell), F.floor(F.col(x1) / cell))
+            ),
+        )
+        .withColumn(
+            "__cy",
+            F.explode(
+                F.sequence(F.floor(F.col(y0) / cell), F.floor(F.col(y1) / cell))
+            ),
+        )
+    )
+    return f, [*parsed, *bounds], (x0, y0)
 
 
 def _grid_sfintersects_rewrite(
@@ -2390,25 +2628,20 @@ def _grid_sfintersects_rewrite(
     var_preds: dict | None = None,
     store=None,
 ) -> bool:
-    """Var-var relate FILTER (``_match_var_var_sfintersects``) between
-    two DISCONNECTED frames, for ANY POINT/POLYGON mix (sfWithin also
-    MULTIPOLYGON containers): each side explodes into the grid cells
-    its bbox covers (a POINT's bbox is degenerate — its single cell)
-    and hash-joins on (cx, cy); a candidate pair survives on exactly
-    ONE canonical cell — the lower-left cell of the bbox overlap (per
-    axis, the max of the two cover minima), which shared coverage
-    guarantees both sides emit — so no dedup pass and no duplicate
-    solutions. The FULL mixed exact predicate then decides
-    (point-point coordinate equality, point-polygon even-odd cast,
-    polygon-polygon rings_intersect — the same case split the
-    connected-frame FILTER compiles), built over the
-    already-materialized ring columns so wkt_polygon_rings is parsed
-    once per side (sp33 plan-size lesson). Round 9: the previous
-    version handled polygons only and silently DROPPED point rows
-    (NULL rings), so the same FILTER gave different results on
-    connected vs disconnected plans — the round-8 ADVICE divergence.
-    Rows whose lexical is neither form drop here; on the connected
-    path the predicate is NULL for them — identical no-match outcomes."""
+    """Var-var topological FILTER (``_match_var_var_sfintersects``)
+    between two DISCONNECTED frames: each side explodes into the grid
+    cells its bbox covers (a POINT's bbox is the point — its single
+    cell) and hash-joins on (cx, cy); a candidate pair survives on
+    exactly ONE canonical cell — the lower-left cell of the bbox
+    overlap (per axis, the max of the two cover minima), which shared
+    coverage guarantees both sides emit — so no dedup pass and no
+    duplicate solutions. The exact predicate then decides: one join
+    arm per non-False ``_RELATE`` entry whose shapes both sides'
+    domains allow (``_shape_domain``), over columns each side parses
+    once (``_grid_cover`` builds only the shapes its arms read) — the
+    same table the connected-frame FILTER compiles, so both plans give
+    the same answer. A row whose lexical has no arm drops here; on the
+    connected path its predicate is NULL — the same no-match."""
     m = _match_var_var_sfintersects(expr)
     if not m:
         return False
@@ -2417,254 +2650,70 @@ def _grid_sfintersects_rewrite(
     bi = next((i for i, f in enumerate(frames) if v in f.columns), None)
     if ai is None or bi is None or ai == bi:
         return False
-    cell = _GRID_CELL
-
-    def prep(
-        f: DataFrame, var: str, ring_col: str, pre: str, with_mp: bool
-    ):
-        # every derived quantity (ring, point flag, point coords, bbox
-        # bounds) materializes as a COLUMN before use: inlining the
-        # parse trees into the exact predicate's when-chain multiplied
-        # the serialized plan to a ~3 MiB task binary and tripled the
-        # query's wall time (the sp33 plan-size lesson, re-measured on
-        # sp39 this round)
-        x0, y0, x1, y1 = (f"__{pre}x0", f"__{pre}y0",
-                          f"__{pre}x1", f"__{pre}y1")
-        pt, pxc, pyc = f"__{pre}pt", f"__{pre}px", f"__{pre}py"
-        # ALL rings (round 13); bbox bounds from the OUTER ring only
-        # (holes cannot extend it)
-        outer = F.get(F.col(ring_col), 0)
-        xs = F.transform(outer, lambda p: p[0])
-        ys = F.transform(outer, lambda p: p[1])
-        px, py = _point_xy(F.col(var))
-        f = f.withColumn(
-            ring_col,
-            memo_tree(
-                ("wkt_polygon_rings", var),
-                lambda: wkt_polygon_rings(F.col(var)),
-            ),
+    # The arms run as a UNION of shape-filtered joins, NOT one CASE
+    # predicate: a single CASE over every fold generated a ~3 MiB task
+    # binary and doubled the all-polygon query's wall time (codegen past
+    # JIT size limits falls back to interpreted evaluation — measured on
+    # sp39). Each arm compiles only its own fold, and its prefix filters
+    # prune both inputs before the join. An arm is BUILT only if both
+    # sides' shape domains can feed it: BIND constant analysis and the
+    # store's shape statistics prune the impossible ones (a runtime
+    # pre-scan was measured NET-NEGATIVE at sf0.1).
+    dom_a = _shape_domain(u, static_shapes, var_preds, store)
+    dom_b = _shape_domain(v, static_shapes, var_preds, store)
+    arms = [
+        (sa, sb, pred)
+        for (sa, sb), pred in _RELATE[fname].items()
+        if pred is not False and sa in dom_a and sb in dom_b
+    ]
+    if not arms:  # no pair of these domains can match
+        frames.append(frames[ai].crossJoin(frames[bi]).where(F.lit(False)))
+    else:
+        cell = _GRID_CELL
+        a, a_cols, (ax0, ay0) = _grid_cover(
+            frames[ai], u, "a", {sa for sa, _, _ in arms}
         )
-        # the sfWithin route (round 14) carries MULTIPOLYGON
-        # containers: a members column parses only when the POLYGON
-        # parse came up NULL, its outer rings extend the bbox cover,
-        # and the point-in-container arm coalesces over both forms.
-        # Only the container side builds this column: no arm accepts
-        # a MULTIPOLYGON subject (it drops on both the connected and
-        # this path), so a subject-side parse would be per-row waste;
-        # the other relates never build it.
-        mp = f"__{pre}mp"
-        if with_mp:
-            f = f.withColumn(
-                mp,
-                memo_tree(
-                    ("prep_mp", ring_col, var),
-                    lambda: F.when(
-                        F.col(ring_col).isNull(),
-                        wkt_multipolygon(F.col(var)),
-                    ),
-                ),
+        b, b_cols, (bx0, by0) = _grid_cover(
+            frames[bi], v, "b", {sb for _, sb, _ in arms}
+        )
+        canonical = (
+            F.col("__cx")
+            == F.greatest(
+                F.floor(F.col(ax0) / cell), F.floor(F.col(bx0) / cell)
             )
-            mouters = F.flatten(
-                F.transform(F.col(mp), lambda m: F.get(m, 0))
-            )
-            mxs = F.transform(mouters, lambda p: p[0])
-            mys = F.transform(mouters, lambda p: p[1])
-            bx0 = F.coalesce(
-                F.array_min(xs), F.array_min(mxs), F.col(pxc)
-            )
-            by0 = F.coalesce(
-                F.array_min(ys), F.array_min(mys), F.col(pyc)
-            )
-            bx1 = F.coalesce(
-                F.array_max(xs), F.array_max(mxs), F.col(pxc)
-            )
-            by1 = F.coalesce(
-                F.array_max(ys), F.array_max(mys), F.col(pyc)
-            )
-        else:
-            bx0 = F.coalesce(F.array_min(xs), F.col(pxc))
-            by0 = F.coalesce(F.array_min(ys), F.col(pyc))
-            bx1 = F.coalesce(F.array_max(xs), F.col(pxc))
-            by1 = F.coalesce(F.array_max(ys), F.col(pyc))
-        return (
-            f.withColumn(pt, F.col(var).rlike(r"^\s*POINT\s*\("))
-            .withColumn(pxc, px)
-            .withColumn(pyc, py)
-            .withColumn(x0, bx0)
-            .withColumn(y0, by0)
-            .withColumn(x1, bx1)
-            .withColumn(y1, by1)
-            # no explicit null-drop filter: a lexical that is neither
-            # POINT nor POLYGON leaves x0/x1 NULL, sequence(NULL, ...)
-            # is NULL, and explode() of NULL emits no rows — the same
-            # drop for free. (An explicit .where(x0.isNotNull()) was
-            # measured to DOUBLE this query's wall time: pushdown
-            # inlines the coalesce(ring-parse, point-parse) trees into
-            # a below-projection filter — a ~3 MiB task binary that
-            # falls out of JIT — the sp33 plan-size lesson in filter
-            # form.)
-            .withColumn(
-                "__cx",
-                F.explode(
-                    F.sequence(
-                        F.floor(F.col(x0) / cell),
-                        F.floor(F.col(x1) / cell),
-                    )
-                ),
-            )
-            .withColumn(
-                "__cy",
-                F.explode(
-                    F.sequence(
-                        F.floor(F.col(y0) / cell),
-                        F.floor(F.col(y1) / cell),
-                    )
-                ),
+        ) & (
+            F.col("__cy")
+            == F.greatest(
+                F.floor(F.col(ay0) / cell), F.floor(F.col(by0) / cell)
             )
         )
 
-    a = prep(frames[ai], u, "__ring_a", "a", False)
-    b = prep(frames[bi], v, "__ring_b", "b", fname == "geof:sfwithin")
-    canonical = (
-        F.col("__cx")
-        == F.greatest(
-            F.floor(F.col("__ax0") / cell), F.floor(F.col("__bx0") / cell)
-        )
-    ) & (
-        F.col("__cy")
-        == F.greatest(
-            F.floor(F.col("__ay0") / cell), F.floor(F.col("__by0") / cell)
-        )
-    )
-    pa, pb = F.col("__apt"), F.col("__bpt")
-    pax, pay = F.col("__apx"), F.col("__apy")
-    pbx, pby = F.col("__bpx"), F.col("__bpy")
-    ra, rb = F.col("__ring_a"), F.col("__ring_b")
-    ra_outer, rb_outer = F.get(ra, 0), F.get(rb, 0)
-    # The four POINT/POLYGON shape combinations run as a UNION of four
-    # shape-filtered joins, NOT one when-chain predicate: a single
-    # CASE whose branches contain the rings_intersect fold AND two
-    # point_in_ring folds generated a ~3 MiB task binary and doubled
-    # the all-polygon query's wall time (codegen past JIT size limits
-    # falls back to interpreted evaluation — measured on sp39 this
-    # round). Each branch compiles only its own fold; the categories
-    # are disjoint and exhaustive, and the shape filters prune each
-    # branch's inputs BEFORE its join, so all-polygon workloads plan
-    # three trivially-empty branches and the round-8 polygon plan.
-    # (A ~pt survivor always has a non-NULL ring: the bbox null-drop
-    # in prep removed every lexical that parsed as neither form.)
-    # Round 10: a branch is BUILT only if both sides' lexical domains
-    # can feed it. The domain comes from STATIC constant analysis of
-    # BIND expressions (``static_shapes``: a var bound by
-    # CONCAT("POLYGON((", ...) is provably all-POLYGON) — zero extra
-    # scans, so an all-polygon side skips its point arms entirely
-    # (they were pure overhead: sp39 carried a measured 1.34x
-    # residual from planning, scanning, and unioning always-empty
-    # subtrees). A runtime pre-scan was measured NET-NEGATIVE at
-    # sf0.1 (two plan-time aggregate jobs cost ~0.9 s, more than the
-    # arms they prune), so unknown domains keep both arms — sound for
-    # mixed data, and store-derived vars stay unknown.
-    a_pt, a_poly = _shape_domain(u, static_shapes, var_preds, store)
-    b_pt, b_poly = _shape_domain(v, static_shapes, var_preds, store)
+        def branch(sa, sb, pred) -> DataFrame:
+            # the arm predicates reference only the fixed operand
+            # column names, so each tree is constant per entry —
+            # memoized process-wide (the relate folds cost seconds of
+            # py4j Column construction per build; see memo_tree)
+            exact = memo_tree(
+                ("joinarm", fname, sa, sb),
+                lambda: pred(_grid_operand("a", sa), _grid_operand("b", sb)),
+            )
+            # spread the probe side: with the other side broadcast, the
+            # exact-predicate stage runs at the probe scan's width — one
+            # core for a single-file local table (round 14, measured on
+            # sp51: the whole relate fold serialized). No-op at scale.
+            return (
+                spread(a.where(_is_shape(F.col(u), sa)))
+                .join(b.where(_is_shape(F.col(v), sb)), on=["__cx", "__cy"])
+                .where(canonical)
+                .where(exact)
+            )
 
-    def branch(fa, fb, pred):
-        # spread the probe side: with the other side broadcast, the
-        # exact-predicate stage runs at the probe scan's width — one
-        # core for a single-file local table (round 14, measured on
-        # sp51: the whole relate fold serialized). No-op at scale.
-        return (
-            spread(a.where(fa)).join(b.where(fb), on=["__cx", "__cy"])
-            .where(canonical)
-            .where(pred)
+        joined = reduce(
+            DataFrame.unionByName, [branch(*arm) for arm in arms]
         )
-
-    arms = []
-    if a_poly and b_poly:
-        # every arm predicate references only the FIXED prep column
-        # names (__ring_a/__ring_b/__apx/...), so the trees are
-        # constant per fname — memoized process-wide (the relate
-        # folds cost seconds of py4j Column construction per build;
-        # see memo_tree)
-        def _poly_pred() -> Column:
-            if fname == "geof:sfintersects":
-                # single-ring pairs keep the round-8 outer-hull fold
-                # (fixture margins make boundary contact moot, and the
-                # fast path is bench-pinned); any pair involving
-                # interior rings takes the round-14 hole-aware +
-                # contact-aware test, so a donut zone meeting a box
-                # only inside its hole is NOT a match
-                return F.when(
-                    (F.size(ra) == 1) & (F.size(rb) == 1),
-                    rings_intersect(ra_outer, rb_outer),
-                ).otherwise(polygons_intersect_sf(ra, rb))
-            if fname == "geof:sftouches":
-                return polygons_touch(ra, rb)
-            if fname == "geof:sfoverlaps":
-                return polygons_overlap_sf(ra, rb)
-            if fname == "geof:sfwithin":
-                return polygon_within_polygon(ra, rb)
-            return polygons_equal_sf(ra, rb)
-
-        arms.append(
-            branch(~pa, ~pb, memo_tree(("joinarm_poly", fname), _poly_pred))
-        )
-    # mixed-shape arms: intersects keeps the hole-aware membership
-    # cast; touches is point-ON-boundary; overlaps/equals across
-    # dimensions are false (no arm — same no-match outcome as the
-    # connected-frame compile's false/NULL)
-    if a_pt and b_poly and fname in (
-        "geof:sfintersects", "geof:sftouches", "geof:sfwithin"
-    ):
-        def _pt_poly_pred() -> Column:
-            if fname == "geof:sftouches":
-                return point_on_rings_boundary(rb, pax, pay)
-            if fname == "geof:sfwithin":
-                return F.coalesce(
-                    F.when(
-                        rb.isNotNull(),
-                        point_in_polygon_holes(rb, pax, pay),
-                    ),
-                    F.when(
-                        F.col("__bmp").isNotNull(),
-                        point_in_multipolygon(F.col("__bmp"), pax, pay),
-                    ),
-                )
-            return point_in_polygon_holes(rb, pax, pay)
-
-        arms.append(
-            branch(pa, ~pb, memo_tree(("joinarm_ptpoly", fname), _pt_poly_pred))
-        )
-    if a_poly and b_pt and fname in (
-        "geof:sfintersects", "geof:sftouches"
-    ):
-        pred = memo_tree(
-            ("joinarm_polypt", fname),
-            lambda: point_in_polygon_holes(ra, pbx, pby)
-            if fname == "geof:sfintersects"
-            else point_on_rings_boundary(ra, pbx, pby),
-        )
-        arms.append(branch(~pa, pb, pred))
-    if a_pt and b_pt and fname in (
-        "geof:sfintersects", "geof:sfequals", "geof:sfwithin"
-    ):
-        arms.append(branch(pa, pb, (pax == pbx) & (pay == pby)))
-    if not arms:  # a side is empty/shapeless: no pair can match
-        arms = [branch(F.lit(False), F.lit(False), F.lit(False))]
-    joined = arms[0]
-    for extra in arms[1:]:
-        joined = joined.unionByName(extra)
-    joined = (
-        joined
-        .drop(
-            "__cx", "__cy", "__ring_a", "__ring_b", "__bmp",
-            "__apt", "__apx", "__apy", "__bpt", "__bpx", "__bpy",
-            "__ax0", "__ay0", "__ax1", "__ay1",
-            "__bx0", "__by0", "__bx1", "__by1",
-        )
-    )
+        frames.append(joined.drop("__cx", "__cy", *a_cols, *b_cols))
     for idx in sorted((ai, bi), reverse=True):
         frames.pop(idx)
-    frames.append(joined)
     return True
 
 
@@ -2755,20 +2804,6 @@ def _bound(col: Column, fn) -> Column:
     return F.get(F.transform(F.array(col), fn), 0)
 
 
-def _bound_rings(ra: Column, rb: Column, pred) -> Column:
-    """``pred(r1, r2)`` over two bound ring arrays, NULL when either
-    side did not parse as a POLYGON."""
-    return _bound(
-        ra,
-        lambda r1: _bound(
-            rb,
-            lambda r2: F.when(
-                r1.isNotNull() & r2.isNotNull(), pred(r1, r2)
-            ),
-        ),
-    )
-
-
 def _point_xy(col: Column) -> tuple[Column, Column]:
     # try_cast: regexp_extract yields "" for a non-POINT literal, and
     # the ANSI cast of "" would kill the job; NULL instead makes the
@@ -2780,54 +2815,6 @@ def _point_xy(col: Column) -> tuple[Column, Column]:
         F.regexp_extract(col, pat, 1).try_cast("double"),
         F.regexp_extract(col, pat, 2).try_cast("double"),
     )
-
-
-def _parse_wkt_multipolygon(
-    wkt: str,
-) -> list[list[list[tuple[float, float]]]]:
-    """Constant MULTIPOLYGON WKT -> members -> rings -> points,
-    closing repeats dropped (the compile-time twin of
-    wkt_multipolygon). Raises for non-MULTIPOLYGON — callers try
-    _parse_wkt_rings first."""
-    m = re.match(r"\s*MULTIPOLYGON\s*\((.*)\)\s*$", wkt, re.S)
-    if not m:
-        raise ValueError(f"unsupported constant WKT: {wkt!r}")
-    body = re.sub(r"^\s*\(|\)\s*$", "", m.group(1).strip())
-    out = []
-    for poly_s in re.split(r"\)\s*\)\s*,\s*\(\s*\(", body):
-        rings = []
-        for ring_s in re.split(r"\)\s*,\s*\(", poly_s):
-            ring_s = re.sub(r"^\s*\(|\)\s*$", "", ring_s)
-            pts = [
-                tuple(float(v) for v in xy.split())
-                for xy in ring_s.split(",")
-            ]
-            if len(pts) > 1 and pts[0] == pts[-1]:
-                pts = pts[:-1]
-            rings.append(pts)
-        out.append(rings)
-    return out
-
-
-def _parse_wkt_rings(wkt: str) -> list[list[tuple[float, float]]]:
-    """Constant POLYGON WKT -> ALL rings (outer first, then holes),
-    closing repeats dropped — compile-time fold of the same shape
-    wkt_polygon_rings parses per row (round 13: the SPARQL geo
-    surface is hole-aware end to end)."""
-    m = re.match(r"\s*POLYGON\s*\((.*)\)\s*$", wkt, re.S)
-    if not m:
-        raise ValueError(f"unsupported constant WKT: {wkt!r}")
-    body = re.sub(r"^\s*\(|\)\s*$", "", m.group(1).strip())
-    rings = []
-    for ring_s in re.split(r"\)\s*,\s*\(", body):
-        pts = [
-            tuple(float(v) for v in xy.split())
-            for xy in ring_s.split(",")
-        ]
-        if len(pts) > 1 and pts[0] == pts[-1]:
-            pts = pts[:-1]
-        rings.append(pts)
-    return rings
 
 
 def _operand_col(node, numeric: bool) -> Column:
@@ -3081,277 +3068,22 @@ def _compile_call_impl(node) -> Column:
     if fname in ("round", "floor", "ceil", "abs"):
         fn = {"round": F.round, "floor": F.floor, "ceil": F.ceil, "abs": F.abs}
         return fn[fname](_operand_col(args[0], True))
-    if fname in ("geof:sfwithin", "geof:sfcontains", "geof:sfdisjoint"):
-        # geof:sfWithin(point, polygon): even-odd ray cast — the same
-        # point_in_ring every spatial operator in the engine uses.
-        # sfContains is sfWithin with the arguments mirrored (simple
-        # features: A contains B <=> B within A for point-in-polygon);
-        # sfDisjoint is its negation. The polygon side may be a
-        # CONSTANT ("POLYGON((...))" / "..."^^geo:wktLiteral — ring
-        # folded at compile time) or a VARIABLE (ring parsed per row
-        # by wkt_polygon_ring, NULL for non-polygons = SPARQL type
-        # error = binding dropped).
-        pt, poly = args if fname != "geof:sfcontains" else (args[1], args[0])
-        # Round 14: POLYGON-POLYGON operands route to the simple-
-        # features containment/intersection tests (hole-aware,
-        # boundary contact allowed for within/contains). The arm is a
-        # lazily-evaluated CASE branch ahead of the point path, so
-        # point workloads pay one rlike per row and nothing else.
-        a_lex = _operand_col(pt, False)
-        b_lex = _operand_col(poly, False)
-        both_poly = a_lex.rlike(r"^\s*POLYGON\s*\(") & b_lex.rlike(
-            r"^\s*POLYGON\s*\("
-        )
-
-        def _pp_arm() -> Column:
-            ra_, rb_ = wkt_polygon_rings(a_lex), wkt_polygon_rings(b_lex)
-            if fname == "geof:sfdisjoint":
-                return _bound_rings(
-                    ra_, rb_, lambda r1, r2: ~polygons_intersect_sf(r1, r2)
-                )
-            # sfWithin(A, B) = A ⊆ B; sfContains mirrored above via
-            # the pt/poly swap, so r1 ⊆ r2 is correct for both.
-            return _bound_rings(ra_, rb_, polygon_within_polygon)
-
-        px, py = _point_xy(a_lex)
-
-        def _rings_lit(rings):
-            return F.array(
-                *[
-                    F.array(
-                        *[
-                            F.array(F.lit(float(x)), F.lit(float(y)))
-                            for x, y in ring
-                        ]
-                    )
-                    for ring in rings
-                ]
-            )
-
-        # hole-aware (round 13): a point inside an interior ring is
-        # NOT within; single-ring WKT degenerates to the old ray
-        # cast. MULTIPOLYGON lexicals test membership in ANY member.
-        if poly[0] in ("str", "lit"):
-            lex = poly[1].lstrip().upper()
-            if lex.startswith("MULTIPOLYGON"):
-                mp = F.array(
-                    *[
-                        _rings_lit(rings)
-                        for rings in _parse_wkt_multipolygon(poly[1])
-                    ]
-                )
-                inside = _bound(
-                    mp, lambda m: point_in_multipolygon(m, px, py)
-                )
-                return ~inside if fname == "geof:sfdisjoint" else inside
-            rings = _rings_lit(_parse_wkt_rings(poly[1]))
-            inside = _bound(
-                rings, lambda c: point_in_polygon_holes(c, px, py)
-            )
-            return F.when(both_poly, _pp_arm()).otherwise(
-                ~inside if fname == "geof:sfdisjoint" else inside
-            )
-        g = _operand_col(poly, False)
-        gx, gy = _point_xy(g)
-        # a POINT container (simple features): equal points are within
-        # and contain each other and are not disjoint — the answer the
-        # var-var cover join's point-point arm gives, so connected and
-        # disconnected plans agree, and sfDisjoint stays NOT
-        # sfIntersects for points. The coalesce reaches this arm only
-        # when neither container parse applies.
-        inside = F.coalesce(
-            _bound(
-                wkt_polygon_rings(g),
-                lambda c: F.when(
-                    c.isNotNull(), point_in_polygon_holes(c, px, py)
-                ),
-            ),
-            _bound(
-                wkt_multipolygon(g),
-                lambda m: F.when(
-                    m.isNotNull(), point_in_multipolygon(m, px, py)
-                ),
-            ),
-            (px == gx) & (py == gy),
-        )
-        return F.when(both_poly, _pp_arm()).otherwise(
-            ~inside if fname == "geof:sfdisjoint" else inside
-        )
+    if fname in _RELATE:
+        # one compiled form per relation over the relate table, for
+        # variable and constant operands alike (module comment above
+        # _RELATE)
+        return _relate(fname, *(_operand_col(x, False) for x in args))
+    # contains and disjoint by their OGC definitions, through the call
+    # memo: a query asking both a relation and its derived twin shares
+    # one tree
+    if fname == "geof:sfcontains":
+        return _compile_call(("call", "geof:sfwithin", args[::-1]))
+    if fname == "geof:sfdisjoint":
+        return ~_compile_call(("call", "geof:sfintersects", args))
     if fname == "geof:distance":
         ax, ay = _point_xy(_operand_col(args[0], False))
         bx, by = _point_xy(_operand_col(args[1], False))
         return F.sqrt((ax - bx) * (ax - bx) + (ay - by) * (ay - by))
-    if fname == "geof:sfintersects":
-        # sfIntersects over any POINT/POLYGON mix in one frame (the
-        # var-var disconnected-frame form goes through the grid-cover
-        # join rewrite instead). Point-point degenerates to coordinate
-        # equality; point-polygon to the even-odd cast;
-        # polygon-polygon to rings_intersect. Rings are lambda-bound
-        # before the O(|A|x|B|) edge fold (sp33 plan-size lesson).
-        a = _operand_col(args[0], False)
-        b = _operand_col(args[1], False)
-        pa, pb = a.rlike(r"^\s*POINT\s*\("), b.rlike(r"^\s*POINT\s*\(")
-        pax, pay = _point_xy(a)
-        pbx, pby = _point_xy(b)
-        # all rings: point-polygon arms are hole-aware (round 13); the
-        # polygon-polygon arm keeps the outer-hull fold for single-
-        # ring pairs and takes the hole-aware + boundary-contact-aware
-        # simple-features test when either side carries interior
-        # rings (round 14 — closes the donut-in-hole residual)
-        ra, rb = wkt_polygon_rings(a), wkt_polygon_rings(b)
-        return (
-            F.when(pa & pb, (pax == pbx) & (pay == pby))
-            .when(
-                pa,
-                _bound(
-                    rb,
-                    lambda r: F.when(
-                        r.isNotNull(),
-                        point_in_polygon_holes(r, pax, pay),
-                    ),
-                ),
-            )
-            .when(
-                pb,
-                _bound(
-                    ra,
-                    lambda r: F.when(
-                        r.isNotNull(),
-                        point_in_polygon_holes(r, pbx, pby),
-                    ),
-                ),
-            )
-            .otherwise(
-                _bound_rings(
-                    ra,
-                    rb,
-                    lambda r1, r2: F.when(
-                        (F.size(r1) == 1) & (F.size(r2) == 1),
-                        rings_intersect(F.get(r1, 0), F.get(r2, 0)),
-                    ).otherwise(polygons_intersect_sf(r1, r2)),
-                )
-            )
-        )
-    if fname in (
-        "geof:sftouches", "geof:sfoverlaps", "geof:sfequals",
-        "geof:sfcrosses",
-    ):
-        # Round 14: the remaining simple-features relations. Shape
-        # arms are decided by lexical prefix; each geometry parse is
-        # lambda-bound ONCE (the sp33 rule) before the O(|A|x|B|)
-        # folds. Semantics (functions/geometry.py round-14 section):
-        #   sfTouches  — boundaries share a point, interiors do not
-        #                intersect (point-polygon = on boundary;
-        #                point-point = false: a point has no boundary)
-        #   sfOverlaps — interiors intersect, neither within the
-        #                other; any POINT operand makes it false
-        #                (dimension rules)
-        #   sfEquals   — within both ways (topological: vertex order /
-        #                winding / collinear extras irrelevant);
-        #                point-point = coordinate equality; mixed
-        #                dimensions = false
-        #   sfCrosses  — LINESTRING x POLYGON (either order) and
-        #                LINESTRING x LINESTRING; points and
-        #                polygon-polygon are false by the dimension
-        #                rules
-        # LINESTRING operands of touches/overlaps/equals are out of
-        # scope -> NULL = SPARQL type error = binding dropped (same
-        # convention as every other partial geo function here). All
-        # predicates are hole-aware throughout.
-        a = _operand_col(args[0], False)
-        b = _operand_col(args[1], False)
-        a_pt, b_pt = a.rlike(r"^\s*POINT\s*\("), b.rlike(r"^\s*POINT\s*\(")
-        a_ln = a.rlike(r"^\s*LINESTRING\s*\(")
-        b_ln = b.rlike(r"^\s*LINESTRING\s*\(")
-        pax, pay = _point_xy(a)
-        pbx, pby = _point_xy(b)
-        ra, rb = wkt_polygon_rings(a), wkt_polygon_rings(b)
-
-        null_bool = F.lit(None).cast("boolean")
-        if fname == "geof:sftouches":
-            return (
-                F.when(a_ln | b_ln, null_bool)
-                .when(a_pt & b_pt, F.lit(False))
-                .when(
-                    a_pt,
-                    _bound(
-                        rb,
-                        lambda r: F.when(
-                            r.isNotNull(),
-                            point_on_rings_boundary(r, pax, pay),
-                        ),
-                    ),
-                )
-                .when(
-                    b_pt,
-                    _bound(
-                        ra,
-                        lambda r: F.when(
-                            r.isNotNull(),
-                            point_on_rings_boundary(r, pbx, pby),
-                        ),
-                    ),
-                )
-                .otherwise(_bound_rings(ra, rb, polygons_touch))
-            )
-        if fname == "geof:sfoverlaps":
-            return (
-                F.when(a_ln | b_ln, null_bool)
-                .when(a_pt | b_pt, F.lit(False))
-                .otherwise(_bound_rings(ra, rb, polygons_overlap_sf))
-            )
-        if fname == "geof:sfequals":
-            return (
-                F.when(a_ln | b_ln, null_bool)
-                .when(a_pt & b_pt, (pax == pbx) & (pay == pby))
-                .when(a_pt | b_pt, F.lit(False))
-                .otherwise(_bound_rings(ra, rb, polygons_equal_sf))
-            )
-        # geof:sfcrosses
-        la, lb = wkt_linestring_points(a), wkt_linestring_points(b)
-        return (
-            F.when(a_pt | b_pt, F.lit(False))
-            .when(
-                a_ln & b_ln,
-                _bound(
-                    la,
-                    lambda l1: _bound(
-                        lb,
-                        lambda l2: F.when(
-                            l1.isNotNull() & l2.isNotNull(),
-                            lines_cross(l1, l2),
-                        ),
-                    ),
-                ),
-            )
-            .when(
-                a_ln,
-                _bound(
-                    la,
-                    lambda ln: _bound(
-                        rb,
-                        lambda r: F.when(
-                            ln.isNotNull() & r.isNotNull(),
-                            line_crosses_polygon(ln, r),
-                        ),
-                    ),
-                ),
-            )
-            .when(
-                b_ln,
-                _bound(
-                    lb,
-                    lambda ln: _bound(
-                        ra,
-                        lambda r: F.when(
-                            ln.isNotNull() & r.isNotNull(),
-                            line_crosses_polygon(ln, r),
-                        ),
-                    ),
-                ),
-            )
-            .otherwise(F.lit(False))
-        )
     if fname in (
         "geof:area", "geof:centroid", "geof:envelope", "geof:length"
     ):

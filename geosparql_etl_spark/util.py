@@ -2,7 +2,49 @@
 
 from __future__ import annotations
 
+import atexit
+import os
+import re
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame
+
+# Scratch locations this process created (persisted lakes, indexes,
+# archives, bucketed tables), removed when it exits.
+_GSEL_PATHS: set[str] = set()
+
+
+def _remove_gsel_paths() -> None:
+    for path in _GSEL_PATHS:
+        shutil.rmtree(path, ignore_errors=True)
+
+
+def remove_at_exit(path: str) -> str:
+    """Register ``path`` for removal when this process exits; returns
+    it."""
+    if not _GSEL_PATHS:
+        atexit.register(_remove_gsel_paths)
+    _GSEL_PATHS.add(path)
+    return path
+
+
+def gsel_name(kind: str, scope: str) -> str:
+    """``gsel_<kind>_<scope>_<pid>``: the name of this process's scratch
+    artifact of one kind, where ``scope`` is a scale's data directory
+    (its last component is used) or any other label. The process id
+    keeps two processes running the same query at the same scale (an
+    oracle check beside a test run) from building into, and deleting,
+    each other's files."""
+    tag = re.sub(r"[^0-9A-Za-z]", "_", os.path.basename(os.path.normpath(scope)))
+    return f"gsel_{kind}_{tag}_{os.getpid()}"
+
+
+def gsel_path(kind: str, scope: str) -> str:
+    """The temp-dir path named by ``gsel_name``, removed at exit."""
+    return remove_at_exit(
+        os.path.join(tempfile.gettempdir(), gsel_name(kind, scope))
+    )
 
 # One local-frame slice per this many rows (a single Python-runner
 # task deserializes 20k small rows in tens of ms).

@@ -6,7 +6,10 @@ the rotation promised to the driver. These tests make that mistake loud.
 
 from __future__ import annotations
 
+import os
+
 import __spark_entry__ as entry
+from geosparql_etl_spark.util import gsel_path
 
 
 def test_every_query_has_an_oracle_and_vice_versa():
@@ -99,3 +102,18 @@ def test_events_reads_are_ts_normalized():
     assert raw_reads == 1, (
         f"{raw_reads} raw events reads; route them through _events()"
     )
+
+
+def test_scratch_paths_are_per_process(monkeypatch):
+    """Lake-backed queries build under a per-process path: two
+    processes running the same query at the same scale never share,
+    and so never delete, each other's index."""
+    paths = []
+    for pid in (101, 202):
+        monkeypatch.setattr(os, "getpid", lambda pid=pid: pid)
+        paths.append(gsel_path("manifest", "/data/sf0.001/"))
+    assert paths[0] != paths[1]
+    assert [p.rsplit("/", 1)[1] for p in paths] == [
+        "gsel_manifest_sf0_001_101", "gsel_manifest_sf0_001_202",
+    ]
+

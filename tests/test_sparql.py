@@ -4123,6 +4123,169 @@ class TestVarVarContainmentPlans:
             assert (r.dj in (True, "true")) == (r.it not in (True, "true"))
 
 
+class TestRelateConsistency:
+    """Every GeoSPARQL topological relation gives one answer per
+    operand shape pair on every plan: against a constant, per row over
+    a linked pair (connected), and as a var-var FILTER between
+    disconnected frames (the grid cover join). Within each plan the
+    relations obey their OGC definitions: sfDisjoint = NOT
+    sfIntersects, sfContains(a, b) = sfWithin(b, a), and sfWithin and
+    sfTouches imply sfIntersects. A shape pair the engine does not
+    relate is a type error (unbound) on every plan."""
+
+    SQ = "POLYGON((0 0, 10 0, 10 10, 0 10, 0 0))"
+    MP = (
+        "MULTIPOLYGON(((0 0, 6 0, 6 6, 0 6, 0 0)), "
+        "((24 24, 30 24, 30 30, 24 30, 24 24)))"
+    )
+    GEOMS = {
+        "sq": SQ,
+        "mp": MP,
+        "pt": "POINT(3 3)",  # inside sq and mp's first member
+        "pt_edge": "POINT(10 5)",  # on sq's right edge
+        "inside": "POLYGON((1 1, 4 1, 4 4, 1 4, 1 1))",
+        "crossing": "POLYGON((5 -2, 15 -2, 15 2, 5 2, 5 -2))",
+        "edge": "POLYGON((10 2, 14 2, 14 6, 10 6, 10 2))",  # shares an edge part
+        "corner": "POLYGON((10 10, 12 10, 12 12, 10 12, 10 10))",
+        "far": "POLYGON((40 40, 42 40, 42 42, 40 42, 40 40))",
+        "donut": (
+            "POLYGON((20 20, 34 20, 34 34, 20 34, 20 20), "
+            "(23 23, 31 23, 31 31, 23 31, 23 23))"
+        ),
+        "in_hole": "POLYGON((25 25, 27 25, 27 27, 25 27, 25 25))",
+        "line_in": "LINESTRING(1 1, 5 5)",
+        "line_cross": "LINESTRING(5 5, 15 5)",
+    }
+    RELS = {
+        "i": "sfIntersects", "dj": "sfDisjoint", "w": "sfWithin",
+        "c": "sfContains", "t": "sfTouches", "o": "sfOverlaps",
+        "e": "sfEquals", "x": "sfCrosses",
+    }
+
+    @pytest.fixture(scope="class")
+    def store(self, spark):
+        rows = [(f"urn:g:{k}", "urn:ex:g", w) for k, w in self.GEOMS.items()]
+        rows += [
+            (f"urn:g:{a}", "urn:ex:near", f"urn:g:{b}")
+            for a in self.GEOMS for b in self.GEOMS
+        ]
+        df = spark.createDataFrame(rows, "s string, p string, o string")
+        return TripleStore(df)
+
+    @staticmethod
+    def _flag(v):
+        return {True: True, "true": True, False: False, "false": False}.get(v)
+
+    def _binds(self, a, b):
+        return " ".join(
+            f"BIND(geof:{fn}({a}, {b}) AS ?{k})" for k, fn in self.RELS.items()
+        )
+
+    @pytest.fixture(scope="class")
+    def connected(self, store):
+        rows = run(
+            store,
+            "SELECT ?s ?z " + " ".join(f"?{k}" for k in self.RELS)
+            + " WHERE { ?s ex:g ?g . ?s ex:near ?z . ?z ex:g ?h "
+            + self._binds("?g", "?h") + " }",
+        ).collect()
+        return {
+            (r.s[6:], r.z[6:]): {k: self._flag(r[k]) for k in self.RELS}
+            for r in rows
+        }
+
+    @pytest.fixture(scope="class")
+    def constant(self, store):
+        # one UNION branch per constant; each branch also binds the
+        # mirrored containment calls, with the constant first
+        branches = [
+            f'{{ ?s ex:g ?g BIND("{name}" AS ?k) '
+            + self._binds("?g", f'"{wkt}"')
+            + f' BIND(geof:sfWithin("{wkt}", ?g) AS ?wr)'
+            + f' BIND(geof:sfContains("{wkt}", ?g) AS ?cr) }}'
+            for name, wkt in (("sq", self.SQ), ("mp", self.MP))
+        ]
+        rows = run(
+            store,
+            "SELECT ?s ?k ?wr ?cr " + " ".join(f"?{k}" for k in self.RELS)
+            + " WHERE { " + " UNION ".join(branches) + " }",
+        ).collect()
+        return {
+            (r.s[6:], r.k): {
+                k: self._flag(r[k]) for k in (*self.RELS, "wr", "cr")
+            }
+            for r in rows
+        }
+
+    def _assert_definitions(self, flags: dict, mirrored) -> None:
+        for pair, f in flags.items():
+            if f["i"] is not None and f["dj"] is not None:
+                assert f["dj"] == (not f["i"]), (pair, f)
+            if f["w"] or f["t"]:
+                assert f["i"] is True, (pair, f)
+            assert f["c"] == mirrored(pair, f)["w"], (pair, f)
+            assert f["w"] == mirrored(pair, f)["c"], (pair, f)
+
+    def test_connected_plan_obeys_definitions(self, connected):
+        assert len(connected) == len(self.GEOMS) ** 2
+        self._assert_definitions(
+            connected, lambda pair, f: connected[pair[::-1]]
+        )
+
+    def test_constant_plan_obeys_definitions_and_agrees(
+        self, constant, connected
+    ):
+        assert len(constant) == 2 * len(self.GEOMS)
+        self._assert_definitions(
+            constant, lambda pair, f: {"w": f["wr"], "c": f["cr"]}
+        )
+        for (g, k), f in constant.items():
+            assert {r: f[r] for r in self.RELS} == connected[(g, k)], (g, k)
+
+    def test_disconnected_plan_agrees(self, store, connected):
+        rels = [fn for k, fn in self.RELS.items()]
+        branches = [
+            f"{{ ?s{n} ex:g ?g{n} . ?z{n} ex:g ?h{n} "
+            f"FILTER(geof:{fn}(?g{n}, ?h{n})) }}"
+            for n, fn in enumerate(rels)
+        ]
+        rows = run(
+            store,
+            "SELECT " + " ".join(f"?s{n} ?z{n}" for n in range(len(rels)))
+            + " WHERE { " + " UNION ".join(branches) + " }",
+        ).collect()
+        for n, k in enumerate(self.RELS):
+            got = sorted(
+                (r[f"s{n}"][6:], r[f"z{n}"][6:])
+                for r in rows if r[f"s{n}"] is not None
+            )
+            want = sorted(p for p, f in connected.items() if f[k] is True)
+            assert got == want, k
+
+    def test_pinned_contradictions(self, constant, connected):
+        # lines inside or across the square are not disjoint from it
+        # (no line/polygon intersects entry: unbound), yet one crosses
+        for line in ("line_in", "line_cross"):
+            assert constant[(line, "sq")]["dj"] is None
+            assert constant[(line, "sq")]["i"] is None
+        assert constant[("line_cross", "sq")]["x"] is True
+        # polygons inside or overlapping a multipolygon member
+        for poly in ("inside", "crossing"):
+            assert constant[(poly, "mp")]["dj"] is None
+        # a point within a multipolygon intersects it
+        assert constant[("pt", "mp")]["w"] is True
+        assert constant[("pt", "mp")]["i"] is True
+        assert constant[("pt", "mp")]["dj"] is False
+        # single-ring polygons sharing part of an edge
+        for f in (constant[("edge", "sq")], connected[("edge", "sq")]):
+            assert (f["i"], f["dj"], f["t"]) == (True, False, True)
+        # a point on the boundary touches and intersects
+        assert connected[("pt_edge", "sq")]["t"] is True
+        assert connected[("pt_edge", "sq")]["i"] is True
+        # a polygon in a donut's hole meets only the hole
+        assert connected[("in_hole", "donut")]["dj"] is True
+
+
 class TestPlanCache:
     """sparql_select keeps a bounded per-store cache of compiled plans.
     A hit skips parse, compile and analysis only: every call returns a

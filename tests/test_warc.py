@@ -275,7 +275,7 @@ def test_records_to_docs_recovers_document_fields(warc_spark, sf_dir, tmp_path):
         records_to_docs,
     )
 
-    path = entry._write_docs_warc(spark, sf_dir, name="gsel_warc_test_")
+    path = entry._write_docs_warc(spark, sf_dir, kind="warc_test")
     raw = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.warc*")

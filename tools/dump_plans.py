@@ -2,13 +2,15 @@
 
 Evidence for the plan properties claimed in SCALE.md: column pruning
 (ReadSchema), predicate pushdown (PushedFilters), broadcast joins, and
-exchange reuse. Run after any plan-shape change:
+exchange reuse. Run after any plan-shape change; output goes only into
+the directory given:
 
-    python tools/dump_plans.py                       # SHOWCASE -> PLANS.md
+    python tools/dump_plans.py <out_dir>             # SHOWCASE -> <out_dir>/PLANS.md
     python tools/dump_plans.py <out_dir> <query ...> # <out_dir>/<query>.txt
 
 The second form snapshots the named queries one file each, e.g. a
-before set at one commit and an after set at the next, to diff.
+before set at one commit and an after set at the next, to diff. Plan
+dumps are not committed: regenerate them at the commits you compare.
 """
 
 from __future__ import annotations
@@ -172,14 +174,14 @@ def _plan(spark, qs, name: str, sf_dir: str) -> str:
 
 
 def main() -> None:
-    if len(sys.argv) == 2:
-        sys.exit("usage: dump_plans.py [<out_dir> <query ...>]")
+    if len(sys.argv) < 2:
+        sys.exit("usage: dump_plans.py <out_dir> [<query> ...]")
     sf_dir = "/root/testdata/sf0.01"
+    out_dir = Path(sys.argv[1])
+    out_dir.mkdir(parents=True, exist_ok=True)
     spark = get_spark("plan-dump", master="local[4]", shuffle_partitions=4)
     qs = entrymod.queries()
     if len(sys.argv) > 2:
-        out_dir = Path(sys.argv[1])
-        out_dir.mkdir(parents=True, exist_ok=True)
         for name in sys.argv[2:]:
             plan = _plan(spark, qs, name, sf_dir)
             (out_dir / f"{name}.txt").write_text(plan)
@@ -195,8 +197,8 @@ def main() -> None:
         plan = _plan(spark, qs, name, sf_dir)
         # keep the operator tree + scan details, drop codegen ids noise
         out += [f"## {name} — {why}", "", "```", plan.rstrip(), "```", ""]
-    (REPO / "PLANS.md").write_text("\n".join(out))
-    print(f"wrote PLANS.md ({len(SHOWCASE)} plans)")
+    (out_dir / "PLANS.md").write_text("\n".join(out))
+    print(f"wrote {out_dir / 'PLANS.md'} ({len(SHOWCASE)} plans)")
 
 
 if __name__ == "__main__":

@@ -28,7 +28,6 @@ from __future__ import annotations
 import os
 import shutil
 import sys
-import tempfile
 import time
 from pathlib import Path
 
@@ -46,6 +45,7 @@ from geosparql_etl_spark.operators.retrieval import (  # noqa: E402
     write_text_index,
 )
 from geosparql_etl_spark.session import get_spark  # noqa: E402
+from geosparql_etl_spark.util import gsel_path  # noqa: E402
 
 
 def zipf_corpus(spark, n_docs: int, n_vocab: int):
@@ -142,9 +142,7 @@ def main():
             .agg(F.countDistinct("t"))
             .collect()[0][0]
         )
-        idx = os.path.join(
-            tempfile.gettempdir(), f"gsel_text_sweep_{size}"
-        )
+        idx = gsel_path("text_sweep", str(size))
         shutil.rmtree(idx, ignore_errors=True)
         t0 = time.time()
         write_text_index(corpus, idx, n_buckets=n_buckets)
@@ -168,9 +166,7 @@ def main():
         )
 
         # fragmentation: same corpus as 1 base + 9 appended epochs
-        fidx = os.path.join(
-            tempfile.gettempdir(), f"gsel_text_sweep_frag_{size}"
-        )
+        fidx = gsel_path("text_sweep_frag", str(size))
         shutil.rmtree(fidx, ignore_errors=True)
         write_text_index(
             corpus.where(F.col("doc_id") % 10 == 0), fidx,
