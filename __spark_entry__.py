@@ -11951,9 +11951,10 @@ def sp26_spatial_pairs(spark, sf_dir):
     spacing is sqrt(40) ~ 6.32, so 7.9 captures exactly that band). The two BGP components {?a ?wa} x {?b ?wb}
     share no variable, so pre-round-8 this was CartesianProduct +
     filter; the compiler now connects them THROUGH the distance
-    FILTER as a grid-bucketed hash join on cells of side d
-    (compiler._grid_spatial_rewrite — the g17/g18 strategy reached
-    from SPARQL text; plan-audited CartesianProduct-free). 7.9 not 8:
+    FILTER as the relate cover join on cells of side d: one side's
+    point bboxes grow by d, so every pair within d shares a canonical
+    cell (compiler._grid_spatial_rewrite — the g17/g18 strategy
+    reached from SPARQL text; plan-audited CartesianProduct-free). 7.9 not 8:
     the integer grid attains integer distances, a boundary no
     cross-engine float compare should sit on."""
     return _sparql(
@@ -12175,7 +12176,7 @@ def sp33_spatial_containment(spark, sf_dir):
     zones), the query shape the constant-region sp04 cannot express.
     The supplier star and the region star share no variable, so the
     naive plan is CartesianProduct + ray cast; the compiler's one
-    var-var relate cover join (compiler.py _grid_sfintersects_rewrite,
+    var-var relate cover join (compiler.py _grid_spatial_rewrite,
     which serves sfWithin/sfContains for every subject shape) instead
     explodes each polygon into its covered grid cells, lands each
     point in its one cell, hash-joins on the cell, and re-applies the
@@ -12391,7 +12392,7 @@ def sp37_zone_geometry(spark, sf_dir):
     POLYGON wktLiterals — the per-zone geometry audit (how big, where
     centered, what bounding box) every spatial catalog publishes.
     All three compile to pure-Catalyst shoelace/bounds math over the
-    once-bound parsed ring (compiler.py binds wkt_polygon_ring as a
+    once-bound parsed rings (compiler.py binds wkt_polygon_rings as a
     lambda variable before the multi-reference folds — the sp33
     plan-size lesson applied at the function layer). The oracle
     re-derives every value from the zone construction arithmetic
@@ -12487,7 +12488,7 @@ def sp39_zone_overlap(spark, sf_dir):
     into covered cells, candidates hash-join on the cell, each pair
     survives on its one canonical cell (no dedup pass), and the exact
     vertex-in-ring/edge-cross test decides (compiler.py:
-    _grid_sfintersects_rewrite; functions/geometry.py:rings_intersect).
+    _grid_spatial_rewrite; functions/geometry.py:rings_intersect).
     Integer box corners vs half-unit zone edges mean no boundary-
     degenerate contact. Completes the var-var spatial family:
     distance (sp26), point-in-polygon (sp33), polygon-polygon (this).

@@ -294,17 +294,11 @@ def polygon_bounds(coordinates: Column) -> Column:
 def wkt_linestring_points(wkt: Column) -> Column:
     """WKT ``LINESTRING(x y, ...)`` string -> point list as
     ``array<array<double>>``, NULL for a non-LINESTRING literal. The
-    polyline twin of wkt_polygon_ring (same regexp+split+transform
-    shape, no UDF); no closing-point handling — a polyline is open.
+    same coordinate-list parse as the polygon rings (``_coords``, no
+    UDF); no closing-point handling — a polyline is open.
     Ref: utils/geometry.py:228-240 (create_linestring)."""
     body = F.regexp_extract(wkt, r"^\s*LINESTRING\s*\(([^)]*)\)", 1)
-    pts = F.transform(
-        F.split(body, r"\s*,\s*"),
-        lambda p: F.transform(
-            F.split(F.trim(p), r"\s+"), lambda v: v.try_cast("double")
-        ),
-    )
-    return F.when(body != "", pts)
+    return F.when(body != "", _coords(body))
 
 
 def polyline_length(pts: Column) -> Column:
@@ -414,15 +408,16 @@ def _orient(ax, ay, bx, by, cx, cy) -> Column:
 
 
 def rings_intersect(ra: Column, rb: Column) -> Column:
-    """G16: do two simple rings (open point lists, wkt_polygon_ring
-    shape) overlap as filled polygons? True iff any A vertex lies in
-    B, any B vertex lies in A, or any edge pair PROPERLY crosses —
-    which together cover every simple-polygon intersection except pure
-    boundary contact (shared edges / vertex-on-edge touching), the
-    same boundary-degenerate class point_in_ring's even-odd cast
-    already excludes. Hole validity (``_valid_holes_core``) relies on
-    exactly this proper-crossing-only meaning; OGC sfIntersects, which
-    counts boundary contact, is ``rings_meet``.
+    """G16: do two simple rings (open point lists, one ring of
+    wkt_polygon_rings) overlap as filled polygons? True iff any A
+    vertex lies in B, any B vertex lies in A, or any edge pair PROPERLY
+    crosses — which together cover every simple-polygon intersection
+    except pure boundary contact (shared edges / vertex-on-edge
+    touching), the same boundary-degenerate class point_in_ring's
+    even-odd cast already excludes. Hole validity
+    (``_valid_holes_core``) relies on exactly this proper-crossing-only
+    meaning; OGC sfIntersects, which counts boundary contact, is
+    ``rings_meet``.
 
     Pass MATERIALIZED columns (or lambda-bound vars) for ra/rb: both
     rings are referenced O(|A|x|B|) times by the edge fold, so an
@@ -556,14 +551,11 @@ def _open_ring_self_intersects(ring: Column) -> Column:
     )
 
 
-def bounds_wkt(bounds: Column) -> Column:
-    """G15: (minx, miny, maxx, maxy) struct -> envelope ``POLYGON``
-    WKT (counter-clockwise, closed, raw double rendering — the same
-    rendering convention as polygon_wkt)."""
-    minx = bounds["minx"].cast("string")
-    miny = bounds["miny"].cast("string")
-    maxx = bounds["maxx"].cast("string")
-    maxy = bounds["maxy"].cast("string")
+def bounds_wkt(x0: Column, y0: Column, x1: Column, y1: Column) -> Column:
+    """G15: bounds -> envelope ``POLYGON`` WKT (counter-clockwise,
+    closed, raw double rendering — the same rendering convention as
+    polygon_wkt)."""
+    minx, miny, maxx, maxy = (c.cast("string") for c in (x0, y0, x1, y1))
     return F.concat(
         F.lit("POLYGON(("),
         minx, F.lit(" "), miny, F.lit(", "),
@@ -684,34 +676,6 @@ def point_in_ring(ring: Column, px: Column, py: Column) -> Column:
     return (hits % 2) == 1
 
 
-def wkt_polygon_ring(wkt: Column) -> Column:
-    """WKT ``POLYGON((x y, ...))`` string -> outer ring as
-    ``array<array<double>>`` (the shape ``point_in_ring`` consumes),
-    NULL for a non-POLYGON literal.
-
-    This is the VARIABLE-geometry twin of the compiler's constant-WKT
-    ring parse: it runs per row inside whole-plan expressions (regexp
-    + split + transform, no UDF), so a polygon bound from data — the
-    reference's own ``^^geo:wktLiteral`` output re-read — can sit on
-    either side of a spatial join. A closing repeat of the first
-    vertex is dropped (ring-closure is implicit in even-odd casting).
-    Inner rings (holes) are out of scope, matching the constant path.
-    """
-    body = F.regexp_extract(wkt, r"POLYGON\s*\(\s*\(([^)]*)\)\s*\)", 1)
-    pts = F.transform(
-        F.split(body, r"\s*,\s*"),
-        lambda p: F.transform(
-            F.split(F.trim(p), r"\s+"), lambda v: v.try_cast("double")
-        ),
-    )
-    ring = F.when(
-        (F.size(pts) > 1)
-        & (F.element_at(pts, 1) == F.element_at(pts, F.size(pts))),
-        F.slice(pts, 1, F.size(pts) - 1),
-    ).otherwise(pts)
-    return F.when(body != "", ring)
-
-
 # --- interior rings / polygon holes (round 13; closes D8's residual) -----
 #
 # The reference's data model reads only coordinates[0] (json-etl:34), so
@@ -766,32 +730,45 @@ def polygon_wkt_rings(coordinates: str) -> str:
     )
 
 
+def _coords(body: Column) -> Column:
+    """``"x y, x y, ..."`` -> ``array<array<double>>``: the one
+    coordinate-list parse every WKT shape with a point list shares
+    (regexp split + ``try_cast``, no UDF — a token that is not a
+    number reads NULL)."""
+    return F.transform(
+        F.split(body, r"\s*,\s*"),
+        lambda p: F.transform(
+            F.split(F.trim(p), r"\s+"), lambda v: v.try_cast("double")
+        ),
+    )
+
+
+def _ring(body: Column) -> Column:
+    """One ring's coordinate list with the closing repeat of its first
+    vertex dropped (closure is implicit everywhere downstream)."""
+    pts = _coords(body)
+    return F.when(
+        (F.size(pts) > 1)
+        & (F.element_at(pts, 1) == F.element_at(pts, F.size(pts))),
+        F.slice(pts, 1, F.size(pts) - 1),
+    ).otherwise(pts)
+
+
+def _rings(body: Column) -> Column:
+    """``"(x y, ...), (x y, ...)"`` (outer parentheses optional) -> one
+    ``_ring`` per parenthesized list."""
+    ring_strs = F.split(
+        F.regexp_replace(body, r"^\s*\(|\)\s*$", ""), r"\)\s*,\s*\("
+    )
+    return F.transform(ring_strs, _ring)
+
+
 def wkt_polygon_rings(wkt: Column) -> Column:
     """Multi-ring WKT ``POLYGON((...), (...))`` -> ALL rings as
     ``array<array<array<double>>>`` (the canonical coordinates shape),
-    NULL for a non-POLYGON literal — the all-rings form of
-    wkt_polygon_ring. Each ring's closing repeat of its first vertex
-    is dropped (closure is implicit everywhere downstream). Same
-    regexp+split+transform construction, no UDF."""
+    NULL for a non-POLYGON literal."""
     inner = F.regexp_extract(wkt, r"^\s*POLYGON\s*\((.*)\)\s*$", 1)
-    ring_strs = F.split(
-        F.regexp_replace(inner, r"^\s*\(|\)\s*$", ""), r"\)\s*,\s*\("
-    )
-
-    def parse_ring(body: Column) -> Column:
-        pts = F.transform(
-            F.split(body, r"\s*,\s*"),
-            lambda p: F.transform(
-                F.split(F.trim(p), r"\s+"), lambda v: v.try_cast("double")
-            ),
-        )
-        return F.when(
-            (F.size(pts) > 1)
-            & (F.element_at(pts, 1) == F.element_at(pts, F.size(pts))),
-            F.slice(pts, 1, F.size(pts) - 1),
-        ).otherwise(pts)
-
-    return F.when(inner != "", F.transform(ring_strs, parse_ring))
+    return F.when(inner != "", _rings(inner))
 
 
 def point_in_polygon_holes(
@@ -925,8 +902,8 @@ def multipolygon_wkt(coordinates: str) -> str:
 
 def wkt_multipolygon(wkt: Column) -> Column:
     """Multi-ring ``MULTIPOLYGON`` WKT -> the canonical 4-deep
-    coordinates array; NULL for a non-MULTIPOLYGON literal. Ring
-    closing repeats are dropped, like wkt_polygon_rings."""
+    coordinates array; NULL for a non-MULTIPOLYGON literal. Each
+    member parses like a POLYGON's ring list (``_rings``)."""
     inner = F.regexp_extract(
         wkt, r"^\s*MULTIPOLYGON\s*\((.*)\)\s*$", 1
     )
@@ -934,31 +911,7 @@ def wkt_multipolygon(wkt: Column) -> Column:
         F.regexp_replace(inner, r"^\s*\(|\)\s*$", ""),
         r"\)\s*\)\s*,\s*\(\s*\(",
     )
-
-    def parse_poly(body: Column) -> Column:
-        ring_strs = F.split(body, r"\)\s*,\s*\(")
-
-        def parse_ring(rbody: Column) -> Column:
-            pts = F.transform(
-                F.split(F.regexp_replace(rbody, r"^\s*\(|\)\s*$", ""),
-                        r"\s*,\s*"),
-                lambda p: F.transform(
-                    F.split(F.trim(p), r"\s+"),
-                    lambda v: v.try_cast("double"),
-                ),
-            )
-            return F.when(
-                (F.size(pts) > 1)
-                & (
-                    F.element_at(pts, 1)
-                    == F.element_at(pts, F.size(pts))
-                ),
-                F.slice(pts, 1, F.size(pts) - 1),
-            ).otherwise(pts)
-
-        return F.transform(ring_strs, parse_ring)
-
-    return F.when(inner != "", F.transform(poly_strs, parse_poly))
+    return F.when(inner != "", F.transform(poly_strs, _rings))
 
 
 def point_in_multipolygon(
@@ -968,6 +921,68 @@ def point_in_multipolygon(
     return F.exists(
         coordinates, lambda poly: point_in_polygon_holes(poly, px, py)
     )
+
+
+# --- the WKT reader --------------------------------------------------------
+#
+# Every geof:* function, the SPARQL cover join and the triple store's
+# shape statistics read a WKT lexical through these: one shape test, one
+# parse and one bbox per shape. The parses are lambda-free up to the
+# coordinate lists' ``transform`` (POINT entirely), so Catalyst folds a
+# literal's shape tests and its POINT parse at optimization time.
+
+WKT_SHAPES = ("POLYGON", "POINT", "MULTIPOLYGON", "LINESTRING")
+
+
+def wkt_shape_pattern(shape: str) -> str:
+    """The regex a ``shape`` lexical starts with: the keyword and an
+    opening parenthesis. At most one shape's pattern matches any
+    lexical."""
+    return rf"^\s*{shape}\s*\("
+
+
+def is_wkt_shape(lex: Column, shape: str) -> Column:
+    return lex.rlike(wkt_shape_pattern(shape))
+
+
+def wkt_point_xy(wkt: Column) -> tuple[Column, Column]:
+    """WKT ``POINT(x y)`` (optional space before the parenthesis) -> its
+    (x, y) double Columns: both NULL for a non-POINT lexical, either
+    NULL for a coordinate ``try_cast`` does not read — never an ANSI
+    cast error."""
+    pat = r"^\s*POINT\s*\(\s*([^\s(),]+)\s+([^\s(),]+)\s*\)"
+    return (
+        F.regexp_extract(wkt, pat, 1).try_cast("double"),
+        F.regexp_extract(wkt, pat, 2).try_cast("double"),
+    )
+
+
+# parsed forms: POINT -> its (x, y) Columns; POLYGON -> all rings, outer
+# first; MULTIPOLYGON -> member ring arrays; LINESTRING -> point list
+WKT_PARSE = {
+    "POLYGON": wkt_polygon_rings,
+    "POINT": wkt_point_xy,
+    "MULTIPOLYGON": wkt_multipolygon,
+    "LINESTRING": wkt_linestring_points,
+}
+
+
+def _points_bbox(pts: Column) -> tuple:
+    xs = F.transform(pts, lambda p: p[0])
+    ys = F.transform(pts, lambda p: p[1])
+    return F.array_min(xs), F.array_min(ys), F.array_max(xs), F.array_max(ys)
+
+
+# (x0, y0, x1, y1) of a parsed operand: a polygon's outer ring (holes
+# cannot extend it), every member's outer ring, a line's points
+WKT_BBOX = {
+    "POLYGON": lambda r: _points_bbox(F.get(r, 0)),
+    "POINT": lambda p: (p[0], p[1], p[0], p[1]),
+    "MULTIPOLYGON": lambda m: _points_bbox(
+        F.flatten(F.transform(m, lambda poly: F.get(poly, 0)))
+    ),
+    "LINESTRING": _points_bbox,
+}
 
 
 def _polygons_overlap(pa: Column, pb: Column) -> Column:
@@ -1289,6 +1304,16 @@ def point_strictly_in_polygon(
     )
 
 
+def point_strictly_in_multipolygon(
+    members: Column, px: Column, py: Column
+) -> Column:
+    """Strictly inside some member polygon (members of a valid
+    multipolygon meet at most in points, which are boundary)."""
+    return F.exists(
+        members, lambda poly: point_strictly_in_polygon(poly, px, py)
+    )
+
+
 def _ring_probes(r: Column) -> Column:
     """Probe points of a closed ring: its vertices plus every edge
     midpoint (wraparound edge included). Midpoints decide the
@@ -1314,12 +1339,6 @@ def polygon_probes(rings: Column) -> Column:
 
 def _any_ring_pair(pa: Column, pb: Column, fn) -> Column:
     return F.exists(pa, lambda ra: F.exists(pb, lambda rb: fn(ra, rb)))
-
-
-def polygons_boundaries_touch(pa: Column, pb: Column) -> Column:
-    """Do the boundaries (all rings) of two polygons share any
-    point?"""
-    return _any_ring_pair(pa, pb, rings_edges_touch)
 
 
 def _sf_pieces(
@@ -1397,12 +1416,6 @@ def _sf_pieces(
     if "wba" in need:
         pieces["wba"] = _within(pb, pa, probes_b, a_strict)
     return pieces
-
-
-def polygons_interiors_overlap(pa: Column, pb: Column) -> Column:
-    """Do the INTERIORS (hole-aware, boundary-excluded) of two valid
-    polygons intersect? See ``_sf_pieces`` ("io")."""
-    return _sf_pieces(pa, pb, need=("io",))["io"]
 
 
 def polygon_within_polygon(pa: Column, pb: Column) -> Column:

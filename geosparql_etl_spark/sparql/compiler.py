@@ -133,31 +133,34 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from geosparql_etl_spark.functions.geometry import (
+    WKT_BBOX,
+    WKT_PARSE,
+    WKT_SHAPES,
     bounds_wkt,
+    is_wkt_shape,
+    line_crosses_polygon,
+    lines_cross,
     memo_tree,
     multipolygon_area,
     multipolygon_centroid,
     multipolygon_perimeter,
-    line_crosses_polygon,
-    lines_cross,
-    point_in_multipolygon,
     point_in_polygon_holes,
     point_on_rings_boundary,
+    point_strictly_in_multipolygon,
+    point_strictly_in_polygon,
     polygon_area_holes,
     polygon_centroid_holes,
     polygon_perimeter_holes,
-    polyline_centroid,
-    polyline_length,
-    ring_bounds,
     polygon_within_polygon,
     polygons_equal_sf,
     polygons_intersect_sf,
     polygons_overlap_sf,
     polygons_touch,
+    polyline_centroid,
+    polyline_length,
     rings_meet,
-    wkt_linestring_points,
-    wkt_multipolygon,
-    wkt_polygon_rings,
+    wkt_point_xy,
+    wkt_shape_pattern,
 )
 from geosparql_etl_spark.operators.partitioning import spread
 from geosparql_etl_spark.sparql.triples import RDF_LANGSTRING, XSD, TripleStore
@@ -1946,7 +1949,7 @@ def _compile_group(store: TripleStore, group: Group) -> DataFrame:
     # compiled at group end (joins are order-independent, spec 18.5)
     deferred_values: list = []
     # var -> statically provable WKT shape class of its BIND expression
-    # (consumed by the grid sfIntersects rewrite to prune shape arms)
+    # (consumed by the grid cover join to prune shape arms)
     static_shapes: dict[str, str] = {}
     # object var -> the constant predicate that binds it in THIS
     # group's BGPs — lets the grid rewrite consult the store's
@@ -2294,7 +2297,8 @@ def _expr_has_geof(node) -> bool:
 def _match_var_var_distance(expr):
     """``geof:distance(?u, ?v) < d`` (or <=, or mirrored with the
     constant on the left) with BOTH arguments variables — the shape
-    the grid rewrite accepts. Returns (u, v, d) or None."""
+    the grid rewrite accepts. Returns (u, v, d, inclusive) or None,
+    ``inclusive`` when the bound itself matches (<= or >=)."""
     if expr[0] != "cmp":
         return None
     _, op, left, right = expr
@@ -2309,35 +2313,24 @@ def _match_var_var_distance(expr):
     a, b = call[2]
     if a[0] != "var" or b[0] != "var":
         return None
-    return a[1], b[1], float(d)
+    return a[1], b[1], float(d), op in ("<=", ">=")
 
 
-# -- GeoSPARQL topological relations: one table -----------------------------
+# -- GeoSPARQL functions: one table per kind --------------------------------
 #
-# _RELATE[fname][(shape of A, shape of B)] is the exact predicate over the
-# two PARSED operands (_SHAPE_PARSE), or False where the dimension rules
-# decide without coordinates. A pair with no entry is a SPARQL type error:
-# NULL, so a FILTER drops the binding and a BIND leaves it unbound. The
-# other two relations follow by their OGC definitions in every reader:
-# sfContains(a, b) is sfWithin(b, a) and sfDisjoint(a, b) is NOT
-# sfIntersects(a, b). Two readers: _relate (one CASE per call, for
-# variables and constants alike) and _grid_sfintersects_rewrite (one
-# cover-join arm per non-False entry). Every predicate is hole-aware;
-# polygon pairs lead because the CASE tests entries in table order.
-
-_SHAPES = ("POLYGON", "POINT", "MULTIPOLYGON", "LINESTRING")
-
-# parsed forms: POINT -> its (x, y) Columns; POLYGON -> all rings, outer
-# first; MULTIPOLYGON -> member ring arrays; LINESTRING -> point list
-_SHAPE_PARSE = {
-    "POLYGON": wkt_polygon_rings,
-    "MULTIPOLYGON": wkt_multipolygon,
-    "LINESTRING": wkt_linestring_points,
-}
-
-
-def _is_shape(lex: Column, shape: str) -> Column:
-    return lex.rlike(rf"^\s*{shape}\s*\(")
+# _RELATE[fname][(shape of A, shape of B)] is the exact topological
+# predicate over the two PARSED operands (WKT_PARSE), or False where the
+# dimension rules decide without coordinates; _MEASURE[fname][shapes] is
+# a non-topological function's value over its parsed operands. A key
+# with no entry is a SPARQL type error: NULL, so a FILTER drops the
+# binding and a BIND leaves it unbound — and so is a lexical with a
+# shape prefix whose parse fails. The other two relations follow by
+# their OGC definitions in every reader: sfContains(a, b) is
+# sfWithin(b, a) and sfDisjoint(a, b) is NOT sfIntersects(a, b). Two
+# readers: _by_shape (one CASE per call, for variables and constants
+# alike) and _grid_spatial_rewrite (one cover-join arm per non-False
+# entry). Every predicate is hole-aware; polygon pairs lead because the
+# CASE tests entries in table order.
 
 
 def _mirror(pred):
@@ -2387,10 +2380,14 @@ _RELATE = {
         ("MULTIPOLYGON", "POINT"): _mirror(_point_meets_multipolygon),
         ("POINT", "POINT"): _points_equal,
     },
+    # a point is within an area only in its interior: a boundary point
+    # touches instead
     "geof:sfwithin": {
         ("POLYGON", "POLYGON"): polygon_within_polygon,
-        ("POINT", "POLYGON"): lambda p, r: point_in_polygon_holes(r, *p),
-        ("POINT", "MULTIPOLYGON"): lambda p, m: point_in_multipolygon(m, *p),
+        ("POINT", "POLYGON"): lambda p, r: point_strictly_in_polygon(r, *p),
+        ("POINT", "MULTIPOLYGON"): lambda p, m: point_strictly_in_multipolygon(
+            m, *p
+        ),
         ("POINT", "POINT"): _points_equal,
     },
     # boundaries share a point, interiors do not; a point has no
@@ -2420,10 +2417,72 @@ _RELATE = {
         ("POLYGON", "LINESTRING"): _mirror(line_crosses_polygon),
         ("LINESTRING", "LINESTRING"): lines_cross,
         **_false(
-            *[("POINT", s) for s in _SHAPES],
-            *[(s, "POINT") for s in _SHAPES if s != "POINT"],
+            *[("POINT", s) for s in WKT_SHAPES],
+            *[(s, "POINT") for s in WKT_SHAPES if s != "POINT"],
             ("POLYGON", "POLYGON"), ("POLYGON", "MULTIPOLYGON"),
             ("MULTIPOLYGON", "POLYGON"), ("MULTIPOLYGON", "MULTIPOLYGON"),
+        ),
+    },
+}
+
+# a _MEASURE entry that returns its operand's own lexical (a POINT's
+# centroid and envelope: no re-rendering drift)
+_LEXICAL = "lexical"
+
+
+def _zero(_g) -> Column:
+    return F.lit(0.0)
+
+
+def _centroid(fn):
+    def wkt(c: Column) -> Column:
+        return F.when(
+            c.isNotNull(),
+            F.concat(
+                F.lit("POINT("),
+                c["cx"].cast("string"),
+                F.lit(" "),
+                c["cy"].cast("string"),
+                F.lit(")"),
+            ),
+        )
+
+    return lambda g: _bound(fn(g), wkt)
+
+
+def _envelope(shape: str):
+    return lambda g: bounds_wkt(*WKT_BBOX[shape](g))
+
+
+# GeoSPARQL 1.1 non-topological functions. Area subtracts holes,
+# length includes hole boundaries (shapely convention), a centroid is
+# the ring-weighted (multipolygon: area-weighted member) combination,
+# a line's area is 0 and its length and centroid are open-polyline math
+_MEASURE = {
+    "geof:area": {
+        ("POLYGON",): polygon_area_holes,
+        ("POINT",): _zero,
+        ("MULTIPOLYGON",): multipolygon_area,
+        ("LINESTRING",): _zero,
+    },
+    "geof:length": {
+        ("POLYGON",): polygon_perimeter_holes,
+        ("POINT",): _zero,
+        ("MULTIPOLYGON",): multipolygon_perimeter,
+        ("LINESTRING",): polyline_length,
+    },
+    "geof:centroid": {
+        ("POLYGON",): _centroid(polygon_centroid_holes),
+        ("POINT",): _LEXICAL,
+        ("MULTIPOLYGON",): _centroid(multipolygon_centroid),
+        ("LINESTRING",): _centroid(polyline_centroid),
+    },
+    "geof:envelope": {
+        (s,): _LEXICAL if s == "POINT" else _envelope(s) for s in WKT_SHAPES
+    },
+    "geof:distance": {
+        ("POINT", "POINT"): lambda p, q: F.sqrt(
+            (p[0] - q[0]) * (p[0] - q[0]) + (p[1] - q[1]) * (p[1] - q[1])
         ),
     },
 }
@@ -2433,36 +2492,44 @@ def _parsed(lex: Column, shape: str, fn) -> Column:
     """``fn`` over ``lex`` parsed as ``shape``: a POINT is its two
     coordinate Columns, any other parse is bound ONCE as a lambda
     variable (the sp33 rule)."""
+    parsed = WKT_PARSE[shape](lex)
+    return fn(parsed) if shape == "POINT" else _bound(parsed, fn)
+
+
+def _parse_ok(shape: str, parsed) -> Column:
     if shape == "POINT":
-        return fn(_point_xy(lex))
-    return _bound(_SHAPE_PARSE[shape](lex), fn)
+        return parsed[0].isNotNull() & parsed[1].isNotNull()
+    return parsed.isNotNull()
 
 
-def _relate(fname: str, a: Column, b: Column) -> Column:
-    """The ``fname`` row of ``_RELATE`` over two WKT lexical Columns: one
-    CASE arm per entry, chosen by lexical prefix, each parse bound once;
-    no arm, or a failed parse -> NULL. A constant operand is a literal
-    here, so Catalyst folds its prefix tests (pruning the arms its shape
-    cannot take) and what it can of its parse, and a malformed constant
-    is a type error exactly like a malformed variable."""
+def _by_shape(row: dict, *lexes: Column) -> Column:
+    """A ``_RELATE``/``_MEASURE`` row over WKT lexical Columns: one CASE
+    arm per entry, chosen by the operands' shape tests, each parse bound
+    once; no arm, or a failed parse -> NULL. A constant operand is a
+    literal here, so Catalyst folds its shape tests (pruning the arms
+    its shape cannot take) and what it can of its parse, and a
+    malformed constant is a type error exactly like a malformed
+    variable."""
 
-    def arm(sa, sb, pred) -> Column:
+    def arm(shapes: tuple, pred) -> Column:
         if pred is False:
             return F.lit(False)
 
-        def body(pa, pb) -> Column:
-            guard = [
-                p.isNotNull() for p, s in ((pa, sa), (pb, sb)) if s != "POINT"
-            ]
-            out = pred(pa, pb)
-            return F.when(reduce(operator.and_, guard), out) if guard else out
+        def bind(parsed: tuple) -> Column:
+            i = len(parsed)
+            if i < len(shapes):
+                return _parsed(
+                    lexes[i], shapes[i], lambda p: bind((*parsed, p))
+                )
+            ok = reduce(operator.and_, map(_parse_ok, shapes, parsed))
+            return F.when(ok, lexes[0] if pred is _LEXICAL else pred(*parsed))
 
-        return _parsed(a, sa, lambda pa: _parsed(b, sb, lambda pb: body(pa, pb)))
+        return bind(())
 
     chain = None
-    for (sa, sb), pred in _RELATE[fname].items():
-        cond = _is_shape(a, sa) & _is_shape(b, sb)
-        val = arm(sa, sb, pred)
+    for shapes, pred in row.items():
+        cond = reduce(operator.and_, map(is_wkt_shape, lexes, shapes))
+        val = arm(shapes, pred)
         chain = F.when(cond, val) if chain is None else chain.when(cond, val)
     return chain
 
@@ -2470,7 +2537,8 @@ def _relate(fname: str, a: Column, b: Column) -> Column:
 # Grid side for the var-var relate cover join. Any value is correct
 # (the exact predicate re-applies after the candidate join); it only
 # tunes candidate counts — polygons explode into (w/CELL+1)*(h/CELL+1)
-# cover cells, points into exactly one.
+# cover cells, points into exactly one. A distance join's side is its
+# threshold d instead.
 _GRID_CELL = 25.0
 
 
@@ -2484,10 +2552,10 @@ def _shape_domain(var: str, static_shapes, var_preds, store) -> frozenset:
         pred = var_preds.get(var)
         if pred is not None and hasattr(store, "predicate_object_shape"):
             s = store.predicate_object_shape(pred)
-    return frozenset((s,)) if s in _SHAPES else frozenset(_SHAPES)
+    return frozenset((s,)) if s in WKT_SHAPES else frozenset(WKT_SHAPES)
 
 
-def _match_var_var_sfintersects(expr):
+def _match_var_var_relate(expr):
     """Var-var topological FILTERs the grid-cover join can express:
     any pair satisfying a ``_RELATE`` relation shares a point, hence at
     least one covered cell, so one cell hash-join + canonical-cell
@@ -2511,15 +2579,24 @@ def _match_var_var_sfintersects(expr):
 def _static_wkt_shape(expr) -> str | None:
     """Statically provable WKT shape class of a BIND expression: a
     string constant, or a CONCAT whose FIRST argument is a string
-    constant, decides by prefix — CONCAT("POLYGON((", ...) can only
-    ever produce POLYGON lexicals regardless of the remaining
-    arguments. Returns one of ``_SHAPES``, or None (unknown)."""
+    constant, decides by the shape test's pattern (``is_wkt_shape``) —
+    CONCAT("POLYGON((", ...) can only ever produce POLYGON lexicals
+    regardless of the remaining arguments. The match ignores case, as
+    WKT keywords do; a lowercase constant takes no arm at run time,
+    which pruning to its shape's arms cannot change. Returns one of
+    ``WKT_SHAPES``, or None (unknown)."""
     node = expr
     if node[0] == "call" and node[1] == "concat" and node[2]:
         node = node[2][0]
     if node[0] == "str":
-        s = node[1].lstrip().upper()
-        return next((shape for shape in _SHAPES if s.startswith(shape)), None)
+        return next(
+            (
+                shape
+                for shape in WKT_SHAPES
+                if re.match(wkt_shape_pattern(shape), node[1], re.IGNORECASE)
+            ),
+            None,
+        )
     return None
 
 
@@ -2535,31 +2612,41 @@ def _grid_operand(pre: str, shape: str):
     return F.col(_GRID_OPERAND[shape].format(pre))
 
 
-def _grid_cover(f: DataFrame, var: str, pre: str, shapes: set):
+def _grid_cover(
+    f: DataFrame,
+    var: str,
+    pre: str,
+    shapes: set,
+    cell: float,
+    pad: float = 0.0,
+):
     """``f`` with ``var`` parsed as each of ``shapes`` (columns
-    ``_grid_operand`` names), its bbox, and one row per grid cell the
-    bbox covers (``__cx``, ``__cy``). Returns the frame, the names of
-    the columns it added, and the names of the bbox's min corner.
+    ``_grid_operand`` names), its bbox (``WKT_BBOX``, grown by ``pad``
+    on every side), and one row per grid cell of side ``cell`` the bbox
+    covers (``__cx``, ``__cy``). Returns the frame, the names of the
+    columns it added, and the names of the bbox's min corner.
 
     Every derived quantity materializes as a COLUMN before use:
     inlining the parse trees into the exact predicate multiplied the
     serialized plan to a ~3 MiB task binary and tripled the query's
     wall time (the sp33 plan-size lesson, re-measured on sp39). A
-    point-only side parses no rings: its bbox is the point, its one
-    cell needs no explode."""
-    cell = _GRID_CELL
-    px, py = f"__{pre}px", f"__{pre}py"
+    point-only side without a pad parses no rings: its bbox is the
+    point, its one cell needs no explode."""
     parsed = {}
-    if "POINT" in shapes:
-        parsed[px], parsed[py] = _point_xy(F.col(var))
-    for shape in _SHAPE_PARSE:
-        if shape in shapes:
+    for shape in WKT_SHAPES:
+        if shape not in shapes:
+            continue
+        if shape == "POINT":
+            x, y = wkt_point_xy(F.col(var))
+            parsed[f"__{pre}px"], parsed[f"__{pre}py"] = x, y
+        else:
             parsed[_GRID_OPERAND[shape].format(pre)] = memo_tree(
                 ("grid_parse", shape, var),
-                lambda shape=shape: _SHAPE_PARSE[shape](F.col(var)),
+                lambda shape=shape: WKT_PARSE[shape](F.col(var)),
             )
     f = f.withColumns(parsed)
-    if shapes == {"POINT"}:
+    if shapes == {"POINT"} and not pad:
+        px, py = parsed
         return (
             f.withColumns({
                 "__cx": F.floor(F.col(px) / cell),
@@ -2568,34 +2655,16 @@ def _grid_cover(f: DataFrame, var: str, pre: str, shapes: set):
             list(parsed),
             (px, py),
         )
-    # the bbox of whichever parse applies: a polygon's outer ring (holes
-    # cannot extend it), every member's outer ring, a line's points
-    outlines = {
-        "POLYGON": lambda c: F.get(c, 0),
-        "MULTIPOLYGON": lambda c: F.flatten(
-            F.transform(c, lambda m: F.get(m, 0))
-        ),
-        "LINESTRING": lambda c: c,
-    }
-    lo_x, lo_y, hi_x, hi_y = [], [], [], []
-    for shape, outline in outlines.items():
-        if shape in shapes:
-            pts = outline(_grid_operand(pre, shape))
-            xs = F.transform(pts, lambda p: p[0])
-            ys = F.transform(pts, lambda p: p[1])
-            lo_x.append(F.array_min(xs))
-            lo_y.append(F.array_min(ys))
-            hi_x.append(F.array_max(xs))
-            hi_y.append(F.array_max(ys))
-    if "POINT" in shapes:
-        lo_x.append(F.col(px))
-        hi_x.append(F.col(px))
-        lo_y.append(F.col(py))
-        hi_y.append(F.col(py))
-    bounds = {
-        f"__{pre}{k}": F.coalesce(*cs) if len(cs) > 1 else cs[0]
-        for k, cs in zip(("x0", "y0", "x1", "y1"), (lo_x, lo_y, hi_x, hi_y))
-    }
+    # a lexical parses as at most one shape: the others' bboxes are NULL
+    boxes = [
+        WKT_BBOX[s](_grid_operand(pre, s)) for s in WKT_SHAPES if s in shapes
+    ]
+    bounds = {}
+    for k, grow, cs in zip(
+        ("x0", "y0", "x1", "y1"), (-pad, -pad, pad, pad), zip(*boxes)
+    ):
+        c = F.coalesce(*cs) if len(cs) > 1 else cs[0]
+        bounds[f"__{pre}{k}"] = c + grow if grow else c
     x0, y0, x1, y1 = bounds
     # no explicit null-drop filter: a lexical that parses as none of the
     # shapes leaves the bbox NULL, sequence(NULL, ...) is NULL, and
@@ -2621,31 +2690,44 @@ def _grid_cover(f: DataFrame, var: str, pre: str, shapes: set):
     return f, [*parsed, *bounds], (x0, y0)
 
 
-def _grid_sfintersects_rewrite(
+def _grid_spatial_rewrite(
     frames: list,
     expr,
     static_shapes: dict | None = None,
     var_preds: dict | None = None,
     store=None,
 ) -> bool:
-    """Var-var topological FILTER (``_match_var_var_sfintersects``)
-    between two DISCONNECTED frames: each side explodes into the grid
-    cells its bbox covers (a POINT's bbox is the point — its single
-    cell) and hash-joins on (cx, cy); a candidate pair survives on
-    exactly ONE canonical cell — the lower-left cell of the bbox
-    overlap (per axis, the max of the two cover minima), which shared
-    coverage guarantees both sides emit — so no dedup pass and no
-    duplicate solutions. The exact predicate then decides: one join
-    arm per non-False ``_RELATE`` entry whose shapes both sides'
-    domains allow (``_shape_domain``), over columns each side parses
-    once (``_grid_cover`` builds only the shapes its arms read) — the
-    same table the connected-frame FILTER compiles, so both plans give
-    the same answer. A row whose lexical has no arm drops here; on the
-    connected path its predicate is NULL — the same no-match."""
-    m = _match_var_var_sfintersects(expr)
-    if not m:
+    """Var-var spatial FILTER between two DISCONNECTED frames — a
+    topological relation (``_match_var_var_relate``) or
+    ``geof:distance(?u, ?v) < d`` (``_match_var_var_distance``) — as
+    one cover join: each side explodes into the grid cells its bbox
+    covers (a POINT's bbox is the point — its single cell) and
+    hash-joins on (cx, cy); a candidate pair survives on exactly ONE
+    canonical cell — the lower-left cell of the bbox overlap (per axis,
+    the max of the two cover minima), which shared coverage guarantees
+    both sides emit — so no dedup pass and no duplicate solutions. The
+    exact predicate then decides: one join arm per non-False table
+    entry whose shapes both sides' domains allow (``_shape_domain``),
+    over columns each side parses once (``_grid_cover`` builds only the
+    shapes its arms read) — the same table the connected-frame FILTER
+    compiles, so both plans give the same answer. A distance join uses
+    cells of side d and grows the second side's point bboxes by d, so
+    every pair within d shares a cell (3x3 cells per point against
+    one); its exact predicate is the distance entry over the
+    materialized points, compared with d. A row whose lexical
+    has no arm drops here; on the connected path its predicate is NULL
+    — the same no-match. Mutates ``frames`` and returns True on
+    success."""
+    relate = _match_var_var_relate(expr)
+    dist = None if relate else _match_var_var_distance(expr)
+    if relate:
+        fname, u, v = relate
+        row, cell, pad = _RELATE[fname], _GRID_CELL, 0.0
+    elif dist and dist[2] > 0:  # d <= 0: empty either way; keep simple
+        fname, (u, v, cell, inclusive) = "geof:distance", dist
+        row, pad = _MEASURE[fname], cell
+    else:
         return False
-    fname, u, v = m
     ai = next((i for i, f in enumerate(frames) if u in f.columns), None)
     bi = next((i for i, f in enumerate(frames) if v in f.columns), None)
     if ai is None or bi is None or ai == bi:
@@ -2663,18 +2745,17 @@ def _grid_sfintersects_rewrite(
     dom_b = _shape_domain(v, static_shapes, var_preds, store)
     arms = [
         (sa, sb, pred)
-        for (sa, sb), pred in _RELATE[fname].items()
+        for (sa, sb), pred in row.items()
         if pred is not False and sa in dom_a and sb in dom_b
     ]
     if not arms:  # no pair of these domains can match
         frames.append(frames[ai].crossJoin(frames[bi]).where(F.lit(False)))
     else:
-        cell = _GRID_CELL
         a, a_cols, (ax0, ay0) = _grid_cover(
-            frames[ai], u, "a", {sa for sa, _, _ in arms}
+            frames[ai], u, "a", {sa for sa, _, _ in arms}, cell
         )
         b, b_cols, (bx0, by0) = _grid_cover(
-            frames[bi], v, "b", {sb for _, sb, _ in arms}
+            frames[bi], v, "b", {sb for _, sb, _ in arms}, cell, pad
         )
         canonical = (
             F.col("__cx")
@@ -2697,13 +2778,15 @@ def _grid_sfintersects_rewrite(
                 ("joinarm", fname, sa, sb),
                 lambda: pred(_grid_operand("a", sa), _grid_operand("b", sb)),
             )
+            if dist:
+                exact = exact <= cell if inclusive else exact < cell
             # spread the probe side: with the other side broadcast, the
             # exact-predicate stage runs at the probe scan's width — one
             # core for a single-file local table (round 14, measured on
             # sp51: the whole relate fold serialized). No-op at scale.
             return (
-                spread(a.where(_is_shape(F.col(u), sa)))
-                .join(b.where(_is_shape(F.col(v), sb)), on=["__cx", "__cy"])
+                spread(a.where(is_wkt_shape(F.col(u), sa)))
+                .join(b.where(is_wkt_shape(F.col(v), sb)), on=["__cx", "__cy"])
                 .where(canonical)
                 .where(exact)
             )
@@ -2714,68 +2797,6 @@ def _grid_sfintersects_rewrite(
         frames.append(joined.drop("__cx", "__cy", *a_cols, *b_cols))
     for idx in sorted((ai, bi), reverse=True):
         frames.pop(idx)
-    return True
-
-
-def _grid_spatial_rewrite(
-    frames: list,
-    expr,
-    static_shapes: dict | None = None,
-    var_preds: dict | None = None,
-    store=None,
-) -> bool:
-    """Var-var distance FILTER between two DISCONNECTED frames: join
-    them on grid cells of side d (each right-side point lands in its
-    own cell plus the 8 neighbors, so every pair within d shares a
-    cell — |x1-x2| <= d bounds the cell delta by 1), then re-apply the
-    exact predicate. Same result as crossJoin + filter, but the plan
-    is a hash join on (cx, cy): candidates ~ density x 9 cells instead
-    of |L| x |R| (the g17/g18 strategy, reached from SPARQL text).
-    Every other var-var topological FILTER (within and contains
-    included) takes the one relate cover join,
-    ``_grid_sfintersects_rewrite``. Mutates ``frames`` and returns
-    True on success."""
-    m = _match_var_var_distance(expr)
-    if not m:
-        return _grid_sfintersects_rewrite(
-            frames, expr, static_shapes, var_preds, store
-        )
-    u, v, d = m
-    if d <= 0:
-        return False  # degenerate: empty result either way; keep simple
-    li = next((i for i, f in enumerate(frames) if u in f.columns), None)
-    ri = next((i for i, f in enumerate(frames) if v in f.columns), None)
-    if li is None or ri is None or li == ri:
-        return False
-    left, right = frames[li], frames[ri]
-    lx, ly = _point_xy(F.col(u))
-    lhs = left.withColumn("__cx", F.floor(lx / d)).withColumn(
-        "__cy", F.floor(ly / d)
-    )
-    rx, ry = _point_xy(F.col(v))
-    off = F.explode(
-        F.array(
-            *[
-                F.struct(F.lit(i).alias("i"), F.lit(j).alias("j"))
-                for i in (-1, 0, 1)
-                for j in (-1, 0, 1)
-            ]
-        )
-    )
-    rhs = (
-        right.withColumn("__off", off)
-        .withColumn("__cx", F.floor(rx / d) + F.col("__off.i"))
-        .withColumn("__cy", F.floor(ry / d) + F.col("__off.j"))
-        .drop("__off")
-    )
-    joined = (
-        lhs.join(rhs, on=["__cx", "__cy"])
-        .drop("__cx", "__cy")
-        .where(_compile_expr(expr))
-    )
-    for idx in sorted((li, ri), reverse=True):
-        frames.pop(idx)
-    frames.append(joined)
     return True
 
 
@@ -2802,19 +2823,6 @@ def _bound(col: Column, fn) -> Column:
     parse into each reference multiplies plan analysis time (the sp33
     plan-size lesson, SCALE.md round 8)."""
     return F.get(F.transform(F.array(col), fn), 0)
-
-
-def _point_xy(col: Column) -> tuple[Column, Column]:
-    # try_cast: regexp_extract yields "" for a non-POINT literal, and
-    # the ANSI cast of "" would kill the job; NULL instead makes the
-    # geo call a SPARQL type error on that binding (filter no-match),
-    # and the grid rewrite drop the row (NULL cell joins nothing) —
-    # identical outcomes on both paths
-    pat = r"POINT\(\s*(-?[\d.]+)\s+(-?[\d.]+)\s*\)"
-    return (
-        F.regexp_extract(col, pat, 1).try_cast("double"),
-        F.regexp_extract(col, pat, 2).try_cast("double"),
-    )
 
 
 def _operand_col(node, numeric: bool) -> Column:
@@ -3068,11 +3076,12 @@ def _compile_call_impl(node) -> Column:
     if fname in ("round", "floor", "ceil", "abs"):
         fn = {"round": F.round, "floor": F.floor, "ceil": F.ceil, "abs": F.abs}
         return fn[fname](_operand_col(args[0], True))
-    if fname in _RELATE:
-        # one compiled form per relation over the relate table, for
+    if fname in _RELATE or fname in _MEASURE:
+        # one compiled form per function over its table row, for
         # variable and constant operands alike (module comment above
         # _RELATE)
-        return _relate(fname, *(_operand_col(x, False) for x in args))
+        row = _RELATE.get(fname) or _MEASURE[fname]
+        return _by_shape(row, *(_operand_col(x, False) for x in args))
     # contains and disjoint by their OGC definitions, through the call
     # memo: a query asking both a relation and its derived twin shares
     # one tree
@@ -3080,95 +3089,6 @@ def _compile_call_impl(node) -> Column:
         return _compile_call(("call", "geof:sfwithin", args[::-1]))
     if fname == "geof:sfdisjoint":
         return ~_compile_call(("call", "geof:sfintersects", args))
-    if fname == "geof:distance":
-        ax, ay = _point_xy(_operand_col(args[0], False))
-        bx, by = _point_xy(_operand_col(args[1], False))
-        return F.sqrt((ax - bx) * (ax - bx) + (ay - by) * (ay - by))
-    if fname in (
-        "geof:area", "geof:centroid", "geof:envelope", "geof:length"
-    ):
-        # GeoSPARQL 1.1 non-topological functions over wktLiterals,
-        # for POINT / LINESTRING / POLYGON inputs. POINT: area and
-        # length 0, centroid/envelope = the input geometry (returned
-        # as the ORIGINAL lexical — no re-rendering drift). POLYGON:
-        # shoelace math over the parsed outer ring (length = ring
-        # perimeter, shapely convention). LINESTRING: open-polyline
-        # math. Anything else: NULL = SPARQL type error, binding
-        # drops. Parsed point lists are BOUND ONCE as lambda variables
-        # before the multi-reference math — inlining the WKT parse
-        # tree into every reference multiplies plan analysis time (the
-        # sp33 lesson, SCALE.md round 8).
-        g = _operand_col(args[0], False)
-        is_point = g.rlike(r"^\s*POINT\s*\(")
-        # ALL rings (round 13): area subtracts holes, length includes
-        # hole boundaries, centroid is the ring-weighted combination,
-        # envelope is the outer ring's (holes cannot extend it)
-        rings = wkt_polygon_rings(g)
-        line = wkt_linestring_points(g)
-        mp = wkt_multipolygon(g)
-
-        def _per_kind(
-            poly_fn, line_fn, point_val: Column, mp_fn=None
-        ) -> Column:
-            """point_val for POINT, poly_fn over the bound ALL-rings
-            array for POLYGON, line_fn over the bound point list for
-            LINESTRING, mp_fn over the bound member array for
-            MULTIPOLYGON (when given), NULL otherwise. Coalesce
-            short-circuits, so a POLYGON row never evaluates the
-            MULTIPOLYGON parse."""
-            arms = [
-                _bound(rings, lambda r: F.when(r.isNotNull(), poly_fn(r))),
-                _bound(line, lambda l: F.when(l.isNotNull(), line_fn(l))),
-            ]
-            if mp_fn is not None:
-                arms.append(
-                    _bound(mp, lambda m: F.when(m.isNotNull(), mp_fn(m)))
-                )
-            return F.when(is_point, point_val).otherwise(
-                F.coalesce(*arms)
-            )
-
-        def _pt_wkt(c: Column) -> Column:
-            return F.when(
-                c.isNotNull(),
-                F.concat(
-                    F.lit("POINT("),
-                    c["cx"].cast("string"),
-                    F.lit(" "),
-                    c["cy"].cast("string"),
-                    F.lit(")"),
-                ),
-            )
-
-        if fname == "geof:area":
-            return _per_kind(
-                polygon_area_holes, lambda l: F.lit(0.0), F.lit(0.0),
-                mp_fn=multipolygon_area,
-            )
-        if fname == "geof:length":
-            return _per_kind(
-                polygon_perimeter_holes, polyline_length, F.lit(0.0),
-                mp_fn=multipolygon_perimeter,
-            )
-        if fname == "geof:envelope":
-            return _per_kind(
-                lambda r: bounds_wkt(ring_bounds(F.get(r, 0))),
-                lambda l: bounds_wkt(ring_bounds(l)),
-                g,
-                # envelope over every member's outer ring, flattened
-                mp_fn=lambda m: bounds_wkt(
-                    ring_bounds(
-                        F.flatten(F.transform(m, lambda p: F.get(p, 0)))
-                    )
-                ),
-            )
-        return _per_kind(
-            lambda r: _bound(polygon_centroid_holes(r), _pt_wkt),
-            lambda l: _bound(polyline_centroid(l), _pt_wkt),
-            g,
-            # area-weighted member centroids (hole-aware per member)
-            mp_fn=lambda m: _bound(multipolygon_centroid(m), _pt_wkt),
-        )
     if fname == "lang":
         # LANG(?x): the binding's language tag ("" for simple literals
         # AND for IRIs — the spec makes LANG(iri) a type error that

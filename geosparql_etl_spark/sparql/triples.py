@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from geosparql_etl_spark.functions.geometry import WKT_SHAPES, is_wkt_shape
+
 EX = "urn:ex:"
 RDF_TYPE = "rdf:type"
 RDF_TYPE_IRI = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
@@ -418,17 +420,17 @@ class TripleStore:
         self.vertical = vertical
 
     def predicate_object_shape(self, pred: str) -> str | None:
-        """WKT shape domain of ``pred``'s objects: "POLYGON" when every
-        object lexical is a POLYGON, "POINT" when every one is a
-        POINT, None for mixed / non-WKT / empty. This is TABLE
-        STATISTICS for the grid sfIntersects rewrite: a store-derived
-        variable whose predicate is provably single-shape prunes the
-        impossible shape arms the same way a BIND-constant does
-        (compiler.py:_static_wkt_shape). One column-pruned aggregate
-        pass per (store, predicate), consulted LAZILY (only when a
-        grid rewrite actually fires) and memoized — process-wide when
-        ``stats_key`` marks the backing data immutable, per-instance
-        otherwise."""
+        """WKT shape domain of ``pred``'s objects: the one shape of
+        ``WKT_SHAPES`` every object lexical has (by ``is_wkt_shape``,
+        the test the geof functions choose their arm by), None for
+        mixed / non-WKT / empty. This is TABLE STATISTICS for the grid
+        cover join: a store-derived variable whose predicate is
+        provably single-shape prunes the impossible shape arms the same
+        way a BIND-constant does (compiler.py:_static_wkt_shape). One
+        column-pruned aggregate pass per (store, predicate), consulted
+        LAZILY (only when a grid rewrite actually fires) and memoized —
+        process-wide when ``stats_key`` marks the backing data
+        immutable, per-instance otherwise."""
         if not self.memoizable:
             # mutable backing data (live lake stores): a memoized
             # shape could go stale after appends and silently prune a
@@ -443,19 +445,16 @@ class TripleStore:
         if key in memo:
             return memo[key]
         df = self.scan(None, pred, None, {"o": "o"})
-        is_pt = F.col("o").rlike(r"^\s*POINT\s*\(")
-        is_poly = F.col("o").rlike(r"^\s*POLYGON\s*\(")
         row = df.select(
             F.count(F.lit(1)).alias("n"),
-            F.sum(is_pt.cast("long")).alias("npt"),
-            F.sum(is_poly.cast("long")).alias("npoly"),
+            *[
+                F.sum(is_wkt_shape(F.col("o"), s).cast("long")).alias(s)
+                for s in WKT_SHAPES
+            ],
         ).first()
-        shape = None
-        if row["n"]:
-            if row["npoly"] == row["n"]:
-                shape = "POLYGON"
-            elif row["npt"] == row["n"]:
-                shape = "POINT"
+        shape = next(
+            (s for s in WKT_SHAPES if row["n"] and row[s] == row["n"]), None
+        )
         memo[key] = shape
         return shape
 

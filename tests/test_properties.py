@@ -719,7 +719,7 @@ def test_rings_intersect_matches_interval_overlap(
     zone data."""
     from geosparql_etl_spark.functions.geometry import (
         rings_intersect,
-        wkt_polygon_ring,
+        wkt_polygon_rings,
     )
 
     def rect_wkt(x0, y0, x1, y1):
@@ -734,7 +734,8 @@ def test_rings_intersect_matches_interval_overlap(
     )
     got = df.select(
         rings_intersect(
-            wkt_polygon_ring(F.col("wa")), wkt_polygon_ring(F.col("wb"))
+            F.get(wkt_polygon_rings(F.col("wa")), 0),
+            F.get(wkt_polygon_rings(F.col("wb")), 0),
         ).alias("hit")
     ).collect()[0]["hit"]
     want = (a[0] < b[2] and b[0] < a[2]) and (a[1] < b[3] and b[1] < a[3])

@@ -2373,7 +2373,7 @@ class TestSpatialContainmentJoin:
 
     def test_var_var_sfwithin(self, geo_store):
         got = [(r.p, r.z) for r in self._within(geo_store).collect()]
-        # z:2's ring arrives unclosed — wkt_polygon_ring treats
+        # z:2's ring arrives unclosed — wkt_polygon_rings treats
         # closure as implicit, so (45,45) still matches
         assert got == [("urn:pt:a", "urn:z:1"), ("urn:pt:b", "urn:z:2")]
 
@@ -4143,6 +4143,7 @@ class TestRelateConsistency:
         "mp": MP,
         "pt": "POINT(3 3)",  # inside sq and mp's first member
         "pt_edge": "POINT(10 5)",  # on sq's right edge
+        "pt_left": "POINT(0 5)",  # on sq's left edge
         "inside": "POLYGON((1 1, 4 1, 4 4, 1 4, 1 1))",
         "crossing": "POLYGON((5 -2, 15 -2, 15 2, 5 2, 5 -2))",
         "edge": "POLYGON((10 2, 14 2, 14 6, 10 6, 10 2))",  # shares an edge part
@@ -4284,6 +4285,78 @@ class TestRelateConsistency:
         assert connected[("pt_edge", "sq")]["i"] is True
         # a polygon in a donut's hole meets only the hole
         assert connected[("in_hole", "donut")]["dj"] is True
+        # a boundary point touches and is not within, on either edge
+        for pt in ("pt_left", "pt_edge"):
+            for f in (constant[(pt, "sq")], connected[(pt, "sq")]):
+                assert (f["w"], f["t"], f["i"]) == (False, True, True), pt
+
+
+class TestWktReader:
+    """Every geof function reads a WKT lexical through one shape test
+    and one parse per shape: a POINT may have a space before its
+    parenthesis (make_point's and OGC's canonical form) and any
+    coordinate a double cast reads (Java's exponent rendering
+    included), and a lexical with a shape prefix that does not parse is
+    a type error (unbound), never false. The store's shape statistics
+    classify with the same test."""
+
+    SQ = "POLYGON((0 0, 10 0, 10 10, 0 10, 0 0))"
+    BIG = "POLYGON((0 0, 2.0E7 0, 2.0E7 2.0E7, 0 2.0E7, 0 0))"
+
+    @pytest.fixture(scope="class")
+    def store(self, spark):
+        from geosparql_etl_spark.functions.geometry import make_point
+
+        made = spark.createDataFrame(
+            [("urn:p:space", 5.0, 5.0), ("urn:p:exp", 1.0e-4, 5.0)],
+            "s string, x double, y double",
+        ).select(
+            "s",
+            F.lit("urn:ex:pt").alias("p"),
+            make_point(F.col("x"), F.col("y")).alias("o"),
+        )
+        rows = [
+            ("urn:p:bad", "urn:ex:pt", "POINT(a b)"),
+            ("urn:g:big", "urn:ex:big", self.BIG),
+            ("urn:m:1", "urn:ex:mp", "MULTIPOLYGON(((0 0, 1 0, 1 1, 0 0)))"),
+            ("urn:m:2", "urn:ex:mp",
+             "MULTIPOLYGON (((5 5, 6 5, 6 6, 5 5)), ((8 8, 9 8, 9 9, 8 8)))"),
+            ("urn:l:1", "urn:ex:line", "LINESTRING(0 0, 1 1)"),
+            ("urn:l:2", "urn:ex:line", "LINESTRING (2 2, 3 5)"),
+        ]
+        return TripleStore(
+            spark.createDataFrame(rows, "s string, p string, o string")
+            .unionByName(made)
+        )
+
+    def test_point_forms_and_centroid_read_back(self, store):
+        sq = self.SQ
+        rows = run(
+            store,
+            "SELECT ?s ?w ?wi ?i ?d WHERE { "
+            f'{{ ?s ex:pt ?w BIND(geof:sfWithin(?w, "{sq}") AS ?wi) '
+            f'BIND(geof:sfIntersects(?w, "{sq}") AS ?i) '
+            'BIND(geof:distance(?w, "POINT(0 5)") AS ?d) } UNION '
+            "{ ?s ex:big ?g "
+            'BIND(geof:distance(geof:centroid(?g), "POINT(0 0)") AS ?d) } }',
+        ).collect()
+        got = {r.s: r for r in rows}
+        flag = TestRelateConsistency._flag
+        # make_point renders "POINT (x y)" with Java's double strings
+        assert got["urn:p:space"].w == "POINT (5.0 5.0)"
+        assert got["urn:p:exp"].w == "POINT (1.0E-4 5.0)"
+        for s, d in (("urn:p:space", 5.0), ("urn:p:exp", 1.0e-4)):
+            r = got[s]
+            assert (flag(r.wi), flag(r.i)) == (True, True), s
+            assert float(r.d) == pytest.approx(d), s
+        bad = got["urn:p:bad"]
+        assert (bad.wi, bad.i, bad.d) == (None, None, None)
+        # the centroid POINT(1.0E7 1.0E7) parses back
+        assert float(got["urn:g:big"].d) == pytest.approx(2**0.5 * 1.0e7)
+
+    def test_shape_statistics_cover_every_shape(self, store):
+        assert store.predicate_object_shape("urn:ex:mp") == "MULTIPOLYGON"
+        assert store.predicate_object_shape("urn:ex:line") == "LINESTRING"
 
 
 class TestPlanCache:
