@@ -7,7 +7,9 @@ local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 
 Each query is fully materialized via the noop sink (all columns compute,
 nothing crosses to Python), so timings measure the whole plan, not a
-pruned count.
+pruned count. Every timed rep runs under
+``geosparql_etl_spark.profiling.profile``; the full line's "profiles"
+map carries, per row, the record fields of the rep it reports.
 """
 
 from __future__ import annotations
@@ -22,6 +24,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import __spark_entry__ as entrymod
 from pyspark.sql import functions as F
 
+from geosparql_etl_spark.profiling import profile
 from geosparql_etl_spark.session import get_spark
 
 # Headline set: one per operator family, weighted toward the shapes that
@@ -229,6 +232,24 @@ def _best_of(run) -> float:
     return min(times)
 
 
+# Profile-record fields the full line carries per row.
+PROFILE_FIELDS = (
+    "run_s", "jobs", "stages", "stages_skipped", "tasks",
+    "executor_run_ms", "executor_cpu_ms",
+    "shuffle_read_bytes", "shuffle_write_bytes",
+)
+
+
+def _profiled_best(spark, run) -> dict:
+    """The reps ``_best_of`` buys, each under ``profile``: returns the
+    fastest rep's record fields. Its ``run_s`` times ``run()`` alone,
+    so reading the record adds nothing to the reported time."""
+    records = []
+    _best_of(lambda: records.append(profile(spark, run)))
+    best = min(records, key=lambda r: r["run_s"])
+    return {k: best[k] for k in PROFILE_FIELDS}
+
+
 def run_suite() -> dict:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     loadavg_start = round(os.getloadavg()[0], 2)
@@ -272,14 +293,16 @@ def run_suite() -> dict:
     # machine is quiet.
     total = 0.0
     errors: dict[str, str] = {}
+    profiles: dict[str, dict] = {}
     for name in HEADLINE:
         try:
-            best = _best_of(lambda: materialize(qs[name](spark, sf_dir)))
+            rec = _profiled_best(spark, lambda: materialize(qs[name](spark, sf_dir)))
         except Exception as exc:  # one broken query must not void the suite
             errors[name] = f"{type(exc).__name__}: {exc}"[:300]
             print(f"BENCH ERROR {name}: {errors[name]}", file=sys.stderr)
             continue
-        timings[name] = round(best, 3)
+        profiles[name] = rec
+        timings[name] = round(rec["run_s"], 3)
         total += timings[name]
 
     # Approximate-mode variants: the documented 100 TB paths (HLL
@@ -292,7 +315,7 @@ def run_suite() -> dict:
          "a09_percentiles"),
     ):
         try:
-            best = _best_of(lambda: materialize(fn(spark, sf_dir)))
+            rec = _profiled_best(spark, lambda: materialize(fn(spark, sf_dir)))
             tol_err = _approx_tolerance_violation(
                 name, fn(spark, sf_dir), qs[gate](spark, sf_dir)
             )
@@ -302,7 +325,8 @@ def run_suite() -> dict:
             errors[name] = f"{type(exc).__name__}: {exc}"[:300]
             print(f"BENCH ERROR {name}: {errors[name]}", file=sys.stderr)
             continue
-        timings[name] = round(best, 3)
+        profiles[name] = rec
+        timings[name] = round(rec["run_s"], 3)
         total += timings[name]
 
     result = {
@@ -317,6 +341,7 @@ def run_suite() -> dict:
         # any plan is.
         "loadavg_start": loadavg_start,
         "loadavg_end": round(os.getloadavg()[0], 2),
+        "profiles": profiles,
     }
     if errors:
         result["errors"] = errors

@@ -8,6 +8,7 @@ the compiler, the triple generation, and the lexical canon at once)."""
 import pytest
 from pyspark.sql import functions as F
 
+from geosparql_etl_spark.profiling import profile
 from geosparql_etl_spark.sparql import (
     TripleStore,
     parse_query,
@@ -4398,24 +4399,11 @@ class TestPlanCache:
         """Each call is its own QueryExecution: the hit's collect runs
         (not skips) as many stages as the miss's — returning one shared
         frame would reuse its shuffle output and skip the map stage."""
-        sc = spark.sparkContext
-        tracker = sc.statusTracker()
         store = _toy(spark)
-
-        def ran_stages(group):
-            sc.setJobGroup(group, group)
-            try:
-                run(store, self.AGG).collect()
-            finally:
-                sc.setLocalProperty("spark.jobGroup.id", None)
-            n = 0
-            for job in tracker.getJobIdsForGroup(group):
-                for sid in tracker.getJobInfo(job).stageIds:
-                    info = tracker.getStageInfo(sid)
-                    n += info is not None and info.numCompletedTasks > 0
-            return n
-
-        miss, hit = ran_stages("plan-cache-miss"), ran_stages("plan-cache-hit")
+        miss, hit = [
+            profile(spark, lambda: run(store, self.AGG).collect())["stages"]
+            for _ in range(2)
+        ]
         assert len(compiles) == 1
         assert miss >= 2 and hit == miss
 
